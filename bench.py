@@ -1,57 +1,85 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. The full record goes to
+BENCH_LOCAL.json next to this file.
 
 Each query is forced end-to-end with a noop write (full execution, no
-driver collect bottleneck).
+driver collect bottleneck) RUNS times, and the min is reported: external
+load can only inflate a sample. For performance claims use the
+per-workload benchmark, ``python3 perfbench/run.py`` (perfbench/README.md).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import signal
 import sys
 import time
+import traceback
+
+import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# --- wall-clock budget (round-13, VERDICT r12 #1b) -----------------------
-# The driver kills the bench process after an unpublished timeout; rounds
-# 12/12-c8 died at rc=124 with ZERO output because the quiet-gate waits
-# (180 s start + 900 s GEMM + 480 s bw) could sleep ~26 min on a loaded
-# box before a single query-second was counted, and the JSON line only
-# printed at the very end. Every deliberate wait now draws from a single
-# wall-clock budget (default 1200 s — round 11 completed inside the
-# driver's window and a quiet-box full suite needs ~500 s at 32 cpus),
-# the query loop reserves time for the queries still to run, and when the
-# budget runs out the bench prints the partial one-line JSON for the
-# queries that DID complete instead of dying silently.
-_BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1200"))
-_T0 = time.monotonic()
+from __spark_entry__ import queries  # noqa: E402
+from polars_ts_spark.session import free_blocks, get_spark  # noqa: E402
 
+# Every query, warm-up and the quality tail draw from one wall-clock
+# budget. The caller may kill the process after a timeout it does not
+# publish, so the loop reserves time for the queries still to run and
+# prints a partial line for the queries that did complete instead of
+# dying silently.
+BUDGET_S = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1200"))
+RUNS = 2
 
-def _elapsed() -> float:
-    return time.monotonic() - _T0
+# headline set: one per operator family plus the heavier kernels
+HEADLINE = [
+    # features, preprocessing, forecasting, metrics, decomposition
+    "panel_base", "lag_features", "rolling_features", "calendar_features",
+    "resample_weekly", "impute_ffill", "outliers_iqr", "cusum",
+    "naive_forecast", "seasonal_naive_forecast", "forecast_metrics", "mase",
+    "seasonal_strength_features",
+    # kernel layer (applyInPandas / mapInPandas)
+    "ses_forecast", "holt_winters_forecast", "mann_kendall", "acf", "pelt",
+    "pairwise_dtw", "pairwise_msm", "pairwise_sbd",
+    # training-data-pipeline ops
+    "exact_dedup", "minhash_lsh_pairs", "simhash_pairs", "dup_ngram_stats",
+    "stratified_sample", "text_stats", "corpus_curation", "cosine_topk",
+    "lsh_ann_topk", "ivf_ann_topk",
+    # model & pipeline layer
+    "recursive_forecast", "arima_forecast", "kalman_filter",
+    "conformal_interval", "reconcile_bottom_up", "event_window_agg",
+    "kmedoids_dtw", "regime_detect",
+    # distributed fit layer (IRLS sufficient-stats aggs, pooled id-code
+    # ridge, distributed meta-fit)
+    "quantile_regression", "global_forecast", "stacking_forecast",
+    # curation: repetition/decontamination filters, the shard-and-OR
+    # decontamination (3 corpus passes by design), bigram-LM perplexity
+    # and DSIR importance weighting and selection
+    "gopher_repetition", "benchmark_decontaminate", "trim_duplicate_spans",
+    "domain_stats", "decontaminate_sharded", "ngram_lm_score",
+    "dsir_importance", "perplexity_buckets", "dsir_resample",
+    "perplexity_buckets_sampled",
+    # composed curation DAGs, C4 line cleaning, sequence packing and its
+    # writer legs
+    "corpus_curation_v2", "sequence_pack", "c4_line_filters",
+    "sequence_pack_bins", "corpus_curation_v2_sampled", "corpus_curation_v3",
+    "sequence_pack_manifest", "sequence_pack_bins_manifest",
+    "sequence_pack_windows",
+]
 
-
-def _remaining() -> float:
-    return _BUDGET_S - _elapsed()
-
-
-# partial-line state shared with the SIGTERM rescue handler: if the
-# driver's kill arrives before the normal end, print what we have —
-# a partial per-query line beats eight rounds of parsed:null
+# partial-line state shared with the SIGTERM handler
 _PARTIAL: dict = {"timings": {}, "sf": None, "done": False}
 
 
 def _contract_line(timings: dict, sf, partial_skipped: int = 0) -> str:
-    """The ONE stdout JSON line the driver parses. Keep it SMALL: the
-    driver stores a 2000-byte stdout tail, and rounds 5-12 shipped the
-    full record (probe trails, paragraph notes) on stdout — every one
-    landed mid-object and parsed as null. 61 queries at 2 decimals with
-    compact separators is ~1.5 KB."""
+    """The ONE stdout JSON line a caller parses. Keep it small: callers
+    may keep only a ~2000-byte stdout tail, and 61 queries at 2 decimals
+    with compact separators is ~1.5 KB. Everything else goes to the
+    record file."""
     rec = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 2),
@@ -64,7 +92,7 @@ def _contract_line(timings: dict, sf, partial_skipped: int = 0) -> str:
     return json.dumps(rec, separators=(",", ":"))
 
 
-def _sigterm_rescue(signum, frame):  # pragma: no cover - driver-kill path
+def _sigterm_rescue(signum, frame):  # pragma: no cover - external-kill path
     if not _PARTIAL["done"]:
         sys.stdout.write(
             _contract_line(_PARTIAL["timings"], _PARTIAL["sf"],
@@ -73,636 +101,194 @@ def _sigterm_rescue(signum, frame):  # pragma: no cover - driver-kill path
     os._exit(143)
 
 
-signal.signal(signal.SIGTERM, _sigterm_rescue)
-
-from __spark_entry__ import queries  # noqa: E402
-from polars_ts_spark.session import get_spark  # noqa: E402
-
-# headline set: one per operator family (features, preprocessing,
-# forecasting, metrics, decomposition) plus the heavier kernels as they land
-HEADLINE = [
-    "panel_base",
-    "lag_features",
-    "rolling_features",
-    "calendar_features",
-    "resample_weekly",
-    "impute_ffill",
-    "outliers_iqr",
-    "cusum",
-    "naive_forecast",
-    "seasonal_naive_forecast",
-    "forecast_metrics",
-    "mase",
-    "seasonal_strength_features",
-    # kernel layer (applyInPandas / mapInPandas)
-    "ses_forecast",
-    "holt_winters_forecast",
-    "mann_kendall",
-    "acf",
-    "pelt",
-    "pairwise_dtw",
-    "pairwise_msm",
-    "pairwise_sbd",
-    # training-data-pipeline ops
-    "exact_dedup",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "dup_ngram_stats",
-    "stratified_sample",
-    "text_stats",
-    "corpus_curation",
-    "cosine_topk",
-    "lsh_ann_topk",
-    "ivf_ann_topk",
-    # model & pipeline layer
-    "recursive_forecast",
-    "arima_forecast",
-    "kalman_filter",
-    "conformal_interval",
-    "reconcile_bottom_up",
-    "event_window_agg",
-    "kmedoids_dtw",
-    "regime_detect",
-    # round-7: the newly distributed fit layer (IRLS sufficient-stats
-    # aggs; pooled id-code ridge; distributed meta-fit) — headline set
-    # grew again, compare totals on the shared-query subset
-    "quantile_regression",
-    "global_forecast",
-    "stacking_forecast",
-    # round-7 curation additions
-    "gopher_repetition",
-    "benchmark_decontaminate",
-    "trim_duplicate_spans",
-    "domain_stats",
-    # round-8: the shard-and-OR decontamination recipe (3 corpus passes
-    # by construction — its cost pins what the over-cap guidance asks
-    # users to pay), the CCNet-style bigram-LM perplexity scorer, and
-    # DSIR importance weighting (both pure count-agg + broadcast-join
-    # plans)
-    "decontaminate_sharded",
-    "ngram_lm_score",
-    "dsir_importance",
-    "perplexity_buckets",
-    # round-9: the DSIR Gumbel-top-k selection step, the sampled-cutoff
-    # perplexity bucketing (the 100 TB assignment path — broadcast-join
-    # projection, no corpus-wide rank window), the composed CCNet-order
-    # curation DAG, GPT-style sequence packing (one exchange + in-shard
-    # window), and C4 line-level cleaning (zero-shuffle projection)
-    "dsir_resample",
-    "perplexity_buckets_sampled",
-    "corpus_curation_v2",
-    "sequence_pack",
-    "c4_line_filters",
-    # round-9 (cont.): the no-split next-fit packing (per-shard
-    # sequential kernel — the shard count is the parallelism knob)
-    "sequence_pack_bins",
-    # round-10: the sampled-cutoff + held-out-LM curation leg (the
-    # 100 TB path for the composed DAG), the full C4+CCNet recipe
-    # (line filter -> dedup -> LM -> sampled bucket -> rollup), and
-    # the sequence-packing writer legs (per-window doc-span manifests)
-    "corpus_curation_v2_sampled",
-    "corpus_curation_v3",
-    "sequence_pack_manifest",
-    "sequence_pack_bins_manifest",
-    # round-11: the structured array<struct> writer surface
-    "sequence_pack_windows",
-]
+@functools.cache
+def _probe_buffers():
+    rng = np.random.default_rng(0)
+    src = rng.normal(size=16 * 1024 * 1024)
+    dst = np.empty_like(src)
+    np.copyto(dst, src)  # touch destination pages off the clock
+    return rng.normal(size=(1024, 1024)), src, dst
 
 
-_GEMM_X = None
-
-
-def _cpu_calibration() -> float:
-    """Fixed-size BLAS GEMM wall time: a machine-load probe. This box
-    is shared — back-to-back full-suite runs have varied >2x on
-    external load alone — so the bench reports the probe before and
-    after the suite, letting a reader normalize query times across
-    rounds instead of mistaking host contention for a code regression.
-
-    Round-13 resize (3x 2000^2 -> 1x 1024^2): this container's
-    OpenBLAS is built with MAX_THREADS=2, so the old probe took
-    ~2.7 s on an IDLE box — every sample's bracket cost ~3 s and,
-    worse, always exceeded the 0.30/0.60 'quiet' clamps, so the r12
-    driver runs burned their full wait budgets and died at rc=124.
-    The probe's job is detecting CPU contention, which a ~0.03 s
-    multiply does just as well once thresholds are RELATIVE to the
-    run's own idle baseline (see probe_thr)."""
-    global _GEMM_X
-    import time as _t
-
-    import numpy as _np
-
-    if _GEMM_X is None:
-        _GEMM_X = _np.random.default_rng(0).normal(size=(1024, 1024))
-    t0 = _t.perf_counter()
-    y = _GEMM_X @ _GEMM_X
-    _ = float(y[0, 0])
-    return round(_t.perf_counter() - t0, 3)
-
-
-class _SubsetRun(Exception):
-    """Control-flow marker: quality tail skipped on a subset run."""
-
-
-_BW_BUF = None
-_BW_DST = None
-
-
-def _bw_calibration() -> float:
-    """Memory-bandwidth probe: three 128 MB copies into a PREALLOCATED
-    destination (~0.05 s on this box quiet). The GEMM probe is
-    COMPUTE-bound and under-detects co-tenant load that saturates
-    memory bandwidth or throttles sustained multi-core work —
-    observed in round 9, where three back-to-back full suites ran
-    1.1x/1.5x/1.6x the round-8 shared-query total while every GEMM
-    bracket stayed under threshold. A streaming copy is the
-    complementary signal; both probes must be quiet for a sample to
-    count.
-
-    Round-13 fix: the old probe allocated a FRESH 128 MB destination
-    per copy (``buf.copy()``) — in this VM first-touch page faults
-    made that ~15 s on an idle box, i.e. the probe measured the
-    hypervisor's fault path, not bandwidth, and the r12 driver runs
-    paid ~15 s per bracket before being killed. ``np.copyto`` into a
-    warm buffer measures the actual bus."""
-    global _BW_BUF, _BW_DST
-    import time as _t
-
-    import numpy as _np
-
-    if _BW_BUF is None:
-        _BW_BUF = _np.random.default_rng(0).normal(size=16 * 1024 * 1024)
-        _BW_DST = _np.empty_like(_BW_BUF)
-        _np.copyto(_BW_DST, _BW_BUF)  # touch destination pages off the clock
-    t0 = _t.perf_counter()
+def probe_pair() -> list[float]:
+    """[GEMM, bandwidth] seconds: one 1024^2 matmul (CPU contention) and
+    three 128 MB copies into a warm buffer (memory-bus contention).
+    Recorded once per query as a host-load diagnostic; nothing waits,
+    gates or re-samples on it."""
+    x, src, dst = _probe_buffers()
+    t0 = time.perf_counter()
+    float((x @ x)[0, 0])
+    t1 = time.perf_counter()
     for _ in range(3):
-        _np.copyto(_BW_DST, _BW_BUF)
-    _ = float(_BW_DST[-1])
-    return round(_t.perf_counter() - t0, 3)
+        np.copyto(dst, src)
+    t2 = time.perf_counter()
+    return [round(t1 - t0, 3), round(t2 - t1, 3)]
 
 
-# START-GATE upper bounds only (the per-sample thresholds are derived
-# RELATIVE to the run's own observed idle baseline — see probe_thr):
-# a box that probes under these is clearly not contended. Idle
-# baselines on this container: GEMM ~0.03 s (2-thread-capped
-# OpenBLAS), bw ~0.05 s.
-_PROBE_QUIET = 0.12
-# quiet-box bandwidth probe is ~0.05 s
-_BW_QUIET = 0.15
+def _one_sample(spark, query, sf_dir: str) -> float:
+    t0 = time.perf_counter()
+    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    dt = time.perf_counter() - t0
+    # operators cache and checkpoint intermediates; drop them so they
+    # don't GC-pressure later measurements
+    free_blocks(spark)
+    return dt
 
 
-def _probe_pair() -> tuple[float, float]:
-    """(GEMM, bandwidth) probe pair — both must be quiet for a sample
-    to count; each detects load the other misses."""
-    return (_cpu_calibration(), _bw_calibration())
+def run_queries(spark, qs: dict, names: list[str], sf_dir: str,
+                remaining) -> dict:
+    """Time each query in ``names`` (looked up in the registry ``qs``)
+    with RUNS samples and keep the min. ``remaining()`` is the budget
+    left in seconds: a query that cannot fit is skipped with all after
+    it, and a query raising stops the loop the same way, with the
+    exception kept in ``error``."""
+    res: dict = {"queries": {}, "cold_queries": {}, "probe_sec": {},
+                 "skipped_queries": [], "error": None}
+    _PARTIAL["timings"] = res["queries"]
+    q_wall: list[float] = []
+    for idx, name in enumerate(names):
+        avg_q = sum(q_wall) / len(q_wall) if q_wall else 12.0
+        n_after = len(names) - idx - 1
+        if remaining() < avg_q * 1.2 + 15.0:
+            res["skipped_queries"] = names[idx:]
+            break
+        t_q = time.monotonic()
+        samples: list[float] = []
+        try:
+            for _ in range(RUNS):
+                # keep the cold sample; reserve the rest for later queries
+                if samples and remaining() < (
+                        samples[0] * 1.5 + avg_q * n_after + 20.0):
+                    break
+                samples.append(_one_sample(spark, qs[name], sf_dir))
+        except Exception as exc:
+            traceback.print_exc()
+            res["error"] = f"{name}: {type(exc).__name__}: {exc}"[:300]
+            res["skipped_queries"] = names[idx:]
+            break
+        res["queries"][name] = round(min(samples), 3)
+        res["cold_queries"][name] = round(samples[0], 3)
+        res["probe_sec"][name] = probe_pair()
+        q_wall.append(time.monotonic() - t_q)
+        # progress on stderr: a killed run's tail shows how far it got
+        print(f"[bench] {idx + 1}/{len(names)} {name} "
+              f"{res['queries'][name]:.3f}s left={remaining():.0f}s",
+              file=sys.stderr, flush=True)
+    return res
 
 
-def _wait_for_quiet_box(threshold: float = _PROBE_QUIET,
-                        bw_threshold: float | None = _BW_QUIET,
-                        max_wait_s: float = 180.0,
-                        poll_s: float = 10.0):
-    """Don't time on a loaded box (round-6 ran at ~2.5x external load
-    and the numbers were useless for cross-round comparison): poll the
-    (GEMM, bandwidth) probe pair until quiet or the wait budget runs
-    out, and report what happened either way. ``bw_threshold=None``
-    waits on GEMM alone — the GEMM-triggered re-sample loop uses that
-    (ADVICE r9: a resident-JVM-noisy bw probe must not burn the wait
-    budget of a wait the GEMM probe asked for). Disable with
-    SPARK_GRAFT_NO_CALIB_GATE=1."""
-    import time as _t
-
-    probes = [_probe_pair()]
-    if os.environ.get("SPARK_GRAFT_NO_CALIB_GATE") == "1":
-        return probes[0], probes
-    deadline = _t.monotonic() + max_wait_s
-
-    def _hot(p):
-        return p[0] > threshold or (
-            bw_threshold is not None and p[1] > bw_threshold)
-
-    while _hot(probes[-1]) and _t.monotonic() < deadline:
-        _t.sleep(poll_s)
-        probes.append(_probe_pair())
-    return probes[-1], probes
+def _recall(exact: set, approx: set) -> float:
+    return round(len(exact & approx) / len(exact), 4)
 
 
-def main():
+def _quality(spark, sf_dir: str) -> dict:
+    """Recall of the LSH/ANN scale paths against their exact baselines
+    at bench scale: fast-but-wrong is not done."""
+    from polars_ts_spark.operators import embedsim, textops  # noqa: PLC0415
+
+    quality: dict = {}
+    try:
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+        def top1(df):
+            return {(r["vec_id"], r["neighbor_id"]) for r in df.collect()}
+
+        bf1 = top1(embedsim.brute_force_topk(emb, k=1))
+        if bf1:
+            quality["ann_recall_at_1"] = _recall(
+                bf1, top1(embedsim.lsh_ann_topk(emb, k=1)))
+            quality["ivf_recall_at_1"] = _recall(
+                bf1, top1(embedsim.ivf_ann_topk(emb, k=1)))
+        # cosine near-dup pair recall is asserted in tests/test_datapipe.py
+        # at sf0.01: this corpus has no pairs above 0.8 at bench scale
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+        def pairs(df):
+            return {(r["doc_id_1"], r["doc_id_2"]) for r in df.collect()}
+
+        exact_j = pairs(textops.ngram_jaccard_pairs(docs, n=3, threshold=0.8))
+        if exact_j:
+            quality["minhash_pair_recall"] = _recall(
+                exact_j, pairs(textops.minhash_lsh_pairs(docs, threshold=0.5)))
+    except Exception as exc:  # pragma: no cover - must not kill the bench
+        quality["error"] = str(exc)[:200]
+    return quality
+
+
+def emit(res: dict, sf) -> int:
+    """Print the contract line for ``res``; the exit code is non-zero
+    when a query raised."""
+    _PARTIAL["done"] = True
+    print(_contract_line(res["queries"], sf,
+                         partial_skipped=len(res["skipped_queries"])),
+          flush=True)
+    return 1 if res["error"] else 0
+
+
+def main() -> int:
+    t0 = time.monotonic()
+    signal.signal(signal.SIGTERM, _sigterm_rescue)
+
+    def remaining() -> float:
+        return BUDGET_S - (time.monotonic() - t0)
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     _PARTIAL["sf"] = sf
-    # start gate: scaled to the wall-clock budget (was a flat 180 s)
-    calib_before, calib_probes = _wait_for_quiet_box(
-        max_wait_s=min(120.0, max(0.0, 0.10 * _BUDGET_S)))
     spark = get_spark("polars-ts-spark-bench")
     qs = queries()
-    names = [n for n in HEADLINE if n in qs] + [
-        n for n in qs if n.startswith("bench_only_") and n not in HEADLINE
-    ]
-    # round-12 (VERDICT r11 #1): the quiet-gate runner accumulates a
-    # per-query composite across attempts; re-attempts only need the
-    # queries still lacking a clean probe bracket, so a comma-separated
-    # SPARK_GRAFT_BENCH_ONLY restricts the run (subset runs also skip
-    # the quality tail — the composite keeps it from a full attempt)
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = {n.strip() for n in only.split(",") if n.strip()}
-        names = [n for n in names if n in keep]
-    # warm the JVM + parquet footer cache with one tiny action
+    names = [n for n in HEADLINE if n in qs]
+    # warm the JVM + parquet footer cache with one tiny action, and the
+    # Python worker pool: the first applyInPandas stage otherwise pays
+    # the worker spawns + pandas/pyarrow imports on whichever kernel
+    # query runs first
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    # warm the Python-UDF worker pool: the first applyInPandas stage
-    # otherwise pays ~32 worker spawns + pandas/pyarrow imports, which
-    # lands on whichever kernel query happens to run first
-    import pandas as _pd  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
 
-    warm = spark.createDataFrame(_pd.DataFrame({"k": list(range(32)), "v": [0.0] * 32}))
+    warm = spark.createDataFrame(pd.DataFrame({"k": list(range(32)), "v": [0.0] * 32}))
     warm.repartition(32, "k").groupBy("k").applyInPandas(
         lambda pdf: pdf, schema="k long, v double"
     ).write.format("noop").mode("overwrite").save()
-    # re-probe AFTER the warmups: calib_before is tens of seconds stale
-    # by now, and a spike that started during warmup would otherwise
-    # slip inside the first query's bracket unseen
-    # two passes per query, keep the min: steady-state timing that a
-    # transient external load spike (or first-touch page-cache misses)
-    # can't distort — measured variance between back-to-back cold runs
-    # of the full suite was >2x on a shared box. Queries that regressed
-    # >15% between rounds on load noise get a third pass and a reported
-    # spread, so noise can't masquerade as a regression (VERDICT r4 #9).
-    RUNS = 2
-    # lsh_ann_topk added r6: pins the multi-probe recall-fix cost
-    # (0.96 -> 1.20 s in r5) so it can't drift unnoticed (VERDICT r5 #9)
-    # ivf_ann_topk added r6: new query whose time includes 3 training
-    # jobs — report a spread so host noise can't read as regression
-    # corpus_curation added r6: a composed pipeline whose eager component
-    # (cluster propagation) is the most load-sensitive query in the set —
-    # report a spread so host noise can't read as regression
-    RERUN3 = {"forecast_metrics", "kmedoids_dtw", "lsh_ann_topk", "ivf_ann_topk",
-              "corpus_curation"}
-    # round-8 (VERDICT r7 #1): the suite-start gate alone could not stop
-    # a MID-suite load spike from writing 2-2.5x phantom regressions
-    # into BENCH_r07 (kalman/arima/recursive on byte-identical code).
-    # Every sample is now BRACKETED by calibration probes — a sample
-    # only counts as clean when both its pre- and post-probe are quiet
-    # (the post-probe of sample k is the pre-probe of sample k+1, so
-    # the overhead is one ~0.2 s GEMM per sample). A query with no
-    # clean sample gets up to 2 extra passes behind a bounded
-    # wait-for-quiet; if it STILL has none it is flagged hot in the
-    # output instead of masquerading as a regression.
-    gate_on = os.environ.get("SPARK_GRAFT_NO_CALIB_GATE") != "1"
-    # clean thresholds are fully RELATIVE (round-13): 1.5x the best
-    # probe the start gate observed, plus an absolute jitter floor.
-    # The old absolute clamps ([0.40, 0.60] GEMM / [0.16, 0.30] bw)
-    # assumed the historical full-thread OpenBLAS box (~0.2 s idle
-    # GEMM); this container idles at 2.7 s under the old probe, so the
-    # clamps marked an IDLE box permanently hot and burned every wait
-    # budget — the proximate cause of the r12 rc=124 driver runs. A
-    # relative threshold tracks whatever hardware the driver runs on.
-    # jitter floors: post-query probes wobble to ~0.11 s on an idle
-    # box (JVM GC/scheduler noise right after a heavy stage) — the
-    # gate is for co-tenant CONTENTION (0.3 s+), not that wobble
-    base_gemm = min(p[0] for p in calib_probes)
-    base_bw = min(p[1] for p in calib_probes)
-    probe_thr = max(1.5 * base_gemm, base_gemm + 0.15, 0.20)
-    bw_thr = max(1.5 * base_bw, base_bw + 0.10, 0.15)
-
-    def _quiet(p: tuple[float, float]) -> bool:
-        # the gating criterion: GEMM only (see the sampling loop note)
-        return p[0] <= probe_thr
-
-    def _bw_quiet(p: tuple[float, float]) -> bool:
-        return p[1] <= bw_thr
-
-    MAX_EXTRA = 2
-    # round-10 (VERDICT r9 #1): the bw probe now GATES too, but only
-    # BETWEEN queries — the r9 record had 54/56 queries bw_dirty and
-    # was useless for cross-round comparison, while gating bw
-    # mid-query stalls on the resident JVM's own memory traffic. The
-    # inter-query wait runs when the carried bracket probe is hot on
-    # EITHER axis, bounded per query AND suite-wide so a persistently
-    # loaded box degrades to the r9 diagnose-only behavior instead of
-    # hanging.
-    BW_WAIT_QUERY_S = 90.0
-    # round-13: both suite-wide wait pools are now FRACTIONS of the
-    # wall-clock budget (the old flat 480 s + 900 s pools summed with
-    # the 180 s start gate to ~26 min of possible sleep — more than the
-    # driver's whole kill window; both r12 runs died at rc=124 with
-    # nothing printed)
-    bw_wait_budget_s = min(480.0, 0.08 * _BUDGET_S)
-    MAX_EXTRA_BW = 1
-    # the GEMM re-sample waits get a suite-wide budget too (round-10):
-    # without one, a box that stays GEMM-hot costs up to 2 x 120 s of
-    # waiting PER QUERY — 4 h worst case over a 60-query suite. Once
-    # the budget is gone, re-samples still run (they're cheap), only
-    # the waits stop.
-    gemm_wait_budget_s = min(900.0, 0.12 * _BUDGET_S)
-    timings: dict[str, float] = {}
-    _PARTIAL["timings"] = timings
-    cold: dict[str, float] = {}
-    cold_dirty: list[str] = []
-    bw_dirty: list[str] = []
-    spread: dict[str, list[float]] = {}
-    probe_trail: dict[str, list[float]] = {}
-    bw_trail: dict[str, list[float]] = {}
-    hot_queries: list[str] = []
-    last_probe = _probe_pair() if gate_on else (0.0, 0.0)
-
-    def _one_sample(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        # several operators cache intermediates (pairwise grouped
-        # arrays, reconcile bottoms); drop them between queries so
-        # accumulated blocks don't GC-pressure later measurements
-        spark.catalog.clearCache()
-        # clearCache does NOT free localCheckpoint blocks (VERDICT r12
-        # #3a): those wait on Python GC + the async ContextCleaner, and
-        # a full-suite pytest run was observed holding 37 lingering
-        # persistent RDDs. The finished sample's DataFrame is gone, so
-        # every surviving persistent RDD is garbage — drop them
-        # deterministically between samples
-        import gc as _gc
-
-        _gc.collect()
-        try:
-            # py4j wraps the java Map as a dict-like JavaMap
-            for jrdd in list(
-                    spark.sparkContext._jsc.getPersistentRDDs().values()):
-                jrdd.unpersist(False)
-        except Exception:
-            pass  # cleanup must never kill the bench
-        return dt
-
-    import time as _t
-
-    # round-13 budget bookkeeping: per-query wall cost feeds a reserve
-    # so deliberate waits and extra passes never eat the time the
-    # remaining queries need, and the loop cuts to a PARTIAL report
-    # (never a silent rc=124) when the budget can't fit the next query
-    q_wall: list[float] = []
-    skipped: list[str] = []
-
-    def _avg_q() -> float:
-        return (sum(q_wall) / len(q_wall)) if q_wall else 12.0
-
-    for idx, name in enumerate(names):
-        n_left_after = len(names) - idx - 1
-        if _remaining() < _avg_q() * 1.2 + 15.0:
-            skipped = names[idx:]
-            break
-
-        def _wait_slack() -> float:
-            # seconds we may still spend sleeping after reserving wall
-            # clock for this query and every one after it
-            return _remaining() - (_avg_q() * (n_left_after + 1) * 1.1 + 30.0)
-
-        t_qstart = _t.monotonic()
-        runs_here = 3 if name in RERUN3 else RUNS
-        # (sec, gemm-bracket clean, bw-bracket clean). The GEMM probe
-        # gates re-sampling + hot_queries; the bandwidth probe gates
-        # the INTER-query wait here (the JVM is idle between queries,
-        # so a hot bw probe is external load, not self-traffic) and
-        # one bounded extra pass below — mid-query it stays
-        # diagnose-only (bw_dirty_queries)
-        if gate_on and bw_wait_budget_s > 0 and _wait_slack() > 6.0 and (
-                not _quiet(last_probe) or not _bw_quiet(last_probe)):
-            t0w = _t.monotonic()
-            last_probe, waited = _wait_for_quiet_box(
-                threshold=probe_thr, bw_threshold=bw_thr,
-                max_wait_s=min(BW_WAIT_QUERY_S, bw_wait_budget_s,
-                               _wait_slack()),
-                poll_s=6.0)
-            bw_wait_budget_s -= _t.monotonic() - t0w
-        samples: list[tuple[float, bool, bool]] = []
-        probes = [last_probe]
-        for run in range(runs_here):
-            if run > 0 and _remaining() < (
-                    samples[0][0] * 1.5 + _avg_q() * n_left_after + 20.0):
-                break  # keep the cold sample; reserve the rest
-            pre = probes[-1]
-            dt = _one_sample(name)
-            post = _probe_pair() if gate_on else (0.0, 0.0)
-            probes.append(post)
-            samples.append((dt, _quiet(pre) and _quiet(post),
-                            _bw_quiet(pre) and _bw_quiet(post)))
-            if run == 0:
-                cold[name] = round(dt, 3)
-                # cold numbers are ALWAYS run 0 (first-touch semantics)
-                # so they can't be re-sampled behind the gate — flag the
-                # load-contaminated ones instead, so cross-round cold
-                # comparisons can exclude them (ADVICE r8)
-                if gate_on and not samples[0][1]:
-                    cold_dirty.append(name)
-        extra = 0
-        while (gate_on and not any(c for _, c, _b in samples)
-               and extra < MAX_EXTRA
-               and _remaining() > samples[0][0] * 1.5
-               + _avg_q() * n_left_after + 20.0):
-            # wait on the SAME threshold the sample is judged by — the
-            # 0.30 default is stricter than probe_thr and would burn
-            # the full wait budget on a box idling in the jitter band.
-            # bw_threshold=None: this wait was triggered by the GEMM
-            # gate, so it terminates on GEMM quiet alone (ADVICE r9 —
-            # a resident-JVM-noisy bw probe must not burn 120 s here)
-            t0w = _t.monotonic()
-            pre, waited = _wait_for_quiet_box(
-                threshold=probe_thr, bw_threshold=None,
-                max_wait_s=min(120.0, max(0.0, gemm_wait_budget_s),
-                               max(0.0, _wait_slack())))
-            gemm_wait_budget_s -= _t.monotonic() - t0w
-            probes.extend(waited)
-            dt = _one_sample(name)
-            post = _probe_pair()
-            probes.append(post)
-            samples.append((dt, _quiet(pre) and _quiet(post),
-                            _bw_quiet(pre) and _bw_quiet(post)))
-            extra += 1
-        # round-10: if every gemm-clean sample is bw-dirty, spend one
-        # bounded extra pass behind a bw-inclusive wait (inter-sample,
-        # JVM idle) — this is what turns a transient co-tenant spike
-        # into a clean record instead of a bw_dirty flag
-        extra_bw = 0
-        while (gate_on and bw_wait_budget_s > 0
-               and any(c for _, c, _b in samples)
-               and not any(c and b for _, c, b in samples)
-               and extra_bw < MAX_EXTRA_BW
-               and _remaining() > samples[0][0] * 1.5
-               + _avg_q() * n_left_after + 20.0):
-            t0w = _t.monotonic()
-            pre, waited = _wait_for_quiet_box(
-                threshold=probe_thr, bw_threshold=bw_thr,
-                max_wait_s=min(BW_WAIT_QUERY_S, bw_wait_budget_s,
-                               max(6.0, _wait_slack())),
-                poll_s=6.0)
-            bw_wait_budget_s -= _t.monotonic() - t0w
-            probes.extend(waited)
-            dt = _one_sample(name)
-            post = _probe_pair()
-            probes.append(post)
-            samples.append((dt, _quiet(pre) and _quiet(post),
-                            _bw_quiet(pre) and _bw_quiet(post)))
-            extra_bw += 1
-        clean = [(dt, b) for dt, c, b in samples if c]
-        # round-13: report the MIN over ALL samples. External load can
-        # only INFLATE a sample, so the minimum is the least-
-        # contaminated steady-state estimate; the previous prefer-a-
-        # clean-BRACKET rule let ~100 ms of probe jitter pick a 7.4 s
-        # sample over a 3.8 s one (observed on minhash_lsh_pairs in
-        # this round's first full run). Brackets still drive the
-        # waits, extra passes and the hot/bw_dirty diagnostics.
-        best = min((dt, b) for dt, _, b in samples)
-        timings[name] = round(best[0], 3)
-        if not clean and gate_on:
-            hot_queries.append(name)
-        if gate_on and not best[1]:
-            bw_dirty.append(name)
-        if name in RERUN3 or extra or extra_bw:
-            spread[name] = sorted(round(dt, 3) for dt, _, _b in samples)
-        probe_trail[name] = [round(p[0], 3) for p in probes]
-        bw_trail[name] = [round(p[1], 3) for p in probes]
-        last_probe = probes[-1]
-        q_wall.append(_t.monotonic() - t_qstart)
-        # progress on STDERR (stdout carries only the final contract
-        # line): a killed run's tail then shows how far it got
-        print(f"[bench] {idx + 1}/{len(names)} {name} "
-              f"{timings[name]:.3f}s elapsed={_elapsed():.0f}s",
-              file=sys.stderr, flush=True)
-    total = round(sum(timings.values()), 3)
-    # approximate-path quality at bench scale: recall of the LSH/ANN
-    # scale paths against their exact baselines (VERDICT r3 #4) —
-    # fast-but-wrong is not done, so the bench reports both axes
-    quality: dict[str, float] = {}
-    try:
-        if only:
-            raise _SubsetRun  # subset run — quality rides the full attempt
-        if _remaining() < 90.0:
-            # the quality tail costs ~30-60 s of collects; skipping it
-            # under budget pressure beats losing the contract line (it
-            # is also asserted in tests/test_datapipe.py, so a recall
-            # regression is still caught)
-            quality["skipped"] = "wall-clock budget exhausted"
-            raise _SubsetRun
-        from polars_ts_spark.operators import embedsim, textops  # noqa: PLC0415
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        bf1 = {r["vec_id"]: r["neighbor_id"]
-               for r in embedsim.brute_force_topk(emb, k=1).collect()}
-        ann1 = {r["vec_id"]: r["neighbor_id"]
-                for r in embedsim.lsh_ann_topk(emb, k=1).collect()}
-        if bf1:
-            quality["ann_recall_at_1"] = round(
-                sum(1 for v, nb in bf1.items() if ann1.get(v) == nb) / len(bf1), 4)
-        ivf1 = {r["vec_id"]: r["neighbor_id"]
-                for r in embedsim.ivf_ann_topk(emb, k=1).collect()}
-        if bf1:
-            quality["ivf_recall_at_1"] = round(
-                sum(1 for v, nb in bf1.items() if ivf1.get(v) == nb) / len(bf1), 4)
-        # (cosine near-dup pair recall is asserted in tests/test_datapipe.py
-        # at sf0.01 — this corpus has no pairs above 0.8 at bench scale, so
-        # the exact baseline here would only burn a quadratic pass)
-        docs_df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        exact_j = {(r["doc_id_1"], r["doc_id_2"])
-                   for r in textops.ngram_jaccard_pairs(docs_df, n=3, threshold=0.8).collect()}
-        mh = {(r["doc_id_1"], r["doc_id_2"])
-              for r in textops.minhash_lsh_pairs(docs_df, threshold=0.5).collect()}
-        if exact_j:
-            quality["minhash_pair_recall"] = round(len(exact_j & mh) / len(exact_j), 4)
-    except _SubsetRun:
-        quality.setdefault("skipped", "subset run (SPARK_GRAFT_BENCH_ONLY)")
-    except Exception as exc:  # pragma: no cover - quality tail must not kill bench
-        quality["error"] = str(exc)[:200]
-    # report BOTH the warm min-of-N headline and the first-run (cold)
-    # total, so the number stays comparable to single-run harnesses
+    res = run_queries(spark, qs, names, sf_dir, remaining)
+    # the quality tail costs ~30-60 s of collects; skipping it under
+    # budget pressure beats losing the contract line (recall is also
+    # asserted in tests/test_datapipe.py)
+    quality = (_quality(spark, sf_dir) if remaining() >= 90.0
+               else {"skipped": "wall-clock budget exhausted"})
     record = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(res["queries"].values()), 3),
         "unit": "sec",
-        "queries": timings,
+        "queries": res["queries"],
         "sf": sf,
         "runs_per_query": RUNS,
         "agg": "min",
-        "cold_total": round(sum(cold.values()), 3),
-        "cold_queries": cold,
-        "wall_budget_s": _BUDGET_S,
-        "wall_elapsed_s": round(_elapsed(), 1),
-        "skipped_queries": skipped,
-        "cold_dirty_queries": cold_dirty,
-        "bw_dirty_queries": bw_dirty,
+        "cold_total": round(sum(res["cold_queries"].values()), 3),
+        "cold_queries": res["cold_queries"],
+        "wall_budget_s": BUDGET_S,
+        "wall_elapsed_s": round(BUDGET_S - remaining(), 1),
+        "skipped_queries": res["skipped_queries"],
+        "error": res["error"],
         "quality": quality,
-        "spread_runs": spread,
-        "hot_queries": hot_queries,
-        "probe_clean_threshold_sec": round(probe_thr, 3),
-        "bw_clean_threshold_sec": round(bw_thr, 3),
-        "probe_trail_sec": probe_trail,
-        "bw_trail_sec": bw_trail,
-        "cpu_calibration_sec": {"before": calib_before[0],
-                                "bw_before": calib_before[1],
-                                "after": _cpu_calibration(),
-                                "bw_after": _bw_calibration(),
-                                "gate_probes": [p[0] for p in calib_probes],
-                                "bw_gate_probes": [p[1] for p in calib_probes]},
-        "notes": {
-            "headline_set": "grew r7->r8: +decontaminate_sharded (shard-and-OR "
-                            "recipe, 3 corpus passes by design), "
-                            "+ngram_lm_score, +dsir_importance, "
-                            "+perplexity_buckets — compare "
-                            "totals on the shared-query subset, not headline "
-                            "sums",
-            "probe_gate": "every sample is bracketed by a ~0.03 s GEMM probe "
-                          "(probe_trail_sec, threshold "
-                          "probe_clean_threshold_sec — RELATIVE to the "
-                          "run's own idle baseline since r13; gates "
-                          "re-sampling, "
-                          "no-clean-sample queries land in hot_queries) AND "
-                          "a ~0.05 s 128 MB preallocated-copy bandwidth "
-                          "probe "
-                          "(bw_trail_sec, threshold bw_clean_threshold_sec, "
-                          "new r9 — compute-only probes under-detected "
-                          "bandwidth/IO-shaped co-tenant load that ran "
-                          "shared queries 1.1-1.6x while GEMM stayed "
-                          "quiet). Round 10: the bw probe gates "
-                          "INTER-query waits (the JVM is idle between "
-                          "queries, so a hot bw probe there is external "
-                          "load, not self-traffic) plus one bounded extra "
-                          "pass for queries whose gemm-clean samples are "
-                          "all bw-dirty; both waits draw from a suite-wide "
-                          "~480 s budget so a persistently loaded box "
-                          "degrades to the r9 diagnose-only behavior "
-                          "(bw_dirty_queries) instead of stalling. "
-                          "GEMM-triggered re-sample waits terminate on "
-                          "GEMM quiet alone (ADVICE r9). Among gemm-clean "
-                          "samples the reported min prefers a bw-clean "
-                          "bracket",
-            "corpus_curation": "a COMPOSED pipeline (minhash-LSH dedup + "
-                               "component propagation + quality/language/"
-                               "token scans) — its cost is the sum of its "
-                               "stages, ~half the minhash pass timed above",
-        },
+        "probe_sec": res["probe_sec"],
     }
-    # the full record goes to a FILE: the driver keeps only a stdout
-    # tail, which truncated BENCH_r07 mid-object (the warm map was
-    # lost) — a file write survives any stdout capture window
-    out_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "BENCH_LOCAL.json"))
+    # the full record goes to a file: a stdout tail would truncate it
+    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "BENCH_LOCAL.json")
     try:
         with open(out_path, "w") as f:
             json.dump(record, f, indent=1)
             f.write("\n")
-        record["file"] = out_path
     except OSError:
         pass  # a read-only checkout still gets the stdout line
-    # stop Spark BEFORE printing so no JVM log line can land after the
-    # contract line in a combined-stream capture, then print the SLIM
-    # line (round-13, VERDICT r12 #1a: the full record on stdout
-    # exceeded the driver's 2000-byte tail every round since r5 —
-    # probe trails, spreads and notes now live ONLY in the file above)
+    # stop Spark before printing so no JVM log line can land after the
+    # contract line in a combined-stream capture
     try:
         spark.stop()
     except Exception:
         pass
-    _PARTIAL["done"] = True
-    print(_contract_line(timings, sf, partial_skipped=len(skipped)),
-          flush=True)
+    return emit(res, sf)
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

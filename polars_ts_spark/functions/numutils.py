@@ -220,21 +220,6 @@ def f_sf(x: float, d1: float, d2: float) -> float:
     return betainc_reg(d2 / 2.0, d1 / 2.0, d2 / (d2 + d1 * x))
 
 
-def t_sf(x: float, df: float) -> float:
-    """Student-t survival function (one-sided)."""
-    p = 0.5 * betainc_reg(df / 2.0, 0.5, df / (df + x * x))
-    return p if x >= 0 else 1.0 - p
-
-
-def norm_cdf(x):
-    """Standard normal CDF (vectorized, Abramowitz-Stegun 7.1.26 via erf)."""
-    x = np.asarray(x, dtype=float)
-    t = 1.0 / (1.0 + 0.3275911 * np.abs(x) / np.sqrt(2.0))
-    poly = t * (0.254829592 + t * (-0.284496736 + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429))))
-    erf = 1.0 - poly * np.exp(-x * x / 2.0)
-    return 0.5 * (1.0 + np.sign(x) * erf)
-
-
 # ---------------------------------------------------------------------------
 # linear models (normal equations; replaces sklearn estimators)
 

@@ -628,26 +628,6 @@ def sarima_forecast_series(
     return fc
 
 
-def _seasonal_autocorr(y: np.ndarray, s: int) -> float:
-    y = np.asarray(y, float)
-    if len(y) <= s:
-        return 0.0
-    d = y - y.mean()
-    denom = float((d * d).sum())
-    if denom == 0:
-        return 0.0
-    return float((d[s:] * d[:-s]).sum() / denom)
-
-
-def _lag1_autocorr(y: np.ndarray) -> float:
-    y = np.asarray(y, float)
-    d = y - y.mean()
-    denom = float((d * d).sum())
-    if denom == 0:
-        return 0.0
-    return float((d[1:] * d[:-1]).sum() / denom)
-
-
 def kpss_stat(y: np.ndarray) -> float:
     """KPSS level-stationarity statistic (Bartlett-window long-run
     variance, lags = floor(4·(n/100)^0.25) — the R/urca 'lshort' (l4)

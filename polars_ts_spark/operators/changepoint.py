@@ -114,62 +114,6 @@ def bocpd(
 # Gaussian HMM regime detection
 
 
-def _hmm_fit_series(y: np.ndarray, n_states: int = 2, n_iter: int = 50,
-                    early_stop: bool = True):
-    """Baum-Welch for a Gaussian-emission HMM; quantile-based init (no
-    RNG -> deterministic). Returns (states, gamma_max, means)."""
-    y = np.asarray(y, float)
-    n = len(y)
-    qs = np.quantile(y, np.linspace(0.1, 0.9, n_states))
-    means = qs.copy()
-    var = np.full(n_states, np.var(y) / n_states + 1e-8)
-    A = np.full((n_states, n_states), 0.1 / max(n_states - 1, 1))
-    np.fill_diagonal(A, 0.9)
-    pi = np.full(n_states, 1.0 / n_states)
-    for _ in range(n_iter):
-        # emission likelihoods
-        B = np.exp(-0.5 * (y[:, None] - means[None, :]) ** 2 / var[None, :]) / np.sqrt(
-            2 * np.pi * var[None, :]
-        )
-        B = np.maximum(B, 1e-300)
-        # forward-backward (scaled)
-        alpha = np.empty((n, n_states))
-        c = np.empty(n)
-        alpha[0] = pi * B[0]
-        c[0] = alpha[0].sum()
-        alpha[0] /= c[0]
-        for t in range(1, n):
-            alpha[t] = (alpha[t - 1] @ A) * B[t]
-            c[t] = alpha[t].sum() or 1e-300
-            alpha[t] /= c[t]
-        beta = np.empty((n, n_states))
-        beta[-1] = 1.0
-        for t in range(n - 2, -1, -1):
-            beta[t] = (A @ (B[t + 1] * beta[t + 1])) / c[t + 1]
-        gamma = alpha * beta
-        gamma /= np.maximum(gamma.sum(axis=1, keepdims=True), 1e-300)
-        # xi_sum = sum_t alpha_t (x) (A * B_{t+1} beta_{t+1} / c_{t+1})
-        # vectorized over t — the per-step Python loop dominated runtime
-        w = B[1:] * beta[1:] / c[1:, None]
-        xi_sum = A * (alpha[:-1].T @ w)
-        # M-step
-        pi = gamma[0]
-        A = xi_sum / np.maximum(xi_sum.sum(axis=1, keepdims=True), 1e-300)
-        w = gamma.sum(axis=0)
-        prev_means = means
-        means = (gamma * y[:, None]).sum(axis=0) / np.maximum(w, 1e-300)
-        var = (gamma * (y[:, None] - means[None, :]) ** 2).sum(axis=0) / np.maximum(w, 1e-300)
-        var = np.maximum(var, 1e-8)
-        if early_stop and np.max(np.abs(means - prev_means)) < 1e-8 * (1 + np.max(np.abs(means))):
-            break
-    # order states by mean so labels are deterministic
-    order = np.argsort(means)
-    remap = np.empty(n_states, dtype=int)
-    remap[order] = np.arange(n_states)
-    states = remap[np.argmax(gamma, axis=1)]
-    return states, gamma.max(axis=1), means[order]
-
-
 def _hmm_fit_batch(ys: list[np.ndarray], n_states: int, n_iter: int,
                    early_stop: bool = True):
     """Baum-Welch for MANY series with ONE shared t-loop: the series

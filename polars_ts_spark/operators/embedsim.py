@@ -51,16 +51,6 @@ def _as_double(col: str) -> F.Column:
     return F.col(col).cast("array<double>")
 
 
-def _dot(a: str, b: str) -> F.Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
-    )
-
-
-def _norm(a: str) -> F.Column:
-    return F.sqrt(F.expr(f"aggregate({a}, 0D, (acc, v) -> acc + v * v)"))
-
-
 # Exact-parity variants: the dot product written as an explicit
 # left-associative 64-term sum. float32*float32 in float64 is exact
 # (48-bit product < 53-bit mantissa) and both engines then perform the
@@ -71,10 +61,6 @@ def _norm(a: str) -> F.Column:
 
 def _dot_expanded(a: str, b: str, dim: int = DIM) -> F.Column:
     return F.expr(" + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)))
-
-
-def _norm_expanded(a: str, dim: int = DIM) -> F.Column:
-    return F.sqrt(F.expr(" + ".join(f"{a}[{i}] * {a}[{i}]" for i in range(dim))))
 
 
 def duck_dot(a: str, b: str, dim: int = DIM) -> str:
@@ -259,36 +245,6 @@ def _plane_value(plane: int, dim: int) -> float:
 
     h = int(hashlib.md5(f"plane_{plane}_{dim}".encode()).hexdigest()[:8], 16)
     return (h % 2000001) / 1000000.0 - 1.0
-
-
-def random_hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
-    return [[_plane_value(p, d) for d in range(dim)] for p in range(n_planes)]
-
-
-def lsh_bucket_ids(
-    df: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector: bit p of the
-    bucket = sign(<v, plane_p>). Output [vec_id, bucket].
-
-    The planes are deterministic constants folded into the plan
-    (literal arrays) — Catalyst constant-folds them; the scan is one
-    projection, no shuffle."""
-    planes = random_hyperplanes(n_planes, dim)
-    bucket = None
-    for p, plane in enumerate(planes):
-        dot = F.expr(
-            f"aggregate(zip_with(cast({vec_col} as array<double>), "
-            f"array({', '.join(repr(x) + 'D' for x in plane)}), (x, y) -> x * y), "
-            f"0D, (acc, v) -> acc + v)"
-        )
-        bit = F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return df.select(F.col(id_col), bucket.alias("bucket"))
 
 
 def _band_keys_udf(n_bands: int, bits: int, dim: int):

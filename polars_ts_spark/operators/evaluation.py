@@ -152,23 +152,6 @@ def weighted_ensemble(
     )
 
 
-def inverse_error_weights(
-    df: DataFrame,
-    forecasts: dict[str, DataFrame],
-    id_col: str = ID,
-    time_col: str = TIME,
-    target_col: str = TARGET,
-) -> dict[str, float]:
-    """weights ∝ 1/MAE on overlapping actuals (weighted.py:70-110)."""
-    out = {}
-    for n, f in forecasts.items():
-        j = df.join(f, [id_col, time_col], "inner")
-        mae = j.agg(F.mean(F.abs(F.col(target_col) - F.col("y_hat")))).collect()[0][0]
-        out[n] = 1.0 / max(float(mae), 1e-12)
-    s = sum(out.values())
-    return {n: v / s for n, v in out.items()}
-
-
 class StackingForecaster:
     """Meta-learner (ridge) on base-model backtest predictions
     (ensemble/stacking.py:16-128): base models forecast a held-out

@@ -74,14 +74,6 @@ def duck_hash60(col_sql: str) -> str:
     return f"CAST(('0x' || substr(md5({col_sql}), 1, 15)) AS BIGINT)"
 
 
-def spark_hash32(col_sql: str) -> str:
-    return f"cast(conv(substr(md5({col_sql}), 1, 8), 16, 10) as bigint)"
-
-
-def duck_hash32(col_sql: str) -> str:
-    return f"CAST(('0x' || substr(md5({col_sql}), 1, 8)) AS BIGINT)"
-
-
 # ---------------------------------------------------------------------------
 # scan spreading
 

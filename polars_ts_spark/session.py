@@ -9,6 +9,7 @@ Scale notes (100 TB / 1000-executor target):
 
 from __future__ import annotations
 
+import gc
 import os
 
 from pyspark.sql import SparkSession
@@ -40,3 +41,17 @@ def get_spark(app_name: str = "polars-ts-spark", **extra_conf: str) -> SparkSess
     for k, v in {**_DEFAULTS, **extra_conf}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def free_blocks(spark: SparkSession) -> None:
+    """Drop every cached and checkpointed block in the session.
+
+    ``clearCache()`` does not release localCheckpoint blocks; those
+    otherwise wait on Python GC and Spark's asynchronous ContextCleaner.
+    Unpersists every persistent RDD, so call it only between queries,
+    when nothing still holds one."""
+    spark.catalog.clearCache()
+    gc.collect()
+    # py4j wraps the java Map as a dict-like JavaMap
+    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        jrdd.unpersist(False)

@@ -8,7 +8,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import types as T
 
-from polars_ts_spark.session import get_spark
+from polars_ts_spark.session import free_blocks, get_spark
 
 
 @pytest.fixture(scope="session")
@@ -36,15 +36,7 @@ def _drop_persistent_blocks(request):
                or SparkSession._instantiatedSession)
     if spark_s is None:
         return  # module never started Spark — nothing to free
-    import gc
-
-    gc.collect()
-    try:
-        for jrdd in list(
-                spark_s.sparkContext._jsc.getPersistentRDDs().values()):
-            jrdd.unpersist(False)
-    except Exception:
-        pass
+    free_blocks(spark_s)
 
 
 PANEL_SCHEMA = T.StructType([

@@ -6,23 +6,20 @@ evidence chain and gets the same test treatment as operators.
 - merge_correctness note stamping: VERDICT r11 "what's wrong" #1 — the
   r11 merge carried the r10 note verbatim, misstating which entries
   were fresh. Every merge must rewrite the note.
-- bench composite accumulation: VERDICT r11 next-round #1 — per-query
-  clean-bracket minima accumulated across attempts.
+- bench query loop: a query that raises must still leave a parseable
+  partial contract line, and must not stop the caller's session.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import signal
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.bench_when_quiet import (  # noqa: E402
-    build_composite,
-    is_clean,
-    merge_attempt,
-)
+import bench  # noqa: E402
 from tools.merge_correctness import infer_round, stamp_note  # noqa: E402
 
 
@@ -54,63 +51,24 @@ def test_infer_round_from_driver_artifacts(tmp_path):
     assert repo_round == max(recorded) + 1
 
 
-def _rec(queries, hot=(), bw_dirty=()):
-    return {"queries": queries, "hot_queries": list(hot),
-            "bw_dirty_queries": list(bw_dirty),
-            "probe_trail_sec": {n: [0.2] for n in queries},
-            "bw_trail_sec": {n: [0.1] for n in queries},
-            "sf": 0.1, "quality": {}, "cold_queries": {}}
+def test_bench_query_error_prints_partial_line(spark, capsys):
+    def boom(spark, sf_dir):
+        raise RuntimeError("boom")
+
+    stub = {"ok": lambda spark, sf_dir: spark.range(3), "boom": boom}
+    res = bench.run_queries(spark, stub, ["ok", "boom"], "unused",
+                            remaining=lambda: 1e9)
+    assert res["error"].startswith("boom: RuntimeError")
+    assert res["skipped_queries"] == ["boom"]
+    assert bench.emit(res, 0.1) != 0
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(line) == {"metric", "value", "unit", "queries", "sf",
+                         "partial_skipped"}
+    assert line["queries"] == {"ok": round(res["queries"]["ok"], 2)}
+    assert line["partial_skipped"] == 1
+    # the loop never stops the session it was handed
+    assert spark.range(2).count() == 2
 
 
-def test_bench_composite_clean_beats_dirty_and_min_among_clean():
-    comp = {}
-    rec0 = _rec({"q1": 2.0, "q2": 5.0, "q3": 3.0},
-                hot=["q2"], bw_dirty=["q2", "q3"])
-    assert is_clean("q1", rec0) and not is_clean("q2", rec0)
-    merge_attempt(comp, rec0, 0)
-    # clean replaces dirty even when SLOWER (6.0 > 5.0)
-    merge_attempt(comp, _rec({"q2": 6.0, "q3": 2.5}), 1)
-    assert comp["q2"] == {**comp["q2"], "value": 6.0, "attempt": 1,
-                          "clean": True}
-    # among clean samples, the minimum wins
-    merge_attempt(comp, _rec({"q2": 4.5}), 2)
-    assert comp["q2"]["value"] == 4.5 and comp["q2"]["attempt"] == 2
-    # a dirty sample can never displace a clean one
-    merge_attempt(comp, _rec({"q2": 0.5}, hot=["q2"]), 3)
-    assert comp["q2"]["value"] == 4.5
-    out = build_composite(comp, rec0, attempt_totals=[{"attempt": 0}])
-    assert out["mode"] == "composite"
-    assert out["value"] == 2.0 + 4.5 + 2.5
-    assert out["hot_queries"] == [] and out["bw_dirty_queries"] == []
-    assert out["query_provenance"]["q2"] == {"attempt": 2, "clean": True}
-
-
-def test_bench_composite_flags_never_clean_queries():
-    comp = {}
-    rec = _rec({"q1": 2.0, "q2": 5.0, "q3": 3.0},
-               hot=["q2"], bw_dirty=["q2", "q3"])
-    merge_attempt(comp, rec, 0)
-    # a dirty-but-faster re-sample still updates the kept minimum
-    merge_attempt(comp, _rec({"q2": 4.0}, hot=["q2"], bw_dirty=["q2"]), 1)
-    out = build_composite(comp, rec, attempt_totals=[])
-    assert out["hot_queries"] == ["q2"]
-    assert out["bw_dirty_queries"] == ["q2", "q3"]
-    assert out["queries"]["q2"] == 4.0
-    assert out["query_provenance"]["q2"] == {"attempt": 1, "clean": False}
-
-
-def test_bench_composite_shared_subset_vs_committed_records():
-    """The composite must carry shared-subset totals vs the committed
-    r8/r10/r11 records so cross-round drift reads straight from the
-    file (VERDICT r11 #1 'Done =' clause)."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hist = json.load(open(os.path.join(repo, "tools", "bench_history.json")))
-    r11 = hist["r11"]["queries"]
-    comp = {}
-    merge_attempt(comp, _rec({n: 1.0 for n in list(r11)[:5]}), 0)
-    out = build_composite(comp, _rec({}), attempt_totals=[])
-    ss = out["shared_subset"]["vs_r11"]
-    assert ss["n_queries"] == 5
-    assert ss["composite_total"] == 5.0
-    assert ss["ratio"] > 0
-    assert ss["their_commit"] == hist["r11"]["source_commit"]
+def test_importing_bench_leaves_sigterm_alone():
+    assert signal.getsignal(signal.SIGTERM) is not bench._sigterm_rescue

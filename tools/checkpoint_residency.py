@@ -6,7 +6,7 @@ to rely on Python GC + ContextCleaner lag. This tool runs the
 checkpoint-heavy queries back-to-back and logs, after each sample,
 (a) the persistent-RDD count and storage memory LEFT BEHIND by the
 query, and (b) both again after the bench's cleanup step
-(gc.collect + explicit unpersist of every persistent RDD) — proving
+(``polars_ts_spark.session.free_blocks``) — proving
 residency stays flat with the cleanup and accumulates without it.
 
 Usage: python tools/checkpoint_residency.py [--no-cleanup]
@@ -14,14 +14,13 @@ Usage: python tools/checkpoint_residency.py [--no-cleanup]
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import queries  # noqa: E402
-from polars_ts_spark.session import get_spark  # noqa: E402
+from polars_ts_spark.session import free_blocks, get_spark  # noqa: E402
 
 QUERIES = [
     "minhash_lsh_pairs", "simhash_pairs", "corpus_curation",
@@ -60,10 +59,7 @@ def main() -> None:
             spark.catalog.clearCache()
             n0, m0, d0 = _storage(spark)
             if cleanup:
-                gc.collect()
-                for jrdd in list(
-                        spark.sparkContext._jsc.getPersistentRDDs().values()):
-                    jrdd.unpersist(False)
+                free_blocks(spark)
             n1, m1, _ = _storage(spark)
             print(f"{name}[{s}]{'':{max(0, 31 - len(name))}s} {n0:5d}"
                   f" {m0 / 2**20:8.1f} {d0 / 2**20:8.1f} {n1:5d}"
