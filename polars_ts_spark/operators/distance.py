@@ -157,6 +157,8 @@ def compute_pairwise_distance(
     _BC_ELEMS_CAP (same memory constraint the broadcast join had).
     """
     require_columns(df1, id_col, time_col, target_col)
+    if df2 is not None:
+        require_columns(df2, id_col, time_col, target_col)
     id_dtype = dict(df1.dtypes)[id_col]
     same = df2 is None
     spark = df1.sparkSession
@@ -307,7 +309,6 @@ def _pairwise_crossjoin(
     if same:
         g2 = g1.withColumnRenamed("id_1", "id_2").withColumnRenamed("__v1", "__v2")
     else:
-        require_columns(df2, id_col, time_col, target_col)
         g2 = _grouped_arrays(df2, id_col, time_col, target_col, "id_2", "__v2").cache()
 
     # Pre-join repartition of the STREAM side: AQE coalesces the small
@@ -389,6 +390,8 @@ def compute_pairwise_distance_multi(
     non-id/time columns as channels (src/utils.rs:89-162 data model)."""
     require_columns(df1, id_col, time_col)
     cols = value_cols or [c_ for c_ in df1.columns if c_ not in (id_col, time_col)]
+    if df2 is not None:
+        require_columns(df2, id_col, time_col, *cols)
     struct_fields = ", ".join(f"cast(`{c_}` as double) as `{c_}`" for c_ in cols)
     arr = (
         f"transform(array_sort(collect_list(struct({time_col} as t, {struct_fields}))), "

@@ -8,7 +8,7 @@ vector ops). Spark-first: dot products via ``aggregate(zip_with(...))``
 higher-order functions — JVM-side, no Python in the hot path.
 
 Determinism: cosine is computed in float64 as an explicit
-left-associative sum (see ``_dot_expanded``), so Spark and the DuckDB
+left-associative sum (see ``cosine_dedup_pairs``), so Spark and the DuckDB
 oracle perform the identical IEEE operation sequence and agree
 bit-for-bit. The LSH hyperplanes are md5-derived pseudo-random
 constants — no RNG, reproducible in SQL.
@@ -57,10 +57,6 @@ def _as_double(col: str) -> F.Column:
 # IDENTICAL addition sequence, so Spark and DuckDB agree bit-for-bit —
 # HOF folds / list_dot_product may reassociate and differ by 1 ulp.
 # Also faster: one codegen'd expression, no per-element lambda calls.
-
-
-def _dot_expanded(a: str, b: str, dim: int = DIM) -> F.Column:
-    return F.expr(" + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)))
 
 
 def duck_dot(a: str, b: str, dim: int = DIM) -> str:

@@ -30,7 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from polars_ts_spark.operators import metrics as M
 from polars_ts_spark.panel import ID, TARGET, TIME
 
 # ---------------------------------------------------------------------------

@@ -39,6 +39,7 @@ from polars_ts_spark.functions.numutils import RidgeEstimator
 from polars_ts_spark.operators import features as FT
 from polars_ts_spark.operators.kernel import for_each_series
 from polars_ts_spark.panel import ID, TARGET, TIME, require_columns
+from polars_ts_spark.session import materialize
 
 # ---------------------------------------------------------------------------
 # design-matrix assembly (training side — pure Spark feature plan)
@@ -474,14 +475,13 @@ class GlobalForecaster(RecursiveForecaster):
         )
 
     def fit(self, df: DataFrame) -> "GlobalForecaster":
-        # localCheckpoint the (tiny) code frame so the encoding is
-        # FROZEN at fit time: an unpinned lazy plan (even a persisted
-        # one — evicted cache blocks recompute from source) would
-        # re-derive the codes at predict, and one id appended to the
-        # source between fit and predict would shift every later code.
-        # localCheckpoint truncates the lineage entirely: a lost block
-        # is an error, never a silent recompute against mutated data.
-        self.code_df = self._id_code_frame(df).localCheckpoint(eager=True)
+        # materialize the (tiny) code frame so the encoding is FROZEN
+        # at fit time: a lazy plan (even a persisted one — evicted cache
+        # blocks recompute from source) would re-derive the codes at
+        # predict, and one id appended to the source between fit and
+        # predict would shift every later code. With the lineage cut, a
+        # lost block is an error, never a silent recompute.
+        self.code_df = materialize(self._id_code_frame(df))
         df2 = df.join(self.code_df, self.id_col)
         feat_df, feat_cols = _training_frame(
             df2, self.lags, self.rolling_windows, self.rolling_aggs,

@@ -32,6 +32,8 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_ts_spark.session import materialize
+
 # ---------------------------------------------------------------------------
 # cross-engine deterministic hashing
 
@@ -391,18 +393,13 @@ def minhash_lsh_pairs(
     # filter is a broadcast anti-join and the candidate join keeps its
     # plain equi-join plan shape.
     bk = F.array(*[F.col(f"band_{bi}") for bi in range(bands)])
-    # materialize the per-doc signature+band frame ONCE (eager
-    # localCheckpoint, the dedup_clusters device): the melted frame
-    # below has FIVE consumers (the oversized-bucket stats, the
-    # anti-join, BOTH sides of the candidate self-join, the star
-    # emission) and each re-ran the whole scan -> shingle -> md5 ->
-    # signature DAG (the r12 before-plan shows five copies of that
-    # subtree, 28 exchanges, 6 scans at runtime — exchange reuse can
-    # never fire because each branch prunes different columns below
-    # its exchange). The checkpoint is one row per doc (num_hashes
-    # ints + bands keys) — linear, doc-bounded state at any corpus
-    # scale; every branch is a narrow in-memory projection of it.
-    with_bands = with_bands.localCheckpoint(eager=True)
+    # the melted frame below has FIVE consumers (the oversized-bucket
+    # stats, the anti-join, BOTH sides of the candidate self-join, the
+    # star emission), and lazily each re-ran the whole scan -> shingle
+    # -> md5 -> signature DAG (exchange reuse never fires: each branch
+    # prunes different columns below its exchange). One row per doc —
+    # linear, doc-bounded state at any corpus scale.
+    with_bands = materialize(with_bands)
     melted = with_bands.select(
         id_col, "__sig", F.posexplode(bk).alias("__band", "__key")
     )
@@ -424,7 +421,7 @@ def minhash_lsh_pairs(
     # from the signature checkpoint; it is bounded tiny by construction
     # (<= bands·n/max_bucket rows), so materialize it once and let both
     # broadcasts read the checkpointed rows
-    big = big.localCheckpoint(eager=True)
+    big = materialize(big)
     small = melted.join(F.broadcast(big.select("__band", "__key")),
                         ["__band", "__key"], "left_anti")
 
@@ -568,12 +565,10 @@ def simhash_pairs(
     # melt to (doc_id, simhash, block_idx, block_key): the 4 pigeonhole
     # equi-joins collapse into ONE self-join on (block_idx, key) — one
     # shuffle stage instead of four join stages + union
-    # materialize the per-doc fingerprint ONCE (eager localCheckpoint):
-    # both sides of the self-join below re-ran the whole token -> vote
-    # -> fingerprint DAG (the r12 before-plan shows two full copies;
-    # the broadcast side can never reuse the probe side's work). One
-    # row per doc — linear, doc-bounded state at any corpus scale.
-    fp = fp.localCheckpoint(eager=True)
+    # both sides of the self-join below read the per-doc fingerprint;
+    # lazily each re-ran the whole token -> vote -> fingerprint DAG.
+    # One row per doc — linear, doc-bounded state at any corpus scale.
+    fp = materialize(fp)
     melted = fp.select(
         id_col, "simhash",
         F.posexplode(F.array(
@@ -680,7 +675,7 @@ def _cc_label_prop(df, edges, id_col, max_iter, rounds_out=None):
                  < F.col("cluster_id")).alias("__chg"),
             )
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
+        new_labels = materialize(new_labels)
         changed = new_labels.where(F.col("__chg")).limit(1).count()
         labels = new_labels.drop("__chg")
         if changed == 0:
@@ -692,19 +687,18 @@ def _cc_label_prop(df, edges, id_col, max_iter, rounds_out=None):
 
 def _cc_star(df, edges, id_col, max_iter, rounds_out=None):
     """Alternating large-star/small-star contraction (Kiveris et al.
-    2014, "Connected Components in MapReduce and Beyond") — VERDICT
-    r10 #5. Each round rewires every node toward the minimum of its
-    neighborhood, so component radius roughly HALVES per round:
-    O(log^2 n) rounds worst case vs O(diameter) for label
-    propagation, and a diameter-64 chain that silently exceeds a
-    50-round propagation budget finishes in under a dozen star
-    rounds. Each round is two groupBy+join passes over the
-    linear-size edge list; lineage is cut once per round.
+    2014, "Connected Components in MapReduce and Beyond"). Each round
+    rewires every node toward the minimum of its neighborhood, so
+    component radius roughly HALVES per round: O(log^2 n) rounds worst
+    case vs O(diameter) for label propagation, and a diameter-64 chain
+    that silently exceeds a 50-round propagation budget finishes in
+    under a dozen star rounds. Each round is two groupBy+join passes
+    over the linear-size edge list; lineage is cut once per round.
 
     ``edges`` must be normalized: src > dst, distinct, no self loops.
     Returns [node, cluster_id] for every node of ``df`` (isolated
     nodes label themselves). Raises if ``max_iter`` rounds exhaust
-    before the star fixpoint (ADVICE r11: an unconverged edge set can
+    before the star fixpoint (an unconverged edge set can
     hold multiple outgoing edges per node, so the final node->root
     left join would fan out and emit conflicting cluster_ids —
     mirroring label_prop's loud budget-exhaustion error instead of
@@ -741,8 +735,8 @@ def _cc_star(df, edges, id_col, max_iter, rounds_out=None):
             .unionByName(
                 g2.select(F.col("src"), F.col("__m").alias("dst")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
+        ss = materialize(ss)
         new_n = ss.count()
         if new_n == n_edges and ss.exceptAll(edges).limit(1).count() == 0:
             edges = ss
@@ -786,8 +780,7 @@ def dedup_clusters(
     dedup pipeline actually needs, not just the pair list.
     Output [doc_id, cluster_id, is_canonical].
 
-    Spark-first components, three engines with identical output
-    (VERDICT r10 #5):
+    Spark-first components, three engines with identical output:
 
     - ``algorithm="auto"`` (default): min-label propagation for up to
       ``lp_budget`` rounds — the cheapest plan per round, and real
@@ -807,10 +800,10 @@ def dedup_clusters(
       rather than returning silently wrong labels.
 
     No driver union-find, no all-pairs blowup; lineage is cut per
-    round with localCheckpoint so the plan does not nest.
+    round with ``materialize`` so the plan does not nest.
     ``rounds_out``: pass a list to receive the number of rounds the
     engine(s) actually ran (appended once, total)."""
-    # ADVICE r11: zero propagation rounds would report converged=True
+    # zero propagation rounds would report converged=True
     # (changed initializes to 0) and silently return self-labels that
     # ignore every edge — refuse degenerate budgets up front
     if max_iter < 1:
@@ -824,22 +817,21 @@ def dedup_clusters(
     def _norm_ckpt(edges_df):
         # normalize: src > dst, deduped, self-loops dropped; checkpoint
         # ONCE so upstream lineage is not re-run per round
-        return (
+        return materialize(
             edges_df.select(F.greatest("src", "dst").alias("src"),
                             F.least("src", "dst").alias("dst"))
             .where(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
 
     def _sym_ckpt(edges_df):
         # materialize the (linear-size) symmetric edge list ONCE: it is
         # re-joined every propagation round, and leaving it lazy re-ran
         # the whole upstream LSH pipeline per round
-        return edges_df.unionByName(
+        return materialize(edges_df.unionByName(
             edges_df.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst"))
-        ).localCheckpoint(eager=True)
+        ))
 
     if algorithm == "star":
         labels = _cc_star(df, _norm_ckpt(e), id_col, max_iter, rounds_out)
@@ -1825,15 +1817,12 @@ def decontaminate_sharded(
     unsharded op."""
     if n_shards < 1:
         raise ValueError(f"decontaminate_sharded: n_shards must be >= 1, got {n_shards}")
-    # ONE materialization of the benchmark gram set shared by every
-    # shard: the old shape re-ran the benchmark scan + explode +
-    # distinct once per shard for the cap probe AND once per shard for
-    # the broadcast build (2 x n_shards evaluations); each shard is now
-    # a cheap filter of the checkpointed set. Shard contents identical.
-    all_grams = (
+    # every shard's cap probe and broadcast build read the benchmark
+    # gram set; lazily each re-ran the benchmark scan + explode +
+    # distinct (2 x n_shards evaluations). Each shard is a filter of it.
+    all_grams = materialize(
         _gram_frame(benchmark, n, text_col, id_col)
         .select("gram").distinct()
-        .localCheckpoint(eager=True)
     )
     parts = []
     for s in range(n_shards):
@@ -2013,16 +2002,11 @@ def lsh_dedup_keep_first(
     # one row per DOCUMENT before the window: a source that delivers the
     # same doc row twice must neither re-emit it nor make the doc
     # compete with its own copy for rank 1 (rn=2 would mark it dropped).
-    # Materialized ONCE (eager localCheckpoint): the frame has two
-    # consumers — the band-key equi-join and the final keep-filter left
-    # join — and each re-ran the corpus scan + min-aggregate from
-    # scratch. One (id, ts) row per doc: linear, doc-bounded state at
-    # any corpus scale, the same device as the signature checkpoint in
-    # minhash_lsh_pairs.
-    base = (
-        df.groupBy(id_col).agg(F.min(time_col).alias(time_col))
-        .localCheckpoint(eager=True)
-    )
+    # Two consumers read it — the band-key equi-join and the final
+    # keep-filter left join — and lazily each re-ran the corpus scan +
+    # min-aggregate. One (id, ts) row per doc: doc-bounded state.
+    base = materialize(
+        df.groupBy(id_col).agg(F.min(time_col).alias(time_col)))
     melted = band_keys.join(base, id_col)
     w = Window.partitionBy("__band", "__key").orderBy(time_col, id_col)
     flagged = melted.withColumn(
@@ -2150,14 +2134,11 @@ def _ngram_lm_model(
     ref: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The add-alpha bigram LM's count tables: (unigram counts, bigram
-    counts, 1-row vocab size). ``materialize=True`` cuts lineage with
-    an eager localCheckpoint — the tables are gram-bounded (<< corpus
-    at any scale), so checkpointing them once lets several scoring
-    passes share ONE training job instead of re-aggregating the
-    reference per pass.
+    counts, 1-row vocab size), materialized: every scoring pass and the
+    vocab-size aggregate read the same gram-bounded (<< corpus at any
+    scale) counts instead of each re-aggregating the reference.
 
     Both tables come out of ONE combined count pass: unigrams and
     bigrams ride a single explode (a unigram can never contain the
@@ -2173,12 +2154,10 @@ def _ngram_lm_model(
         F.transform(F.sequence(F.lit(1), F.size(t) - 1),
                     lambda i: F.array_join(F.slice(t, i, 2), " ")),
     ).otherwise(F.expr("array()").cast("array<string>"))
-    counts = (
+    counts = materialize(
         tdf.select(F.explode(F.concat(t, bigrams)).alias("__g"))
         .groupBy("__g").agg(F.count("*").alias("__c"))
     )
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
     uni = counts.filter(~F.col("__g").contains(" ")).select(
         F.col("__g").alias("__w"), F.col("__c").alias("__c1"))
     bi = counts.filter(F.col("__g").contains(" ")).select(
@@ -2227,17 +2206,8 @@ def ngram_lm_score(
     if _model is not None:
         uni, bi, vsize = _model
     else:
-        # materialize the gram-bounded count tables (eager
-        # localCheckpoint): the plan references `uni` twice (the
-        # scoring join AND the vocab-size aggregate) and without
-        # materialization each reference re-ran the full
-        # reference-corpus scan + explode + aggregate — the r12
-        # before-plan showed 8 parquet scans for one scoring query.
-        # The tables are vocabulary-bounded (<< corpus at any scale),
-        # so this is the cheap side of the trade everywhere.
         uni, bi, vsize = _ngram_lm_model(
-            reference if reference is not None else df, text_col, id_col,
-            materialize=True)
+            reference if reference is not None else df, text_col, id_col)
     g = _gram_frame(df, 2, text_col, id_col).withColumn(
         "__w1", F.split(F.col("gram"), " ").getItem(0))
     logp = F.log(
@@ -2358,10 +2328,8 @@ def dsir_importance(
     # corpus scale) and each is referenced twice below (its total and
     # the lambda join) — materialize them once instead of re-running
     # the corpus/target featurization per reference
-    tgt = (feats(target).groupBy("__b").agg(F.count("*").alias("__ct"))
-           .localCheckpoint(eager=True))
-    raw = (feats(df).groupBy("__b").agg(F.count("*").alias("__cr"))
-           .localCheckpoint(eager=True))
+    tgt = materialize(feats(target).groupBy("__b").agg(F.count("*").alias("__ct")))
+    raw = materialize(feats(df).groupBy("__b").agg(F.count("*").alias("__cr")))
     tot = (
         tgt.agg(F.sum("__ct").cast("double").alias("__t"))
         .crossJoin(raw.agg(F.sum("__cr").cast("double").alias("__r")))
@@ -2644,11 +2612,10 @@ def perplexity_buckets_from_cutoffs(
     sample_mod: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize_model: bool = True,
     _model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """The 100 TB variant of ``perplexity_buckets`` (round-9 directive
-    #4 — the plan the exact op's docstring promises): train the
+    """The 100 TB variant of ``perplexity_buckets`` (the plan the exact
+    op's docstring promises): train the
     per-language bucket CUTOFFS on a deterministic md5 sample
     (``hash(doc_id) % sample_mod == 0``, ~1/sample_mod of the corpus),
     then ASSIGN every document by comparison against the cutoffs — a
@@ -2673,19 +2640,13 @@ def perplexity_buckets_from_cutoffs(
     replaces that with (a) the same rank window over ONLY the sample
     and (b) an n_buckets-1-row-per-language broadcast join — the
     assignment never shuffles the corpus."""
-    # train the LM ONCE and materialize its gram-bounded count tables
-    # (eager localCheckpoint): both scoring passes below — the full
-    # corpus for assignment and the 1/sample_mod sample for cutoffs —
-    # share the single training job. Without this the two branches
-    # each re-aggregated the reference, and the round-11 skew probe
-    # measured that duplicate train costing more than the exact
-    # NTILE sort this op exists to avoid at bench scale.
-    # ``_model``: a prebuilt ``_ngram_lm_model`` tuple — the curation
-    # composites train it on a driver thread OVERLAPPING the dedup
-    # stage (guide §2.6) and hand it in here.
+    # train the LM ONCE: both scoring passes below — the full corpus
+    # for assignment and the 1/sample_mod sample for cutoffs — read
+    # its materialized count tables. ``_model``: a prebuilt
+    # ``_ngram_lm_model`` tuple — the curation composites train it on a
+    # driver thread OVERLAPPING the dedup stage and hand it in here.
     model = _model if _model is not None else _ngram_lm_model(
-        reference if reference is not None else df, text_col, id_col,
-        materialize=materialize_model)
+        reference if reference is not None else df, text_col, id_col)
     scored = ngram_lm_score(df, None, alpha, text_col, id_col, _model=model)
     lang = language_id(df, text_col, id_col).select(id_col, "lang_pred")
     s = scored.join(lang, id_col).withColumn("__p6", F.round("perplexity", 6))
@@ -2810,11 +2771,10 @@ def corpus_curation_v2(
     line_filter: dict | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
     **lsh_kw,
 ) -> DataFrame:
-    """``corpus_curation`` extended with the CCNet LM-quality leg
-    (round-9 directive #5), mirroring the published pipeline order
+    """``corpus_curation`` extended with the CCNet LM-quality leg,
+    mirroring the published pipeline order
     (Wenzek et al. 2020: dedup -> LM score -> perplexity bucket ->
     filter): near-dup dedup keeps each cluster's canonical doc, the
     add-alpha bigram LM scores every kept doc, docs are bucketed per
@@ -2826,8 +2786,6 @@ def corpus_curation_v2(
     COUNT and integer SUMs only, so partition order cannot move a
     bit.
 
-    Round-10 legs (VERDICT r9 #2/#6):
-
     - ``line_filter``: a kwargs dict for ``c4_line_filters`` runs the
       published C4 line-level cleaning FIRST (Raffel et al. 2020 run
       line filtering before dedup/quality): docs failing the doc-level
@@ -2835,16 +2793,15 @@ def corpus_curation_v2(
     - ``reference``: the held-out LM training corpus — the published
       CCNet behavior (the LM is a KenLM trained on clean text, NOT on
       the corpus being filtered). Default ``None`` self-trains on the
-      kept corpus, the round-9 contract.
+      kept corpus.
     - ``use_sampled_cutoffs``: compose
       ``perplexity_buckets_from_cutoffs`` (cutoffs from a 1/sample_mod
       md5 sample, assignment a broadcast-join projection) instead of
-      the exact per-language NTILE. Default FLIPPED BACK to False in
-      round 13 (VERDICT r12 #5): the skew-stress probe
-      (tools/skew_stress.py, 95%-one-language corpora) measured the
-      exact NTILE FASTER at every tested size — 0.87x at 500k, 0.75x
-      at 1M, 0.74x at 5M docs — because the sampled leg pays a second
-      scoring pass over the sample while a single-task sort of
+      the exact per-language NTILE. Default False: the skew-stress
+      probe (tools/skew_stress.py, 95%-one-language corpora) measured
+      the exact NTILE FASTER at every tested size — 0.87x at 500k,
+      0.75x at 1M, 0.74x at 5M docs — because the sampled leg pays a
+      second scoring pass over the sample while a single-task sort of
       millions of rows is still cheap. The sampled leg's real value is
       MEMORY-boundedness, not speed: opt in when one language's doc
       count is large enough that a single-task rank window would
@@ -2853,50 +2810,35 @@ def corpus_curation_v2(
       / ``corpus_curation_v3`` registry entries pin the flag
       explicitly, so the declared queries are unaffected either
       way."""
-    # guide §2.6 (overlap independent jobs): with a held-out
-    # ``reference`` the LM training job shares NOTHING with the
-    # line-filter/dedup chain, yet the eager checkpoints inside dedup
-    # serialized the two — the reference aggregation now runs on a
-    # driver thread while dedup's rounds execute, back-filling idle
-    # executors and hiding one full blocking job. Values are
-    # unaffected: the same `_ngram_lm_model` call, just submitted
-    # earlier.
+    # with a held-out ``reference`` the LM training job shares NOTHING
+    # with the line-filter/dedup chain, yet dedup's blocking
+    # materializations would serialize the two — so the reference
+    # aggregation runs on a driver thread while dedup's rounds execute,
+    # back-filling idle executors. Values are unaffected: the same
+    # `_ngram_lm_model` call, just submitted earlier.
     fut_model = None
     pool = None
-    if use_sampled_cutoffs and reference is not None and materialize:
+    if use_sampled_cutoffs and reference is not None:
         from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
 
         pool = ThreadPoolExecutor(max_workers=1)
-        fut_model = pool.submit(
-            _ngram_lm_model, reference, text_col, id_col, True)
+        fut_model = pool.submit(_ngram_lm_model, reference, text_col, id_col)
     if line_filter is not None:
         _check_line_filter_keys(line_filter)
         lf = c4_line_filters(
             df, text_col=text_col, id_col=id_col, **line_filter)
-        df = (lf.filter(F.col("kept"))
-                .select(F.col(id_col), F.col("clean_text").alias(text_col)))
-        if materialize:
-            # materialize the line-filtered corpus ONCE (guide §8 step
-            # 1: run the expensive per-doc pass a single time and let
-            # every decision stage read the result): dedup scans this
-            # frame 2-3x and the kept join once more, and each lazy
-            # derivation re-ran the whole split/filter/rejoin string
-            # pipeline. Values are unchanged — only the lineage is cut.
-            df = df.localCheckpoint(eager=True)
+        # dedup scans the line-filtered corpus 2-3x and the kept join
+        # once more; lazily each re-ran the split/filter/rejoin pipeline
+        df = materialize(
+            lf.filter(F.col("kept"))
+            .select(F.col(id_col), F.col("clean_text").alias(text_col)))
     clusters = dedup_clusters(df, id_col=id_col, **lsh_kw)
-    kept = df.join(
-        clusters.filter(F.col("is_canonical")).select(id_col), id_col)
-    if materialize:
-        # the kept corpus feeds 4-6 downstream passes (LM train when
-        # self-trained, LM scoring, language-ID, the sampled-cutoff
-        # branch's filtered score+lang pair, the fused stats scan) and
-        # each one re-paid the documents scan + canonical join.
-        # Materializing it keeps every leg a block read. Scale note:
-        # this is corpus-sized executor state and localCheckpoint is
-        # not fault-tolerant — on a real cluster with executor churn
-        # pass materialize=False (recompute per leg, the pre-r13 plan)
-        # or swap for persist(MEMORY_AND_DISK) + reliable checkpoint.
-        kept = kept.localCheckpoint(eager=True)
+    # the kept corpus feeds 4-6 downstream passes (LM train when
+    # self-trained, LM scoring, language-ID, the sampled-cutoff
+    # branch's filtered score+lang pair, the fused stats scan); lazily
+    # each re-paid the documents scan + canonical join
+    kept = materialize(df.join(
+        clusters.filter(F.col("is_canonical")).select(id_col), id_col))
     if use_sampled_cutoffs:
         model = None
         if fut_model is not None:

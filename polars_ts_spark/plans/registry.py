@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polars_ts_spark.operators import baselines, decomposition, features, metrics, preprocessing
+from polars_ts_spark.session import materialize
 from polars_ts_spark.sources.datasets import supplier_daily_panel, user_event_panel
 
 # DuckDB CTE shared by most oracles — must mirror supplier_daily_panel().
@@ -4143,7 +4144,7 @@ fc AS (
 )
 def q_conformal(spark, sf_dir):
     from polars_ts_spark.operators import evaluation
-    panel = supplier_daily_panel(spark, sf_dir, materialize=True)
+    panel = materialize(supplier_daily_panel(spark, sf_dir))
     w = Window.partitionBy("unique_id").orderBy("ds")
     calib = panel.withColumn("y_hat", F.lag("y").over(w)).dropna()
     fc = baselines.naive_forecast(panel, h=7)
@@ -4695,7 +4696,7 @@ def _recursive_calendar_oracle() -> str:
 @register("recursive_forecast", _recursive_calendar_oracle())
 def q_recursive_forecast(spark, sf_dir):
     from polars_ts_spark.operators.pipeline import RecursiveForecaster
-    panel = supplier_daily_panel(spark, sf_dir, materialize=True)
+    panel = materialize(supplier_daily_panel(spark, sf_dir))
     out = RecursiveForecaster(lags=[1, 7], calendar=True).fit(panel).predict(panel, h=7)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
 
@@ -5104,7 +5105,7 @@ def _global_forecast_oracle(h: int = 7) -> str:
 @register("global_forecast", _global_forecast_oracle())
 def q_global_forecast(spark, sf_dir):
     from polars_ts_spark.operators.pipeline import GlobalForecaster
-    panel = supplier_daily_panel(spark, sf_dir, materialize=True)
+    panel = materialize(supplier_daily_panel(spark, sf_dir))
     out = GlobalForecaster(lags=[1, 7]).fit(panel).predict(panel, h=7)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
 
@@ -5270,9 +5271,8 @@ def q_quantile_regression(spark, sf_dir):
         F.date_trunc("day", F.col("l_shipdate")).alias("ds"),
     ).agg((F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).cast("double")
            / F.lit(100.0)).alias("y"))
-    # fit and predict each re-derive the panel from lineitem; one eager
-    # materialization of the narrow (id, ds, y) frame serves both passes
-    panel = panel.localCheckpoint(eager=True)
+    # fit and predict both read the narrow (id, ds, y) panel
+    panel = materialize(panel)
     out = QuantileRegressor(quantiles=(0.1, 0.5, 0.9), lags=(1, 7), n_irls=10).fit(panel).predict(panel, h=7)
     return out.select(
         "unique_id", "ds",
@@ -5368,7 +5368,7 @@ def _stacking_oracle(h: int = 7) -> str:
 def q_stacking(spark, sf_dir):
     from polars_ts_spark.operators import evaluation
     from polars_ts_spark.operators.pipeline import RecursiveForecaster
-    panel = supplier_daily_panel(spark, sf_dir, materialize=True)
+    panel = materialize(supplier_daily_panel(spark, sf_dir))
 
     def ridge_fn(train, h):
         return RecursiveForecaster(lags=[1, 7]).fit(train).predict(train, h)

@@ -9,10 +9,10 @@ Scale notes (100 TB / 1000-executor target):
 
 from __future__ import annotations
 
-import gc
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
@@ -43,15 +43,47 @@ def get_spark(app_name: str = "polars-ts-spark", **extra_conf: str) -> SparkSess
     return builder.getOrCreate()
 
 
-def free_blocks(spark: SparkSession) -> None:
-    """Drop every cached and checkpointed block in the session.
+# (application id, RDD id) of every checkpoint materialize() took and
+# free_blocks() has not yet released. Ids, not py4j handles, so a block
+# nobody frees stays reclaimable by Spark's ContextCleaner. Driver
+# threads may materialize concurrently.
+_owned: set[tuple[str, int]] = set()
+_owned_lock = threading.Lock()
 
-    ``clearCache()`` does not release localCheckpoint blocks; those
-    otherwise wait on Python GC and Spark's asynchronous ContextCleaner.
-    Unpersists every persistent RDD, so call it only between queries,
-    when nothing still holds one."""
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once into executor blocks so several consumers
+    read the result instead of each re-running its lineage.
+
+    An eager ``localCheckpoint``: the blocks are stored WITHOUT
+    replication and the lineage that could recompute them is cut, so
+    losing an executor (dynamic allocation, preemption) fails the query
+    instead of recomputing. That is safe in local mode and on static
+    clusters; a deployment with executor churn would swap this body for
+    ``persist(MEMORY_AND_DISK)`` plus a reliable ``checkpoint()``.
+    Values are unchanged: only where the bytes are read from moves.
+    ``free_blocks`` releases the checkpoint."""
+    out = df.localCheckpoint(eager=True)
+    key = (df.sparkSession.sparkContext.applicationId,
+           out._jdf.queryExecution().logical().rdd().id())
+    with _owned_lock:
+        _owned.add(key)
+    return out
+
+
+def free_blocks(spark: SparkSession) -> None:
+    """Drop the session's cached frames and every checkpoint
+    ``materialize`` took that is still held; persistent RDDs the
+    library did not create are left alone. Call it between queries,
+    when no frame still reads a materialized block."""
     spark.catalog.clearCache()
-    gc.collect()
+    app = spark.sparkContext.applicationId
+    with _owned_lock:
+        ids = [rdd_id for owner, rdd_id in _owned if owner == app]
+        _owned.clear()
     # py4j wraps the java Map as a dict-like JavaMap
-    for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        jrdd.unpersist(False)
+    live = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd_id in ids:
+        jrdd = live.get(rdd_id)
+        if jrdd is not None:
+            jrdd.unpersist(False)

@@ -38,9 +38,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def supplier_daily_panel(
-    spark: SparkSession, sf_dir: str, materialize: bool = False
-) -> DataFrame:
+def supplier_daily_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical F1 panel from lineitem: one series per supplier, daily
     revenue. unique_id=l_suppkey (string), ds=day, y=sum(extendedprice).
 
@@ -51,25 +49,10 @@ def supplier_daily_panel(
                SUM(l_extendedprice) AS y
         FROM lineitem GROUP BY 1, 2
 
-    ``materialize=True`` eagerly localCheckpoints the panel — for
-    MULTI-PASS consumers (fit/predict estimators, stacking, conformal)
-    that otherwise re-run the lineitem scan + aggregation once per
-    pass. The panel is the narrow linear proxy of the fact table
-    (3 columns, one row per series-day), so materializing it once and
-    re-reading it N times beats N source scans at any scale
-    (guide §3.3/§5: a lineage-truncating materialization of an
-    intermediate consumed by many branches). Values are identical —
-    the checkpoint changes where bytes are read from, not one bit of
-    what is computed.
-
-    Cluster caveat (ADVICE r12): ``localCheckpoint`` stores blocks on
-    executors WITHOUT replication and cuts the lineage needed to
-    recompute them — executor loss (dynamic allocation, preemption)
-    then fails the query instead of recomputing. Fine in local mode
-    and on static clusters; deployments with executor churn should
-    pass ``materialize=False`` (recompute per pass) or swap in
-    ``persist(StorageLevel.MEMORY_AND_DISK)`` + a reliable
-    ``checkpoint()`` where re-reading beats re-scanning."""
+    Multi-pass consumers (fit/predict estimators, stacking, conformal)
+    wrap it in ``session.materialize``: the panel is the narrow linear
+    proxy of the fact table (3 columns, one row per series-day), so
+    reading it N times beats N lineitem scans + aggregations."""
     li = load_table(spark, sf_dir, "lineitem")
     panel = (
         li.groupBy(
@@ -78,8 +61,6 @@ def supplier_daily_panel(
         )
         .agg(F.sum("l_extendedprice").alias("y"))
     )
-    if materialize:
-        return panel.localCheckpoint(eager=True)
     return panel
 
 

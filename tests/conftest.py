@@ -19,16 +19,14 @@ def spark():
 
 @pytest.fixture(autouse=True, scope="module")
 def _drop_persistent_blocks(request):
-    """Free localCheckpoint/persist blocks after each test module.
+    """Free cached frames and the library's materialized blocks after
+    each test module.
 
-    clearCache() does not release checkpointed RDDs; reclamation
-    otherwise waits on Python GC + the async ContextCleaner, and a
-    full-suite run was measured holding 37 persistent RDDs (~170 MB)
-    mid-run — steady heap pressure on a memory-tight CI container (the
-    r12 driver's pytest died in a WholeStageCodegen task crash ~219
-    tests in; not reproducible here, so this is bounded-cost
-    insurance). Module scope: no test depends on another module's
-    cached state."""
+    clearCache() does not release ``materialize`` checkpoints; left to
+    the async ContextCleaner, a full-suite run was measured holding 37
+    persistent RDDs (~170 MB) mid-run — steady heap pressure on a
+    memory-tight CI container. Module scope: no test depends on another
+    module's cached state."""
     yield
     from pyspark.sql import SparkSession
 

@@ -189,6 +189,15 @@ def test_pairwise_two_frames_no_dedup_when_disjoint(spark, two_series):
     assert out.count() == 4
 
 
+@pytest.mark.parametrize("pairwise", [compute_pairwise_distance, compute_pairwise_distance_multi])
+def test_pairwise_validates_df2_columns(two_series, pairwise):
+    """A second frame missing the value column raises the library's
+    KeyError up front, like a bad first frame — not a Spark analysis
+    error from the grouped-array aggregate."""
+    with pytest.raises(KeyError, match="'y'"):
+        pairwise(two_series, two_series.drop("y"))
+
+
 def F_concat_c(df):
     from pyspark.sql import functions as F
     return F.concat(F.col("unique_id"), F.lit("_x"))

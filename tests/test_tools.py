@@ -8,6 +8,9 @@ evidence chain and gets the same test treatment as operators.
   were fresh. Every merge must rewrite the note.
 - bench query loop: a query that raises must still leave a parseable
   partial contract line, and must not stop the caller's session.
+- block ownership: ``session.free_blocks`` (the bench's between-query
+  cleanup) frees every block the library materialized and nothing the
+  caller persisted.
 """
 
 from __future__ import annotations
@@ -16,11 +19,18 @@ import json
 import os
 import signal
 import sys
+from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest  # noqa: E402
+
 import bench  # noqa: E402
+from __spark_entry__ import queries  # noqa: E402
+from polars_ts_spark.session import free_blocks, materialize  # noqa: E402
 from tools.merge_correctness import infer_round, stamp_note  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
 
 def test_stamp_note_rewrites_round_and_names():
@@ -72,3 +82,43 @@ def test_bench_query_error_prints_partial_line(spark, capsys):
 
 def test_importing_bench_leaves_sigterm_alone():
     assert signal.getsignal(signal.SIGTERM) is not bench._sigterm_rescue
+
+
+def _persistent_ids(spark) -> set[int]:
+    # py4j wraps the java Map as a dict-like JavaMap
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+
+
+def test_free_blocks_frees_only_what_materialize_took(spark):
+    """Materializing from more threads than cores must lose no record:
+    a lost one would leave its block behind."""
+    user = spark.sparkContext.parallelize(range(8)).cache()
+    user.count()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            frames = list(pool.map(lambda n: materialize(spark.range(n)),
+                                   range(1, 17), timeout=300))
+    finally:
+        sys.setswitchinterval(switch)
+    ids = {f._jdf.queryExecution().logical().rdd().id() for f in frames}
+    assert ids <= _persistent_ids(spark)
+    free_blocks(spark)
+    left = _persistent_ids(spark)
+    user.unpersist()
+    assert not ids & left
+    assert user.id() in left
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"test data dir {SF_DIR} absent")
+def test_free_blocks_leaves_nothing_a_query_created(spark):
+    """corpus_curation_v3 also materializes on its LM-training thread.
+    Id sets, not counts: the ContextCleaner may drop an earlier test's
+    block mid-run (see test_decontaminate_no_lingering_cache)."""
+    qs = queries()
+    before = _persistent_ids(spark)
+    for name in ("corpus_curation_v3", "quantile_regression", "global_forecast"):
+        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    free_blocks(spark)
+    assert not _persistent_ids(spark) - before

@@ -1,13 +1,13 @@
-"""Measure localCheckpoint block residency across a query sequence.
+"""Measure materialized-block residency across a query sequence.
 
-VERDICT r12 #3a/#4: checkpointed blocks are NOT freed by
-spark.catalog.clearCache(); over a multi-query suite reclamation used
-to rely on Python GC + ContextCleaner lag. This tool runs the
-checkpoint-heavy queries back-to-back and logs, after each sample,
+``spark.catalog.clearCache()`` does not free the checkpoints
+``polars_ts_spark.session.materialize`` takes. This tool runs the
+materialization-heavy queries back-to-back and logs, after each sample,
 (a) the persistent-RDD count and storage memory LEFT BEHIND by the
 query, and (b) both again after the bench's cleanup step
-(``polars_ts_spark.session.free_blocks``) — proving
-residency stays flat with the cleanup and accumulates without it.
+(``polars_ts_spark.session.free_blocks``). With the cleanup on it exits
+1 if any persistent RDD survives a cleanup step; ``--no-cleanup`` only
+prints, showing the blocks accumulate.
 
 Usage: python tools/checkpoint_residency.py [--no-cleanup]
 """
@@ -41,7 +41,7 @@ def _storage(spark):
     return n, mem, disk
 
 
-def main() -> None:
+def main() -> int:
     cleanup = "--no-cleanup" not in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("checkpoint-residency")
@@ -50,6 +50,7 @@ def main() -> None:
     print(f"cleanup={'ON' if cleanup else 'OFF'} sf_dir={sf_dir}")
     print(f"{'query':34s} {'rdds':>5s} {'mem_MB':>8s} {'disk_MB':>8s}"
           f" {'rdds*':>5s} {'mem_MB*':>8s}   (* = after cleanup step)")
+    leaks = []
     for name in QUERIES:
         if name not in qs:
             continue
@@ -64,7 +65,12 @@ def main() -> None:
             print(f"{name}[{s}]{'':{max(0, 31 - len(name))}s} {n0:5d}"
                   f" {m0 / 2**20:8.1f} {d0 / 2**20:8.1f} {n1:5d}"
                   f" {m1 / 2**20:8.1f}", flush=True)
+            if cleanup and n1:
+                leaks.append(f"{name}[{s}]")
+    if leaks:
+        print(f"FAIL: persistent RDDs survived cleanup after {', '.join(leaks)}")
+    return 1 if leaks else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
