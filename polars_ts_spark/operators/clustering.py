@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from polars_ts_spark.functions import dist_kernels as K
 from polars_ts_spark.operators.distance import compute_pairwise_distance
-from polars_ts_spark.panel import ID, TARGET, TIME
+from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values
 
 
 class _LCG:
@@ -61,8 +61,7 @@ class _LCG:
 
 
 # Driver-side array-panel collects above this many total elements raise
-# instead of OOMing the driver — same 256 MB order as the pairwise
-# engine's broadcast cap (distance.py:_BC_ELEMS_CAP). The iterative
+# instead of OOMing the driver (32M float64 = 256 MB). The iterative
 # clusterers below refine centroids on the driver BY DESIGN (SURVEY
 # §2.16: n_series is the small axis), so past the cap the honest move
 # is to refuse with guidance, not to spill.
@@ -74,12 +73,11 @@ def _collect_array_panel(
 ) -> list:
     """Grouped (id, sorted value array) rows, size-gated BEFORE the
     driver collect: the sizing scalar job populates the persisted
-    grouped frame (so the gate costs no extra input scan — the
-    distance.py:142 pattern), then collect only under _DRIVER_ELEMS_CAP."""
+    grouped frame (so the gate costs no extra input scan), then collect
+    only under _DRIVER_ELEMS_CAP."""
     grouped = (
         df.groupBy(F.col(id_col).cast("string").alias(id_col))
-        .agg(F.expr(f"transform(array_sort(collect_list(struct({time_col} as t, "
-                    f"cast({target_col} as double) as v))), s -> s.v)").alias("vals"))
+        .agg(ordered_values(target_col, time_col).alias("vals"))
         .persist()
     )
     try:

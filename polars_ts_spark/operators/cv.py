@@ -16,7 +16,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_ts_spark.panel import ID, TIME, require_columns
+from polars_ts_spark.panel import TIME, require_columns
 
 
 def _distinct_times(df: DataFrame, time_col: str) -> list:

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_ts_spark.operators.kernel import for_series_batches
-from polars_ts_spark.panel import ID, TARGET, TIME, require_columns
+from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values, require_columns
 
 
 def _torch():
@@ -70,12 +70,7 @@ def build_training_windows(
     window starts + slice — no Python until the consumer.
     Output [id, start, x: array<double>, y_fut: array<double>]."""
     require_columns(df, id_col, time_col, target_col)
-    series = df.groupBy(id_col).agg(
-        F.expr(
-            f"transform(array_sort(collect_list(struct({time_col} as t, "
-            f"cast({target_col} as double) as v))), s -> s.v)"
-        ).alias("__vals")
-    )
+    series = df.groupBy(id_col).agg(ordered_values(target_col, time_col).alias("__vals"))
     # series shorter than one full window are dropped BEFORE the explode:
     # sequence(1, 0) would be the descending [1, 0], not empty
     return (
@@ -440,13 +435,7 @@ def build_multivariate_windows(
     Output [id, start, x: array<array<double>> (input_size rows, each
     [v1..vk]), y_fut: array<array<double>> (h rows)]."""
     require_columns(df, id_col, time_col, *value_cols)
-    vals = ", ".join(f"cast({c} as double)" for c in value_cols)
-    series = df.groupBy(id_col).agg(
-        F.expr(
-            f"transform(array_sort(collect_list(struct({time_col} as t, "
-            f"array({vals}) as v))), s -> s.v)"
-        ).alias("__vals")
-    )
+    series = df.groupBy(id_col).agg(ordered_values(value_cols, time_col).alias("__vals"))
     return (
         series.where(F.size("__vals") >= input_size + h)
         .select(

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_ts_spark.panel import ID, TARGET, TIME
+from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values
 
 
 def _series_matrix(df: DataFrame, id_col: str, time_col: str, target_col: str):
@@ -404,8 +404,7 @@ class _TorchCNNClassifier:
         id_col, time_col, target_col = self.id_col, self.time_col, self.target_col
         grouped = (
             df.groupBy(F.col(id_col).cast("string").alias(id_col))
-            .agg(F.expr(f"transform(array_sort(collect_list(struct({time_col} as t, "
-                        f"cast({target_col} as double) as v))), s -> s.v)").alias("vals"))
+            .agg(ordered_values(target_col, time_col).alias("vals"))
             .persist()
         )
         # fixed input width = median series length (the _series_matrix

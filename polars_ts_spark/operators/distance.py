@@ -1,23 +1,31 @@
 """Pairwise distance engine (SURVEY §2.8, the reference's signature
 capability; src/utils.rs:168-234 compute_pairwise).
 
-Spark plan:
-1. ``groupBy(id).agg(array_agg sorted by ds)`` per input — one shuffle,
-   map-side combinable.
-2. cross join left × right with the reference's dedup predicate
-   (src/utils.rs:220-226): drop ``id_1 == id_2``; when a pair exists in
-   both inputs, keep only ``id_1 < id_2`` (symmetric dedup halves work).
-   For the common self-pairwise case this Catalyst-simplifies to
-   ``id_1 < id_2``.
-3. Arrow-batched pandas iterator (`mapInPandas`) running the numpy
-   anti-diagonal DP kernels (functions/dist_kernels.py).
+Spark plan — one plan for univariate and multivariate inputs, one or two
+frames:
+1. ``groupBy(id).agg(ordered_values)`` per input — one shuffle, one row
+   per series holding its time-ordered values.
+2. With two inputs, a count over the union of both grouped sides,
+   windowed by id, tags each series with whether its id is present in
+   both inputs.
+3. Grid of r × c cells, r = ⌊√n⌋ and c = ⌊n / r⌋ for n shuffle
+   partitions: the left side is hashed into r blocks on its id and replicated c times,
+   the right side into c blocks replicated r times, so cell (i, j)
+   holds left block i and right block j. Shuffle volume is
+   c·|g1| + r·|g2|, the standard replication cost of a distributed
+   cross product; no side is collected or broadcast, so no input size
+   has to be checked on the driver first.
+4. ``cogroup`` on the cell. The cell key is chosen so that Spark's hash
+   partitioning gives every cell its own task, and the explicit
+   repartition keeps AQE from coalescing the byte-small cell shuffle
+   into one task. Each cell runs the numpy/C DP kernels
+   (functions/dist_kernels.py) over stacks of equal-length partners.
+   The reference's dedup (src/utils.rs:220-226) is a mask there: drop
+   ``id_1 == id_2``; when both ids are present in both inputs, keep
+   only ``id_1 < id_2`` (for one input that is every pair, so the
+   symmetric dedup halves the work).
 
-Scale notes: the cross join is the only O(n²) plan in the engine. The
-grouped side is n_series rows (arrays inline). For n_series small enough
-to broadcast we broadcast the right side (no shuffle); otherwise Spark
-falls back to a partitioned cross join and tasks stream pair blocks —
-the kernel cost dominates, so task balance = pair balance. Rayon's
-pair-parallelism (utils.rs:212) maps to task parallelism here.
+Rayon's pair-parallelism (utils.rs:212) maps to cell parallelism here.
 
 Output: [id_1, id_2, <metric>] with input id dtype preserved
 (src/utils.rs:304-337).
@@ -25,13 +33,15 @@ Output: [id_1, id_2, <metric>] with input id dtype preserved
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_ts_spark.functions import dist_kernels as K
-from polars_ts_spark.panel import ID, TARGET, TIME, require_columns
+from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values, require_columns
 
 _PARAM_DEFAULTS = {
     "dtw": {"param": None},        # None -> standard; int -> sakoe_chiba; "itakura"/"fast" via variant kwarg
@@ -45,17 +55,6 @@ _PARAM_DEFAULTS = {
     "frechet": {},
     "edr": {"epsilon": 0.1},
 }
-
-
-def _grouped_arrays(df: DataFrame, id_col: str, time_col: str, target_col: str,
-                    out_id: str, out_vals: str) -> DataFrame:
-    """One row per series: (id string, values array<double>) ordered by time."""
-    return df.groupBy(F.col(id_col).cast("string").alias(out_id)).agg(
-        F.expr(
-            f"transform(array_sort(collect_list(struct({time_col} as t, "
-            f"cast({target_col} as double) as v))), s -> s.v)"
-        ).alias(out_vals)
-    )
 
 
 def _batch_kernel_fn(method: str, variant: str | None, kwargs: dict):
@@ -94,44 +93,149 @@ def _batch_kernel_fn(method: str, variant: str | None, kwargs: dict):
     raise ValueError(f"unknown distance method {method!r}; choose from {sorted(_PARAM_DEFAULTS)}")
 
 
-# Elements of the partner-side array table above which the broadcast
-# pairing path falls back to the pair-row cross join (which can stream
-# both sides). 32M float64 = 256 MB — the same order at which
-# F.broadcast() of the grouped side stops being advisable anyway.
-_BC_ELEMS_CAP = 32_000_000
+def _spark_hash_int(v: int) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt(v, 42)``: the hash its shuffle
+    hash partitioning applies to an int key."""
+    mask = 0xFFFFFFFF
+
+    def rotl(x, r):
+        return ((x << r) | (x >> (32 - r))) & mask
+
+    k1 = rotl(v * 0xCC9E2D51 & mask, 15) * 0x1B873593 & mask
+    h1 = (rotl(42 ^ k1, 13) * 5 + 0xE6546B64) & mask
+    h1 ^= 4
+    h1 ^= h1 >> 16
+    h1 = h1 * 0x85EBCA6B & mask
+    h1 ^= h1 >> 13
+    h1 = h1 * 0xC2B2AE35 & mask
+    h1 ^= h1 >> 16
+    return h1 - (1 << 32) if h1 >> 31 else h1
 
 
-def _pair_block_join(g1: DataFrame, g2: DataFrame, n_parts: int, partner_big: bool) -> DataFrame:
-    """All-pairs frame from grouped sides (id_1,__v1)×(id_2,__v2).
+def _partition_labels(n_parts: int) -> list[int]:
+    """Int keys k_0..k_{n-1} such that ``repartition(n_parts, key)``
+    sends k_p to partition p. Hash-partitioning the cell index itself
+    would stack several cells on some tasks and leave others idle."""
+    labels: dict[int, int] = {}
+    v = 0
+    while len(labels) < n_parts:
+        labels.setdefault(_spark_hash_int(v) % n_parts, v)
+        v += 1
+    return [labels[p] for p in range(n_parts)]
 
-    partner_big=False: spread the stream side, join-broadcast the
-    partner — zero shuffle of pair rows.
 
-    partner_big=True: blocked B×B grid join. Each side is hashed into
-    B blocks on its id and replicated B times tagged with the
-    orthogonal block index; a plain shuffled equi-join on
-    (block_i, block_j) then forms every pair cell with NO broadcast
-    anywhere — a join-side F.broadcast here would re-create exactly
-    the memory blow-up this path exists to avoid. Shuffle volume is
-    B×(|g1|+|g2|), the standard replication cost of a distributed
-    cross product; B² ≈ n_parts cells keep every core busy while each
-    cell streams only (n/B)·(m/B) pairs through mapInPandas.
-    """
-    if not partner_big:
-        return g1.repartition(n_parts).crossJoin(F.broadcast(g2))
-    n_blocks = max(2, int(np.ceil(np.sqrt(n_parts))))
-    grid = F.array(*[F.lit(b) for b in range(n_blocks)])
-    g1b = (
-        g1.withColumn("__bi", F.pmod(F.xxhash64(F.col("id_1").cast("string")), F.lit(n_blocks)).cast("int"))
-        .withColumn("__bj", F.explode(grid))
+def _cell_fn(method: str, fn, channels: int | None):
+    """Pandas cogroup function for one grid cell: every kept pair of
+    (left block, right block) -> [id_1, id_2, method]. With ``channels``
+    the flattened values are reshaped to (len, channels)."""
+
+    def values(v) -> np.ndarray:
+        a = np.asarray(v, dtype=float)
+        return a if channels is None else a.reshape(-1, channels)
+
+    empty = pd.DataFrame({"id_1": np.array([], dtype=str), "id_2": np.array([], dtype=str),
+                          method: np.array([], dtype=float)})
+
+    def cell(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        o1, o2, od = [], [], []
+        # partner stacks built once per cell, one per series length
+        ids2 = np.asarray(right["id_2"].tolist(), dtype=str)
+        both2 = right["__c2"].to_numpy(dtype=bool)
+        vals2 = [values(v) for v in right["__v2"]]
+        by_len: dict[int, list[int]] = {}
+        for j, v in enumerate(vals2):
+            by_len.setdefault(len(v), []).append(j)
+        groups = [(ids2[js], np.stack([vals2[j] for j in js]), both2[js]) for js in by_len.values()]
+        for id1, v1, both1 in zip(left["id_1"], left["__v1"], left["__c1"]):
+            a = values(v1)
+            for gids, mat, gboth in groups:
+                keep = gids != id1
+                if both1:
+                    keep &= ~gboth | (id1 < gids)
+                pid, pm = gids[keep], mat[keep]
+                kq = len(pid)
+                if kq == 0:
+                    continue
+                # cap the stack so the DP + scratch buffers stay
+                # cache-resident — the diagonal sweep re-reads them
+                # (n+m) times, and DRAM-bound stacks are ~7x slower.
+                # Sweep-measured optimum is ~22k elements per (k, n)
+                # buffer (~176 KB) regardless of series length
+                k_max = max(32, 22528 // max(len(a), pm.shape[1], 1))
+                A_full = np.broadcast_to(a, (kq, *a.shape))
+                dist = np.empty(kq)
+                for c0 in range(0, kq, k_max):
+                    dist[c0:c0 + k_max] = fn(A_full[c0:c0 + k_max], pm[c0:c0 + k_max])
+                o1.append(np.full(kq, id1))
+                o2.append(pid)
+                od.append(dist)
+        if not o1:
+            return empty
+        return pd.DataFrame({"id_1": np.concatenate(o1), "id_2": np.concatenate(o2), method: np.concatenate(od)})
+
+    return cell
+
+
+def _grid_pairs(
+    df1: DataFrame,
+    df2: DataFrame | None,
+    id_col: str,
+    time_col: str,
+    values: str | list[str],
+    method: str,
+    fn,
+) -> DataFrame:
+    """All kept pairs of series of df1 × df2 (df1 × df1 when df2 is None),
+    scored by ``fn(A, B) -> (k,)`` over stacked (k, len[, channels])
+    pairs. The module docstring describes the plan."""
+    channels = None if isinstance(values, str) else len(values)
+
+    def grouped(df):
+        # multivariate values travel flattened: a cogroup cell with one
+        # side empty segfaults the Python worker's Arrow read of
+        # array<array<double>> (Spark 4.1, pyarrow 16)
+        v = ordered_values(values, time_col)
+        return df.groupBy(F.col(id_col).cast("string").alias("id")).agg(
+            (v if channels is None else F.flatten(v)).alias("__v")
+        )
+
+    if df2 is None:
+        g1 = g2 = grouped(df1).withColumn("__c", F.lit(True))
+    else:
+        # __c: the id is present in both inputs. Both grouped sides are
+        # already hash-partitioned on id, so the window adds no shuffle
+        sides = grouped(df1).withColumn("__side", F.lit(1)).unionByName(
+            grouped(df2).withColumn("__side", F.lit(2))
+        ).withColumn("__c", F.count("*").over(Window.partitionBy("id")) > 1)
+        g1, g2 = (sides.where(F.col("__side") == s).drop("__side") for s in (1, 2))
+    # rows × cols ≈ n_parts cells, each its own partition: cell (i, j)
+    # pairs left block i with right block j
+    n_parts = int(df1.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    rows = math.isqrt(n_parts)
+    cols = n_parts // rows
+    labels = F.array(*[F.lit(v) for v in _partition_labels(rows * cols)])
+
+    def spread(g, side):
+        # per-side column names: when both sides share attributes, column
+        # pruning drops one side's inputs from the cogroup
+        own = F.pmod(F.xxhash64(f"id_{side}"), F.lit(rows if side == 1 else cols)).cast("int")
+        cells = [own * cols + b for b in range(cols)] if side == 1 else [own + b * cols for b in range(rows)]
+        return (
+            g.toDF(f"id_{side}", f"__v{side}", f"__c{side}")
+            .withColumn("__cell", F.explode(F.array(*[labels[c] for c in cells])))
+            .repartition(rows * cols, "__cell")
+            .groupBy("__cell")
+        )
+
+    out = spread(g1, 1).cogroup(spread(g2, 2)).applyInPandas(
+        _cell_fn(method, fn, channels), schema=f"id_1 string, id_2 string, {method} double"
     )
-    g2b = (
-        g2.withColumn("__bj", F.pmod(F.xxhash64(F.col("id_2").cast("string")), F.lit(n_blocks)).cast("int"))
-        .withColumn("__bi", F.explode(grid))
-    )
-    # shuffle_hash hint pins a shuffled join even when a unit test
-    # plants a tiny panel (AQE would otherwise re-broadcast g2b)
-    return g1b.hint("shuffle_hash").join(g2b, ["__bi", "__bj"]).drop("__bi", "__bj")
+    id_dtype = dict(df1.dtypes)[id_col]
+    if id_dtype != "string":
+        out = out.withColumn("id_1", F.col("id_1").cast(id_dtype)).withColumn(
+            "id_2", F.col("id_2").cast(id_dtype)
+        )
+    return out
 
 
 def compute_pairwise_distance(
@@ -144,236 +248,12 @@ def compute_pairwise_distance(
     target_col: str = TARGET,
     **kwargs,
 ) -> DataFrame:
-    """All-pairs distance -> [id_1, id_2, <method>] (distance.py:45-169).
-
-    Fast path: the partner side's (n_series, len) array table rides a
-    Spark broadcast variable ONCE per executor, tasks stream only their
-    own series and enumerate partners in-process. The pair-row cross
-    join materialized every series ~n_series times through Arrow
-    (500k pair rows × both arrays at 1k series) — the broadcast path
-    moves each side once, and the symmetric-dedup "id_1 < id_2" rule
-    becomes a sorted-slice lookup instead of a filtered join. Falls
-    back to the cross-join plan when the partner table exceeds
-    _BC_ELEMS_CAP (same memory constraint the broadcast join had).
-    """
+    """All-pairs distance -> [id_1, id_2, <method>] (distance.py:45-169)."""
     require_columns(df1, id_col, time_col, target_col)
     if df2 is not None:
         require_columns(df2, id_col, time_col, target_col)
-    id_dtype = dict(df1.dtypes)[id_col]
-    same = df2 is None
-    spark = df1.sparkSession
-    g1s = _grouped_arrays(df1, id_col, time_col, target_col, "id_1", "__v1")
-    g2s = (
-        g1s.withColumnRenamed("id_1", "id_2").withColumnRenamed("__v1", "__v2")
-        if same
-        else _grouped_arrays(df2, id_col, time_col, target_col, "id_2", "__v2")
-    )
-    # Size-gate BEFORE any driver materialization, WITHOUT an extra
-    # input scan: persist the grouped frame the plan needs anyway, and
-    # let the sizing job (sum of array lengths == input row count) be
-    # the job that populates the cache — the subsequent collect() then
-    # reads the cached grouped arrays instead of re-scanning parquet.
-    # Never "collect, then check whether collecting was safe".
-    g1s = g1s.persist()
-    elems1 = g1s.agg(F.sum(F.size("__v1"))).first()[0] or 0
-    elems2 = elems1
-    if not same:
-        g2s = g2s.persist()
-        elems2 = g2s.agg(F.sum(F.size("__v2"))).first()[0] or 0
-    try:
-        if elems1 + (0 if same else elems2) > _BC_ELEMS_CAP:
-            return _pairwise_crossjoin(
-                df1, df2, method, variant, id_col, time_col, target_col, id_dtype,
-                partner_elems=elems2, **kwargs
-            )
-        rows2 = g2s.collect()
-        rows1 = rows2 if same else g1s.collect()
-    finally:
-        g1s.unpersist()
-        if not same:
-            g2s.unpersist()
     fn = _batch_kernel_fn(method, variant, kwargs)
-    if not rows1 or not rows2:
-        out = spark.createDataFrame([], f"id_1 string, id_2 string, {method} double")
-        if id_dtype != "string":
-            out = out.withColumn("id_1", F.col("id_1").cast(id_dtype)).withColumn(
-                "id_2", F.col("id_2").cast(id_dtype)
-            )
-        return out
-    common = None if same else {r[0] for r in rows1} & {r[0] for r in rows2}
-    bc = spark.sparkContext.broadcast(
-        (
-            {r[0]: np.asarray(r[1], dtype=float) for r in rows1},
-            sorted((r[0], np.asarray(r[1], dtype=float)) for r in rows2),
-        )
-    )
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # stream side is just the id list (arrays ride the broadcast);
-    # round-robin repartition balances the triangular pair counts
-    stream = spark.createDataFrame(
-        pd.DataFrame({"id_1": [r[0] for r in rows1]})
-    ).repartition(n_parts)
-
-    def compute(batches):
-        # per-length partner stacks built once per task, ids sorted so
-        # the same-input dedup (id_2 > id_1) is a searchsorted slice
-        vecs1, pairs2 = bc.value
-        by_len: dict[int, list[int]] = {}
-        for j, (_, v) in enumerate(pairs2):
-            by_len.setdefault(len(v), []).append(j)
-        groups = []
-        for L, js in by_len.items():
-            gids = np.array([pairs2[j][0] for j in js])
-            mat = np.stack([pairs2[j][1] for j in js]) if L else np.empty((len(js), 0))
-            in_common = (
-                None if same else np.array([i in common for i in gids.tolist()], dtype=bool)
-            )
-            groups.append((gids, mat, in_common))
-        for pdf in batches:
-            o1, o2, od = [], [], []
-            for id1 in pdf["id_1"]:
-                a = vecs1[id1]
-                in1_common = False if same else id1 in common
-                for gids, mat, in_common in groups:
-                    if same:
-                        # partners strictly greater than id1 (sorted ids)
-                        s = int(np.searchsorted(gids, id1, side="right"))
-                        pid, pm = gids[s:], mat[s:]
-                    else:
-                        keep = gids != id1
-                        if in1_common:
-                            keep &= ~in_common | (id1 < gids)
-                        pid, pm = gids[keep], mat[keep]
-                    kq = len(pid)
-                    if kq == 0:
-                        continue
-                    n_, m_ = len(a), pm.shape[1]
-                    dist = np.empty(kq)
-                    k_max = max(32, 22528 // max(n_, m_, 1))
-                    A_full = np.broadcast_to(a, (kq, n_))
-                    for c0 in range(0, kq, k_max):
-                        dist[c0:c0 + k_max] = fn(
-                            A_full[c0:c0 + k_max], pm[c0:c0 + k_max]
-                        )
-                    o1.append(np.full(kq, id1))
-                    o2.append(pid)
-                    od.append(dist)
-            yield pd.DataFrame(
-                {
-                    "id_1": np.concatenate(o1) if o1 else np.array([], dtype=str),
-                    "id_2": np.concatenate(o2) if o2 else np.array([], dtype=str),
-                    method: np.concatenate(od) if od else np.array([], dtype=float),
-                }
-            )
-
-    out = stream.mapInPandas(compute, schema=f"id_1 string, id_2 string, {method} double")
-    if id_dtype != "string":
-        out = out.withColumn("id_1", F.col("id_1").cast(id_dtype)).withColumn(
-            "id_2", F.col("id_2").cast(id_dtype)
-        )
-    return out
-
-
-def _pairwise_crossjoin(
-    df1: DataFrame,
-    df2: DataFrame | None,
-    method: str,
-    variant: str | None,
-    id_col: str,
-    time_col: str,
-    target_col: str,
-    id_dtype: str,
-    partner_elems: int = 0,
-    **kwargs,
-) -> DataFrame:
-    """Pair-row cross-join fallback for panels too big for the
-    broadcast-variable fast path. Two plans:
-
-    - partner side alone still fits under _BC_ELEMS_CAP: spread the
-      stream side, join-broadcast the partner (no shuffle of pairs).
-    - partner side is itself over the cap: blocked B×B grid join —
-      each side is hashed into B blocks on its id and replicated B
-      times tagged with the orthogonal block index, then a plain
-      shuffled equi-join on (block_i, block_j) forms every pair cell
-      with NO broadcast anywhere (a join-side F.broadcast here would
-      re-create exactly the memory blow-up this fallback exists to
-      avoid). Shuffle volume is B×(|g1|+|g2|) — the standard
-      replication cost of a distributed cross product — and each of
-      the B² cells streams (n/B)·(m/B) pairs through mapInPandas.
-    """
-    same = df2 is None
-    # cache: both cross-join sides (and the dedup id lists) re-read this
-    # tiny frame (n_series rows of arrays); without it the whole upstream
-    # panel aggregation runs once per consumer
-    g1 = _grouped_arrays(df1, id_col, time_col, target_col, "id_1", "__v1").cache()
-    if same:
-        g2 = g1.withColumnRenamed("id_1", "id_2").withColumnRenamed("__v1", "__v2")
-    else:
-        g2 = _grouped_arrays(df2, id_col, time_col, target_col, "id_2", "__v2").cache()
-
-    # Pre-join repartition of the STREAM side: AQE coalesces the small
-    # grouped agg to one partition, and a single-partition cross join
-    # would generate (and then shuffle) every pair in one task. With the
-    # stream side spread and the other side broadcast, pair generation
-    # and the kernel run in the same n_parts parallel tasks — no
-    # post-join shuffle of wide array rows at all.
-    n_parts = int(df1.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    pairs = _pair_block_join(g1, g2, n_parts, partner_elems > _BC_ELEMS_CAP).filter(
-        F.col("id_1") != F.col("id_2")
-    )
-    if same:
-        pairs = pairs.filter(F.col("id_1") < F.col("id_2"))
-    else:
-        # symmetric dedup only for ids present in BOTH inputs (utils.rs:222-226)
-        ids1 = g1.select(F.col("id_1").alias("__ida")).distinct()
-        ids2 = g2.select(F.col("id_2").alias("__idb")).distinct()
-        both = ids1.join(ids2, ids1["__ida"] == ids2["__idb"]).select(F.col("__ida").alias("__both_id"))
-        pairs = (
-            pairs.join(F.broadcast(both.withColumnRenamed("__both_id", "__b1")),
-                       F.col("id_1") == F.col("__b1"), "left")
-            .join(F.broadcast(both.withColumnRenamed("__both_id", "__b2")),
-                  F.col("id_2") == F.col("__b2"), "left")
-            .filter(F.col("__b1").isNull() | F.col("__b2").isNull() | (F.col("id_1") < F.col("id_2")))
-            .drop("__b1", "__b2")
-        )
-
-    fn = _batch_kernel_fn(method, variant, kwargs)
-
-    def compute(batches):
-        # batch-vectorized: group the partition's pairs by (len_a, len_b),
-        # stack each group into (k, n)/(k, m) and run the DP once per
-        # group — the pair axis is the SIMD axis (see dist_kernels.py)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v1 = [np.asarray(v, dtype=float) for v in pdf["__v1"]]
-            v2 = [np.asarray(v, dtype=float) for v in pdf["__v2"]]
-            out = np.empty(len(pdf))
-            shapes: dict[tuple[int, int], list[int]] = {}
-            for idx, (a, b) in enumerate(zip(v1, v2)):
-                shapes.setdefault((len(a), len(b)), []).append(idx)
-            for (n_, m_), idxs in shapes.items():
-                # cap the stack so the DP + scratch buffers stay
-                # cache-resident — the diagonal sweep re-reads them
-                # (n+m) times, and DRAM-bound stacks are ~7x slower
-                # than cache-resident ones. Sweep-measured optimum is
-                # ~22k elements per (k, n) buffer (~176 KB) regardless
-                # of series length; all 32 workers share the L3, so
-                # smaller beats python-dispatch savings of bigger stacks
-                k_max = max(32, 22528 // max(n_, m_, 1))
-                for c0 in range(0, len(idxs), k_max):
-                    cidx = idxs[c0:c0 + k_max]
-                    A = np.stack([v1[i] for i in cidx])
-                    B = np.stack([v2[i] for i in cidx])
-                    out[cidx] = fn(A, B)
-            yield pd.DataFrame({"id_1": pdf["id_1"], "id_2": pdf["id_2"], method: out})
-
-    out = pairs.mapInPandas(compute, schema=f"id_1 string, id_2 string, {method} double")
-    if id_dtype != "string":
-        out = out.withColumn("id_1", F.col("id_1").cast(id_dtype)).withColumn(
-            "id_2", F.col("id_2").cast(id_dtype)
-        )
-    return out
+    return _grid_pairs(df1, df2, id_col, time_col, target_col, method, fn)
 
 
 def compute_pairwise_distance_multi(
@@ -392,52 +272,7 @@ def compute_pairwise_distance_multi(
     cols = value_cols or [c_ for c_ in df1.columns if c_ not in (id_col, time_col)]
     if df2 is not None:
         require_columns(df2, id_col, time_col, *cols)
-    struct_fields = ", ".join(f"cast(`{c_}` as double) as `{c_}`" for c_ in cols)
-    arr = (
-        f"transform(array_sort(collect_list(struct({time_col} as t, {struct_fields}))), "
-        f"s -> array({', '.join('s.`%s`' % c_ for c_ in cols)}))"
-    )
-
-    def grouped(df, out_id, out_vals):
-        return df.groupBy(F.col(id_col).cast("string").alias(out_id)).agg(
-            F.expr(arr).alias(out_vals)
-        )
-
-    id_dtype = dict(df1.dtypes)[id_col]
-    g1 = grouped(df1, "id_1", "__v1").cache()
-    g2 = (
-        g1.withColumnRenamed("id_1", "id_2").withColumnRenamed("__v1", "__v2")
-        if df2 is None else grouped(df2, "id_2", "__v2").cache()
-    )
-    n_parts = int(df1.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    # sizing scalar doubles as the job that populates g1's cache
-    partner_elems = (
-        (g2 if df2 is not None else g1.select(F.col("__v1").alias("__v2")))
-        .agg(F.sum(F.size("__v2")) * len(cols)).first()[0] or 0
-    )
-    pairs = _pair_block_join(g1, g2, n_parts, partner_elems > _BC_ELEMS_CAP).filter(
-        F.col("id_1") != F.col("id_2")
-    )
-    if df2 is None:
-        pairs = pairs.filter(F.col("id_1") < F.col("id_2"))
-
-    kern = (lambda A, B: K.dtw_multi(A, B, metric)) if method == "dtw_multi" else (
-        lambda A, B: K.msm_multi(A, B, c))
-
-    def compute(batches):
-        import numpy as np
-        import pandas as pd
-        for pdf in batches:
-            vals = [
-                kern(np.asarray([list(r) for r in v1], dtype=float),
-                     np.asarray([list(r) for r in v2], dtype=float))
-                for v1, v2 in zip(pdf["__v1"], pdf["__v2"])
-            ]
-            yield pd.DataFrame({"id_1": pdf["id_1"], "id_2": pdf["id_2"], method: vals})
-
-    out = pairs.mapInPandas(compute, schema=f"id_1 string, id_2 string, {method} double")
-    if id_dtype != "string":
-        out = out.withColumn("id_1", F.col("id_1").cast(id_dtype)).withColumn(
-            "id_2", F.col("id_2").cast(id_dtype)
-        )
-    return out
+    kern = (lambda a, b: K.dtw_multi(a, b, metric)) if method == "dtw_multi" else (
+        lambda a, b: K.msm_multi(a, b, c))
+    return _grid_pairs(df1, df2, id_col, time_col, cols, method,
+                       lambda A, B: np.array([kern(a, b) for a, b in zip(A, B)]))

@@ -28,15 +28,12 @@ def for_each_series(
     schema: T.StructType | str,
     id_col: str = ID,
     time_col: str = TIME,
-    sort: bool = True,
 ) -> DataFrame:
     """Apply ``kernel(pdf) -> pdf`` to each series, time-sorted."""
     require_columns(df, id_col, time_col)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if sort:
-            pdf = pdf.sort_values(time_col, kind="mergesort").reset_index(drop=True)
-        return kernel(pdf)
+        return kernel(pdf.sort_values(time_col, kind="mergesort").reset_index(drop=True))
 
     # Explicit repartition by key: AQE coalesces the (byte-small) group
     # shuffle to a handful of partitions, which strangles the
@@ -54,7 +51,6 @@ def for_series_batches(
     schema: T.StructType | str,
     id_col: str = ID,
     time_col: str = TIME,
-    sort: bool = True,
 ) -> DataFrame:
     """Apply ``kernel(pdf) -> pdf`` to a BATCH of whole series at once.
 
@@ -74,9 +70,7 @@ def for_series_batches(
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.drop(columns="__bucket")
-        if sort:
-            pdf = pdf.sort_values([id_col, time_col], kind="mergesort").reset_index(drop=True)
-        return kernel(pdf)
+        return kernel(pdf.sort_values([id_col, time_col], kind="mergesort").reset_index(drop=True))
 
     n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     bucketed = df.withColumn(

@@ -23,7 +23,6 @@ from itertools import combinations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from polars_ts_spark.functions.numutils import RidgeEstimator
 from polars_ts_spark.panel import ID, TARGET, TIME

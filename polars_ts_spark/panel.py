@@ -69,8 +69,16 @@ def canonicalize(
     return out.withColumn(TARGET, F.col(TARGET).cast("double"))
 
 
-def ordered_series_struct(time_col: str = TIME, target_col: str = TARGET) -> Column:
-    """``sort_array(collect_list(struct(ds, y)))`` — the only way to get an
-    order-GUARANTEED array per series in Spark (SURVEY §4.2). Use in aggs:
-    ``df.groupBy(id).agg(ordered_series_struct().alias("series"))``."""
-    return F.sort_array(F.collect_list(F.struct(F.col(time_col).alias("t"), F.col(target_col).alias("v"))))
+def ordered_values(value_cols: str | list[str] = TARGET, time_col: str = TIME) -> Column:
+    """One series' values as a time-ordered array, for use in aggs:
+    ``df.groupBy(id).agg(ordered_values().alias("vals"))``.
+
+    A column name gives ``array<double>``; a list of names gives
+    ``array<array<double>>`` with one ``[v1..vk]`` row per time step.
+    Sorting the collected ``(t, v)`` structs is the only way to get an
+    order-GUARANTEED array per series in Spark (SURVEY §4.2)."""
+    if isinstance(value_cols, str):
+        v = f"cast(`{value_cols}` as double)"
+    else:
+        v = "array(" + ", ".join(f"cast(`{c}` as double)" for c in value_cols) + ")"
+    return F.expr(f"transform(array_sort(collect_list(struct(`{time_col}` as t, {v} as v))), s -> s.v)")

@@ -16,7 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_ts_spark.panel import ID, TARGET, TIME
+from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values
 
 
 def to_neuralforecast(
@@ -63,10 +63,7 @@ def to_huggingface(
         df.groupBy(F.col(id_col).cast("string").alias("id"))
         .agg(
             F.min(time_col).alias("start"),
-            F.expr(
-                f"transform(array_sort(collect_list(struct({time_col} as t, "
-                f"cast({target_col} as double) as v))), s -> s.v)"
-            ).alias("target"),
+            ordered_values(target_col, time_col).alias("target"),
         )
         .orderBy("id")
         .collect()

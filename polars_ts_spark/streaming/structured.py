@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,

@@ -3,7 +3,6 @@
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from polars_ts_spark.operators import anomaly, features, theta
 from polars_ts_spark.operators import evaluation as E

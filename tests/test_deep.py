@@ -3,7 +3,6 @@ batch-inference hook, the closed-form ridge window model, and the
 ImportError guard on the torch ports (torch is absent here)."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from polars_ts_spark.operators import deep

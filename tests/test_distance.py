@@ -3,6 +3,7 @@ import pytest
 
 from polars_ts_spark.functions import dist_kernels as K
 from polars_ts_spark.operators.distance import compute_pairwise_distance, compute_pairwise_distance_multi
+from tests.conftest import make_panel
 
 A = np.array([1.0, 2.0, 3.0, 4.0])
 B = np.array([1.0, 2.0, 3.0, 5.0])
@@ -161,27 +162,6 @@ def test_pairwise_int_id_dtype_preserved(spark):
     assert dict(out.dtypes)["id_1"] == "bigint"
 
 
-def test_pairwise_routing_checks_size_before_collect(two_series, monkeypatch):
-    """Oversized inputs must route to the cross-join fallback via a
-    SCALAR size check (count) — never collect first. Poisoning collect
-    proves the guard runs before any driver materialization; the
-    fallback must also produce the same answer."""
-    from pyspark.sql import DataFrame as SDF
-
-    from polars_ts_spark.operators import distance as dmod
-
-    monkeypatch.setattr(dmod, "_BC_ELEMS_CAP", 1)
-    monkeypatch.setattr(
-        SDF, "collect",
-        lambda self: (_ for _ in ()).throw(
-            AssertionError("collected before the size gate")),
-    )
-    out = compute_pairwise_distance(two_series, method="dtw")
-    monkeypatch.undo()
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0]["dtw"] == 1.0
-
-
 def test_pairwise_two_frames_no_dedup_when_disjoint(spark, two_series):
     df2 = two_series.withColumn("unique_id", F_concat_c(two_series))
     out = compute_pairwise_distance(two_series, df2, method="dtw")
@@ -212,62 +192,114 @@ def test_pairwise_multi(spark):
     assert r["dtw_multi"] > 0
 
 
-def test_pairwise_broadcast_matches_crossjoin_fallback(spark, monkeypatch):
-    """The broadcast fast path and the cross-join fallback must produce
-    identical pair sets and distances (incl. overlapping-id dedup)."""
-    import datetime as dt
-    from polars_ts_spark.operators import distance as D
+@pytest.fixture
+def overlapping(spark):
+    """Two panels sharing ids B, C, D (with different values in each),
+    mixed series lengths, enough series to fill every grid cell."""
+    rng = np.random.default_rng(7)
+    s1 = {sid: rng.normal(size=5 + i % 3).round(3) for i, sid in enumerate("ABCDEFGH")}
+    s2 = {sid: rng.normal(size=4 + i % 2).round(3) for i, sid in enumerate("BCDXY")}
+    return make_panel(spark, s1), make_panel(spark, s2), s1, s2
 
-    rows = [
-        (sid, dt.datetime(2024, 1, 1 + j), float(hash((sid, j)) % 17))
-        for sid in ("A", "B", "C", "D")
-        for j in range(6)
-    ]
-    df = spark.createDataFrame(rows, "unique_id string, ds timestamp, y double")
-    df2 = df.filter(F_in(df, ("B", "C"))).union(
-        df.filter(F_in(df, ("A",))).withColumn("unique_id", F_lit_concat(df))
+
+def _bruteforce(s1, s2, kernel):
+    """Driver-side reference: every pair, minus self-pairs, and only
+    id_1 < id_2 when both ids are present in both inputs."""
+    return {
+        (i1, i2): kernel(a, b)
+        for i1, a in s1.items()
+        for i2, b in s2.items()
+        if i1 != i2 and not (i1 in s2 and i2 in s1 and i1 > i2)
+    }
+
+
+def _by_pair(frame, col):
+    return {(r["id_1"], r["id_2"]): r[col] for r in frame.collect()}
+
+
+@pytest.mark.parametrize("multi", [False, True], ids=["univariate", "multivariate"])
+@pytest.mark.parametrize("two_inputs", [False, True], ids=["one_input", "two_inputs"])
+def test_pairwise_dedup_matches_bruteforce(overlapping, two_inputs, multi):
+    df1, df2, s1, s2 = overlapping
+    other = df2 if two_inputs else None
+    if multi:
+        out = compute_pairwise_distance_multi(df1, other, method="msm_multi", value_cols=["y"])
+        want = _bruteforce(s1, s2 if two_inputs else s1,
+                           lambda a, b: K.msm_multi(a.reshape(-1, 1), b.reshape(-1, 1)))
+    else:
+        out = compute_pairwise_distance(df1, other, method="msm")
+        want = _bruteforce(s1, s2 if two_inputs else s1, K.msm)
+    got = _by_pair(out, out.columns[2])
+    assert got.keys() == want.keys()
+    assert got == pytest.approx(want)
+
+
+@pytest.mark.parametrize("two_inputs", [False, True], ids=["one_input", "two_inputs"])
+def test_pairwise_no_driver_materialization(overlapping, monkeypatch, two_inputs):
+    """Building and running the query collects nothing to the driver
+    and broadcasts nothing from it."""
+    from pyspark import SparkContext
+    from pyspark.sql import DataFrame as SDF
+
+    df1, df2 = overlapping[:2]
+
+    def poisoned(name):
+        def fail(*_args, **_kwargs):
+            raise AssertionError(f"pairwise query called {name}")
+        return fail
+
+    for name in ("collect", "first", "toPandas"):
+        monkeypatch.setattr(SDF, name, poisoned(f"DataFrame.{name}"))
+    monkeypatch.setattr(SparkContext, "broadcast", poisoned("SparkContext.broadcast"))
+    out = compute_pairwise_distance(df1, df2 if two_inputs else None, method="msm")
+    out.write.format("noop").mode("overwrite").save()
+
+
+@pytest.mark.parametrize("two_inputs", [False, True], ids=["one_input", "two_inputs"])
+def test_pairwise_plan_is_one_cogroup_grid(spark, overlapping, two_inputs):
+    """One cogroup over the id-hash grid: no broadcast and no cross
+    product anywhere in the executed plan, and every grid cell (one per
+    shuffle partition here) computes its pairs in its own task."""
+    from pyspark.sql import functions as F
+
+    df1, df2 = overlapping[:2]
+    out = compute_pairwise_distance(df1, df2 if two_inputs else None, method="dtw")
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    for node in ("BroadcastExchange", "BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert node not in plan, plan
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+    tasks = out.select(F.spark_partition_id()).distinct().count()
+    assert tasks == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+@pytest.mark.parametrize("other", ["itself", "one_shared_id"])
+def test_pairwise_multi_dedups_like_univariate(spark, overlapping, other):
+    """With one channel the multivariate path keeps the same pairs and
+    values as the univariate one, including the symmetric dedup."""
+    df1, _, s1, _ = overlapping
+    df2 = df1 if other == "itself" else make_panel(spark, {"C": s1["C"][::-1], "Z": s1["A"]})
+    multi = _by_pair(
+        compute_pairwise_distance_multi(df1, df2, method="dtw_multi", value_cols=["y"]), "dtw_multi"
     )
-
-    def collect(frame):
-        return sorted((r["id_1"], r["id_2"], round(r["msm"], 9)) for r in frame.collect())
-
-    fast_same = collect(compute_pairwise_distance(df, method="msm"))
-    fast_cross = collect(compute_pairwise_distance(df, df2, method="msm"))
-    monkeypatch.setattr(D, "_BC_ELEMS_CAP", -1)
-    slow_same = collect(compute_pairwise_distance(df, method="msm"))
-    slow_cross = collect(compute_pairwise_distance(df, df2, method="msm"))
-    assert fast_same == slow_same and len(fast_same) == 6
-    assert fast_cross == slow_cross
+    uni = _by_pair(compute_pairwise_distance(df1, df2, method="dtw"), "dtw")
+    assert multi.keys() == uni.keys()
+    assert multi == pytest.approx(uni)
 
 
-def F_in(df, ids):
+def test_grid_cells_land_one_per_partition(spark):
+    """The cell keys hash to distinct shuffle partitions, so every grid
+    cell runs as its own task."""
     from pyspark.sql import functions as F
-    return F.col("unique_id").isin(*ids)
 
+    from polars_ts_spark.operators.distance import _partition_labels
 
-def F_lit_concat(df):
-    from pyspark.sql import functions as F
-    return F.concat(F.col("unique_id"), F.lit("_z"))
-
-
-def test_oversized_fallback_never_broadcasts_arrays(spark, monkeypatch):
-    """When the partner side is over _BC_ELEMS_CAP the blocked B×B grid
-    join must plan WITHOUT any BroadcastExchange — a join-side broadcast
-    there would re-create the memory blow-up the fallback exists to
-    avoid (round-5 verdict Wrong #1)."""
-    import datetime as dt
-
-    from polars_ts_spark.operators import distance as D
-
-    rows = [
-        (sid, dt.datetime(2024, 1, 1 + j), float(hash((sid, j)) % 13))
-        for sid in ("A", "B", "C", "D", "E")
-        for j in range(8)
-    ]
-    df = spark.createDataFrame(rows, "unique_id string, ds timestamp, y double")
-    monkeypatch.setattr(D, "_BC_ELEMS_CAP", -1)
-    out = compute_pairwise_distance(df, method="dtw")
-    got = out.collect()
-    assert len(got) == 10  # C(5,2) pairs survive the grid + dedup
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" not in plan, plan
+    for n_parts in (1, 4, 6, 32):
+        labels = _partition_labels(n_parts)
+        placed = (
+            spark.createDataFrame([(v,) for v in labels], "v int")
+            .repartition(n_parts, "v")
+            .select("v", F.spark_partition_id().alias("p"))
+            .collect()
+        )
+        assert {r["v"]: r["p"] for r in placed} == {v: p for p, v in enumerate(labels)}

@@ -1,5 +1,3 @@
-import math
-
 from pyspark.sql import functions as F
 
 from polars_ts_spark.operators.features import (

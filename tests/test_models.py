@@ -5,7 +5,6 @@ tests with seeded generators)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from polars_ts_spark.functions import numutils
 from polars_ts_spark.operators import changepoint, statespace, var_model, volatility

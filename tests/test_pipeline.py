@@ -5,7 +5,6 @@ reconciliation. Analytic panels where the right answer is known."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from polars_ts_spark.operators import evaluation as E
 from polars_ts_spark.operators import pipeline as P

@@ -101,23 +101,6 @@ def test_feature_windows_share_one_exchange(spark):
     assert _shuffle_exchanges(plan) <= 2, plan
 
 
-def test_pairwise_streams_ids_only(spark):
-    """The broadcast pairwise plan must not move series arrays through a
-    shuffle: the stream side is the id list, arrays ride a broadcast
-    variable (operators/distance.py)."""
-    from polars_ts_spark.operators.distance import compute_pairwise_distance
-    from polars_ts_spark.plans.registry import _monthly_panel_exact
-
-    df = compute_pairwise_distance(_monthly_panel_exact(spark, SF_DIR), method="dtw")
-    plan = _plan(df, "simple")
-    # the mapInPandas stage consumes a round-robin repartition of a
-    # driver-created id frame: no join, no aggregate in this subtree
-    join_nodes = ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
-                  "BroadcastNestedLoopJoin", "CartesianProduct")
-    assert not any(j in plan for j in join_nodes), plan
-    assert "mapInPandas" in plan or "MapInPandas" in plan
-
-
 def test_minhash_candidates_no_cartesian_and_broadcast_skew_stats(spark):
     """The melted minhash candidate plan must stay an equi self-join on
     (band, key) — no CartesianProduct — with the oversized-bucket stats
@@ -157,9 +140,6 @@ def test_kaboudan_shuffle_is_windows_plus_one_join(spark):
     """The distributed block shuffle must be window exprs + ONE
     positional self-join — not a driver materialization (asserted
     elsewhere) and not a join explosion."""
-    import pandas as pd
-
-    from polars_ts_spark.operators import evaluation
     from pyspark.sql import Window
 
     panel = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(

@@ -9,7 +9,6 @@ from __future__ import annotations
 import contextlib
 import io
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F

@@ -59,3 +59,32 @@ def test_pts_namespace_chain(spark):
     ).fillna(0.0)
     m = pts(scored).mae()
     assert m.count() == 1
+
+
+def test_library_has_no_unused_module_imports():
+    """Every module-level import under polars_ts_spark/ is used in its
+    module or re-exported through ``__all__``."""
+    import ast
+    import pathlib
+
+    import polars_ts_spark
+
+    root = pathlib.Path(polars_ts_spark.__file__).parent
+    unused = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                used |= set(ast.literal_eval(node.value))
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for alias in node.names:
+                    name = alias.asname or alias.name.split(".")[0]
+                    if name not in used:
+                        unused.append(f"{path.relative_to(root.parent)}:{node.lineno} {name}")
+    assert not unused, unused
