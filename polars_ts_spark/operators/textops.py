@@ -643,19 +643,23 @@ FROM cand WHERE bit_count(xor(fp1, fp2)) <= {max_hamming}
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "on", "for")
 
 
-def _cc_label_prop(df, edges, id_col, max_iter, rounds_out=None):
-    """Min-label propagation: one join + groupBy per round over the
-    linear-size edge list, O(component diameter) rounds — the cheapest
-    plan per round, but a diameter-d chain costs d rounds. Returns
-    (labels, converged): the ``auto`` engine reads ``converged`` to
-    decide whether to escalate to star contraction."""
+# Propagation rounds before the star fallback: real near-dup edge sets
+# converge in 2-3 rounds, so only a component of diameter > 8 falls back.
+_LP_ROUNDS = 8
+# Star contraction's round limit; its rounds grow as O(log^2 n).
+_STAR_ROUNDS = 50
+
+
+def _cc_label_prop(df, edges, id_col):
+    """Min-label propagation over the symmetric edge list ``edges`` for
+    at most ``_LP_ROUNDS`` rounds: one join + groupBy per round, the
+    cheapest plan per round, but one hop per round, so a diameter-d
+    component needs d rounds. Returns (labels, converged)."""
     labels = df.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("cluster_id")
     )
-    rounds = 0
     changed = 0
-    for _ in range(max_iter):
-        rounds += 1
+    for _ in range(_LP_ROUNDS):
         neigh_min = (
             edges.join(labels, edges["dst"] == labels["node"])
             .groupBy("src")
@@ -680,37 +684,30 @@ def _cc_label_prop(df, edges, id_col, max_iter, rounds_out=None):
         labels = new_labels.drop("__chg")
         if changed == 0:
             break
-    if rounds_out is not None:
-        rounds_out.append(rounds)
     return labels, changed == 0
 
 
-def _cc_star(df, edges, id_col, max_iter, rounds_out=None):
+def _cc_star(df, edges, id_col):
     """Alternating large-star/small-star contraction (Kiveris et al.
     2014, "Connected Components in MapReduce and Beyond"). Each round
     rewires every node toward the minimum of its neighborhood, so
     component radius roughly HALVES per round: O(log^2 n) rounds worst
-    case vs O(diameter) for label propagation, and a diameter-64 chain
-    that silently exceeds a 50-round propagation budget finishes in
-    under a dozen star rounds. Each round is two groupBy+join passes
-    over the linear-size edge list; lineage is cut once per round.
+    case vs O(diameter) for label propagation. Each round is two
+    groupBy+join passes over the linear-size edge list; lineage is cut
+    once per round.
 
     ``edges`` must be normalized: src > dst, distinct, no self loops.
     Returns [node, cluster_id] for every node of ``df`` (isolated
-    nodes label themselves). Raises if ``max_iter`` rounds exhaust
-    before the star fixpoint (an unconverged edge set can
-    hold multiple outgoing edges per node, so the final node->root
-    left join would fan out and emit conflicting cluster_ids —
-    mirroring label_prop's loud budget-exhaustion error instead of
-    silently mislabeling)."""
-    rounds = 0
+    nodes label themselves). Raises if ``_STAR_ROUNDS`` rounds exhaust
+    before the star fixpoint: an unconverged edge set can hold
+    multiple outgoing edges per node, so the final node->root left
+    join would fan out and emit conflicting cluster_ids."""
     n_edges = edges.count()
     fixpoint = n_edges == 0
-    for _ in range(max_iter):
+    for _ in range(_STAR_ROUNDS):
         if n_edges == 0:
             fixpoint = True
             break
-        rounds += 1
         # large-star: for each u, attach every LARGER neighbor v to
         # m = min(neighborhood(u) + {u}); needs the symmetric view
         sym = edges.unionByName(
@@ -745,11 +742,9 @@ def _cc_star(df, edges, id_col, max_iter, rounds_out=None):
         edges, n_edges = ss, new_n
     if not fixpoint:
         raise RuntimeError(
-            f"star contraction did not reach its fixpoint in {max_iter} "
-            f"rounds ({n_edges} edges still changing); raise max_iter — "
-            f"refusing to emit labels from a non-star edge set")
-    if rounds_out is not None:
-        rounds_out.append(rounds)
+            f"star contraction did not reach its fixpoint in {_STAR_ROUNDS} "
+            f"rounds ({n_edges} edges still changing); refusing to emit "
+            f"labels from a non-star edge set")
     # converged: edges form stars (node -> component min)
     star = edges.select(F.col("src").alias("node"),
                         F.col("dst").alias("__root"))
@@ -767,10 +762,6 @@ def dedup_clusters(
     id_col: str = "doc_id",
     id1_col: str = "doc_id_1",
     id2_col: str = "doc_id_2",
-    max_iter: int = 50,
-    algorithm: str = "auto",
-    lp_budget: int = 8,
-    rounds_out: list | None = None,
     **lsh_kw,
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over a duplicate-
@@ -780,101 +771,34 @@ def dedup_clusters(
     dedup pipeline actually needs, not just the pair list.
     Output [doc_id, cluster_id, is_canonical].
 
-    Spark-first components, three engines with identical output:
-
-    - ``algorithm="auto"`` (default): min-label propagation for up to
-      ``lp_budget`` rounds — the cheapest plan per round, and real
-      near-dup clusters are shallow, so this fast path almost always
-      converges in 2-3 rounds — then, ONLY if unconverged, escalate
-      to star contraction on the label-CONTRACTED graph (edges mapped
-      through the partial labels, loops dropped): every label_prop
-      round shrinks each component's radius by 1, so the contracted
-      graph is already small, and star's O(log^2 n) rounds are
-      diameter-independent. Shallow corpora pay label_prop's price;
-      adversarial chains CANNOT silently exhaust the budget (the old
-      max_iter cliff) because the escalation finishes them exactly.
-    - ``algorithm="star"``: alternating large-star/small-star
-      contraction (Kiveris et al. 2014) from the start.
-    - ``algorithm="label_prop"``: propagation only, O(diameter)
-      rounds; raises if the budget is exhausted before convergence
-      rather than returning silently wrong labels.
+    Components run as min-label propagation for up to ``_LP_ROUNDS``
+    rounds. Real near-dup clusters are shallow, so it converges in 2-3
+    rounds. Only when a component's diameter exceeds that budget does
+    star contraction (``_cc_star``) relabel from the edge list, in a
+    number of rounds that does not grow with the diameter. Pairs that
+    name an id absent from ``df`` are ignored by both.
 
     No driver union-find, no all-pairs blowup; lineage is cut per
-    round with ``materialize`` so the plan does not nest.
-    ``rounds_out``: pass a list to receive the number of rounds the
-    engine(s) actually ran (appended once, total)."""
-    # zero propagation rounds would report converged=True
-    # (changed initializes to 0) and silently return self-labels that
-    # ignore every edge — refuse degenerate budgets up front
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if algorithm == "auto" and lp_budget < 1:
-        raise ValueError(f"lp_budget must be >= 1, got {lp_budget}")
+    round with ``materialize`` so the plan does not nest."""
     if pairs is None:
         pairs = minhash_lsh_pairs(df, id_col=id_col, **lsh_kw)
     e = pairs.select(F.col(id1_col).alias("src"), F.col(id2_col).alias("dst"))
-
-    def _norm_ckpt(edges_df):
-        # normalize: src > dst, deduped, self-loops dropped; checkpoint
-        # ONCE so upstream lineage is not re-run per round
-        return materialize(
-            edges_df.select(F.greatest("src", "dst").alias("src"),
-                            F.least("src", "dst").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-
-    def _sym_ckpt(edges_df):
-        # materialize the (linear-size) symmetric edge list ONCE: it is
-        # re-joined every propagation round, and leaving it lazy re-ran
-        # the whole upstream LSH pipeline per round
-        return materialize(edges_df.unionByName(
-            edges_df.select(F.col("dst").alias("src"),
-                            F.col("src").alias("dst"))
-        ))
-
-    if algorithm == "star":
-        labels = _cc_star(df, _norm_ckpt(e), id_col, max_iter, rounds_out)
-    elif algorithm == "label_prop":
-        labels, converged = _cc_label_prop(
-            df, _sym_ckpt(e), id_col, max_iter, rounds_out)
-        if not converged:
-            raise RuntimeError(
-                f"label propagation did not converge in {max_iter} rounds "
-                f"(a component's diameter exceeds the budget); use "
-                f"algorithm='auto' or 'star'")
-    elif algorithm == "auto":
-        r1: list[int] = []
-        labels, converged = _cc_label_prop(
-            df, _sym_ckpt(e), id_col, min(int(lp_budget), max_iter), r1)
-        if not converged:
-            # contract edges through the partial labels: components of
-            # the contracted graph == components of the original, and
-            # min label-value == min node id (every node's label is a
-            # component member's id; the component-min node keeps its
-            # own). Star finishes the small contracted graph.
-            lab = labels
-            contracted = (
-                e.join(lab.withColumnsRenamed(
-                    {"node": "src", "cluster_id": "__l1"}), "src")
-                .join(lab.withColumnsRenamed(
-                    {"node": "dst", "cluster_id": "__l2"}), "dst")
-                .select(F.col("__l1").alias("src"), F.col("__l2").alias("dst"))
-            )
-            universe = lab.select(F.col("cluster_id").alias(id_col)).distinct()
-            r2: list[int] = []
-            star = _cc_star(universe, _norm_ckpt(contracted), id_col,
-                            max_iter, r2).withColumnsRenamed(
-                {"node": "__l1", "cluster_id": "__root"})
-            labels = lab.join(star, lab["cluster_id"] == star["__l1"]).select(
-                "node", F.col("__root").alias("cluster_id"))
-            r1 = [r1[0] + r2[0]]
-        if rounds_out is not None:
-            rounds_out.append(r1[0])
-    else:
-        raise ValueError(
-            f"algorithm must be 'auto', 'star' or 'label_prop', "
-            f"got {algorithm!r}")
+    # materialize the (linear-size) symmetric edge list ONCE: it is
+    # re-joined every round, and leaving it lazy re-ran the whole
+    # upstream LSH pipeline per round
+    sym = materialize(e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))))
+    labels, converged = _cc_label_prop(df, sym, id_col)
+    if not converged:
+        # star's normal form (src > dst, distinct, which drops self
+        # loops), restricted to edges between ids of df as propagation
+        # is; checkpointed because star's first round reads it 4 times
+        ids = df.select(F.col(id_col).alias("__id"))
+        labels = _cc_star(df, materialize(
+            sym.where(F.col("src") > F.col("dst")).distinct()
+            .join(ids, F.col("src") == F.col("__id"), "left_semi")
+            .join(ids, F.col("dst") == F.col("__id"), "left_semi")
+        ), id_col)
     return labels.select(
         F.col("node").alias(id_col),
         "cluster_id",
@@ -2810,6 +2734,9 @@ def corpus_curation_v2(
       / ``corpus_curation_v3`` registry entries pin the flag
       explicitly, so the declared queries are unaffected either
       way."""
+    # checked before the LM job starts, so a bad key leaves no thread
+    if line_filter is not None:
+        _check_line_filter_keys(line_filter)
     # with a held-out ``reference`` the LM training job shares NOTHING
     # with the line-filter/dedup chain, yet dedup's blocking
     # materializations would serialize the two — so the reference
@@ -2823,35 +2750,36 @@ def corpus_curation_v2(
 
         pool = ThreadPoolExecutor(max_workers=1)
         fut_model = pool.submit(_ngram_lm_model, reference, text_col, id_col)
-    if line_filter is not None:
-        _check_line_filter_keys(line_filter)
-        lf = c4_line_filters(
-            df, text_col=text_col, id_col=id_col, **line_filter)
-        # dedup scans the line-filtered corpus 2-3x and the kept join
-        # once more; lazily each re-ran the split/filter/rejoin pipeline
-        df = materialize(
-            lf.filter(F.col("kept"))
-            .select(F.col(id_col), F.col("clean_text").alias(text_col)))
-    clusters = dedup_clusters(df, id_col=id_col, **lsh_kw)
-    # the kept corpus feeds 4-6 downstream passes (LM train when
-    # self-trained, LM scoring, language-ID, the sampled-cutoff
-    # branch's filtered score+lang pair, the fused stats scan); lazily
-    # each re-paid the documents scan + canonical join
-    kept = materialize(df.join(
-        clusters.filter(F.col("is_canonical")).select(id_col), id_col))
-    if use_sampled_cutoffs:
-        model = None
-        if fut_model is not None:
-            model = fut_model.result()
-            pool.shutdown(wait=False)
-        buck = perplexity_buckets_from_cutoffs(
-            kept, reference, n_buckets, alpha, sample_mod, text_col, id_col,
-            _model=model,
-        ).select(id_col, "bucket")
-    else:
-        buck = perplexity_buckets(
-            kept, reference, n_buckets, alpha, text_col, id_col
-        ).select(id_col, "bucket")
+    try:
+        if line_filter is not None:
+            lf = c4_line_filters(
+                df, text_col=text_col, id_col=id_col, **line_filter)
+            # dedup scans the line-filtered corpus 2-3x and the kept join
+            # once more; lazily each re-ran the split/filter/rejoin pipeline
+            df = materialize(
+                lf.filter(F.col("kept"))
+                .select(F.col(id_col), F.col("clean_text").alias(text_col)))
+        clusters = dedup_clusters(df, id_col=id_col, **lsh_kw)
+        # the kept corpus feeds 4-6 downstream passes (LM train when
+        # self-trained, LM scoring, language-ID, the sampled-cutoff
+        # branch's filtered score+lang pair, the fused stats scan); lazily
+        # each re-paid the documents scan + canonical join
+        kept = materialize(df.join(
+            clusters.filter(F.col("is_canonical")).select(id_col), id_col))
+        if use_sampled_cutoffs:
+            model = None if fut_model is None else fut_model.result()
+            buck = perplexity_buckets_from_cutoffs(
+                kept, reference, n_buckets, alpha, sample_mod, text_col,
+                id_col, _model=model,
+            ).select(id_col, "bucket")
+        else:
+            buck = perplexity_buckets(
+                kept, reference, n_buckets, alpha, text_col, id_col
+            ).select(id_col, "bucket")
+    finally:
+        # on an error, wait for the LM job instead of leaving it running
+        if pool is not None:
+            pool.shutdown()
     # quality, token counts and language-ID fuse into one projection
     # (see _fused_doc_stats); its lang_pred is the same expression the
     # bucket leg's language_id computes, so only `bucket` needs the

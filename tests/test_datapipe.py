@@ -97,82 +97,81 @@ def test_dedup_clusters_components(spark):
     assert out[3] == (3, True)
 
 
-def test_dedup_clusters_star_long_chain_rounds(spark):
-    """VERDICT r10 #5: a planted diameter-64 duplicate chain. Min-label
-    propagation needs ~64 rounds (one hop per round — it would silently
-    MISLABEL under the default 50-round budget); the star-contraction
-    default halves the radius per round and must finish well inside a
-    dozen rounds with every node labeled 0."""
-    import pytest
-
-    n = 65
+def _chain(spark, ids):
+    """Docs for ``ids`` and the pairs linking consecutive ids."""
     docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(n)], ["doc_id", "text"])
+        [(i, f"text {i}") for i in ids], ["doc_id", "text"])
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["doc_id_1", "doc_id_2"])
-    rounds: list[int] = []
-    out = {r["doc_id"]: r["cluster_id"]
-           for r in textops.dedup_clusters(
-               docs, pairs=pairs, algorithm="star",
-               rounds_out=rounds).collect()}
-    assert all(out[i] == 0 for i in range(n))
-    assert rounds[0] <= 12, rounds
-    # the AUTO default: label_prop burns its small budget, the star
-    # escalation on the contracted chain finishes exactly — total
-    # rounds far below the diameter, labels identical
-    rounds_auto: list[int] = []
-    out_auto = {r["doc_id"]: r["cluster_id"]
-                for r in textops.dedup_clusters(
-                    docs, pairs=pairs, rounds_out=rounds_auto).collect()}
-    assert out_auto == out
-    assert rounds_auto[0] <= 20, rounds_auto
-    # pure label_prop needs >= diameter rounds when the budget allows
-    # it, and must FAIL LOUDLY (not silently mislabel) when it doesn't
-    rounds_lp: list[int] = []
-    out_lp = {r["doc_id"]: r["cluster_id"]
-              for r in textops.dedup_clusters(
-                  docs, pairs=pairs, algorithm="label_prop", max_iter=100,
-                  rounds_out=rounds_lp).collect()}
-    assert out_lp == out
-    assert rounds_lp[0] > rounds[0]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        textops.dedup_clusters(
-            docs, pairs=pairs, algorithm="label_prop", max_iter=10).collect()
+        list(zip(ids, ids[1:])), ["doc_id_1", "doc_id_2"])
+    return docs, pairs
 
 
-def test_dedup_clusters_degenerate_budget_rejected(spark):
-    """ADVICE r11: lp_budget<=0 (or max_iter<=0) would run ZERO
-    propagation rounds yet report converged=True, so `auto` would skip
-    the star escalation and silently return self-labels that ignore
-    every edge — the budgets must be validated up front."""
-    import pytest
-
-    docs = spark.createDataFrame([(0, "a"), (1, "a")], ["doc_id", "text"])
-    pairs = spark.createDataFrame([(0, 1)], ["doc_id_1", "doc_id_2"])
-    with pytest.raises(ValueError, match="lp_budget"):
-        textops.dedup_clusters(docs, pairs=pairs, lp_budget=0)
-    with pytest.raises(ValueError, match="max_iter"):
-        textops.dedup_clusters(docs, pairs=pairs, max_iter=0)
-    with pytest.raises(ValueError, match="max_iter"):
-        textops.dedup_clusters(docs, pairs=pairs, algorithm="label_prop",
-                               max_iter=-1)
+def _spy_star(monkeypatch):
+    """Record each call of the star-contraction fallback."""
+    calls = []
+    real = textops._cc_star
+    monkeypatch.setattr(textops, "_cc_star",
+                        lambda *a: calls.append(1) or real(*a))
+    return calls
 
 
-def test_cc_star_budget_exhaustion_raises(spark):
-    """ADVICE r11: if star contraction exhausts max_iter before the
-    edge fixpoint, a node can hold multiple outgoing edges and the
-    final node->root join would fan out with conflicting cluster_ids —
-    it must raise loudly instead (mirroring label_prop)."""
-    import pytest
+def test_dedup_clusters_long_chain_all_zero(spark, monkeypatch):
+    """A diameter-249 duplicate chain. Propagation moves a label one hop
+    per round, so its rounds alone would leave most of the chain
+    unlabeled; the star fallback must finish it with every node labeled
+    0. Self loops and reversed duplicate edges ride along, since the
+    fallback normalizes the edge list itself."""
+    n = 250
+    docs, pairs = _chain(spark, list(range(n)))
+    pairs = pairs.union(spark.createDataFrame(
+        [(5, 5), (7, 6), (6, 7), (n - 1, n - 1)], pairs.schema))
+    star_calls = _spy_star(monkeypatch)
+    out = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+           for r in textops.dedup_clusters(docs, pairs=pairs).collect()}
+    assert star_calls == [1]
+    assert out == {i: (0, i == 0) for i in range(n)}
 
-    n = 65
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(n)], ["doc_id", "text"])
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["doc_id_1", "doc_id_2"])
+
+def test_cc_star_budget_exhaustion_raises(spark, monkeypatch):
+    """If star contraction runs out of rounds before the edge fixpoint,
+    a node can hold several outgoing edges and the final node->root
+    join would fan out with conflicting cluster_ids, so it must raise
+    instead."""
+    docs, pairs = _chain(spark, list(range(65)))
+    monkeypatch.setattr(textops, "_STAR_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="fixpoint"):
-        textops.dedup_clusters(
-            docs, pairs=pairs, algorithm="star", max_iter=1).collect()
+        textops.dedup_clusters(docs, pairs=pairs).collect()
+
+
+def test_dedup_clusters_out_of_corpus_ids_ignored(spark, monkeypatch):
+    """Pairs naming an id absent from ``df`` neither merge corpus docs
+    nor relabel them, and every cluster has exactly one canonical doc;
+    on the propagation path and on the star fallback alike."""
+    star_calls = _spy_star(monkeypatch)
+
+    def check(docs, pairs, want):
+        rows = textops.dedup_clusters(docs, pairs=pairs).collect()
+        assert {r["doc_id"]: r["cluster_id"] for r in rows} == want
+        canon = [r["cluster_id"] for r in rows if r["is_canonical"]]
+        assert sorted(canon) == sorted(set(want.values()))
+
+    # short chain 10-11-12 with absent 3 hanging off it; 13 and 14
+    # linked only through absent 99
+    docs, _ = _chain(spark, [10, 11, 12, 13, 14])
+    pairs = spark.createDataFrame(
+        [(10, 11), (11, 12), (12, 3), (13, 99), (99, 14)],
+        ["doc_id_1", "doc_id_2"])
+    check(docs, pairs, {10: 10, 11: 10, 12: 10, 13: 13, 14: 14})
+    assert star_calls == []
+    # a chain longer than the propagation rounds, plus an edge to a
+    # smaller absent id and an absent bridge to another corpus doc
+    ids = list(range(10, 40))
+    docs, pairs = _chain(spark, ids)
+    docs = docs.union(spark.createDataFrame([(50, "x")], docs.schema))
+    pairs = pairs.union(spark.createDataFrame(
+        [(20, 1), (39, 500), (500, 50)], pairs.schema))
+    check(docs, pairs, {**{i: 10 for i in ids}, 50: 50})
+    assert star_calls == [1]
 
 
 def test_minhash_digests_preprojected_once(spark):
@@ -185,31 +184,6 @@ def test_minhash_digests_preprojected_once(spark):
     sig = textops.minhash_signatures(docs, num_hashes=16)
     plan = sig._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("md5") == 4, plan
-
-
-def test_dedup_clusters_star_matches_label_prop_fuzz(spark):
-    """Both component engines must produce identical labels on random
-    edge sets (multi-component, cycles, dup edges, reversed edges,
-    isolated nodes)."""
-    import random
-
-    rng = random.Random(11)
-    for trial in range(3):
-        n = 40
-        edges = sorted({(rng.randrange(n), rng.randrange(n))
-                        for _ in range(rng.randrange(10, 45))})
-        edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
-        docs = spark.createDataFrame(
-            [(i, f"d {i}") for i in range(n)], ["doc_id", "text"])
-        pairs = spark.createDataFrame(edges, ["doc_id_1", "doc_id_2"])
-        star = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
-                for r in textops.dedup_clusters(
-                    docs, pairs=pairs, algorithm="star").collect()}
-        for algo in ("auto", "label_prop"):
-            got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
-                   for r in textops.dedup_clusters(
-                       docs, pairs=pairs, algorithm=algo).collect()}
-            assert got == star, (trial, algo, edges)
 
 
 def test_text_stats(docs):
@@ -666,27 +640,27 @@ def test_dup_ngram_stats_matches_python_reference(spark):
 
 
 def test_round11_surfaces_degenerate_inputs(spark):
-    """Degenerate-input contracts for the round-11 surfaces: empty
-    corpus, single doc, and self-loop/duplicate pair edges must not
-    crash and must keep the documented semantics."""
+    """Degenerate-input contracts for sequence packing, cutoff
+    bucketing and dedup clusters: empty corpus, single doc, and
+    self-loop/duplicate pair edges must not crash and must keep the
+    documented semantics."""
     empty = spark.createDataFrame([], "doc_id bigint, text string")
     assert textops.sequence_pack_windows(empty, window=8).count() == 0
     assert textops.perplexity_buckets_from_cutoffs(empty).count() == 0
-    assert textops.dedup_clusters(empty, algorithm="star").count() == 0
+    assert textops.dedup_clusters(empty).count() == 0
     one = spark.createDataFrame(
         [(7, "a b c d e f g h i j")], ["doc_id", "text"])
     w = textops.sequence_pack_windows(one, window=4, n_shards=2).collect()
     assert sum(r["n_tokens_filled"] for r in w) == 10
     assert [r["cluster_id"] for r in
-            textops.dedup_clusters(one, algorithm="star").collect()] == [7]
+            textops.dedup_clusters(one).collect()] == [7]
     # self-loops and duplicate/reversed edges collapse harmlessly
     docs = spark.createDataFrame(
         [(i, f"d {i}") for i in range(4)], ["doc_id", "text"])
     pairs = spark.createDataFrame(
         [(1, 1), (1, 2), (2, 1), (1, 2), (3, 3)], ["doc_id_1", "doc_id_2"])
     out = {r["doc_id"]: r["cluster_id"]
-           for r in textops.dedup_clusters(
-               docs, pairs=pairs, algorithm="star").collect()}
+           for r in textops.dedup_clusters(docs, pairs=pairs).collect()}
     assert out == {0: 0, 1: 1, 2: 1, 3: 3}
 
 
@@ -1281,6 +1255,24 @@ def test_corpus_curation_v2_line_filter_key_validation(spark):
               require_terminal_punct=False, line_sep="\n")
     assert textops.corpus_curation_v2(docs, line_filter=ok) is not None
     assert "lf AS" in textops.corpus_curation_v2_oracle(line_filter=ok)
+
+
+def test_corpus_curation_v2_bad_line_filter_starts_no_lm_job(
+        spark, monkeypatch):
+    """A bad line_filter key must raise before the held-out LM job is
+    submitted to its driver thread; otherwise the thread keeps running
+    Spark jobs after the call has failed."""
+    import threading
+
+    ran = threading.Event()
+    monkeypatch.setattr(textops, "_ngram_lm_model",
+                        lambda *a, **k: ran.set())
+    docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="not shared"):
+        textops.corpus_curation_v2(
+            docs, reference=docs, use_sampled_cutoffs=True,
+            line_filter={"bogus": 1})
+    assert not ran.wait(timeout=1.0)
 
 
 def test_sequence_pack_planted(spark):

@@ -1,22 +1,19 @@
-"""Wall-clock scaling rows for dedup_clusters(auto) (VERDICT r11 #6):
-the planted diameter-64 chain test pins ROUND counts, but the auto
-engine (budgeted label propagation escalating to star contraction)
-had no measured wall-clock rows alongside the other curation ops in
-COVERAGE.md's scaling table. This probe measures the engine itself —
-pairs are SUPPLIED, so minhash cost is excluded — on two corpus
-shapes per size:
+"""Wall-clock scaling rows for dedup_clusters. The probe measures the
+components engine itself — pairs are SUPPLIED, so minhash cost is
+excluded — on two corpus shapes per size:
 
 - ``planted``: n docs in n/5 clusters of 5 (consecutive-id chains of
-  diameter 4) — the shallow shape real near-dup corpora have; the
-  label-prop fast path must converge inside its budget, no
-  escalation.
+  diameter 4) — the shallow shape real near-dup corpora have; label
+  propagation converges inside its rounds and star contraction never
+  runs.
 - ``chain``: ONE chain of length n (diameter n-1) — the adversarial
-  shape; label_prop burns its budget and the star escalation must
-  finish in O(log^2) rounds, diameter-independently.
+  shape; propagation runs out of rounds and the star fallback must
+  finish in O(log^2 n) rounds, whatever the diameter.
 
 Everything is generated DISTRIBUTED (spark.range expressions — no
-driver-side pandas), and each run asserts the planted component
-count, so a mislabeling cannot masquerade as a fast run.
+driver-side pandas), each run counts the Spark jobs of its own job
+group, and each run asserts the planted component count, so a
+mislabeling cannot masquerade as a fast run.
 
 Off-registry by design. Usage: python tools/cc_scaling.py [n ...]
 """
@@ -26,13 +23,14 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from polars_ts_spark.operators import textops  # noqa: E402
-from polars_ts_spark.session import get_spark  # noqa: E402
+from polars_ts_spark.session import free_blocks, get_spark  # noqa: E402
 
 
 def _docs(spark, n: int):
@@ -56,18 +54,22 @@ def run(spark, n: int, shape: str) -> dict:
         want_clusters = 1
     else:
         raise ValueError(shape)
-    rounds: list[int] = []
+    sc = spark.sparkContext
+    group = f"cc_scaling/{shape}/{n}"
+    sc.setJobGroup(group, group)
     t0 = time.monotonic()
-    out = textops.dedup_clusters(
-        docs, pairs=edges, algorithm="auto", rounds_out=rounds)
+    out = textops.dedup_clusters(docs, pairs=edges)
     got = out.agg(
         F.countDistinct("cluster_id").alias("k"),
         F.count(F.lit(1)).alias("n")).collect()[0]
     dt = time.monotonic() - t0
+    sc.setJobGroup("cc_scaling/idle", "outside the timed span")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    free_blocks(spark)
     assert got["n"] == n, (got["n"], n)
     assert got["k"] == want_clusters, (got["k"], want_clusters)
     return {"shape": shape, "n_docs": n, "wall_s": round(dt, 2),
-            "rounds": rounds[0], "n_clusters": got["k"]}
+            "spark_jobs": n_jobs, "n_clusters": got["k"]}
 
 
 def main():
