@@ -174,6 +174,38 @@ def test_dedup_clusters_out_of_corpus_ids_ignored(spark, monkeypatch):
     assert star_calls == [1]
 
 
+def test_dedup_clusters_star_matches_label_prop_fuzz(spark, monkeypatch):
+    """The star fallback and propagation alone must produce identical
+    labels on random edge sets (multi-component, cycles, dup edges,
+    reversed edges, isolated nodes). One propagation round never
+    converges on a non-empty edge set, so it forces the star fallback;
+    a large round count lets propagation finish by itself."""
+    import random
+
+    star_calls = _spy_star(monkeypatch)
+
+    def run(docs, pairs, lp_rounds):
+        monkeypatch.setattr(textops, "_LP_ROUNDS", lp_rounds)
+        star_calls.clear()
+        out = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+               for r in textops.dedup_clusters(docs, pairs=pairs).collect()}
+        return out, len(star_calls)
+
+    rng = random.Random(11)
+    n = 40
+    docs = spark.createDataFrame(
+        [(i, f"d {i}") for i in range(n)], ["doc_id", "text"])
+    for trial in range(3):
+        edges = sorted({(rng.randrange(n), rng.randrange(n))
+                        for _ in range(rng.randrange(10, 45))})
+        edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
+        pairs = spark.createDataFrame(edges, ["doc_id_1", "doc_id_2"])
+        star, n_star = run(docs, pairs, 1)
+        prop, n_prop = run(docs, pairs, 100)
+        assert (n_star, n_prop) == (1, 0), trial
+        assert prop == star, (trial, edges)
+
+
 def test_minhash_digests_preprojected_once(spark):
     """ADVICE r11: the 4-evaluations-per-shingle amortization claim
     must be structural, not an optimizer hope — the optimized plan of a
