@@ -21,13 +21,7 @@ from pyspark.sql import functions as F
 
 from polars_ts_spark.operators.statespace import KalmanFilter
 from polars_ts_spark.panel import ID, TARGET, TIME
-
-# driver cap on the synthetic-control panel collect, in ROWS: each
-# collected row is (id string, timestamp, double) ≈ 4 double-widths of
-# driver memory, so 8M rows is the same 256 MB order as
-# clustering._DRIVER_ELEMS_CAP's 32M bare doubles. Driver-side by
-# design — past the cap we refuse with guidance instead of OOMing.
-_DRIVER_ROWS_CAP = 8_000_000
+from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped
 
 
 def _simplex_project(v: np.ndarray) -> np.ndarray:
@@ -72,26 +66,19 @@ def synthetic_control(
 
     The donor matrix (n_series × T) is driver-side BY DESIGN (the
     projected-gradient weight solve is the reference's shape,
-    synthetic_control.py:200-300) — so the collect is size-gated like
-    the clusterers': past the cap the honest move is to refuse with
-    guidance (pre-select a donor pool), not to spill. The 100 TB route
+    synthetic_control.py:200-300) — so the collect is capped and
+    refuses with guidance (pre-select a donor pool). The 100 TB route
     is the sufficient-statistics form (grad = X'X·w − X'y over the pre
     period, two aggregations), which changes the float trajectory and
     is therefore not the oracle-gated default."""
-    src = panel.select(id_col, time_col, target_col).persist()
-    try:
-        n_rows = src.count()
-        if n_rows > _DRIVER_ROWS_CAP:
-            raise ValueError(
-                f"synthetic_control: panel holds {n_rows} observations, over "
-                f"the driver-collect cap ({_DRIVER_ROWS_CAP}). The donor-weight "
-                "solve is driver-side by design; pre-select a donor pool "
-                "(filter the panel to candidate donors) or downsample the "
-                "pre-period before calling."
-            )
-        pdf = src.toPandas()
-    finally:
-        src.unpersist()
+    # each collected row (id string, timestamp, double) costs about
+    # four double-widths of driver memory
+    pdf = collect_capped(
+        panel.select(id_col, time_col, target_col), DRIVER_VALUES_CAP // 4,
+        "synthetic_control",
+        "The donor-weight solve is driver-side by design; pre-select a "
+        "donor pool (filter the panel to candidate donors) or downsample "
+        "the pre-period before calling.")
     pdf[time_col] = pd.to_datetime(pdf[time_col])
     wide = pdf.pivot_table(index=time_col, columns=id_col, values=target_col).sort_index()
     wide = wide.dropna()

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from polars_ts_spark.functions import dist_kernels as K
 from polars_ts_spark.operators.distance import compute_pairwise_distance
 from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values
+from polars_ts_spark.session import DRIVER_VALUES_CAP
 
 
 class _LCG:
@@ -60,40 +61,29 @@ class _LCG:
         return idx[:k]
 
 
-# Driver-side array-panel collects above this many total elements raise
-# instead of OOMing the driver (32M float64 = 256 MB). The iterative
-# clusterers below refine centroids on the driver BY DESIGN (SURVEY
-# §2.16: n_series is the small axis), so past the cap the honest move
-# is to refuse with guidance, not to spill.
-_DRIVER_ELEMS_CAP = 32_000_000
-
-
 def _collect_array_panel(
     df: DataFrame, id_col: str, time_col: str, target_col: str, op_name: str
 ) -> list:
-    """Grouped (id, sorted value array) rows, size-gated BEFORE the
-    driver collect: the sizing scalar job populates the persisted
-    grouped frame (so the gate costs no extra input scan), then collect
-    only under _DRIVER_ELEMS_CAP."""
-    grouped = (
-        df.groupBy(F.col(id_col).cast("string").alias(id_col))
+    """Grouped (id, time-ordered value array) rows for the driver-side
+    clusterers. The cap counts observations, so the long panel is
+    limited to one past it BEFORE grouping: the driver never holds more
+    than that, and the gate needs no sizing job."""
+    rows = (
+        df.limit(DRIVER_VALUES_CAP + 1)
+        .groupBy(F.col(id_col).cast("string").alias(id_col))
         .agg(ordered_values(target_col, time_col).alias("vals"))
-        .persist()
+        .collect()
     )
-    try:
-        total = grouped.agg(F.sum(F.size("vals"))).first()[0] or 0
-        if total > _DRIVER_ELEMS_CAP:
-            raise ValueError(
-                f"{op_name}: panel holds {total} observations, over the "
-                f"driver-collect cap ({_DRIVER_ELEMS_CAP}). The centroid "
-                "refinement stage is driver-side by design; downsample the "
-                "panel first (resample / shorter window), cluster a CLARA-style "
-                "sample of series, or use kmedoids/clara whose distance stage "
-                "is fully distributed."
-            )
-        return grouped.collect()
-    finally:
-        grouped.unpersist()
+    if sum(len(r["vals"]) for r in rows) > DRIVER_VALUES_CAP:
+        raise ValueError(
+            f"{op_name}: panel holds more than {DRIVER_VALUES_CAP} "
+            "observations, over the driver-collect cap. The centroid "
+            "refinement stage is driver-side by design; downsample the "
+            "panel first (resample / shorter window), cluster a CLARA-style "
+            "sample of series, or use kmedoids/clara whose distance stage "
+            "is fully distributed."
+        )
+    return rows
 
 
 # ---------------------------------------------------------------------------

@@ -39,9 +39,8 @@ def _series_matrix(df: DataFrame, id_col: str, time_col: str, target_col: str):
     """(ids, X) with each z-normalized series resampled by truncation/
     zero-pad to the median length — the common fixed-width input the
     reference's `_prepare_data` builds (deep_cluster.py:150-170).
-    Uses the clusterers' size-gated collector (refuse-with-guidance
-    past the driver cap) — the encoder refit is driver-side by design,
-    but the collect must not OOM silently."""
+    Uses the clusterers' capped collector — the encoder refit is
+    driver-side by design, but the collect must not OOM silently."""
     from polars_ts_spark.operators.clustering import _collect_array_panel
 
     rows = sorted(

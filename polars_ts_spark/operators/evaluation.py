@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_ts_spark.panel import ID, TARGET, TIME
+from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped
 
 # ---------------------------------------------------------------------------
 # backtesting
@@ -989,13 +990,6 @@ def kaboudan_metric(
 # EnbPI bootstrap-ensemble intervals (conformal.py:190-416)
 
 
-# driver cap on EnbPI's pooled OOB residual multiset, in rows: the
-# residuals travel as one Arrow-batched double column, but the python
-# list that update() appends to costs ~28 bytes per float, so 8M keeps
-# the resident multiset at the same 256 MB order as the other gates
-_ENBPI_RESID_CAP = 8_000_000
-
-
 def _union_all(frames: list[DataFrame]) -> DataFrame:
     if not frames:
         raise ValueError("_union_all: no frames to union")
@@ -1045,7 +1039,7 @@ class EnbPI:
 
         # the B fits are independent Spark jobs — submit them from a
         # thread pool so the scheduler interleaves their stages instead
-        # of running B sequential barriers (round-5 verdict Wrong #3)
+        # of running B sequential barriers
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=min(self.B, 8)) as pool:
@@ -1059,30 +1053,21 @@ class EnbPI:
         ).agg(F.avg("y_hat").alias("__ens"))
         # the pooled OOB residual list is n_series × holdout scalars —
         # driver-side BY DESIGN (update() appends online observations to
-        # the same multiset), so it is size-gated like the other
-        # driver-by-design stages: past the cap, refuse with guidance
-        # (at that scale the right tool is a mergeable quantile sketch,
-        # which would forfeit the exact finite-sample order statistic)
+        # the same multiset); at larger scale the right tool is a
+        # mergeable quantile sketch, which would forfeit the exact
+        # finite-sample order statistic. The python list costs ~28 B
+        # per float, hence a quarter of the value cap.
         resid = (
             test.join(preds, [self.id_col, self.time_col], "left")
             .select(F.abs(F.col(self.target_col) - F.col("__ens")).alias("__r"))
             .dropna()
-            .persist()
         )
-        try:
-            n = resid.count()
-            if n > _ENBPI_RESID_CAP:
-                raise ValueError(
-                    f"EnbPI: {n} pooled OOB residuals exceed the driver cap "
-                    f"({_ENBPI_RESID_CAP}). Shrink the holdout, fit on a "
-                    "series sample, or switch to a per-series conformal "
-                    "interval (conformal_interval), which stays distributed."
-                )
-            # Arrow transfer (toPandas), not .collect(): Row objects
-            # cost ~100 B each, the Arrow column ~8 B per residual
-            self.residuals = resid.toPandas()["__r"].tolist()
-        finally:
-            resid.unpersist()
+        self.residuals = collect_capped(
+            resid, DRIVER_VALUES_CAP // 4, "EnbPI",
+            "The pooled OOB residuals stay on the driver; past the driver "
+            "cap, shrink the holdout, fit on a series sample, or switch to a "
+            "per-series conformal interval (conformal_interval), which stays "
+            "distributed.")["__r"].tolist()
         return self
 
     def update(self, actual: float, predicted: float) -> None:

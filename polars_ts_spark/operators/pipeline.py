@@ -39,7 +39,7 @@ from polars_ts_spark.functions.numutils import RidgeEstimator
 from polars_ts_spark.operators import features as FT
 from polars_ts_spark.operators.kernel import for_each_series
 from polars_ts_spark.panel import ID, TARGET, TIME, require_columns
-from polars_ts_spark.session import materialize
+from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped, materialize
 
 # ---------------------------------------------------------------------------
 # design-matrix assembly (training side — pure Spark feature plan)
@@ -94,30 +94,15 @@ def _training_frame(
     return out.dropna(), feat_cols
 
 
-# Driver-side design-matrix collects above this many total elements
-# (rows × columns) raise instead of OOMing the driver — the same 256 MB
-# order as clustering._DRIVER_ELEMS_CAP. The built-in ridge and the
-# quantile IRLS fit from distributed sufficient statistics and never
-# hit this; only arbitrary sklearn-protocol estimators (whose fit() is
-# driver numpy by contract) collect, and past the cap the honest move
-# is to refuse with guidance, not to spill.
-_XY_ELEMS_CAP = 32_000_000
-
-
 def _collect_xy(feat_df: DataFrame, feat_cols: list[str], target_col: str,
                 op_name: str = "fit"):
-    n = feat_df.count()
-    elems = n * (len(feat_cols) + 1)
-    if elems > _XY_ELEMS_CAP:
-        raise ValueError(
-            f"{op_name}: design matrix holds {elems} elements "
-            f"({n} rows x {len(feat_cols) + 1} cols), over the driver-collect "
-            f"cap ({_XY_ELEMS_CAP}). Arbitrary sklearn-protocol estimators "
-            "fit on the driver by contract; use the built-in RidgeEstimator "
-            "(distributed sufficient-statistics fit), shrink the feature set, "
-            "or fit on a bounded sample."
-        )
-    pdf = feat_df.select(*feat_cols, target_col).toPandas()
+    pdf = collect_capped(
+        feat_df.select(*feat_cols, target_col),
+        DRIVER_VALUES_CAP // (len(feat_cols) + 1), op_name,
+        "Arbitrary sklearn-protocol estimators fit on the driver by "
+        "contract; use the built-in RidgeEstimator (distributed "
+        "sufficient-statistics fit), shrink the feature set, or fit on a "
+        "bounded sample.")
     X = pdf[feat_cols].to_numpy(dtype=float)
     y = pdf[target_col].to_numpy(dtype=float)
     return X, y

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 
 from polars_ts_spark.functions.numutils import RidgeEstimator
 from polars_ts_spark.panel import ID, TARGET, TIME
+from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped
 
 
 def generate_rocket_kernels(n_kernels: int, seed: int = 42):
@@ -145,26 +146,14 @@ class RocketClassifier:
 
     def _features(self, df: DataFrame) -> pd.DataFrame:
         # the kernel transform is distributed; only the n_series ×
-        # n_feats matrix lands on the driver for the ridge solve —
-        # size-gated like the clusterers' collects (clustering.py
-        # _DRIVER_ELEMS_CAP): past the cap, refuse with guidance
+        # n_feats matrix lands on the driver for the ridge solve
         feats = rocket_features(
-            df, self.n_kernels, self.seed, self.id_col, self.time_col, self.target_col
-        ).persist()
-        try:
-            n_series = feats.count()
-            n_elems = n_series * (2 * self.n_kernels + 1)
-            if n_elems > 32_000_000:
-                raise ValueError(
-                    f"RocketClassifier: feature matrix holds {n_elems} elements "
-                    f"({n_series} series x {2 * self.n_kernels} features), over "
-                    "the driver-collect cap. The one-vs-rest ridge is "
-                    "driver-side by design; reduce n_kernels or classify a "
-                    "sample of series."
-                )
-            return feats.toPandas().set_index(self.id_col).sort_index()
-        finally:
-            feats.unpersist()
+            df, self.n_kernels, self.seed, self.id_col, self.time_col, self.target_col)
+        pdf = collect_capped(
+            feats, DRIVER_VALUES_CAP // (2 * self.n_kernels + 1), "RocketClassifier",
+            "The one-vs-rest ridge is driver-side by design; reduce "
+            "n_kernels or classify a sample of series.")
+        return pdf.set_index(self.id_col).sort_index()
 
     def fit(self, df: DataFrame, labels: DataFrame) -> "RocketClassifier":
         feats = self._features(df)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import threading
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 _DEFAULTS = {
@@ -69,6 +70,28 @@ def materialize(df: DataFrame) -> DataFrame:
     with _owned_lock:
         _owned.add(key)
     return out
+
+
+# Driver-side stages (centroid refinement, the synthetic-control and
+# ridge solves, sklearn-protocol fits, EnbPI's residual multiset) run
+# on the driver by design, because n_series is the small axis. Past this
+# many values (256 MB of float64) the honest move is to refuse with
+# guidance, not to spill or OOM; each gate divides it by the values per
+# collected row.
+DRIVER_VALUES_CAP = 32_000_000
+
+
+def collect_capped(df: DataFrame, max_rows: int, op: str, hint: str) -> pd.DataFrame:
+    """``df`` as pandas, or a ``ValueError`` naming ``op`` and ending
+    with ``hint`` if it has more than ``max_rows`` rows.
+
+    ``limit(max_rows + 1)`` bounds what reaches the driver, so the gate
+    runs no sizing job and needs no persist."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
+        raise ValueError(
+            f"{op}: more than {max_rows} rows, over the driver-collect cap. {hint}")
+    return pdf
 
 
 def free_blocks(spark: SparkSession) -> None:

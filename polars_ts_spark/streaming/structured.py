@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from polars_ts_spark.panel import ID, TARGET, TIME
+from polars_ts_spark.session import collect_capped
 
 # output of each micro-batch per key: current smoothed state
 ETS_OUTPUT_SCHEMA = StructType(
@@ -465,13 +466,12 @@ def streaming_decontaminate(
     strings: 2 M python strs cost ~400-600 MB per executor python
     worker, the hash array 16 MB. BOTH sides hash Spark-side
     (``conv(substring(md5(gram),1,15),16,10)`` — the corpus side as an
-    ``array<bigint>`` expression column built before mapInPandas,
-    round-9 directive #1), so the kernel is pure vectorized numpy
-    (one concatenate + one searchsorted per Arrow batch, zero per-gram
-    Python) and hash parity is by construction, not by reimplementing
-    md5 in the worker. Collision odds at the 2 M cap are ~2e-6 per
-    benchmark, and a collision can only over-flag (never under-flag)
-    a document."""
+    ``array<bigint>`` expression column built before mapInPandas), so
+    the kernel is pure vectorized numpy (one concatenate + one
+    searchsorted per Arrow batch, zero per-gram Python) and hash parity
+    is by construction, not by reimplementing md5 in the worker.
+    Collision odds at the 2 M cap are ~2e-6 per benchmark, and a
+    collision can only over-flag (never under-flag) a document."""
     import numpy as np
 
     from polars_ts_spark.operators.textops import _BENCH_GRAMS_CAP, _gram_frame
@@ -484,21 +484,13 @@ def streaming_decontaminate(
             .alias("gh")
         )
         .distinct()
-        .persist()
     )
-    try:
-        n_grams = bg.count()
-        if n_grams > _BENCH_GRAMS_CAP:
-            raise ValueError(
-                f"streaming_decontaminate: benchmark expands to {n_grams} "
-                f"distinct grams, over the broadcast cap ({_BENCH_GRAMS_CAP}). "
-                "Decontaminate against one benchmark (or shard of it) at a "
-                "time and OR the contaminated flags."
-            )
-        bench = np.sort(
-            bg.toPandas()["gh"].to_numpy(dtype="int64", na_value=0))
-    finally:
-        bg.unpersist()
+    bench = np.sort(collect_capped(
+        bg, _BENCH_GRAMS_CAP, "streaming_decontaminate",
+        "The benchmark expands to more distinct grams than the broadcast "
+        "holds; decontaminate against one benchmark (or shard of it) at a "
+        "time and OR the contaminated flags.",
+    )["gh"].to_numpy(dtype="int64", na_value=0))
     bc = spark.sparkContext.broadcast(bench)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -724,13 +716,13 @@ def streaming_lm_score(
     shuffle, no state store.
 
     Same cap and guidance as the decontaminators — checked on BOTH LM
-    tables (the bigram table AND the unigram/vocabulary table, round-9
-    directive #2: an adversarial reference of many 1-token docs can
-    have a huge vocabulary with few bigrams): a reference whose tables
+    tables (the bigram table AND the unigram/vocabulary table: an
+    adversarial reference of many 1-token docs can have a huge
+    vocabulary with few bigrams): a reference whose tables
     exceed the broadcast cap must move to hashed-bucket features
     (``dsir_importance``'s space) instead. The corpus side hashes its
     bigram/context-unigram arrays Spark-side as expression columns
-    before mapInPandas (round-9 directive #1), so the kernel is pure
+    before mapInPandas, so the kernel is pure
     vectorized numpy — two searchsorted probes + one segment-sum per
     Arrow batch, zero per-gram Python — and hash parity with the
     broadcast tables is by construction. Hash collisions (~2e-6 at
@@ -770,45 +762,32 @@ def streaming_lm_score(
 def _lm_broadcast(reference, text_col, id_col, caller: str):
     """Train the add-alpha bigram LM count tables on ``reference`` and
     broadcast them as sorted int64 hash/count arrays
-    ((bh, bcnt), (uh, ucnt), vocab_size). BOTH tables are cap-gated
-    (round-9 directive #2): an adversarial reference of many 1-token
-    docs has a huge VOCABULARY with few bigrams, so the bigram gate
-    alone would wave it through and the unigram collect would blow
-    the driver."""
+    ((bh, bcnt), (uh, ucnt), vocab_size). BOTH tables are cap-gated:
+    an adversarial reference of many 1-token docs has a huge VOCABULARY
+    with few bigrams, so the bigram gate alone would wave it through and
+    the unigram collect would blow the driver."""
     import numpy as np
 
     from polars_ts_spark.operators.textops import _BENCH_GRAMS_CAP, _gram_frame
 
     spark = reference.sparkSession
 
-    def counts_or_refuse(frame: DataFrame, what: str, guidance: str):
-        f = frame.persist()
-        try:
-            n_rows = f.count()
-            if n_rows > _BENCH_GRAMS_CAP:
-                raise ValueError(
-                    f"{caller}: reference expands to {n_rows} "
-                    f"distinct {what}, over the broadcast cap "
-                    f"({_BENCH_GRAMS_CAP}). {guidance}"
-                )
-            return f.toPandas()
-        finally:
-            f.unpersist()
-
-    bpdf = counts_or_refuse(
+    bpdf = collect_capped(
         _gram_frame(reference, 2, text_col, id_col)
         .groupBy("gram").agg(F.count("*").alias("c"))
         .select(_hash60(F.col("gram")).alias("gh"), "c"),
-        "bigrams",
-        "Use hashed-bucket LM features (dsir_importance's space) for "
+        _BENCH_GRAMS_CAP, caller,
+        "The reference has too many distinct bigrams for the broadcast; "
+        "use hashed-bucket LM features (dsir_importance's space) for "
         "web-scale references.",
     )
-    updf = counts_or_refuse(
+    updf = collect_capped(
         reference.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
         .groupBy("w").agg(F.count("*").alias("c"))
         .select(_hash60(F.col("w")).alias("gh"), "c"),
-        "unigrams (vocabulary)",
-        "A vocabulary this size needs hashed-bucket LM features "
+        _BENCH_GRAMS_CAP, caller,
+        "The reference has too many distinct unigrams (vocabulary) for the "
+        "broadcast; a vocabulary this size needs hashed-bucket LM features "
         "(dsir_importance's space).",
     )
 

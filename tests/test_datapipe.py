@@ -1112,14 +1112,20 @@ def test_decontaminate_cap_refusals(spark, monkeypatch):
     from polars_ts_spark.streaming.structured import streaming_decontaminate
     with pytest.raises(ValueError, match="streaming_decontaminate"):
         streaming_decontaminate(docs, bench)
+    # the cap counts distinct benchmark grams: 5 fit a cap of 5
+    monkeypatch.setattr(textops, "_BENCH_GRAMS_CAP", 5)
+    streaming_decontaminate(docs, bench)
+    monkeypatch.setattr(textops, "_BENCH_GRAMS_CAP", 4)
+    with pytest.raises(ValueError, match="streaming_decontaminate: .*driver-collect cap"):
+        streaming_decontaminate(docs, bench)
 
 
 def test_streaming_lm_score_cap_refusals(spark, monkeypatch):
-    """BOTH broadcast LM tables are cap-gated (round-9 directive #2):
-    a reference of many 1-token docs has a huge VOCABULARY with zero
-    bigrams, so the bigram cap alone would wave it through and the
-    unigram collect would blow the driver. Exercised by shrinking the
-    cap; both refusals fire before any stream is touched."""
+    """BOTH broadcast LM tables are cap-gated: a reference of many
+    1-token docs has a huge VOCABULARY with zero bigrams, so the bigram
+    cap alone would wave it through and the unigram collect would blow
+    the driver. Exercised by shrinking the cap; both refusals fire
+    before any stream is touched."""
     from polars_ts_spark.streaming.structured import streaming_lm_score
 
     monkeypatch.setattr(textops, "_BENCH_GRAMS_CAP", 2)
@@ -1134,6 +1140,9 @@ def test_streaming_lm_score_cap_refusals(spark, monkeypatch):
         [(100, "a b c d e")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="bigrams"):
         streaming_lm_score(docs, ref_bi)
+    # each table's cap counts its distinct rows: 5 unigrams fit a cap of 5
+    monkeypatch.setattr(textops, "_BENCH_GRAMS_CAP", 5)
+    streaming_lm_score(docs, ref_vocab)
 
 
 def test_dsir_resample_planted(spark):

@@ -196,6 +196,22 @@ def test_rocket_classifier_separates(rocket_panel, spark):
     assert sum(d[f"sin{i}"] == "sine" for i in range(3)) >= 2
 
 
+def test_rocket_classifier_driver_gate(rocket_panel, spark, monkeypatch):
+    """The ridge's feature matrix (2·n_kernels features + id per series)
+    is capped in values: 6 series x 11 values fit a cap of 66, and one
+    value less refuses."""
+    labels = spark.createDataFrame(
+        [(f"sin{i}", "sine") for i in range(3)] + [(f"lin{i}", "linear") for i in range(3)],
+        ["unique_id", "label"],
+    )
+    monkeypatch.setattr(rocket, "DRIVER_VALUES_CAP", 6 * 11)
+    clf = rocket.RocketClassifier(n_kernels=5).fit(rocket_panel, labels)
+    assert len(clf.predict(rocket_panel)) == 6
+    monkeypatch.setattr(rocket, "DRIVER_VALUES_CAP", 6 * 11 - 1)
+    with pytest.raises(ValueError, match="RocketClassifier: .*driver-collect cap"):
+        rocket.RocketClassifier(n_kernels=5).fit(rocket_panel, labels)
+
+
 # ---------------------------------------------------------------------------
 # causal
 

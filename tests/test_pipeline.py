@@ -398,19 +398,21 @@ def test_stacking_fit_never_collects_prediction_frame(linear_panel, monkeypatch)
     assert len(m.meta) == 3  # two base weights + intercept
 
 
+class TinyEstimator:  # sklearn protocol, driver fit by contract
+    def fit(self, X, y):
+        self.w = np.linalg.lstsq(np.column_stack([X, np.ones(len(X))]), y, rcond=None)[0]
+        return self
+
+    def predict(self, X):
+        return np.column_stack([X, np.ones(len(X))]) @ self.w
+
+
 def test_sklearn_fallback_design_matrix_gate(linear_panel, monkeypatch):
-    class TinyEstimator:  # sklearn protocol, driver fit by contract
-        def fit(self, X, y):
-            self.w = np.linalg.lstsq(np.column_stack([X, np.ones(len(X))]), y, rcond=None)[0]
-            return self
-
-        def predict(self, X):
-            return np.column_stack([X, np.ones(len(X))]) @ self.w
-
-    monkeypatch.setattr(P, "_XY_ELEMS_CAP", 10)
+    # lag 1 over two 80-day series leaves 2 x 79 rows of (y_lag_1, y)
+    monkeypatch.setattr(P, "DRIVER_VALUES_CAP", 2 * 79 * 2 - 1)
     with pytest.raises(ValueError, match="driver-collect cap"):
         P.RecursiveForecaster(estimator=TinyEstimator(), lags=[1]).fit(linear_panel)
-    monkeypatch.setattr(P, "_XY_ELEMS_CAP", 32_000_000)
+    monkeypatch.setattr(P, "DRIVER_VALUES_CAP", 2 * 79 * 2)
     m = P.RecursiveForecaster(estimator=TinyEstimator(), lags=[1]).fit(linear_panel)
     assert m.feat_cols == ["y_lag_1"]
 
@@ -445,7 +447,7 @@ def test_enbpi_rejects_zero_bootstraps():
 
 
 def test_enbpi_residual_gate(linear_panel, monkeypatch):
-    monkeypatch.setattr(E, "_ENBPI_RESID_CAP", 1)
+    monkeypatch.setattr(E, "DRIVER_VALUES_CAP", 1)
     m = E.EnbPI(lambda: P.RecursiveForecaster(lags=[1]), n_bootstraps=2)
     with pytest.raises(ValueError, match="driver cap"):
         m.fit(linear_panel)
@@ -454,6 +456,35 @@ def test_enbpi_residual_gate(linear_panel, monkeypatch):
 def test_synthetic_control_gate(linear_panel, monkeypatch):
     from polars_ts_spark.operators import causal
 
-    monkeypatch.setattr(causal, "_DRIVER_ROWS_CAP", 1)
+    monkeypatch.setattr(causal, "DRIVER_VALUES_CAP", 1)
     with pytest.raises(ValueError, match="driver-collect cap"):
         causal.synthetic_control(linear_panel, "s1", "2024-03-01")
+
+
+def test_driver_gates_collect_in_one_job_at_their_caps(linear_panel, spark, monkeypatch):
+    """The driver-by-design stages gate their collect with one capped
+    job (``limit(max_rows + 1)``): no persist and no sizing count, at 8M
+    rows for synthetic_control and EnbPI and at 32M values for the
+    Rocket ridge and sklearn-protocol fits."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from polars_ts_spark.operators import causal, rocket
+
+    calls = []
+    for name in ("persist", "count", "limit"):
+        def spy(self, *a, _name=name, _orig=getattr(DataFrame, name), **kw):
+            calls.append((_name, *a))
+            return _orig(self, *a, **kw)
+        monkeypatch.setattr(DataFrame, name, spy)
+    labels = spark.createDataFrame([("s1", "up"), ("s2", "down")], ["unique_id", "label"])
+
+    causal.synthetic_control(linear_panel, "s1", "2024-03-01")
+    E.EnbPI(lambda: P.RecursiveForecaster(lags=[1]), n_bootstraps=2).fit(linear_panel)
+    rocket.RocketClassifier(n_kernels=5).fit(linear_panel, labels)
+    P.RecursiveForecaster(estimator=TinyEstimator(), lags=[1]).fit(linear_panel)
+    assert calls == [
+        ("limit", 8_000_000 + 1),  # synthetic_control: (id, ts, y) rows
+        ("limit", 8_000_000 + 1),  # EnbPI residuals
+        ("limit", 32_000_000 // 11 + 1),  # Rocket: id + 2 x 5 features
+        ("limit", 32_000_000 // 2 + 1),  # (y_lag_1, y)
+    ]

@@ -88,3 +88,23 @@ def test_library_has_no_unused_module_imports():
                     if name not in used:
                         unused.append(f"{path.relative_to(root.parent)}:{node.lineno} {name}")
     assert not unused, unused
+
+
+def test_driver_collect_budget_lives_in_session():
+    """The driver-collect budget is one constant, ``session.DRIVER_VALUES_CAP``;
+    no module keeps a private copy of it or of the caps it replaced."""
+    import pathlib
+    import re
+
+    import polars_ts_spark
+
+    root = pathlib.Path(polars_ts_spark.__file__).parent
+    pattern = re.compile(
+        r"32_000_000|_DRIVER_ELEMS_CAP|_DRIVER_ROWS_CAP|_XY_ELEMS_CAP|_ENBPI_RESID_CAP")
+    hits = [
+        f"{path.relative_to(root.parent)}:{i} {line.strip()}"
+        for path in sorted(root.rglob("*.py")) if path.name != "session.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not hits, hits

@@ -27,7 +27,7 @@ import pytest  # noqa: E402
 
 import bench  # noqa: E402
 from __spark_entry__ import queries  # noqa: E402
-from polars_ts_spark.session import free_blocks, materialize  # noqa: E402
+from polars_ts_spark.session import collect_capped, free_blocks, materialize  # noqa: E402
 from tools.merge_correctness import infer_round, stamp_note  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
@@ -122,3 +122,26 @@ def test_free_blocks_leaves_nothing_a_query_created(spark):
         qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     free_blocks(spark)
     assert not _persistent_ids(spark) - before
+
+
+def test_collect_capped_boundary(spark, monkeypatch):
+    """``max_rows`` rows come back; one more refuses, and the driver
+    received at most ``max_rows + 1`` of the frame's rows."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen = []
+    orig = DataFrame.toPandas
+
+    def spy(self):
+        pdf = orig(self)
+        seen.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(DataFrame, "toPandas", spy)
+    df = spark.range(100)
+    assert sorted(collect_capped(df, 100, "op", "hint")["id"]) == list(range(100))
+    with pytest.raises(ValueError, match=r"^op: more than 99 rows, .*driver-collect cap\. the hint$"):
+        collect_capped(df, 99, "op", "the hint")
+    with pytest.raises(ValueError, match="driver-collect cap"):
+        collect_capped(df, 5, "op", "hint")
+    assert seen == [100, 100, 6]
