@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_ts_spark.operators.kernel import for_each_series
+from polars_ts_spark.operators.kernel import for_each_series, for_series_batches
 from polars_ts_spark.panel import ID, TARGET, TIME, require_columns
 
 _FC_SCHEMA = "unique_id string, ds timestamp, y_hat double"
@@ -313,11 +313,13 @@ def holt_winters_forecast(df: DataFrame, h: int, season_length: int,
     """Triple smoothing; requires >= 2*m points per series
     (exponential_smoothing.py:208-276). Series shorter than 2m fall back
     to Holt (reference raises; we degrade gracefully per series and mark
-    nothing — the pipeline layer validates)."""
+    nothing — the pipeline layer validates). Runs on a bucket of series
+    per task, one Arrow batch per bucket; the recursion itself stays per
+    series."""
     require_columns(df, id_col, time_col, target_col)
     m, additive = season_length, seasonal == "additive"
 
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+    def one(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = pdf[target_col].to_numpy(dtype=float)
         n = len(vals)
         grid = _future_grid(pdf[time_col], h)
@@ -336,7 +338,10 @@ def holt_winters_forecast(df: DataFrame, h: int, season_length: int,
             yhat = np.full(h, vals[0] if n else np.nan)
         return pd.DataFrame({id_col: pdf[id_col].iloc[0], time_col: grid, "y_hat": yhat})
 
-    return for_each_series(df, kern, _FC_SCHEMA, id_col, time_col)
+    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.concat([one(g) for _, g in pdf.groupby(id_col, sort=False)], ignore_index=True)
+
+    return for_series_batches(df, kern, _FC_SCHEMA, id_col, time_col)
 
 
 def fft_forecast(df: DataFrame, h: int, n_harmonics: int = 5,

@@ -57,10 +57,16 @@ def for_series_batches(
     Series are hashed into one bucket per shuffle partition; the kernel
     receives every row of each series in its bucket, sorted by
     (id, time). This is the SIMD-batching bridge: kernels that run a
-    per-timestep recursion (PELT, distance DPs) stack it across the
-    batch's series axis instead of looping series-by-series, amortizing
-    Python/numpy dispatch over the whole bucket — the same trick
-    ``functions/dist_kernels.py`` plays for pair batches.
+    per-timestep recursion stack it across the batch's series axis
+    instead of looping series-by-series, amortizing Python/numpy
+    dispatch over the whole bucket — the same trick
+    ``functions/dist_kernels.py`` plays for pair batches. Stacked
+    recursions: ``pelt``, ``regime_detect``, ``kalman_filter`` and
+    ``kalman_forecast`` (one ``KalmanFilter`` step per time step of a
+    NaN-padded stack); ``batch_embed`` and the deep ``batch_forecast``
+    kernels batch a model call per bucket; ``holt_winters_forecast``
+    keeps its per-series recursion and gains one Arrow batch per
+    bucket instead of one per series.
 
     Same scale properties as ``for_each_series``: one shuffle keyed by
     id-hash, explicit repartition so AQE's coalescing can't strangle the

@@ -1,7 +1,7 @@
 """State-space / Bayesian filtering kernels (SURVEY §2.17):
 Kalman filter + RTS smoother, Unscented KF, particle filter, and the
-panel-level ``kalman_filter`` operator running per series under
-``applyInPandas``.
+panel-level ``kalman_filter`` / ``kalman_forecast`` operators running
+one stacked recursion per bucket of series under ``applyInPandas``.
 
 Reference parity:
 - KalmanFilter / rts smoother / loglik -> polars_ts/bayesian/kalman.py:54-265
@@ -9,15 +9,20 @@ Reference parity:
 - ParticleFilter                     -> polars_ts/bayesian/particle_filter.py:149-360
 - kalman_filter (panel op)           -> polars_ts/bayesian/kalman.py (module API)
 
-Spark mapping: filters are O(n) sequential scalar recursions per
-series — exactly the per-series-kernel shape; one shuffle on
-unique_id, numpy inside the worker (SURVEY §3.3 pattern). Filter
-state is (x, P) per step; the operator emits the filtered/smoothed
-estimates as columns so downstream plans stay relational.
+Spark mapping: filters are O(n) sequential recursions per series.
+The panel operators hash series into buckets (``for_series_batches``:
+one shuffle, numpy inside the worker); each bucket packs its series
+into a NaN-padded (series, time) stack and ``KalmanFilter`` steps the
+whole stack at once, so each time step is one numpy call sequence over
+every series in the bucket rather than one per series. Filter state is
+(x, P) per step; the operators emit the filtered/smoothed estimates as
+columns so downstream plans stay relational.
 
-Scale: each series is independent -> embarrassingly parallel across
-executors; state never leaves the task. Matrix dims are tiny (local
-level/trend models), so cost is O(n_points) per series.
+Scale: series are independent -> embarrassingly parallel across
+buckets; state never leaves the task. Matrix dims are tiny (local
+level/trend models), so the Python/numpy dispatch per step, not the
+arithmetic, is the cost: a bucket pays it once per time step of its
+longest series instead of once per time step of every series.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from polars_ts_spark.operators.kernel import for_each_series
+from polars_ts_spark.operators.kernel import for_series_batches
 from polars_ts_spark.panel import ID, TARGET, TIME
 
 # ---------------------------------------------------------------------------
@@ -63,49 +68,71 @@ class KalmanFilter:
         )
 
     def filter(self, y: np.ndarray):
+        """One series ``(n,)`` -> ``(means (n, k), covs (n, k, k), loglik)``;
+        a NaN-padded ``(series, n)`` stack -> the same with a leading series
+        axis and one loglik per row. A NaN step predicts without updating,
+        so a row's padded tail never touches its observed prefix, and every
+        row comes out bit-identical to filtering that series alone: each
+        numpy call of the recursion runs the same per-row kernel on every
+        row of the stack."""
         y = np.asarray(y, float)
-        n, k = len(y), len(self.x0)
-        xs = np.empty((n, k))
-        Ps = np.empty((n, k, k))
-        x, P = self.x0.copy(), self.P0.copy()
-        ll = 0.0
+        xs, Ps, ll = self._filter(np.atleast_2d(y))
+        return (xs, Ps, ll) if y.ndim == 2 else (xs[0], Ps[0], float(ll[0]))
+
+    def _filter(self, Y: np.ndarray):
+        b, n = Y.shape
+        k = len(self.x0)
+        xs = np.empty((b, n, k))
+        Ps = np.empty((b, n, k, k))
+        x = np.tile(self.x0[:, None], (b, 1, 1))  # column states (b, k, 1)
+        P = np.tile(self.P0, (b, 1, 1))
+        ll = np.zeros(b)
+        eye = np.eye(k)
         for t in range(n):
             # predict
             x = self.F @ x
             P = self.F @ P @ self.F.T + self.Q
-            if not np.isnan(y[t]):
-                # update
-                S = self.H @ P @ self.H.T + self.R
-                K = P @ self.H.T @ np.linalg.inv(S)
-                innov = y[t] - (self.H @ x)[0]
-                x = x + (K[:, 0] * innov)
-                P = (np.eye(k) - K @ self.H) @ P
-                ll += -0.5 * (np.log(2 * np.pi * S[0, 0]) + innov * innov / S[0, 0])
-            xs[t] = x
-            Ps[t] = P
-        return xs, Ps, float(ll)
+            # update every row, keep it only where y is observed
+            S = self.H @ P @ self.H.T + self.R
+            K = P @ self.H.T @ np.linalg.inv(S)
+            innov = Y[:, t] - (self.H @ x)[:, 0, 0]
+            s = S[:, 0, 0]
+            obs = ~np.isnan(Y[:, t])
+            x = np.where(obs[:, None, None], x + K * innov[:, None, None], x)
+            P = np.where(obs[:, None, None], (eye - K @ self.H) @ P, P)
+            ll = np.where(obs, ll + -0.5 * (np.log(2 * np.pi * s) + innov * innov / s), ll)
+            xs[:, t] = x[:, :, 0]
+            Ps[:, t] = P
+        return xs, Ps, ll
 
     def smooth(self, y: np.ndarray):
-        """RTS smoother (kalman.py:150-200)."""
-        xs, Ps, ll = self.filter(y)
-        n, k = xs.shape
+        """RTS smoother (kalman.py:150-200) over one series or a NaN-padded
+        stack, shaped as ``filter``. On a padded tail the filter only
+        predicts, so the smoother's residual there is exactly zero and each
+        row's prefix is smoothed as if alone."""
+        y = np.asarray(y, float)
+        xs, Ps, ll = self._filter(np.atleast_2d(y))
         xs_s = xs.copy()
         Ps_s = Ps.copy()
-        for t in range(n - 2, -1, -1):
-            P_pred = self.F @ Ps[t] @ self.F.T + self.Q
-            C = Ps[t] @ self.F.T @ np.linalg.inv(P_pred)
-            xs_s[t] = xs[t] + C @ (xs_s[t + 1] - self.F @ xs[t])
-            Ps_s[t] = Ps[t] + C @ (Ps_s[t + 1] - P_pred) @ C.T
-        return xs_s, Ps_s, ll
+        for t in range(xs.shape[1] - 2, -1, -1):
+            P_pred = self.F @ Ps[:, t] @ self.F.T + self.Q
+            C = Ps[:, t] @ self.F.T @ np.linalg.inv(P_pred)
+            resid = xs_s[:, t + 1, :, None] - self.F @ xs[:, t, :, None]
+            xs_s[:, t] = xs[:, t] + (C @ resid)[:, :, 0]
+            Ps_s[:, t] = Ps[:, t] + C @ (Ps_s[:, t + 1] - P_pred) @ C.swapaxes(1, 2)
+        return (xs_s, Ps_s, ll) if y.ndim == 2 else (xs_s[0], Ps_s[0], float(ll[0]))
 
     def forecast(self, y: np.ndarray, h: int) -> np.ndarray:
-        xs, Ps, _ = self.filter(y)
-        x = xs[-1]
-        out = np.empty(h)
-        for i in range(h):
-            x = self.F @ x
-            out[i] = (self.H @ x)[0]
-        return out
+        """Mean forecast of the h steps after the last column of ``y``:
+        ``(h,)`` for one series, ``(series, h)`` for a stack. Those steps
+        are the filter run over h more missing values, so a ragged stack
+        padded with h extra NaN columns already holds each row's forecast
+        right after that row's own length (``kalman_forecast`` reads it
+        there)."""
+        y = np.asarray(y, float)
+        ahead = np.full(y.shape[:-1] + (h,), np.nan)
+        xs = self.filter(np.concatenate([y, ahead], axis=-1))[0]
+        return (self.H @ xs[..., y.shape[-1]:, :, None])[..., 0, 0]
 
 
 class UnscentedKalmanFilter:
@@ -145,10 +172,10 @@ class UnscentedKalmanFilter:
         sums) — the DuckDB oracle replays the literal left-to-right
         fold, so a BLAS that pairs terms differently forks the filter
         trajectory by an ulp per step and ~40 accumulated ulps put
-        5% of rounded outputs on a knife edge (observed: the r12
-        environment flipped `ukf_filter` parity that an earlier
-        container had green). An explicit fold pins the order the
-        oracle replays; same math, deterministic across BLAS builds."""
+        5% of rounded outputs on a knife edge (a BLAS build change has
+        flipped `ukf_filter` parity this way). An explicit fold pins
+        the order the oracle replays; same math, deterministic across
+        BLAS builds."""
         acc = w[0] * rows[0]
         for i in range(1, len(w)):
             acc = acc + w[i] * rows[i]
@@ -249,6 +276,28 @@ class ParticleFilter:
 # panel operators
 
 
+def _panel_model(model: str, q: float, r: float) -> KalmanFilter:
+    if model == "local_level":
+        return KalmanFilter.local_level(q, r)
+    if model == "local_trend":
+        return KalmanFilter.local_trend(q, q / 10.0, r)
+    raise ValueError(f"model must be 'local_level' or 'local_trend', got {model!r}")
+
+
+def _stack(ids: pd.Series, y: np.ndarray, extra: int = 0):
+    """Pack a bucket's (id, time)-sorted rows into a NaN-padded
+    (series, time) stack with ``extra`` more NaN columns; also returns
+    each row's (series, step) cell, which scatters results back."""
+    v = ids.to_numpy()
+    starts = np.flatnonzero(np.r_[True, v[1:] != v[:-1]])
+    lens = np.diff(np.r_[starts, len(v)])
+    row = np.repeat(np.arange(len(lens)), lens)
+    step = np.arange(len(v)) - np.repeat(starts, lens)
+    Y = np.full((len(lens), lens.max() + extra), np.nan)
+    Y[row, step] = y
+    return Y, row, step
+
+
 def kalman_filter(
     df: DataFrame,
     model: str = "local_level",
@@ -260,28 +309,25 @@ def kalman_filter(
     target_col: str = TARGET,
 ) -> DataFrame:
     """Per-series Kalman filtered (or RTS-smoothed) level:
-    [id, ds, y, y_kalman]. model: local_level | local_trend."""
+    [id, ds, y, y_kalman]. model: local_level | local_trend. Each bucket
+    of series runs one stacked recursion."""
+    kf = _panel_model(model, q, r)
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
-        kf = (
-            KalmanFilter.local_level(q, r)
-            if model == "local_level"
-            else KalmanFilter.local_trend(q, q / 10.0, r)
-        )
         y = pdf[target_col].to_numpy(dtype=float)
-        xs = kf.smooth(y)[0] if smooth else kf.filter(y)[0]
+        Y, row, step = _stack(pdf[id_col], y)
+        xs = (kf.smooth(Y) if smooth else kf.filter(Y))[0]
         return pd.DataFrame(
             {
                 id_col: pdf[id_col],
                 time_col: pdf[time_col],
                 target_col: y,
-                "y_kalman": xs[:, 0],
+                "y_kalman": xs[row, step, 0],
             }
         )
 
     schema = f"{id_col} string, {time_col} timestamp, {target_col} double, y_kalman double"
-    return for_each_series(df, kern, schema, id_col=id_col)
+    return for_series_batches(df, kern, schema, id_col=id_col, time_col=time_col)
 
 
 def kalman_forecast(
@@ -295,22 +341,24 @@ def kalman_forecast(
     target_col: str = TARGET,
 ) -> DataFrame:
     """h-step state-space forecast per series -> [id, ds, y_hat]
-    (streaming/kalman.py predict surface, batch form)."""
+    (streaming/kalman.py predict surface, batch form). Each bucket runs
+    one filter over its stack padded with h NaN columns; a series'
+    forecast is the predicted level in the h cells after its own end."""
+    kf = _panel_model(model, q, r)
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(time_col)
-        kf = (
-            KalmanFilter.local_level(q, r)
-            if model == "local_level"
-            else KalmanFilter.local_trend(q, q / 10.0, r)
-        )
-        y = pdf[target_col].to_numpy(dtype=float)
+        Y, row, step = _stack(pdf[id_col], pdf[target_col].to_numpy(dtype=float), extra=h)
+        lens = np.bincount(row)
+        xs = kf.filter(Y)[0]
+        y_hat = xs[np.arange(len(lens))[:, None], lens[:, None] + np.arange(h), 0]
         ts = pdf[time_col].to_numpy()
-        freq = np.median(np.diff(ts)) if len(ts) > 1 else np.timedelta64(1, "D")
-        fut = [ts[-1] + (i + 1) * freq for i in range(h)]
-        return pd.DataFrame(
-            {id_col: pdf[id_col].iloc[0], time_col: fut, "y_hat": kf.forecast(y, h)}
-        )
+        fut = []
+        for end, n in zip(np.cumsum(lens), lens):
+            s = ts[end - n:end]
+            freq = np.median(np.diff(s)) if n > 1 else np.timedelta64(1, "D")
+            fut.extend(s[-1] + (i + 1) * freq for i in range(h))
+        ids = pdf[id_col].to_numpy()[step == 0]
+        return pd.DataFrame({id_col: np.repeat(ids, h), time_col: fut, "y_hat": y_hat.ravel()})
 
     schema = f"{id_col} string, {time_col} timestamp, y_hat double"
-    return for_each_series(df, kern, schema, id_col=id_col)
+    return for_series_batches(df, kern, schema, id_col=id_col, time_col=time_col)

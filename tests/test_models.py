@@ -8,6 +8,7 @@ import pytest
 
 from polars_ts_spark.functions import numutils
 from polars_ts_spark.operators import changepoint, statespace, var_model, volatility
+from tests.conftest import make_panel
 
 
 # ---------------------------------------------------------------------------
@@ -94,6 +95,77 @@ def test_kalman_filter_operator(spark):
     out = statespace.kalman_filter(spark.createDataFrame(pdf), model="local_trend", q=0.1).toPandas()
     assert len(out) == 60
     assert abs(out.sort_values("ds")["y_kalman"].iloc[-1] - 59) < 2.0
+
+
+def _ragged_series():
+    """Ragged lengths, a NaN inside a series, a length-1 series and a
+    constant one."""
+    rng = np.random.default_rng(3)
+    walk = np.cumsum(rng.normal(0, 1, 40)) + 10.0
+    gappy = rng.normal(5, 2, 25)
+    gappy[[4, 11]] = np.nan
+    return [walk, gappy, np.array([3.5]), np.full(12, 7.0), rng.normal(0, 3, 31)]
+
+
+@pytest.mark.parametrize("model", ["local_level", "local_trend"])
+def test_kalman_stack_matches_one_series(model):
+    kf = statespace._panel_model(model, 0.05, 0.5)
+    series = _ragged_series()
+    stack = np.full((len(series), max(map(len, series))), np.nan)
+    for i, y in enumerate(series):
+        stack[i, :len(y)] = y
+    xs, Ps, ll = kf.filter(stack)
+    xs_s, Ps_s, ll_s = kf.smooth(stack)
+    for i, y in enumerate(series):
+        n = len(y)
+        x1, P1, l1 = kf.filter(y)
+        assert np.array_equal(xs[i, :n], x1) and np.array_equal(Ps[i, :n], P1)
+        assert ll[i] == l1
+        x1, P1, l1 = kf.smooth(y)
+        assert np.array_equal(xs_s[i, :n], x1) and np.array_equal(Ps_s[i, :n], P1)
+        assert ll_s[i] == l1
+    same_len = np.stack([y[:12] for y in series if len(y) >= 12])
+    fc = kf.forecast(same_len, 5)
+    assert fc.shape == (len(same_len), 5)
+    for i, y in enumerate(same_len):
+        assert np.array_equal(fc[i], kf.forecast(y, 5))
+
+
+def test_kalman_operators_match_class_per_bucket(spark):
+    series = _ragged_series()
+    ids = [f"s{i}" for i in range(len(series))]
+    panel = make_panel(spark, {sid: [None if np.isnan(v) else v for v in y]
+                               for sid, y in zip(ids, series)})
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")  # several series share each bucket
+    try:
+        for model in ("local_level", "local_trend"):
+            kf = statespace._panel_model(model, 0.01, 1.0)
+            for smooth in (False, True):
+                out = statespace.kalman_filter(panel, model=model, smooth=smooth).toPandas()
+                for sid, y in zip(ids, series):
+                    got = out[out["unique_id"] == sid].sort_values("ds")["y_kalman"].to_numpy()
+                    ref = (kf.smooth(y) if smooth else kf.filter(y))[0][:, 0]
+                    assert np.array_equal(got, ref), (model, smooth, sid)
+            fc = statespace.kalman_forecast(panel, h=4, model=model).toPandas()
+            for sid, y in zip(ids, series):
+                g = fc[fc["unique_id"] == sid].sort_values("ds")
+                assert np.array_equal(g["y_hat"].to_numpy(), kf.forecast(y, 4)), (model, sid)
+                last = pd.Timestamp("2024-01-01") + pd.Timedelta(days=len(y) - 1)
+                assert list(g["ds"]) == [last + pd.Timedelta(days=i + 1) for i in range(4)]
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_kalman_operators_reject_unknown_model(spark):
+    panel = spark.createDataFrame(pd.DataFrame({
+        "unique_id": ["a"] * 3, "ds": pd.date_range("2024-01-01", periods=3), "y": [1.0, 2.0, 3.0],
+    }))
+    with pytest.raises(ValueError, match="local_level.*local_trend"):
+        statespace.kalman_filter(panel, model="local_trnd")
+    with pytest.raises(ValueError, match="local_level.*local_trend"):
+        statespace.kalman_forecast(panel, model="level")
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,7 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from polars_ts_spark.session import get_spark  # noqa: E402

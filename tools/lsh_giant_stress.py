@@ -16,12 +16,13 @@ Off-registry by design. Usage: python tools/lsh_giant_stress.py [N ...]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from polars_ts_spark.operators import textops  # noqa: E402
 from polars_ts_spark.session import get_spark  # noqa: E402

@@ -12,11 +12,12 @@ Usage: python tools/profile_query.py <query> [query ...] [--sf DIR]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import queries  # noqa: E402
 from polars_ts_spark.session import get_spark  # noqa: E402

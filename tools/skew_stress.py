@@ -33,7 +33,7 @@ import time
 import pandas as pd
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from polars_ts_spark.operators import textops  # noqa: E402
 from polars_ts_spark.session import get_spark  # noqa: E402
