@@ -266,4 +266,4 @@ def bayesian_anomaly_score(
         f"{id_col} string, {time_col} timestamp, {target_col} double, "
         "anomaly_score double, is_anomaly boolean"
     )
-    return for_each_series(df, kern, schema, id_col=id_col)
+    return for_each_series(df, kern, schema, id_col=id_col, time_col=time_col)

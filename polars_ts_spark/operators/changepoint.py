@@ -107,7 +107,7 @@ def bocpd(
         f"{id_col} string, {time_col} timestamp, {target_col} double, "
         "cp_prob double, is_changepoint boolean"
     )
-    return for_each_series(df, kern, schema, id_col=id_col)
+    return for_each_series(df, kern, schema, id_col=id_col, time_col=time_col)
 
 
 # ---------------------------------------------------------------------------

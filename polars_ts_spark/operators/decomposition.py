@@ -159,4 +159,4 @@ def fourier_decomposition(
         f"{id_col} string, {time_col} timestamp, {target_col} double, "
         "trend double, seasonal double, residual double"
     )
-    return for_each_series(df, kern, schema, id_col=id_col)
+    return for_each_series(df, kern, schema, id_col=id_col, time_col=time_col)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values
+from polars_ts_spark.session import materialize
 
 
 def _series_matrix(df: DataFrame, id_col: str, time_col: str, target_col: str):
@@ -401,14 +402,13 @@ class _TorchCNNClassifier:
             raise RuntimeError("call fit() first")
         spark = df.sparkSession
         id_col, time_col, target_col = self.id_col, self.time_col, self.target_col
-        grouped = (
-            df.groupBy(F.col(id_col).cast("string").alias(id_col))
-            .agg(ordered_values(target_col, time_col).alias("vals"))
-            .persist()
-        )
         # fixed input width = median series length (the _series_matrix
-        # contract) — a scalar job that also populates the cache
-        L = int(grouped.agg(F.expr("percentile(size(vals), 0.5)")).first()[0] or 1)
+        # contract), observed while the grouped series are materialized
+        grouped, row = materialize(
+            df.groupBy(F.col(id_col).cast("string").alias(id_col))
+            .agg(ordered_values(target_col, time_col).alias("vals")),
+            F.expr("percentile(size(vals), 0.5)").alias("L"))
+        L = int(row["L"] or 1)
         bc = spark.sparkContext.broadcast(
             (self._model, list(self._classes), self._mu, self._sd))
 
@@ -442,9 +442,6 @@ class _TorchCNNClassifier:
                     "label_pred": [classes[int(p)] for p in pred],
                 })
 
-        # grouped stays persisted: the returned plan is lazy and reads it
-        # when the caller executes (Spark evicts LRU-style if memory is
-        # needed — an eager unpersist here would just force a recompute)
         return grouped.mapInPandas(infer, schema=f"{id_col} string, label_pred string")
 
 

@@ -750,8 +750,9 @@ def ivf_ann_topk(
     # (and persisting!) the full table would thrash at 100 TB, while
     # orderBy+limit plans as TakeOrderedAndProject — per-partition
     # top-K + a driver merge of K-row heads, no full sort. The sample
-    # (<= train_cap rows) is what gets cached for the n_iter passes;
-    # the cache is dropped before the (lazy) search plan is built.
+    # (<= train_cap rows) is what gets cached for the n_iter passes.
+    # persist, not materialize: the sample is freed before the (lazy)
+    # search plan is returned, not held until the query ends.
     cached = (
         base.select(id_col, "__q")
         .orderBy(F.expr(spark_hash60(f"cast({id_col} as string)")), F.col(id_col))

@@ -7,7 +7,6 @@ Reference parity:
 - StackingForecaster        -> polars_ts/ensemble/stacking.py:16-128
 - conformal_interval        -> polars_ts/probabilistic/conformal.py:21-130
 - reconcile                 -> polars_ts/reconciliation.py:41-590
-- crps                      -> polars_ts/metrics/forecast.py:212-279
 - calibration_table         -> polars_ts/calibration.py:9-150
 - bias_correct              -> polars_ts/bias.py:53-143
 - permutation_importance    -> polars_ts/importance.py:11-90
@@ -31,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_ts_spark.panel import ID, TARGET, TIME
-from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped
+from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped, materialize
 
 # ---------------------------------------------------------------------------
 # backtesting
@@ -338,8 +337,8 @@ def reconcile_bottom_up(
     anc_rows = _ancestor_pairs(hierarchy)
     edges = spark.createDataFrame(anc_rows, [id_col, "__anc"])
     # bottom feeds BOTH the passthrough and the ancestor aggregation —
-    # cache it or the upstream forecast plan runs once per consumer
-    bottom = bottom.cache()
+    # materialize it or the upstream forecast plan runs once per consumer
+    bottom = materialize(bottom)
     parents = (
         bottom.join(F.broadcast(edges), id_col)
         .groupBy(F.col("__anc").alias(id_col), time_col)
@@ -565,7 +564,11 @@ def reconcile_middle_out(
     All three directions are joins/group-bys on the forecast frame —
     the hierarchy edge tables are broadcast, nothing is collected."""
     spark = middle_forecast.sparkSession
-    middle = {r[0] for r in middle_forecast.select(id_col).distinct().collect()}
+    # the forecast feeds all three directions; its checkpoint observes
+    # the middle-level ids the hierarchy walk needs
+    middle_forecast, row = materialize(
+        middle_forecast, F.collect_set(id_col).alias("ids"))
+    middle = set(row["ids"])
     # bottom -> its middle ancestor; middle -> each ancestor above it
     bottoms = set(hierarchy) - set(hierarchy.values())
     down_rows, up_rows = [], []
@@ -591,7 +594,6 @@ def reconcile_middle_out(
         .groupBy(id_col, "__mid")
         .agg(F.mean(F.col(target_col) / F.col("__tot")).alias("__share"))
     )
-    middle_forecast = middle_forecast.cache()
     mid_fc = middle_forecast.select(
         F.col(id_col).alias("__mid"), time_col, F.col(value_col).alias("__mfc")
     )
@@ -614,21 +616,6 @@ def reconcile_middle_out(
 
 # ---------------------------------------------------------------------------
 # probabilistic & bias metrics
-
-
-def crps(
-    df: DataFrame,
-    quantile_cols: dict[float, str],
-    target_col: str = TARGET,
-) -> DataFrame:
-    """CRPS as the mean pinball loss over quantiles
-    (metrics/forecast.py:212-279). Returns a 1-row frame [crps]."""
-    terms = []
-    for q, c in quantile_cols.items():
-        err = F.col(target_col) - F.col(f"`{c}`")
-        terms.append(F.when(err >= 0, q * err).otherwise((q - 1) * err))
-    pinball = sum(terms) / len(terms)
-    return df.agg(F.mean(pinball).alias("crps"))
 
 
 def calibration_table(
@@ -835,8 +822,9 @@ def permutation_importance(
                 .reset_index(drop=True))
 
     spark = df.sparkSession
-    ridx = _global_row_index(base, order_cols).persist()
-    n = ridx.count()  # populates the cache; sizing scalar
+    ridx, row = materialize(_global_row_index(base, order_cols),
+                            F.count(F.lit(1)).alias("n"))
+    n = row["n"]
     fit_src = ridx if n <= fit_cap else ridx.withColumn(
         "__s", F.md5(F.concat_ws(":", F.lit(f"{seed}:fit"), F.col("__rn")))
     ).orderBy("__s").limit(fit_cap).drop("__s")
@@ -897,7 +885,6 @@ def permutation_importance(
         for rrow in joined.mapInPandas(score_perm, "i int, r int, s double, c long")
         .groupBy("i", "r").agg((F.sum("s") / F.sum("c")).alias("mae")).collect()
     }
-    ridx.unpersist()
     rows = []
     for i, c in enumerate(feats):
         degr = [maes[(i, r)] - base_mae for r in range(n_repeats)]

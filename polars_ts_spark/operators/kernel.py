@@ -19,15 +19,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from polars_ts_spark.panel import ID, TIME, require_columns
+from polars_ts_spark.panel import require_columns
 
 
 def for_each_series(
     df: DataFrame,
     kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema: T.StructType | str,
-    id_col: str = ID,
-    time_col: str = TIME,
+    id_col: str,
+    time_col: str,
 ) -> DataFrame:
     """Apply ``kernel(pdf) -> pdf`` to each series, time-sorted."""
     require_columns(df, id_col, time_col)
@@ -49,8 +49,8 @@ def for_series_batches(
     df: DataFrame,
     kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema: T.StructType | str,
-    id_col: str = ID,
-    time_col: str = TIME,
+    id_col: str,
+    time_col: str,
 ) -> DataFrame:
     """Apply ``kernel(pdf) -> pdf`` to a BATCH of whole series at once.
 

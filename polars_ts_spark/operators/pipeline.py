@@ -561,19 +561,12 @@ class QuantileRegressor:
         cols = [F.col(c).cast("double") for c in feat_cols]
         t = F.col(self.target_col).cast("double")
         qs = self.quantiles
-        # persist the narrow feature frame BEFORE the start-stats job so
-        # that job populates the cache and the IRLS pass (one-task or
-        # distributed) reads cached rows instead of re-running the
-        # lag-window pipeline (r13; the pairwise sizing pattern — never
-        # two feature computations for one fit)
-        sel_df = feat_df.select(*feat_cols, self.target_col).persist()
-        # scale decade + normal-equation start, one FULL-WIDTH pass (the
-        # start solve is quantile-independent: all quantiles share it).
-        # Its exact row count also sizes the iteration layout below —
-        # the old optimizer-stats estimate overshot by ~50x on a
-        # post-window projection (no column stats), caching a 20 MB
-        # frame in 15 partitions and paying a 2-stage 16-task job per
-        # iteration for data one task covers.
+        # scale decade + normal-equation start (quantile-independent: all
+        # quantiles share it), observed by the checkpoint of the narrow
+        # feature frame, so the lag-window pipeline runs once per fit.
+        # Its exact row count also sizes the iteration layout below: an
+        # optimizer-stats estimate overshot by ~50x on a post-window
+        # projection (no column stats).
         exprs = [F.avg(F.abs(t)).alias("__m"), F.count(F.lit(1)).alias("__n"),
                  F.sum(t).alias("__ys")]
         for i in range(d):
@@ -581,9 +574,8 @@ class QuantileRegressor:
                 exprs.append(F.sum(cols[i] * cols[j]).alias(f"xx_{i}_{j}"))
             exprs.append(F.sum(cols[i]).alias(f"xs_{i}"))
             exprs.append(F.sum(cols[i] * t).alias(f"xy_{i}"))
-        row = sel_df.agg(*exprs).collect()[0]
+        sel_df, row = materialize(feat_df.select(*feat_cols, self.target_col), *exprs)
         if not row["__n"]:
-            sel_df.unpersist()
             raise ValueError(
                 "QuantileRegressor: no training rows after lag "
                 "alignment — every series is shorter than max(lags)"
@@ -600,9 +592,8 @@ class QuantileRegressor:
         A[d, d] = float(row["__n"])
         b[d] = row["__ys"]
         w0 = np.linalg.solve(A + 1e-8 * np.eye(d + 1), b)
-        # EXACT size-adaptive layout (guide §2: derive partitioning from
-        # input size): (d+2) doubles per row, ~64 MB per partition,
-        # capped at the core count.
+        # partitioning derived from the exact input size: (d+2) doubles
+        # per row, ~64 MB per partition, capped at the core count
         n_cache_parts = max(1, min(
             feat_df.sparkSession.sparkContext.defaultParallelism,
             (int(row["__n"]) * (d + 2) * 8 + 64 * 1024 * 1024 - 1)
@@ -611,63 +602,56 @@ class QuantileRegressor:
             # SINGLE-PARTITION FAST PATH: the whole IRLS loop runs
             # inside ONE python task over the one-partition frame —
             # 2 Spark jobs total instead of 1 + n_irls driver-blocking
-            # aggregations, and (measured r12) ~0.35 s of Catalyst
-            # planning PER ITERATION for the 27-aggregate expression
-            # tree disappears with them. Larger inputs keep the
-            # distributed per-iteration sufficient-stats path below —
-            # the knob is the data size, not the cluster. Summation
-            # order (numpy pairwise vs JVM partial-agg) differs only in
-            # ulps, which the residual quantization grid is DESIGNED to
-            # absorb (see the trajectory-stability note above); the
-            # sf0.001/sf0.01 oracles re-verify it.
-            try:
-                return self._irls_one_task(sel_df, feat_cols, w0, s)
-            finally:
-                sel_df.unpersist()
-        feat_df = sel_df.repartition(n_cache_parts).persist()
-        try:
-            weights = {q: w0 for q in qs}
-            for _ in range(self.n_irls):
-                exprs = []
-                for qi, q in enumerate(qs):
-                    wq = weights[q]
-                    # association matches the oracle's
-                    # (f0·w0 + f1·w1 + ...) + intercept
-                    pred = cols[0] * float(wq[0])
-                    for i in range(1, d):
-                        pred = pred + cols[i] * float(wq[i])
-                    pred = pred + F.lit(float(wq[d]))
-                    r = t - pred
-                    rc = F.floor(r / s * 1000 + 0.5) / 1000 * s
-                    wt = (
-                        F.when(rc >= 0, F.lit(float(q))).otherwise(F.lit(float(1 - q)))
-                        / F.greatest(F.abs(rc), F.lit(1e-3 * s))
-                    )
-                    for i in range(d):
-                        for j in range(i, d):
-                            exprs.append(F.sum(cols[i] * (wt * cols[j])).alias(f"q{qi}_xx_{i}_{j}"))
-                        exprs.append(F.sum(cols[i] * wt).alias(f"q{qi}_xs_{i}"))
-                        exprs.append(F.sum(cols[i] * (wt * t)).alias(f"q{qi}_xy_{i}"))
-                    exprs.append(F.sum(wt).alias(f"q{qi}_ws"))
-                    exprs.append(F.sum(wt * t).alias(f"q{qi}_wy"))
-                row = feat_df.agg(*exprs).collect()[0]
-                new_w = {}
-                for qi, q in enumerate(qs):
-                    A = np.zeros((d + 1, d + 1))
-                    b = np.zeros(d + 1)
-                    for i in range(d):
-                        for j in range(i, d):
-                            A[i, j] = A[j, i] = row[f"q{qi}_xx_{i}_{j}"]
-                        A[i, d] = A[d, i] = row[f"q{qi}_xs_{i}"]
-                        b[i] = row[f"q{qi}_xy_{i}"]
-                    A[d, d] = row[f"q{qi}_ws"]
-                    b[d] = row[f"q{qi}_wy"]
-                    new_w[q] = np.linalg.solve(A + 1e-8 * np.eye(d + 1), b)
-                weights = new_w
-            return weights
-        finally:
-            feat_df.unpersist()
-            sel_df.unpersist()
+            # aggregations, and ~0.35 s of Catalyst planning PER
+            # ITERATION for the 27-aggregate expression tree disappears
+            # with them. Larger inputs keep the distributed
+            # per-iteration sufficient-stats path below — the knob is
+            # the data size, not the cluster. Summation order (numpy
+            # pairwise vs JVM partial-agg) differs only in ulps, which
+            # the residual quantization grid is DESIGNED to absorb (see
+            # the trajectory-stability note above); the sf0.001/sf0.01
+            # oracles re-verify it.
+            return self._irls_one_task(sel_df, feat_cols, w0, s)
+        feat_df = materialize(sel_df.repartition(n_cache_parts))
+        weights = {q: w0 for q in qs}
+        for _ in range(self.n_irls):
+            exprs = []
+            for qi, q in enumerate(qs):
+                wq = weights[q]
+                # association matches the oracle's
+                # (f0·w0 + f1·w1 + ...) + intercept
+                pred = cols[0] * float(wq[0])
+                for i in range(1, d):
+                    pred = pred + cols[i] * float(wq[i])
+                pred = pred + F.lit(float(wq[d]))
+                r = t - pred
+                rc = F.floor(r / s * 1000 + 0.5) / 1000 * s
+                wt = (
+                    F.when(rc >= 0, F.lit(float(q))).otherwise(F.lit(float(1 - q)))
+                    / F.greatest(F.abs(rc), F.lit(1e-3 * s))
+                )
+                for i in range(d):
+                    for j in range(i, d):
+                        exprs.append(F.sum(cols[i] * (wt * cols[j])).alias(f"q{qi}_xx_{i}_{j}"))
+                    exprs.append(F.sum(cols[i] * wt).alias(f"q{qi}_xs_{i}"))
+                    exprs.append(F.sum(cols[i] * (wt * t)).alias(f"q{qi}_xy_{i}"))
+                exprs.append(F.sum(wt).alias(f"q{qi}_ws"))
+                exprs.append(F.sum(wt * t).alias(f"q{qi}_wy"))
+            row = feat_df.agg(*exprs).collect()[0]
+            new_w = {}
+            for qi, q in enumerate(qs):
+                A = np.zeros((d + 1, d + 1))
+                b = np.zeros(d + 1)
+                for i in range(d):
+                    for j in range(i, d):
+                        A[i, j] = A[j, i] = row[f"q{qi}_xx_{i}_{j}"]
+                    A[i, d] = A[d, i] = row[f"q{qi}_xs_{i}"]
+                    b[i] = row[f"q{qi}_xy_{i}"]
+                A[d, d] = row[f"q{qi}_ws"]
+                b[d] = row[f"q{qi}_wy"]
+                new_w[q] = np.linalg.solve(A + 1e-8 * np.eye(d + 1), b)
+            weights = new_w
+        return weights
 
     def _irls_one_task(
         self, sel_df: DataFrame, feat_cols: list[str], w0: np.ndarray, s: float

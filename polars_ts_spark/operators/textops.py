@@ -658,16 +658,15 @@ def _cc_label_prop(df, edges, id_col):
     labels = df.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("cluster_id")
     )
-    changed = 0
+    changed = False
     for _ in range(_LP_ROUNDS):
         neigh_min = (
             edges.join(labels, edges["dst"] == labels["node"])
             .groupBy("src")
             .agg(F.min("cluster_id").alias("__nb_min"))
         )
-        # fold the convergence flag into the update row (one checkpointed
-        # job per round; the old separate new-vs-old join re-shuffled the
-        # full label set just to detect a change)
+        # the convergence flag rides in the update row and is observed
+        # by the round's checkpoint: one job per round
         new_labels = (
             labels.join(neigh_min, labels["node"] == neigh_min["src"], "left")
             .select(
@@ -679,12 +678,12 @@ def _cc_label_prop(df, edges, id_col):
                  < F.col("cluster_id")).alias("__chg"),
             )
         )
-        new_labels = materialize(new_labels)
-        changed = new_labels.where(F.col("__chg")).limit(1).count()
+        new_labels, row = materialize(new_labels, F.max("__chg").alias("chg"))
+        changed = bool(row["chg"])  # None: no nodes
         labels = new_labels.drop("__chg")
-        if changed == 0:
+        if not changed:
             break
-    return labels, changed == 0
+    return labels, not changed
 
 
 def _cc_star(df, edges, id_col):
@@ -694,15 +693,18 @@ def _cc_star(df, edges, id_col):
     component radius roughly HALVES per round: O(log^2 n) rounds worst
     case vs O(diameter) for label propagation. Each round is two
     groupBy+join passes over the linear-size edge list; lineage is cut
-    once per round.
+    once per round, and each cut observes the edge count.
 
     ``edges`` must be normalized: src > dst, distinct, no self loops.
+    It is checkpointed here, since the first round reads it 4 times.
     Returns [node, cluster_id] for every node of ``df`` (isolated
     nodes label themselves). Raises if ``_STAR_ROUNDS`` rounds exhaust
     before the star fixpoint: an unconverged edge set can hold
     multiple outgoing edges per node, so the final node->root left
     join would fan out and emit conflicting cluster_ids."""
-    n_edges = edges.count()
+    n_rows = F.count(F.lit(1)).alias("n")
+    edges, row = materialize(edges, n_rows)
+    n_edges = row["n"]
     fixpoint = n_edges == 0
     for _ in range(_STAR_ROUNDS):
         if n_edges == 0:
@@ -733,8 +735,8 @@ def _cc_star(df, edges, id_col):
                 g2.select(F.col("src"), F.col("__m").alias("dst")))
             .distinct()
         )
-        ss = materialize(ss)
-        new_n = ss.count()
+        ss, row = materialize(ss, n_rows)
+        new_n = row["n"]
         if new_n == n_edges and ss.exceptAll(edges).limit(1).count() == 0:
             edges = ss
             fixpoint = True
@@ -791,10 +793,9 @@ def dedup_clusters(
     labels, converged = _cc_label_prop(df, sym, id_col)
     if not converged:
         # star's normal form (src > dst, distinct, which drops self
-        # loops), restricted to edges between ids of df as propagation
-        # is; checkpointed because star's first round reads it 4 times
+        # loops), restricted to edges between ids of df as propagation is
         ids = df.select(F.col(id_col).alias("__id"))
-        labels = _cc_star(df, materialize(
+        labels = _cc_star(df, (
             sym.where(F.col("src") > F.col("dst")).distinct()
             .join(ids, F.col("src") == F.col("__id"), "left_semi")
             .join(ids, F.col("dst") == F.col("__id"), "left_semi")

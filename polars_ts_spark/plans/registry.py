@@ -3433,6 +3433,7 @@ def q_ukf(spark, sf_dir):
     return for_each_series(
         _monthly_panel_exact(spark, sf_dir), kern,
         "unique_id string, ds timestamp, y double, ukf_level double",
+        "unique_id", "ds",
     )
 
 
@@ -3545,6 +3546,7 @@ def q_particle(spark, sf_dir):
     return for_each_series(
         _monthly_panel_exact(spark, sf_dir), kern,
         "unique_id string, ds timestamp, y double, pf_level double",
+        "unique_id", "ds",
     )
 
 
@@ -3646,6 +3648,7 @@ def q_enkf(spark, sf_dir):
     return for_each_series(
         _monthly_panel_exact(spark, sf_dir), kern,
         "unique_id string, ds timestamp, y double, enkf_level double",
+        "unique_id", "ds",
     )
 
 
@@ -4509,14 +4512,16 @@ def _register_mint():
     @register("reconcile_permbu", _permbu_oracle())  # covariance-weighted MinTrace
     def q_reconcile_permbu(spark, sf_dir):
         from polars_ts_spark.operators import evaluation
-        panel = _node_panel(spark, sf_dir).cache()
         # restrict the hierarchy to DATA-COVERED nations: dataless dim
         # nodes would zero out whole covariance rows, making W singular
         # (pinv then silently drops directions — ill-conditioned and
         # engine-dependent); over observed nodes the shrunk W is PD and
         # pinv == inv to machine precision, which the oracle's
-        # Gauss-Jordan reproduces
-        present = {r[0] for r in panel.select("unique_id").distinct().collect()}
+        # Gauss-Jordan reproduces. The panel feeds the forecast and the
+        # residuals; its checkpoint observes the covered nodes.
+        panel, row = materialize(_node_panel(spark, sf_dir),
+                                 F.collect_set("unique_id").alias("ids"))
+        present = set(row["ids"])
         h = {c: p for c, p in _dim_hierarchy().items() if c in present}
         fc = baselines.naive_forecast(panel, h=7)
         w = Window.partitionBy("unique_id").orderBy("ds")
@@ -4566,15 +4571,13 @@ scored AS (SELECT p.*, q.q10, q.q50, q.q90 FROM panel p JOIN q USING (unique_id)
     """,
 )
 def q_crps(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
     panel = supplier_daily_panel(spark, sf_dir)
     q = panel.groupBy("unique_id").agg(
-        F.expr("percentile(y, 0.1)").alias("q10"),
-        F.expr("percentile(y, 0.5)").alias("q50"),
-        F.expr("percentile(y, 0.9)").alias("q90"),
+        F.expr("percentile(y, 0.1)").alias("q_0.1"),
+        F.expr("percentile(y, 0.5)").alias("q_0.5"),
+        F.expr("percentile(y, 0.9)").alias("q_0.9"),
     )
-    scored = panel.join(q, "unique_id")
-    return evaluation.crps(scored, {0.1: "q10", 0.5: "q50", 0.9: "q90"})
+    return metrics.crps(panel.join(q, "unique_id"))
 
 
 @register(

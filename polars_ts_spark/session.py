@@ -13,7 +13,7 @@ import os
 import threading
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
@@ -52,9 +52,15 @@ _owned: set[tuple[str, int]] = set()
 _owned_lock = threading.Lock()
 
 
-def materialize(df: DataFrame) -> DataFrame:
+def materialize(df: DataFrame, *aggs: Column) -> DataFrame | tuple[DataFrame, Row]:
     """Compute ``df`` once into executor blocks so several consumers
-    read the result instead of each re-running its lineage.
+    read the result instead of each re-running its lineage. This is the
+    library's one way to hold a frame that is read more than once.
+
+    With ``aggs`` (aggregate columns, each aliased), the same job also
+    computes them over every row it writes and the call returns
+    ``(frame, row)``: a scalar the caller needs about the frame (a row
+    count, a convergence flag, start statistics) costs no second job.
 
     An eager ``localCheckpoint``: the blocks are stored WITHOUT
     replication and the lineage that could recompute them is cut, so
@@ -63,13 +69,14 @@ def materialize(df: DataFrame) -> DataFrame:
     clusters; a deployment with executor churn would swap this body for
     ``persist(MEMORY_AND_DISK)`` plus a reliable ``checkpoint()``.
     Values are unchanged: only where the bytes are read from moves.
-    ``free_blocks`` releases the checkpoint."""
-    out = df.localCheckpoint(eager=True)
+    The blocks are held until ``free_blocks``."""
+    obs = Observation()
+    out = (df.observe(obs, *aggs) if aggs else df).localCheckpoint(eager=True)
     key = (df.sparkSession.sparkContext.applicationId,
            out._jdf.queryExecution().logical().rdd().id())
     with _owned_lock:
         _owned.add(key)
-    return out
+    return (out, Row(**obs.get)) if aggs else out
 
 
 # Driver-side stages (centroid refinement, the synthetic-control and
@@ -95,11 +102,10 @@ def collect_capped(df: DataFrame, max_rows: int, op: str, hint: str) -> pd.DataF
 
 
 def free_blocks(spark: SparkSession) -> None:
-    """Drop the session's cached frames and every checkpoint
-    ``materialize`` took that is still held; persistent RDDs the
-    library did not create are left alone. Call it between queries,
-    when no frame still reads a materialized block."""
-    spark.catalog.clearCache()
+    """Release every checkpoint ``materialize`` took in this session
+    and still holds. Nothing else is touched: a frame the caller cached
+    or persisted survives. Call it between queries, when no frame still
+    reads a materialized block."""
     app = spark.sparkContext.applicationId
     with _owned_lock:
         ids = [rdd_id for owner, rdd_id in _owned if owner == app]

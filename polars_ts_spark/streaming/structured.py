@@ -349,6 +349,8 @@ def streaming_lsh_dedup_handler(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # persist, not materialize: a stream has no query end to free at,
+        # so each micro-batch frees its own keys before it returns
         keys = textops.minhash_band_keys(
             batch_df, num_hashes, bands, shingle_n, text_col, id_col
         ).persist()

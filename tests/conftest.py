@@ -19,14 +19,13 @@ def spark():
 
 @pytest.fixture(autouse=True, scope="module")
 def _drop_persistent_blocks(request):
-    """Free cached frames and the library's materialized blocks after
-    each test module.
+    """Free the library's materialized blocks after each test module.
 
-    clearCache() does not release ``materialize`` checkpoints; left to
-    the async ContextCleaner, a full-suite run was measured holding 37
-    persistent RDDs (~170 MB) mid-run — steady heap pressure on a
-    memory-tight CI container. Module scope: no test depends on another
-    module's cached state."""
+    The library holds reused frames only as ``materialize`` checkpoints;
+    left to the async ContextCleaner, a full-suite run was measured
+    holding 37 persistent RDDs (~170 MB) mid-run — steady heap pressure
+    on a memory-tight CI container. Module scope: no test depends on
+    another module's materialized state."""
     yield
     from pyspark.sql import SparkSession
 

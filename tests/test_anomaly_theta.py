@@ -4,7 +4,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from polars_ts_spark.operators import anomaly, features, theta
+from polars_ts_spark.operators import anomaly, changepoint, decomposition, features, theta
 from polars_ts_spark.operators import evaluation as E
 
 
@@ -41,6 +41,33 @@ def test_bayesian_anomaly_scores_spike(spark):
     out = anomaly.bayesian_anomaly_score(df).toPandas().sort_values("ds").reset_index(drop=True)
     assert out["anomaly_score"].idxmax() == 150
     assert bool(out["is_anomaly"].iloc[150])
+
+
+@pytest.mark.parametrize("op", [
+    lambda df, **kw: changepoint.bocpd(df, hazard_rate=50.0, **kw),
+    lambda df, **kw: anomaly.bayesian_anomaly_score(df, **kw),
+    lambda df, **kw: decomposition.fourier_decomposition(df, period=7, n_harmonics=2, **kw),
+], ids=["bocpd", "bayesian_anomaly_score", "fourier_decomposition"])
+def test_per_series_ops_honor_renamed_columns(spark, op):
+    """Run on a panel whose id and time columns are named ``sid`` and
+    ``when``, each op gives its default-name output. The rows arrive
+    out of time order, so a kernel that sorted or read the wrong column
+    would differ."""
+    rng = np.random.default_rng(5)
+    ts = pd.date_range("2024-01-01", periods=60, freq="D")
+    pdf = pd.concat(
+        pd.DataFrame({"unique_id": sid, "ds": ts,
+                      "y": rng.normal(0, 1, 60) + np.where(np.arange(60) > 30, 4.0, 0.0)})
+        for sid in ("a", "b")).sample(frac=1.0, random_state=3)
+    df = spark.createDataFrame(pdf)
+    renamed = df.withColumnRenamed("unique_id", "sid").withColumnRenamed("ds", "when")
+    want = op(df).toPandas()
+    got = (op(renamed, id_col="sid", time_col="when").toPandas()
+           .rename(columns={"sid": "unique_id", "when": "ds"}))
+    key = ["unique_id", "ds"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True))
 
 
 def test_theta_extrapolates_trend(spark):

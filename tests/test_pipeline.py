@@ -8,6 +8,7 @@ import pytest
 
 from polars_ts_spark.operators import evaluation as E
 from polars_ts_spark.operators import pipeline as P
+from polars_ts_spark.operators.metrics import crps
 
 
 @pytest.fixture(scope="module")
@@ -303,7 +304,7 @@ def test_crps_and_calibration(spark):
     })
     df = spark.createDataFrame(pdf)
     qc = {0.1: "q_0.1", 0.5: "q_0.5", 0.9: "q_0.9"}
-    c = E.crps(df, qc).collect()[0]["crps"]
+    c = crps(df).collect()[0]["crps"]
     assert 0 < c < 1
     cal = E.calibration_table(df, qc).toPandas()
     for _, r in cal.iterrows():
@@ -376,15 +377,14 @@ def test_quantile_regressor_fit_never_collects_design_matrix(linear_panel, monke
     lags, quantiles = (1,), (0.1, 0.9)
     m = P.QuantileRegressor(quantiles=quantiles, lags=lags, n_irls=3).fit(linear_panel)
     # every driver transfer is MODEL-sized, never data-sized, and there
-    # are exactly TWO of them (ADVICE r12 — assert the transfer
-    # structure, not just a hardcoded max): the 1-row start-stats agg,
-    # then the (n_lags+1) x n_quantiles weight rows from the one-task
-    # IRLS job. A data-sized collect would either add a transfer or
-    # blow the derived bound.
+    # is exactly ONE collect (assert the transfer structure, not just a
+    # hardcoded max): the (n_lags+1) x n_quantiles weight rows from the
+    # one-task IRLS job. The start stats arrive as the observed row of
+    # the feature checkpoint, not a collect. A data-sized collect would
+    # either add a transfer or blow the derived bound.
     bound = (len(lags) + 1) * len(quantiles)
-    assert len(sizes) == 2
-    assert sizes[0] == 1  # the start-stats row
-    assert sizes[1] <= bound  # the weight rows
+    assert len(sizes) == 1
+    assert sizes[0] <= bound  # the weight rows
     assert set(m.weights) == set(quantiles)
 
 

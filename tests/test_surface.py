@@ -108,3 +108,28 @@ def test_driver_collect_budget_lives_in_session():
         if pattern.search(line)
     ]
     assert not hits, hits
+
+
+def test_frames_are_reused_only_through_materialize():
+    """``session.materialize`` is the one way the library holds a frame
+    it reads more than once. One ``.persist(`` is allowed in each of the
+    two modules whose blocks must be freed before the function returns,
+    and ``localCheckpoint(`` only inside ``session.py``."""
+    import collections
+    import pathlib
+    import re
+
+    import polars_ts_spark
+
+    root = pathlib.Path(polars_ts_spark.__file__).parent
+    allowed = collections.Counter(["streaming/structured.py", "operators/embedsim.py"])
+    persists, checkpoints = collections.Counter(), []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if re.search(r"\.(persist|cache)\(", line):
+                persists[rel] += 1
+            if "localCheckpoint(" in line and rel != "session.py":
+                checkpoints.append(f"{rel}:{i}")
+    assert not persists - allowed, persists
+    assert not checkpoints, checkpoints

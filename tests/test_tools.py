@@ -3,14 +3,15 @@ artifacts these tools write (`CORRECTNESS_LOCAL.json`,
 `BENCH_LOCAL.json`), so their provenance/merge logic is part of the
 evidence chain and gets the same test treatment as operators.
 
-- merge_correctness note stamping: VERDICT r11 "what's wrong" #1 — the
-  r11 merge carried the r10 note verbatim, misstating which entries
-  were fresh. Every merge must rewrite the note.
+- merge_correctness note stamping: a merge that carried an earlier
+  note verbatim misstated which entries were fresh, so every merge
+  must rewrite the note.
 - bench query loop: a query that raises must still leave a parseable
   partial contract line, and must not stop the caller's session.
 - block ownership: ``session.free_blocks`` (the bench's between-query
   cleanup) frees every block the library materialized and nothing the
-  caller persisted.
+  caller persisted or cached; ``materialize`` with aggregates observes
+  them in its own job.
 """
 
 from __future__ import annotations
@@ -109,6 +110,99 @@ def test_free_blocks_frees_only_what_materialize_took(spark):
     user.unpersist()
     assert not ids & left
     assert user.id() in left
+
+
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_observes_aggregates_in_the_same_jobs(spark):
+    """The observed row costs no job beyond the plain checkpoint, and
+    equals the same aggregates run as a separate query."""
+    from pyspark.sql import functions as F
+
+    df = (spark.range(2000).withColumn("g", F.col("id") % 13)
+          .groupBy("g").agg(F.sum("id").alias("s"), (F.max("id") > 1000).alias("b")))
+    aggs = [F.count(F.lit(1)).alias("n"), F.sum("s").alias("total"),
+            F.max("b").alias("any_b"), F.expr("percentile(s, 0.5)").alias("med"),
+            F.collect_set("g").alias("gs")]
+    _, plain = _jobs_in_group(spark, "materialize-plain", lambda: materialize(df))
+    (out, row), observed = _jobs_in_group(
+        spark, "materialize-observed", lambda: materialize(df, *aggs))
+    want = df.agg(*aggs).first().asDict()
+    got = row.asDict()
+    assert observed == plain
+    assert sorted(got.pop("gs")) == sorted(want.pop("gs")) == list(range(13))
+    assert got == want
+    assert out.count() == 13
+    free_blocks(spark)
+
+
+def test_free_blocks_keeps_a_user_cached_frame(spark):
+    """free_blocks releases only what materialize took: a frame the
+    caller cached stays in the cache manager with its blocks."""
+    user = spark.range(50).selectExpr("id * 2 AS v").cache()
+    try:
+        assert user.count() == 50
+        materialize(spark.range(5))
+        free_blocks(spark)
+        assert _cache_manager(spark).lookupCachedData(user._jdf).isDefined()
+        assert user.storageLevel.useMemory
+    finally:
+        user.unpersist()
+
+
+def test_library_ops_leave_no_blocks_after_free_blocks(spark):
+    """Operators that reuse a frame go through ``materialize``: they put
+    nothing in the cache manager, and free_blocks leaves no persistent
+    RDD behind them."""
+    import operator
+
+    import numpy as np
+    import pandas as pd
+
+    from polars_ts_spark.functions.numutils import RidgeEstimator
+    from polars_ts_spark.operators import baselines, deep_cluster, evaluation, features
+    from polars_ts_spark.operators.pipeline import QuantileRegressor
+
+    ts = pd.date_range("2024-01-01", periods=40, freq="D")
+    panel = spark.createDataFrame(pd.concat(
+        pd.DataFrame({"unique_id": sid, "ds": ts,
+                      "y": 10.0 + k * np.sin(np.arange(40) / 3.0)})
+        for k, sid in enumerate(["b1", "b2", "b3"], 1)))
+    hierarchy = {"b1": "m1", "b2": "m1", "b3": "m2", "m1": "root", "m2": "root"}
+    fc = baselines.naive_forecast(panel, h=3)
+    mid_fc = baselines.naive_forecast(
+        panel.where("unique_id != 'b3'").groupBy("ds").sum("y")
+        .selectExpr("'m1' AS unique_id", "ds", "`sum(y)` AS y"), h=3)
+    clf = deep_cluster.ResNetClassifier()
+    # a picklable plain callable stands in for the trained net
+    clf._model = operator.itemgetter((slice(None), slice(0, 2)))
+    clf._classes = ["c0", "c1"]
+
+    before = _persistent_ids(spark)
+    evaluation.reconcile_bottom_up(fc, {"b1": "m1", "b2": "m1"}).collect()
+    evaluation.reconcile_middle_out(mid_fc, panel, hierarchy).collect()
+    evaluation.permutation_importance(
+        features.lag_features(panel, [1, 2]), ["y_lag_1", "y_lag_2"], "y",
+        RidgeEstimator(), order_cols=["unique_id", "ds"])
+    assert len(clf.predict(panel).collect()) == 3
+    QuantileRegressor(lags=(1, 2), n_irls=2).fit(panel)
+    assert _cache_manager(spark).isEmpty()
+    free_blocks(spark)
+    assert _cache_manager(spark).isEmpty()
+    assert not _persistent_ids(spark) - before
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_DIR), reason=f"test data dir {SF_DIR} absent")

@@ -1,6 +1,6 @@
 """Measure materialized-block residency across a query sequence.
 
-``spark.catalog.clearCache()`` does not free the checkpoints
+The library holds a reused frame only as a checkpoint that
 ``polars_ts_spark.session.materialize`` takes. This tool runs the
 materialization-heavy queries back-to-back and logs, after each sample,
 (a) the persistent-RDD count and storage memory LEFT BEHIND by the
@@ -27,6 +27,8 @@ QUERIES = [
     "corpus_curation_v2", "corpus_curation_v2_sampled", "corpus_curation_v3",
     "ngram_lm_score", "perplexity_buckets_sampled", "dsir_resample",
     "decontaminate_sharded", "conformal_interval", "stacking_forecast",
+    "quantile_regression", "permutation_importance", "reconcile_bottom_up",
+    "reconcile_middle_out", "reconcile_permbu",
 ]
 
 
@@ -57,7 +59,6 @@ def main() -> int:
         for s in range(2):
             qs[name](spark, sf_dir).write.format(
                 "noop").mode("overwrite").save()
-            spark.catalog.clearCache()
             n0, m0, d0 = _storage(spark)
             if cleanup:
                 free_blocks(spark)
