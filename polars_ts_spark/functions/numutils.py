@@ -10,6 +10,9 @@ Recipes continued fractions for gammainc/betainc).
 
 from __future__ import annotations
 
+import hashlib
+import math
+
 import numpy as np
 
 # ---------------------------------------------------------------------------
@@ -75,8 +78,6 @@ def hash_u32(key: str) -> int:
     """First 8 md5 hex digits as an unsigned 32-bit int — the engine-
     replicable draw primitive (DuckDB replays it as
     ('0x' || substr(md5(k),1,8))::BIGINT)."""
-    import hashlib
-
     return int.from_bytes(hashlib.md5(key.encode()).digest()[:4], "big")
 
 
@@ -103,9 +104,6 @@ def hash_normals(seed: int, tag: str, n: int) -> np.ndarray:
     digits). Scalar math.* is kept deliberately: numpy's SIMD log/cos
     differ from libm by ulps, which could flip quantized accept/reject
     branches the oracles replay."""
-    import hashlib
-    import math
-
     md5, fb, pre = hashlib.md5, int.from_bytes, f"{seed}:{tag}:".encode()
     out = np.empty(n)
     for i in range(1, n + 1):

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from polars_ts_spark.functions.numutils import _lgamma
+from polars_ts_spark.functions.numutils import _lgamma, hash_u32, hash_unit
 from polars_ts_spark.operators.kernel import for_each_series
 from polars_ts_spark.panel import ID, TARGET, TIME
 
@@ -38,17 +38,6 @@ def _avg_path(n: int) -> float:
         return 0.0
     h = math.log(n - 1) + 0.5772156649
     return 2.0 * h - 2.0 * (n - 1) / n
-
-
-def _hash_u32(key: str) -> int:
-    """First 8 md5 hex digits as an unsigned 32-bit int — the engine-
-    replicable draw primitive (numutils.hash_normals contract; DuckDB
-    replays it as ('0x' || substr(md5(k),1,8))::BIGINT)."""
-    return int.from_bytes(hashlib.md5(key.encode()).digest()[:4], "big")
-
-
-def _hash_unit(key: str) -> float:
-    return (_hash_u32(key) + 0.5) / 4294967296.0
 
 
 class IsolationForest:
@@ -64,8 +53,8 @@ class IsolationForest:
     - tree t's sample: row indices ranked by md5(f"{seed}:s:{t}:{i}"),
       first ss.
     - node feature: ok = sorted feature idx with span > 0;
-      feat = ok[_hash_u32(f"{seed}:f:{t}:{node}") % len(ok)].
-    - threshold: lo + _hash_unit(f"{seed}:t:{t}:{node}") * (hi - lo).
+      feat = ok[hash_u32(f"{seed}:f:{t}:{node}") % len(ok)].
+    - threshold: lo + hash_unit(f"{seed}:t:{t}:{node}") * (hi - lo).
     - children: x[feat] < thr -> 2*node, else 2*node+1 (heap ids).
 
     Trees are stored as dense per-tree arrays (feat/thr/leaf-add
@@ -108,8 +97,8 @@ class IsolationForest:
                     if len(ok) == 0:
                         self.leaf_add[t, node] = _avg_path(len(rows))
                         continue
-                    f = int(ok[_hash_u32(f"{seed}:f:{t}:{node}") % len(ok)])
-                    thr = lo[f] + _hash_unit(f"{seed}:t:{t}:{node}") * (hi[f] - lo[f])
+                    f = int(ok[hash_u32(f"{seed}:f:{t}:{node}") % len(ok)])
+                    thr = lo[f] + hash_unit(f"{seed}:t:{t}:{node}") * (hi[f] - lo[f])
                     self.feat[t, node] = f
                     self.thr[t, node] = thr
                     mask = sub[:, f] < thr

@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from polars_ts_spark.functions.numutils import hash_normals, hash_unit
 from polars_ts_spark.operators.kernel import for_each_series
 from polars_ts_spark.operators.statespace import KalmanFilter
 from polars_ts_spark.panel import ID, TARGET, TIME
@@ -175,10 +176,7 @@ def mcmc_forecast_series(
     the DuckDB oracle replays the chain draw-for-draw. The only
     branch, the MH accept test, compares log(u) against an O(1)-spread
     statistic — a cross-engine ulp flip needs a ~1e-12 coincidence."""
-    import hashlib
     import math
-
-    from polars_ts_spark.functions.numutils import hash_normals
 
     y = np.asarray(y, float)
     n = len(y)
@@ -206,8 +204,7 @@ def mcmc_forecast_series(
         z = hash_normals(seed, f"n:{i}", 3)
         pa, pb, pls = a_ + float(z[0]) * sc[0], b_ + float(z[1]) * sc[1], ls_ + float(z[2]) * sc[2]
         ll_p = loglik(pa, pb, pls)
-        hu = hashlib.md5(f"{seed}:u:{i}:a".encode()).hexdigest()
-        u = (int(hu[:8], 16) + 0.5) / 4294967296.0
+        u = hash_unit(f"{seed}:u:{i}:a")
         if math.log(u) < ll_p - ll:
             a_, b_, ls_, ll = pa, pb, pls, ll_p
         if i > burn:
@@ -263,10 +260,7 @@ def bayesian_ets_series(y: np.ndarray, h: int, n_samples: int = 1000, seed: int 
     """MH over Holt (alpha, beta) with md5-stream draws and plain-float
     sequential recursions — the DuckDB oracle replays the chain (the
     Holt SSE is a struct fold there) and the numpy-_lerp quantiles."""
-    import hashlib
     import math
-
-    from polars_ts_spark.functions.numutils import hash_normals
 
     y = np.asarray(y, float)
 
@@ -296,8 +290,7 @@ def bayesian_ets_series(y: np.ndarray, h: int, n_samples: int = 1000, seed: int 
         z = hash_normals(seed, f"n:{i}", 2)
         pa, pb = ta + 0.05 * float(z[0]), tb + 0.05 * float(z[1])
         s_p = sse(pa, pb)
-        hu = hashlib.md5(f"{seed}:u:{i}:a".encode()).hexdigest()
-        u = (int(hu[:8], 16) + 0.5) / 4294967296.0
+        u = hash_unit(f"{seed}:u:{i}:a")
         # Gaussian likelihood with sigma^2 profile: p ∝ sse^(-n/2)
         if s_p < np.inf and math.log(u) < -0.5 * n * (math.log(s_p) - math.log(cur)):
             ta, tb, cur = pa, pb, s_p
@@ -401,8 +394,6 @@ class EnsembleKalmanFilter:
         self.f, self.q, self.r, self.n_ens, self.seed = f, q, r, n_ens, seed
 
     def filter(self, y: np.ndarray, x0: float = 0.0) -> np.ndarray:
-        from polars_ts_spark.functions.numutils import hash_normals
-
         sq, sr = np.sqrt(self.q), np.sqrt(self.r)
         n = self.n_ens
         ens = x0 + hash_normals(self.seed, "i", n)

@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_ts_spark.functions.numutils import hash_u32
+
 
 # ---------------------------------------------------------------------------
 # shared expressions
@@ -237,9 +239,7 @@ WHERE round(({dot}) / (a.nrm * b.nrm), 6) >= {threshold}
 def _plane_value(plane: int, dim: int) -> float:
     """Deterministic pseudo-random hyperplane coefficient in [-1, 1],
     derived from md5 — reproducible anywhere, no RNG."""
-    import hashlib
-
-    h = int(hashlib.md5(f"plane_{plane}_{dim}".encode()).hexdigest()[:8], 16)
+    h = hash_u32(f"plane_{plane}_{dim}")
     return (h % 2000001) / 1000000.0 - 1.0
 
 

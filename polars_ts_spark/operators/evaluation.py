@@ -7,8 +7,7 @@ Reference parity:
 - StackingForecaster        -> polars_ts/ensemble/stacking.py:16-128
 - conformal_interval        -> polars_ts/probabilistic/conformal.py:21-130
 - reconcile                 -> polars_ts/reconciliation.py:41-590
-- calibration_table         -> polars_ts/calibration.py:9-150
-- bias_correct              -> polars_ts/bias.py:53-143
+- pit_histogram / reliability_diagram -> polars_ts/calibration.py:60-150
 - permutation_importance    -> polars_ts/importance.py:11-90
 
 Spark notes: folds are time-filters over the SAME lazy panel (no data
@@ -29,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_ts_spark.functions.numutils import hash_u32
+from polars_ts_spark.operators.metrics import calibration_table
 from polars_ts_spark.panel import ID, TARGET, TIME
 from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped, materialize
 
@@ -618,28 +619,6 @@ def reconcile_middle_out(
 # probabilistic & bias metrics
 
 
-def calibration_table(
-    df: DataFrame,
-    quantile_cols: dict[float, str],
-    target_col: str = TARGET,
-) -> DataFrame:
-    """Observed vs expected quantile coverage (calibration.py:9-80):
-    [quantile, expected, observed]."""
-    rows = []
-    for q, c in sorted(quantile_cols.items()):
-        rows.append(
-            df.agg(
-                F.lit(float(q)).alias("quantile"),
-                F.lit(float(q)).alias("expected"),
-                F.mean((F.col(target_col) <= F.col(f"`{c}`")).cast("double")).alias("observed"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
-
-
 def pit_histogram(
     df: DataFrame,
     quantile_cols: dict[float, str],
@@ -674,36 +653,13 @@ def reliability_diagram(
     """Reliability diagram table (calibration.py:60-90): nominal
     quantile level vs observed coverage, plus the calibration gap.
     Output [quantile, expected, observed, gap]."""
-    rows = []
-    for q, c in sorted(quantile_cols.items()):
-        rows.append(
-            df.agg(
-                F.lit(float(q)).alias("quantile"),
-                F.lit(float(q)).alias("expected"),
-                F.mean((F.col(target_col) <= F.col(f"`{c}`")).cast("double")).alias("observed"),
-            ).withColumn("gap", F.col("observed") - F.col("expected"))
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
-
-
-def bias_correct(
-    df: DataFrame,
-    method: str = "mean",
-    id_col: str = ID,
-    target_col: str = TARGET,
-) -> DataFrame:
-    """Subtract per-series mean (or median) error from y_hat
-    (bias.py:53-143). Input needs [id, y, y_hat]; adds y_hat_corrected."""
-    err = (F.col("y_hat") - F.col(target_col))
-    agg = F.mean(err) if method == "mean" else F.expr(f"percentile(y_hat - {target_col}, 0.5)")
-    corr = df.groupBy(id_col).agg(agg.alias("__bias"))
-    return (
-        df.join(corr, id_col, "left")
-        .withColumn("y_hat_corrected", F.col("y_hat") - F.col("__bias"))
-        .drop("__bias")
+    cal = calibration_table(
+        df.select(target_col, *[F.col(f"`{c}`").alias(f"q_{q}") for q, c in quantile_cols.items()]),
+        actual=target_col,
+    )
+    return cal.select(
+        F.col("nominal").alias("quantile"), F.col("nominal").alias("expected"), "observed",
+        (F.col("observed") - F.col("nominal")).alias("gap"),
     )
 
 
@@ -712,10 +668,7 @@ def _hash_choice(seed: int, tag: str, n: int) -> list[int]:
     from range(n): the d-th draw is the first 8 md5 hex digits of
     '{seed}:{tag}:{d}' (d 1-based) taken mod n — '0x..'::BIGINT % n in
     SQL reproduces it exactly."""
-    import hashlib
-
-    return [int(hashlib.md5(f"{seed}:{tag}:{d}".encode()).hexdigest()[:8], 16) % n
-            for d in range(1, n + 1)]
+    return [hash_u32(f"{seed}:{tag}:{d}") % n for d in range(1, n + 1)]
 
 
 def _hash_permutation(seed: int, tag: str, n: int) -> np.ndarray:

@@ -20,6 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from polars_ts_spark.functions.numutils import hash_u32
 from polars_ts_spark.panel import ID, TARGET, TIME
 
 # ---------------------------------------------------------------------------
@@ -281,9 +282,7 @@ def embed_weight(i: int, j: int, d_in: int) -> float:
     from md5 — the same no-RNG construction as the LSH hyperplanes
     (embedsim._plane_value), so an exact SQL oracle can embed the
     weights as literals."""
-    import hashlib
-
-    h = int(hashlib.md5(f"visw_{i}_{j}".encode()).hexdigest()[:8], 16)
+    h = hash_u32(f"visw_{i}_{j}")
     return ((h % 2000001) / 1000000.0 - 1.0) / float(np.sqrt(d_in))
 
 

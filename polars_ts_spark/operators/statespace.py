@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from polars_ts_spark.functions.numutils import hash_normals, hash_unit
 from polars_ts_spark.operators.kernel import for_series_batches
 from polars_ts_spark.panel import ID, TARGET, TIME
 
@@ -221,18 +222,14 @@ class _HashRng:
         self._u = 0
 
     def normal(self, loc=0.0, scale=1.0, size=None):
-        from polars_ts_spark.functions.numutils import hash_normals
-
         z = hash_normals(self.seed, f"n:{self._n}", int(size))
         self._n += 1
         return loc + scale * z
 
     def random(self):
-        import hashlib
-
-        h = hashlib.md5(f"{self.seed}:u:{self._u}:a".encode()).hexdigest()
+        u = hash_unit(f"{self.seed}:u:{self._u}:a")
         self._u += 1
-        return (int(h[:8], 16) + 0.5) / 4294967296.0
+        return u
 
 
 class ParticleFilter:

@@ -2807,7 +2807,7 @@ def corpus_curation_v2_oracle(
     num_hashes: int = 16, bands: int = 4, threshold: float = 0.5,
     shingle_n: int = 3,
     reference_sql: str | None = None,
-    use_sampled_cutoffs: bool = True,
+    use_sampled_cutoffs: bool = False,
     sample_mod: int = 4,
     line_filter: dict | None = None,
 ) -> str:

@@ -9,7 +9,7 @@ Spark plan and the SQL.
 The shared panel derivation is FIXTURES.md F9: supplier daily revenue from
 lineitem.
 
-What an oracle here PROVES (ADVICE r4): the oracles fall into two
+What an oracle here PROVES: the oracles fall into two
 classes, and the claim each supports differs.
 
 - INDEPENDENT REFERENCES — the SQL states the answer's definition
@@ -34,14 +34,58 @@ classes, and the claim each supports differs.
 
 from __future__ import annotations
 
+import datetime as _dt
+import math
+import os
+import tempfile
 from collections.abc import Callable
+from functools import partial
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from polars_ts_spark.operators import baselines, decomposition, features, metrics, preprocessing
+from polars_ts_spark.agents import TimeSeriesScientist
+from polars_ts_spark.agents.anomaly import consensus_anomalies
+from polars_ts_spark.agents.energy import EnergyGridOrchestrator, GridHierarchy
+from polars_ts_spark.agents.healthcare import clinical_escalation
+from polars_ts_spark.agents.iiot import machine_health_panel
+from polars_ts_spark.agents.marl import portfolio_allocation_panel
+from polars_ts_spark.agents.supply_chain import SupplyChainOrchestrator
+from polars_ts_spark.functions.numutils import RidgeEstimator
+from polars_ts_spark.namespace import pts
+from polars_ts_spark.operators import (
+    anomaly, arima, baselines, bayesian, causal, changepoint, clustering, decomposition,
+    diagnostics, embedsim, ets, evaluation, features, imaging, metrics, multimodal,
+    preprocessing, rocket, statespace, textops, theta, trend, var_model, volatility,
+)
+from polars_ts_spark.operators import pelt as pelt_mod
+from polars_ts_spark.operators.bayesian import EnsembleKalmanFilter
+from polars_ts_spark.operators.cv import expanding_window_cv, rolling_origin_cv, sliding_window_cv
+from polars_ts_spark.operators.deep import RidgeWindowForecaster
+from polars_ts_spark.operators.deep_cluster import DECClusterer
+from polars_ts_spark.operators.distance import (
+    compute_pairwise_distance, compute_pairwise_distance_multi,
+)
+from polars_ts_spark.operators.evaluation import mint_projection
+from polars_ts_spark.operators.features import _easter
+from polars_ts_spark.operators.imaging import embed_weight
+from polars_ts_spark.operators.kernel import for_each_series
+from polars_ts_spark.operators.pipeline import (
+    DirectForecaster, ForecastPipeline, GlobalForecaster, QuantileRegressor,
+    RecursiveForecaster,
+)
+from polars_ts_spark.operators.rocket import _minirocket_patterns, generate_rocket_kernels
+from polars_ts_spark.operators.statespace import ParticleFilter, UnscentedKalmanFilter
+from polars_ts_spark.operators.volatility import _GRID_A0, _GRID_B0, _SUM_CAP
 from polars_ts_spark.session import materialize
-from polars_ts_spark.sources.datasets import supplier_daily_panel, user_event_panel
+from polars_ts_spark.sources import adapters, bucketing
+from polars_ts_spark.sources.datasets import load_table, supplier_daily_panel, user_event_panel
+from polars_ts_spark.streaming.online import StreamingGlobalForecaster
+from polars_ts_spark.streaming.structured import (
+    streaming_ets_update, streaming_kalman_update, tumbling_event_aggregate,
+)
 
 # DuckDB CTE shared by most oracles — must mirror supplier_daily_panel().
 PANEL_CTE = """
@@ -352,6 +396,19 @@ def q_cusum(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # baseline forecasters
 
+
+def _freq_cte(src: str, name: str = "freq") -> str:
+    """CTE ``name`` (unique_id, freq_s): each series' median step in
+    seconds over ``src``, one day for a single-row series — the step the
+    forecasters add to the last timestamp."""
+    return f"""{name} AS (
+        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
+        FROM (SELECT unique_id,
+                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
+              FROM {src}) GROUP BY 1
+    )"""
+
+
 _FREQ_CTE = """
 freq AS (
     SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
@@ -368,6 +425,26 @@ g AS (
 ),
 steps AS (SELECT UNNEST(generate_series(1, {h})) AS step)
 """
+
+
+def _ridge_normal_aggs(d: int, target: str = "yt") -> tuple[list[str], list[str]]:
+    """SQL aggregates of the ridge normal equations over features
+    ``f0 .. f{d-1}`` plus an intercept column ``d``: the upper triangle
+    ``a_i_j`` (1e-6 added to each feature diagonal, none to the
+    intercept) and the right-hand side ``b_i_0`` against ``target``;
+    plus the projection that mirrors the triangle into the full square
+    for _gauss_solve_ctes."""
+    aggs = []
+    for i in range(d):
+        for j in range(i, d):
+            ridge = " + 1e-6" if i == j else ""
+            aggs.append(f"SUM(f{i} * f{j}){ridge} AS a_{i}_{j}")
+        aggs.append(f"SUM(f{i}) AS a_{i}_{d}")
+        aggs.append(f"SUM(f{i} * {target}) AS b_{i}_0")
+    aggs.append(f"CAST(COUNT(*) AS DOUBLE) AS a_{d}_{d}")
+    aggs.append(f"SUM({target}) AS b_{d}_0")
+    mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}" for i in range(d + 1) for j in range(i + 1, d + 1)]
+    return aggs, mirror
 
 
 def _gauss_solve_ctes(k: int, nrhs: int, src: str, prefix: str = "",
@@ -415,8 +492,6 @@ def _gauss_solve_ctes(k: int, nrhs: int, src: str, prefix: str = "",
         prev = f"{prefix}bs{i}"
     ctes.append(f"{prefix}wsol AS (SELECT * FROM {prev})")
     return ",\n    ".join(ctes)
-
-
 
 
 @register(
@@ -511,8 +586,8 @@ def _eval_frame(spark, sf_dir):
     """,
 )
 def q_forecast_metrics(spark, sf_dir):
-    # ONE aggregation pass for all four metrics (r12): the old
-    # join-of-four-aggregations shape paid 4 scans + 4 aggregation
+    # ONE aggregation pass for all four metrics: a join of four
+    # aggregations would pay 4 scans + 4 aggregation
     # exchanges + 3 join exchanges for identical values — the fused
     # aggregate uses the exact same expression builders, so every
     # column is bit-identical (see metrics.point_metrics).
@@ -590,7 +665,7 @@ def q_bias_detect(spark, sf_dir):
 def q_seasonal_strength_features(spark, sf_dir):
     out = decomposition.seasonal_decompose_features(supplier_daily_panel(spark, sf_dir), freq=7)
     # round both engines to 6dp: the 1 - Var/Var ratio amplifies float
-    # summation-order drift across partitions (round-1 hash mismatch)
+    # summation-order drift across partitions
     return out.select(
         "unique_id",
         F.round("trend_strength", 6).alias("trend_strength"),
@@ -626,7 +701,6 @@ def q_seasonal_strength_features(spark, sf_dir):
 def q_ses_forecast(spark, sf_dir):
     # SES level closed form: l = sum_k a(1-a)^(n-1-k) y_k + (1-a)^(n-1) y_0
     # — same recursion as src/ets.rs:13-19, SQL-checkable
-    from polars_ts_spark.operators import ets
     return ets.ses_forecast(supplier_daily_panel(spark, sf_dir), h=7, alpha=0.3)
 
 
@@ -682,7 +756,6 @@ def _holt_oracle(h: int, a: float, b: float) -> str:
 
 @register("holt_forecast", _holt_oracle(7, 0.3, 0.1))
 def q_holt_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import ets
     return ets.holt_forecast(supplier_daily_panel(spark, sf_dir), h=7)
 
 
@@ -751,7 +824,6 @@ def _holt_winters_oracle(h: int, m: int, a: float, b: float, g_: float) -> str:
 
 @register("holt_winters_forecast", _holt_winters_oracle(14, 7, 0.3, 0.1, 0.1))
 def q_holt_winters_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import ets
     out = ets.holt_winters_forecast(supplier_daily_panel(spark, sf_dir), h=14, season_length=7)
     return out.select("unique_id", "ds", F.round("y_hat", 4).alias("y_hat"))
 
@@ -827,7 +899,6 @@ def _fft_oracle(h: int, n_harm: int) -> str:
 
 @register("fft_forecast", _fft_oracle(7, 3))
 def q_fft_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import ets
     out = ets.fft_forecast(supplier_daily_panel(spark, sf_dir), h=7, n_harmonics=3)
     return out.select("unique_id", "ds", F.round("y_hat", 4).alias("y_hat"))
 
@@ -857,7 +928,6 @@ idx AS (
     """,
 )
 def q_mann_kendall(spark, sf_dir):
-    from polars_ts_spark.operators import trend
     monthly = preprocessing.resample(supplier_daily_panel(spark, sf_dir), "1mo", "mean")
     return trend.mann_kendall(monthly)
 
@@ -873,7 +943,6 @@ def q_mann_kendall(spark, sf_dir):
     """,
 )
 def q_sens_slope(spark, sf_dir):
-    from polars_ts_spark.operators import trend
     monthly = preprocessing.resample(supplier_daily_panel(spark, sf_dir), "1mo", "mean")
     return trend.sens_slope(monthly)
 
@@ -902,7 +971,6 @@ _ACF_LAG_SQL = """
     """ + " UNION ALL ".join(_ACF_LAG_SQL.format(k=k) for k in range(4)),
 )
 def q_acf(spark, sf_dir):
-    from polars_ts_spark.operators import diagnostics
     return diagnostics.acf(supplier_daily_panel(spark, sf_dir), max_lags=3)
 
 
@@ -963,7 +1031,6 @@ def _pacf_oracle(m: int) -> str:
 
 @register("pacf", _pacf_oracle(5))
 def q_pacf(spark, sf_dir):
-    from polars_ts_spark.operators import diagnostics
     out = diagnostics.pacf(supplier_daily_panel(spark, sf_dir), max_lags=5)
     # round both engines: Durbin-Levinson amplifies summation-order drift
     return out.select(
@@ -993,7 +1060,6 @@ def q_pacf(spark, sf_dir):
     """,
 )
 def q_ljung_box_q(spark, sf_dir):
-    from polars_ts_spark.operators import diagnostics
     out = diagnostics.ljung_box(supplier_daily_panel(spark, sf_dir), max_lags=5)
     return out.select("unique_id", "q_stat", "lags")
 
@@ -1084,7 +1150,6 @@ _PELT_ORACLE = PANEL_CTE.replace("WITH", "WITH RECURSIVE", 1) + """,
 
 @register("pelt", _PELT_ORACLE)
 def q_pelt(spark, sf_dir):
-    from polars_ts_spark.operators import pelt as pelt_mod
     return pelt_mod.pelt(supplier_daily_panel(spark, sf_dir), cost="mean")
 
 
@@ -1110,7 +1175,6 @@ def q_pelt(spark, sf_dir):
     """,
 )
 def q_hampel(spark, sf_dir):
-    from polars_ts_spark.operators import diagnostics
     return diagnostics.hampel_outliers(supplier_daily_panel(spark, sf_dir), window=7)
 
 
@@ -1129,6 +1193,18 @@ def _monthly_panel(spark, sf_dir):
     return preprocessing.resample(supplier_daily_panel(spark, sf_dir), "1mo", "mean")
 
 
+def _daily_panel_exact(spark, sf_dir):
+    """Supplier daily panel summed in integer cents with one double
+    division per day: bit-identical in both engines, like
+    _monthly_panel_exact."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return li.groupBy(
+        F.col("l_suppkey").cast("string").alias("unique_id"),
+        F.date_trunc("day", F.col("l_shipdate")).alias("ds"),
+    ).agg((F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).cast("double")
+           / F.lit(100.0)).alias("y"))
+
+
 def _monthly_panel_exact(spark, sf_dir):
     """Monthly panel with ORDER-INDEPENDENT float values, for the
     pairwise-DP queries whose oracles must match to the last ulp.
@@ -1141,7 +1217,6 @@ def _monthly_panel_exact(spark, sf_dir):
     integer cents (exact, associative) and performing ONE double
     division per month makes the panel bit-identical everywhere.
     """
-    from polars_ts_spark.sources.datasets import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
@@ -1158,24 +1233,47 @@ def _monthly_panel_exact(spark, sf_dir):
     )
 
 
+# The exact-cents monthly panel as two DuckDB CTEs, ``daily_cents`` and
+# ``monthly``, mirroring _monthly_panel_exact: bigint cent sums are
+# order-independent, so both engines see bit-identical series.
+_CENTS_CTES = """daily_cents AS (
+    SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
+           date_trunc('day', l_shipdate) AS ds,
+           SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
+    FROM lineitem GROUP BY 1, 2
+),
+monthly AS (
+    SELECT unique_id, date_trunc('month', ds) AS ds,
+           CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
+    FROM daily_cents"""
+
+
+def _cents_ctes(indent: int = 0, tail: str = " GROUP BY 1, 2\n)") -> str:
+    """``daily_cents`` and ``monthly`` with ``tail`` closing monthly after
+    its ``FROM daily_cents``; every line after the first is indented by
+    ``indent`` spaces, to sit inside the oracle that embeds it."""
+    return (_CENTS_CTES + tail).replace("\n", "\n" + " " * indent)
+
+
+def _md5_unit(key: str) -> str:
+    """SQL twin of numutils.hash_unit over the string expression ``key``."""
+    return f"((('0x' || substr(md5({key}), 1, 8))::BIGINT + 0.5) / 4294967296.0)"
+
+
+def _md5_normal(seed: int, tag: str, i: str) -> str:
+    """SQL twin of draw ``i`` of numutils.hash_normals(seed, tag): Box-Muller
+    over the md5 uniforms of ``'{seed}:{tag}:{i}:a'`` and ``...:b'``;
+    ``tag`` and ``i`` are SQL expressions."""
+    u1, u2 = (_md5_unit(f"'{seed}:' || {tag} || ':' || {i} || ':{ab}'") for ab in "ab")
+    return f"(SQRT(-2.0 * LN({u1})) * COS(2.0 * PI() * {u2}))"
+
+
 _INF = "CAST('infinity' AS DOUBLE)"
 
-# shared prelude: exact-cents monthly mean panel (mirrors
-# _monthly_panel_exact: bigint cent sums are order-independent, so both
-# engines see bit-identical series) -> per-series ordered value lists ->
-# symmetric-deduped pairs (id_1 < id_2, mirroring distance.py:188-189)
-_PAIRS_CTE = """,
-    daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+# shared prelude: exact-cents monthly mean panel -> per-series ordered
+# value lists -> symmetric-deduped pairs (id_1 < id_2, mirroring
+# distance.py:188-189)
+_PAIRS_CTE = ",\n    " + _cents_ctes(4) + """,
     ser AS (
         SELECT unique_id AS sid, list(CAST(y AS DOUBLE) ORDER BY ds) AS v,
                CAST(COUNT(*) AS INT) AS len
@@ -1384,22 +1482,20 @@ _SBD_ORACLE = PANEL_CTE + _PAIRS_CTE.format(serd="", src="ser") + """
     """
 
 
-def _register_distance(method, oracle=None, **kw):
-    @register(f"pairwise_{method}", oracle)
-    def q(spark, sf_dir, _m=method, _kw=kw):
-        from polars_ts_spark.operators.distance import compute_pairwise_distance
-        return compute_pairwise_distance(_monthly_panel_exact(spark, sf_dir), method=_m, **_kw)
+def _q_pairwise(method):
+    def q(spark, sf_dir):
+        return compute_pairwise_distance(_monthly_panel_exact(spark, sf_dir), method=method)
+    return q
 
 
 for _m in ("dtw", "msm", "erp", "lcss", "edr", "wdtw", "twe", "frechet", "ddtw"):
-    _register_distance(_m, oracle=_pairwise_dp_oracle(_m, **_DP_ORACLES[_m]))
-_register_distance("sbd", oracle=_SBD_ORACLE)
+    register(f"pairwise_{_m}", _pairwise_dp_oracle(_m, **_DP_ORACLES[_m]))(_q_pairwise(_m))
+register("pairwise_sbd", _SBD_ORACLE)(_q_pairwise("sbd"))
 
 
 @register("pairwise_dtw_sakoe_chiba",
           _pairwise_dp_oracle("dtw", **_DP_ORACLES["dtw_sakoe_chiba"]))
 def q_dtw_sc(spark, sf_dir):
-    from polars_ts_spark.operators.distance import compute_pairwise_distance
     return compute_pairwise_distance(_monthly_panel_exact(spark, sf_dir), method="dtw",
                                      variant="sakoe_chiba", param=10)
 
@@ -1407,7 +1503,6 @@ def q_dtw_sc(spark, sf_dir):
 @register("pairwise_dtw_itakura",
           _pairwise_dp_oracle("dtw", **_DP_ORACLES["dtw_itakura"]))
 def q_dtw_itakura(spark, sf_dir):
-    from polars_ts_spark.operators.distance import compute_pairwise_distance
     return compute_pairwise_distance(_monthly_panel_exact(spark, sf_dir), method="dtw",
                                      variant="itakura", param=2.0)
 
@@ -1422,7 +1517,6 @@ def _bivariate_monthly_exact(spark, sf_dir):
     """Exact-cents bivariate monthly panel (revenue + quantity): integer
     sums are order-independent, so both engines see identical doubles
     (see _monthly_panel_exact)."""
-    from polars_ts_spark.sources.datasets import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
@@ -1575,7 +1669,6 @@ _MSM_MULTI_ORACLE = _pairwise_multi_dp_oracle(
 
 @register("pairwise_dtw_multi", _DTW_MULTI_ORACLE)
 def q_dtw_multi_exact(spark, sf_dir):
-    from polars_ts_spark.operators.distance import compute_pairwise_distance_multi
     return compute_pairwise_distance_multi(
         _bivariate_monthly_exact(spark, sf_dir), method="dtw_multi",
         value_cols=["y", "y2"], metric="manhattan",
@@ -1584,7 +1677,6 @@ def q_dtw_multi_exact(spark, sf_dir):
 
 @register("pairwise_msm_multi", _MSM_MULTI_ORACLE)
 def q_msm_multi(spark, sf_dir):
-    from polars_ts_spark.operators.distance import compute_pairwise_distance_multi
     return compute_pairwise_distance_multi(
         _bivariate_monthly_exact(spark, sf_dir), method="msm_multi",
         value_cols=["y", "y2"], c=1.0,
@@ -1592,9 +1684,9 @@ def q_msm_multi(spark, sf_dir):
 
 
 # The external correctness gate grades a PREFIX of the registration order
-# (round 1: first 50). With 91 oracle-backed queries, the prefix is
-# curated for DISTINCT-component coverage — one query per SURVEY §2 row
-# wherever possible, so the graded window certifies the widest slice of
+# (the first 50). The prefix is curated for DISTINCT-component
+# coverage — one query per SURVEY §2 row wherever possible, so the
+# graded window certifies the widest slice of
 # the operator inventory: features, preprocessing, forecasting, metrics
 # & probabilistic evaluation, trend/diagnostics, changepoint kernels,
 # pairwise-DP representatives (all 11 stay oracle-backed; the rest sit
@@ -1653,88 +1745,99 @@ def all_oracles() -> dict[str, str]:
 
 
 def _docs(spark, sf_dir):
-    from polars_ts_spark.sources.datasets import load_table
     return load_table(spark, sf_dir, "documents")
 
 
 def _embs(spark, sf_dir):
-    from polars_ts_spark.sources.datasets import load_table
     return load_table(spark, sf_dir, "embeddings")
 
 
-def _register_textops():
-    from polars_ts_spark.operators import embedsim, textops
+@register("exact_dedup", textops.EXACT_DEDUP_ORACLE)
+def q_exact_dedup(spark, sf_dir):
+    return textops.exact_dedup(_docs(spark, sf_dir))
 
-    @register("exact_dedup", textops.EXACT_DEDUP_ORACLE)
-    def q_exact_dedup(spark, sf_dir):
-        return textops.exact_dedup(_docs(spark, sf_dir))
 
-    @register("ngram_jaccard_pairs", textops.ngram_jaccard_oracle(3, 0.2))
-    def q_ngram_jaccard(spark, sf_dir):
-        return textops.ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.2)
+@register("ngram_jaccard_pairs", textops.ngram_jaccard_oracle(3, 0.2))
+def q_ngram_jaccard(spark, sf_dir):
+    return textops.ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.2)
 
-    @register("minhash_lsh_pairs", textops.minhash_lsh_oracle(16, 4, 0.5, 3))
-    def q_minhash_lsh(spark, sf_dir):
-        return textops.minhash_lsh_pairs(
-            _docs(spark, sf_dir), num_hashes=16, bands=4, threshold=0.5, shingle_n=3
-        )
 
-    @register(
-        "dedup_clusters",
-        # the minhash pair query nests as the edge-list CTE (DuckDB
-        # allows WITH inside a CTE body)
-        textops.dedup_clusters_oracle(textops.minhash_lsh_oracle(16, 4, 0.5, 3)),
+@register("minhash_lsh_pairs", textops.minhash_lsh_oracle(16, 4, 0.5, 3))
+def q_minhash_lsh(spark, sf_dir):
+    return textops.minhash_lsh_pairs(
+        _docs(spark, sf_dir), num_hashes=16, bands=4, threshold=0.5, shingle_n=3
     )
-    def q_dedup_clusters(spark, sf_dir):
-        return textops.dedup_clusters(
-            _docs(spark, sf_dir), num_hashes=16, bands=4, threshold=0.5, shingle_n=3
-        )
 
-    @register("simhash_pairs", textops.simhash_oracle(3))
-    def q_simhash_pairs(spark, sf_dir):
-        return textops.simhash_pairs(_docs(spark, sf_dir), max_hamming=3)
 
-    @register("text_stats", textops.TEXT_STATS_ORACLE)
-    def q_text_stats(spark, sf_dir):
-        return textops.text_stats(_docs(spark, sf_dir))
+@register(
+    "dedup_clusters",
+    # the minhash pair query nests as the edge-list CTE (DuckDB
+    # allows WITH inside a CTE body)
+    textops.dedup_clusters_oracle(textops.minhash_lsh_oracle(16, 4, 0.5, 3)),
+)
+def q_dedup_clusters(spark, sf_dir):
+    return textops.dedup_clusters(
+        _docs(spark, sf_dir), num_hashes=16, bands=4, threshold=0.5, shingle_n=3
+    )
 
-    @register("language_id", textops.language_id_oracle())
-    def q_language_id(spark, sf_dir):
-        return textops.language_id(_docs(spark, sf_dir))
 
-    @register("doc_fingerprint", textops.doc_fingerprint_oracle(8))
-    def q_doc_fingerprint(spark, sf_dir):
-        return textops.doc_fingerprint(_docs(spark, sf_dir), k=8)
+@register("simhash_pairs", textops.simhash_oracle(3))
+def q_simhash_pairs(spark, sf_dir):
+    return textops.simhash_pairs(_docs(spark, sf_dir), max_hamming=3)
 
-    @register("cosine_topk", embedsim.brute_force_topk_oracle(5))
-    def q_cosine_topk(spark, sf_dir):
-        return embedsim.brute_force_topk(_embs(spark, sf_dir), k=5)
 
-    @register("cosine_dedup_pairs", embedsim.cosine_dedup_oracle(0.95))
-    def q_cosine_dedup(spark, sf_dir):
-        return embedsim.cosine_dedup_pairs(_embs(spark, sf_dir), threshold=0.95)
+@register("text_stats", textops.TEXT_STATS_ORACLE)
+def q_text_stats(spark, sf_dir):
+    return textops.text_stats(_docs(spark, sf_dir))
 
-    @register("knn_label_vote", embedsim.knn_label_vote_oracle(5))
-    def q_knn_label_vote(spark, sf_dir):
-        return embedsim.knn_label_vote(_embs(spark, sf_dir), k=5)
 
-    @register("lsh_ann_topk", embedsim.lsh_ann_topk_oracle(5))
-    def q_lsh_ann_topk(spark, sf_dir):
-        return embedsim.lsh_ann_topk(_embs(spark, sf_dir), k=5)
+@register("language_id", textops.language_id_oracle())
+def q_language_id(spark, sf_dir):
+    return textops.language_id(_docs(spark, sf_dir))
 
-    # The decode stub is md5-deterministic, so even the stubbed pipeline
-    # is fully oracle-checkable: DuckDB rebuilds the pseudo-pixels from
-    # md5(text) hex nibbles, replicates the float32 /255 quantization
-    # (FLOAT division then DOUBLE stats, same as the kernel), and the
-    # query posexplodes the feature vector into scalar rows.
-    _MULTIMODAL_ORACLE = """
+
+@register("doc_fingerprint", textops.doc_fingerprint_oracle(8))
+def q_doc_fingerprint(spark, sf_dir):
+    return textops.doc_fingerprint(_docs(spark, sf_dir), k=8)
+
+
+@register("cosine_topk", embedsim.brute_force_topk_oracle(5))
+def q_cosine_topk(spark, sf_dir):
+    return embedsim.brute_force_topk(_embs(spark, sf_dir), k=5)
+
+
+@register("cosine_dedup_pairs", embedsim.cosine_dedup_oracle(0.95))
+def q_cosine_dedup(spark, sf_dir):
+    return embedsim.cosine_dedup_pairs(_embs(spark, sf_dir), threshold=0.95)
+
+
+@register("knn_label_vote", embedsim.knn_label_vote_oracle(5))
+def q_knn_label_vote(spark, sf_dir):
+    return embedsim.knn_label_vote(_embs(spark, sf_dir), k=5)
+
+
+@register("lsh_ann_topk", embedsim.lsh_ann_topk_oracle(5))
+def q_lsh_ann_topk(spark, sf_dir):
+    return embedsim.lsh_ann_topk(_embs(spark, sf_dir), k=5)
+
+
+# The 16 bytes of md5(text) per document that the md5-deterministic
+# decode stubs (image, vision, audio) read, as CTEs ``d`` and ``bytes``.
+_MD5_BYTES_CTES = """
     WITH d AS (SELECT doc_id, md5(text) AS hx FROM documents),
     bytes AS (
         SELECT doc_id, i.i,
                16 * (strpos('0123456789abcdef', substring(hx, 2 * i.i + 1, 1)) - 1)
                  + (strpos('0123456789abcdef', substring(hx, 2 * i.i + 2, 1)) - 1) AS b
         FROM d, (SELECT UNNEST(generate_series(0, 15)) AS i) i
-    ),
+    )"""
+
+# The decode stub is md5-deterministic, so even the stubbed pipeline
+# is fully oracle-checkable: DuckDB rebuilds the pseudo-pixels from
+# md5(text) hex nibbles, replicates the float32 /255 quantization
+# (FLOAT division then DOUBLE stats, same as the kernel), and the
+# query posexplodes the feature vector into scalar rows.
+_MULTIMODAL_ORACLE = _MD5_BYTES_CTES + """,
     px AS (
         SELECT b.doc_id, j.j % 3 AS ch,
                CAST(CAST(b.b AS FLOAT) / CAST(255.0 AS FLOAT) AS DOUBLE) AS p
@@ -1766,27 +1869,21 @@ def _register_textops():
       ON c.doc_id = g.doc_id AND c.ch = g.ch AND c.bin = g.bin
     """
 
-    @register("multimodal_features", _MULTIMODAL_ORACLE)
-    def q_multimodal_features(spark, sf_dir):
-        from polars_ts_spark.operators import multimodal
-        payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
-        feats = multimodal.extract_features(multimodal.decode_image(payload))
-        return feats.select(
-            "doc_id", F.posexplode("features").alias("pos", "feature")
-        ).withColumn("feature", F.round("feature", 6))
 
-    # resize: the 4x4x3 md5-tiled fake tensor block-means to 2x2x3;
-    # source pixel (y,x,c) has flat index k=(y*4+x)*3+c and value
-    # byte[k % 16]/255, so each output cell is the mean of four known
-    # byte-derived values — rebuilt below with four pixel-table joins.
-    _RESIZE_ORACLE = """
-    WITH d AS (SELECT doc_id, md5(text) AS hx FROM documents),
-    bytes AS (
-        SELECT doc_id, i.i,
-               16 * (strpos('0123456789abcdef', substring(hx, 2 * i.i + 1, 1)) - 1)
-                 + (strpos('0123456789abcdef', substring(hx, 2 * i.i + 2, 1)) - 1) AS b
-        FROM d, (SELECT UNNEST(generate_series(0, 15)) AS i) i
-    ),
+@register("multimodal_features", _MULTIMODAL_ORACLE)
+def q_multimodal_features(spark, sf_dir):
+    payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
+    feats = multimodal.extract_features(multimodal.decode_image(payload))
+    return feats.select(
+        "doc_id", F.posexplode("features").alias("pos", "feature")
+    ).withColumn("feature", F.round("feature", 6))
+
+
+# resize: the 4x4x3 md5-tiled fake tensor block-means to 2x2x3;
+# source pixel (y,x,c) has flat index k=(y*4+x)*3+c and value
+# byte[k % 16]/255, so each output cell is the mean of four known
+# byte-derived values — rebuilt below with four pixel-table joins.
+_RESIZE_ORACLE = _MD5_BYTES_CTES + """,
     pv AS (
         SELECT doc_id, i,
                CAST(CAST(b AS FLOAT) / CAST(255.0 AS FLOAT) AS DOUBLE) AS p
@@ -1812,14 +1909,14 @@ def _register_textops():
               AND p4.i = (((2 * g.y + 1) * 4 + (2 * g.x + 1)) * 3 + g.c) % 16
     """
 
-    # frame sampling: payload sliced into fixed 64-byte frames, one row
-    # per frame (fan-out). Frames are projected to md5 hex so both
-    # engines compare strings; the corpus is ASCII so DuckDB's VARCHAR
-    # substring slices the same bytes the binary kernel sees. The frame
-    # index series bound is derived FROM THE DATA (max ceil(n/64) over
-    # docs), so the oracle matches frame_sample at any document size —
-    # no silent cap.
-    _FRAME_ORACLE = """
+# frame sampling: payload sliced into fixed 64-byte frames, one row
+# per frame (fan-out). Frames are projected to md5 hex so both
+# engines compare strings; the corpus is ASCII so DuckDB's VARCHAR
+# substring slices the same bytes the binary kernel sees. The frame
+# index series bound is derived FROM THE DATA (max ceil(n/64) over
+# docs), so the oracle matches frame_sample at any document size —
+# no silent cap.
+_FRAME_ORACLE = """
     WITH d AS (
         SELECT doc_id, text, octet_length(CAST(text AS BLOB)) AS n
         FROM documents
@@ -1831,21 +1928,22 @@ def _register_textops():
     WHERE f.i * 64 < d.n
     """
 
-    @register("frame_sample", _FRAME_ORACLE)
-    def q_frame_sample(spark, sf_dir):
-        from polars_ts_spark.operators import multimodal
-        payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
-        frames = multimodal.frame_sample(payload, every_n_bytes=64)
-        return frames.select(
-            "doc_id", "frame_idx", F.md5("frame").alias("frame_md5")
-        )
 
-    # decoded video-frame sampling: the stub container is raw
-    # concatenated 4x4x3 uint8 frames over the (ASCII) payload bytes,
-    # zero-padded at the tail; every 2nd frame kept. DuckDB rebuilds
-    # each kept frame's pixels from ord(substring(text, ...)) with the
-    # same float32 /255 quantization; the frame bound is data-derived.
-    _VIDEO_FRAME_ORACLE = """
+@register("frame_sample", _FRAME_ORACLE)
+def q_frame_sample(spark, sf_dir):
+    payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
+    frames = multimodal.frame_sample(payload, every_n_bytes=64)
+    return frames.select(
+        "doc_id", "frame_idx", F.md5("frame").alias("frame_md5")
+    )
+
+
+# decoded video-frame sampling: the stub container is raw
+# concatenated 4x4x3 uint8 frames over the (ASCII) payload bytes,
+# zero-padded at the tail; every 2nd frame kept. DuckDB rebuilds
+# each kept frame's pixels from ord(substring(text, ...)) with the
+# same float32 /255 quantization; the frame bound is data-derived.
+_VIDEO_FRAME_ORACLE = """
     WITH d AS (
         SELECT doc_id, text, octet_length(CAST(text AS BLOB)) AS n
         FROM documents
@@ -1864,31 +1962,28 @@ def _register_textops():
     FROM frames, (SELECT UNNEST(generate_series(0, 47)) AS j) j
     """
 
-    @register("video_frame_tensors", _VIDEO_FRAME_ORACLE)
-    def q_video_frame_tensors(spark, sf_dir):
-        from polars_ts_spark.operators import multimodal
-        payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
-        fr = multimodal.sample_video_frames(payload, every_n_frames=2)
-        return fr.select(
-            "doc_id", "frame_idx", F.posexplode("pixels").alias("pos", "v")
-        ).withColumn("v", F.col("v").cast("double"))
 
-    @register("multimodal_resize", _RESIZE_ORACLE)
-    def q_multimodal_resize(spark, sf_dir):
-        from polars_ts_spark.operators import multimodal
-        payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
-        resized = multimodal.resize_image(
-            multimodal.decode_image(payload), out_w=2, out_h=2
-        )
-        # pixels are float32 in the schema: widen to double WITHOUT
-        # rounding — the oracle applies the same float32 quantization,
-        # so the values match bit-for-bit
-        return resized.select(
-            "doc_id", F.posexplode("pixels").alias("pos", "v")
-        ).withColumn("v", F.col("v").cast("double"))
+@register("video_frame_tensors", _VIDEO_FRAME_ORACLE)
+def q_video_frame_tensors(spark, sf_dir):
+    payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
+    fr = multimodal.sample_video_frames(payload, every_n_frames=2)
+    return fr.select(
+        "doc_id", "frame_idx", F.posexplode("pixels").alias("pos", "v")
+    ).withColumn("v", F.col("v").cast("double"))
 
 
-_register_textops()
+@register("multimodal_resize", _RESIZE_ORACLE)
+def q_multimodal_resize(spark, sf_dir):
+    payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
+    resized = multimodal.resize_image(
+        multimodal.decode_image(payload), out_w=2, out_h=2
+    )
+    # pixels are float32 in the schema: widen to double WITHOUT
+    # rounding — the oracle applies the same float32 quantization,
+    # so the values match bit-for-bit
+    return resized.select(
+        "doc_id", F.posexplode("pixels").alias("pos", "v")
+    ).withColumn("v", F.col("v").cast("double"))
 
 
 # ---------------------------------------------------------------------------
@@ -1898,7 +1993,6 @@ _register_textops()
 
 def _bivariate_panel(spark, sf_dir):
     """Supplier daily panel with two channels: revenue + quantity."""
-    from polars_ts_spark.sources.datasets import load_table
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(
@@ -1948,7 +2042,6 @@ def _kalman_local_level_oracle(q: float, r: float) -> str:
 
 @register("kalman_filter", _kalman_local_level_oracle(0.01, 1.0))
 def q_kalman_filter(spark, sf_dir):
-    from polars_ts_spark.operators import statespace
     return statespace.kalman_filter(supplier_daily_panel(spark, sf_dir))
 
 
@@ -2015,7 +2108,6 @@ def _kalman_local_trend_oracle(h: int, q: float, r: float) -> str:
 
 @register("kalman_forecast", _kalman_local_trend_oracle(7, 0.01, 1.0))
 def q_kalman_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import statespace
     out = statespace.kalman_forecast(supplier_daily_panel(spark, sf_dir), h=7)
     return out.select("unique_id", "ds", F.round("y_hat", 4).alias("y_hat"))
 
@@ -2028,17 +2120,7 @@ def _garch_variance_oracle(omega: float, alpha: float, beta: float) -> str:
     float op order as garch_variance_path (and the recursion inside
     the garch_fit MLE objective)."""
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     mu AS (SELECT unique_id, AVG(y) AS mu FROM monthly GROUP BY 1),
     demeaned AS (
         SELECT m.unique_id, m.ds, m.y - u.mu AS r,
@@ -2069,7 +2151,6 @@ WITH RECURSIVE daily_cents AS (
 
 @register("garch_variance", _garch_variance_oracle(4e7, 0.1, 0.8))
 def q_garch_variance(spark, sf_dir):
-    from polars_ts_spark.operators import volatility
     return volatility.garch_variance_path(
         _monthly_panel_exact(spark, sf_dir), omega=4e7, alpha=0.1, beta=0.8
     )
@@ -2083,7 +2164,6 @@ def _garch11_fit_ctes() -> str:
     carrying (s2, nll) per (series, candidate) — with the
     milli-quantized (FLOOR(nll·1000+0.5), ai, bi) argmin between
     stages. Ends at w3 = (unique_id, a, b, nll, s2, var0, n)."""
-    from polars_ts_spark.operators.volatility import _GRID_A0, _GRID_B0, _SUM_CAP
 
     c1_rows = ", ".join(
         f"({ai}, {bi}, CAST({a!r} AS DOUBLE), CAST({b!r} AS DOUBLE))"
@@ -2130,17 +2210,7 @@ def _garch11_fit_ctes() -> str:
     )"""
 
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     series AS (
         SELECT unique_id, list(y ORDER BY ds) AS v, COUNT(*) AS n
         FROM monthly GROUP BY 1
@@ -2184,7 +2254,6 @@ _GARCH_FIT_ORACLE = _garch11_fit_ctes() + """
 
 @register("garch_fit", _GARCH_FIT_ORACLE)
 def q_garch_fit(spark, sf_dir):
-    from polars_ts_spark.operators import volatility
     out = volatility.garch_fit(_monthly_panel_exact(spark, sf_dir))
     return out.select(
         "unique_id", F.round("omega", 2).alias("omega"),
@@ -2222,7 +2291,6 @@ _GARCH_FORECAST_ORACLE = _garch11_fit_ctes() + _garch_forecast_steps(6)
 
 @register("garch_forecast", _GARCH_FORECAST_ORACLE)
 def q_garch_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import volatility
     out = volatility.garch_forecast(_monthly_panel_exact(spark, sf_dir), h=6)
     return out.select("unique_id", "step", F.round("sigma2", 2).alias("sigma2"))
 
@@ -2298,7 +2366,6 @@ WHERE c.n <= 5
 
 @register("var_forecast", _VAR_ORACLE)
 def q_var_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import var_model
     out = var_model.var_forecast(_bivariate_panel(spark, sf_dir), ["y", "y2"], p=1, h=7)
     return out.select(
         "unique_id", "step",
@@ -2353,7 +2420,6 @@ FROM rss
 
 @register("granger_causality", _GRANGER_ORACLE)
 def q_granger(spark, sf_dir):
-    from polars_ts_spark.operators import var_model
     out = var_model.granger_causality(_bivariate_panel(spark, sf_dir), "y2", "y", p=1)
     # p_value needs the F survival function (no SQL equivalent); the
     # verified surface is the F statistic itself
@@ -2455,7 +2521,6 @@ def _bocpd_oracle(hazard: float) -> str:
 
 @register("bocpd", _bocpd_oracle(100.0))
 def q_bocpd(spark, sf_dir):
-    from polars_ts_spark.operators import changepoint
     out = changepoint.bocpd(supplier_daily_panel(spark, sf_dir), hazard_rate=100.0)
     return out.withColumn("cp_prob", F.round("cp_prob", 6))
 
@@ -2571,17 +2636,7 @@ def _regime_oracle(n_iter: int = 6) -> str:
         GROUP BY 1
     )""")
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM monthly_src GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     allpan AS MATERIALIZED (
         SELECT unique_id, ds, y,
                ROW_NUMBER() OVER (PARTITION BY unique_id ORDER BY ds) AS t,
@@ -2609,14 +2664,13 @@ WITH RECURSIVE daily_cents AS (
     UNION ALL
     SELECT unique_id, ds, y, 0 AS regime, 1.0 AS regime_prob
     FROM allpan WHERE n < 6
-    """.replace("FROM monthly_src", "FROM daily_cents")
+    """
 
 
 @register("regime_detect", _regime_oracle())
 def q_regime(spark, sf_dir):
     """Branch-free 6-iteration Baum-Welch on the exact-cents monthly
     panel (bit-identical inputs across engines; ref regime.py:9-158)."""
-    from polars_ts_spark.operators import changepoint
     out = changepoint.regime_detect(
         _monthly_panel_exact(spark, sf_dir), n_states=2, n_iter=6, early_stop=False)
     return out.withColumn("regime_prob", F.round("regime_prob", 6))
@@ -2890,7 +2944,6 @@ def _auto_cluster_oracle(seed: int = 42) -> str:
 
 @register("kmedoids_dtw", _kmedoids_oracle())
 def q_kmedoids(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     return clustering.kmedoids(_monthly_panel_exact(spark, sf_dir), k=3, method="dtw")
 
 
@@ -3006,7 +3059,6 @@ def _clara_oracle(n_samples: int = 5, seed: int = 42) -> str:
 
 @register("clara_cluster", _clara_oracle())
 def q_clara(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     return clustering.clara_cluster(_monthly_panel_exact(spark, sf_dir), k=3, method="msm")
 
 
@@ -3124,7 +3176,6 @@ def _clarans_oracle(seed: int = 42, num_local: int = 3, max_neighbor: int = 50) 
 
 @register("clarans_cluster", _clarans_oracle())
 def q_clarans(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     return clustering.clarans_cluster(_monthly_panel_exact(spark, sf_dir), k=3, method="msm")
 
 
@@ -3247,7 +3298,6 @@ def q_spectral(spark, sf_dir):
     """NJW spectral clustering with the engine-replicable power solver
     on the exact-cents monthly panel (bit-identical DTW matrix across
     engines; ref spectral.py:52-129)."""
-    from polars_ts_spark.operators import clustering
     return clustering.spectral_cluster(
         _monthly_panel_exact(spark, sf_dir), k=3, method="dtw", solver="power")
 
@@ -3307,7 +3357,6 @@ def _dbscan_oracle(eps: float, min_samples: int) -> str:
 
 @register("dbscan_cluster", _dbscan_oracle(60000.0, 3))
 def q_dbscan(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     return clustering.dbscan_cluster(
         _monthly_panel_exact(spark, sf_dir), eps=60000.0, min_samples=3, method="dtw"
     )
@@ -3315,7 +3364,6 @@ def q_dbscan(spark, sf_dir):
 
 @register("auto_cluster", _auto_cluster_oracle())
 def q_auto_cluster(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     labels, _ = clustering.auto_cluster(
         _monthly_panel_exact(spark, sf_dir), methods=("kmedoids",),
         distances=("dtw",), k_range=(2, 3),
@@ -3325,7 +3373,6 @@ def q_auto_cluster(spark, sf_dir):
 
 @register("cluster_quality_scores", _cluster_scores_oracle())
 def q_cluster_scores(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     ids, D = clustering.distance_matrix(_monthly_panel_exact(spark, sf_dir), "dtw")
     _, labels, _ = clustering.pam_kmedoids(D, 3, seed=42)
     return spark.createDataFrame(
@@ -3346,7 +3393,6 @@ def _ukf_local_level_oracle(q: float, r: float) -> str:
     sigma weights (lam, gamma, Wm, Wc) are Python-computed literals so
     both engines share the exact constants. Input is the exact-cents
     monthly panel (bit-identical across engines)."""
-    import numpy as np
 
     alpha, beta_w, kappa, n_dim = 1e-3, 2.0, 0.0, 1
     lam = alpha * alpha * (n_dim + kappa) - n_dim
@@ -3355,17 +3401,7 @@ def _ukf_local_level_oracle(q: float, r: float) -> str:
     wm0 = float(lam / (n_dim + lam))
     wc0 = float(lam / (n_dim + lam) + (1 - alpha * alpha + beta_w))
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     ordered AS (
         SELECT unique_id, ds, CAST(y AS DOUBLE) AS y,
                ROW_NUMBER() OVER (PARTITION BY unique_id ORDER BY ds) AS rn
@@ -3413,12 +3449,7 @@ WITH RECURSIVE daily_cents AS (
 
 @register("ukf_filter", _ukf_local_level_oracle(1e4, 1e6))
 def q_ukf(spark, sf_dir):
-    from polars_ts_spark.operators.kernel import for_each_series
-    from polars_ts_spark.operators.statespace import UnscentedKalmanFilter
-
     def kern(pdf):
-        import numpy as np
-        import pandas as pd
         y = pdf["y"].to_numpy(dtype=float)
         ukf = UnscentedKalmanFilter(
             f=lambda x: x, h=lambda x: x, Q=[[1e4]], R=[[1e6]],
@@ -3448,27 +3479,11 @@ def _particle_oracle(n_p: int = 200, seed: int = 42) -> str:
     the searchsorted-left comparison count over the bit-identical
     cumulative weights."""
 
-    def z(tag: str, i: str) -> str:
-        u1 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':a'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        u2 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':b'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        return f"(SQRT(-2.0 * LN({u1})) * COS(2.0 * PI() * {u2}))"
+    z = partial(_md5_normal, seed)
 
-    uq = (f"((('0x' || substr(md5('{seed}:u:' || CAST(t AS VARCHAR) || ':a'), 1, 8))::BIGINT"
-          f" + 0.5) / 4294967296.0)")
+    uq = _md5_unit(f"'{seed}:u:' || CAST(t AS VARCHAR) || ':a'")
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     series AS (
         SELECT unique_id, list(y ORDER BY ds) AS v, list(ds ORDER BY ds) AS dss,
                COUNT(*) AS n
@@ -3524,12 +3539,7 @@ WITH RECURSIVE daily_cents AS (
 
 @register("particle_filter_level", _particle_oracle())  # md5-draw bootstrap SMC
 def q_particle(spark, sf_dir):
-    from polars_ts_spark.operators.kernel import for_each_series
-    from polars_ts_spark.operators.statespace import ParticleFilter
-
     def kern(pdf):
-        import numpy as np
-        import pandas as pd
         y = pdf["y"].to_numpy(dtype=float)
         y0 = y[0] if len(y) else 0.0
         pf = ParticleFilter(
@@ -3562,30 +3572,14 @@ def _enkf_oracle(n_ens: int = 100, q: float = 1e6, r: float = 1e8,
     left-fold sums, matching the kernel float-for-float; the update is
     branch-free and K in (0,1) contracts, so libm-vs-DuckDB ulps in
     ln/cos stay ulp-sized. 2dp rounding both sides."""
-    import math
     sq = repr(math.sqrt(q))
     sr = repr(math.sqrt(r))
     N = n_ens
 
-    def z(tag: str, i: str) -> str:
-        u1 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':a'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        u2 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':b'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        return f"(SQRT(-2.0 * LN({u1})) * COS(2.0 * PI() * {u2}))"
+    z = partial(_md5_normal, seed)
 
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     series AS (
         SELECT unique_id, list(y ORDER BY ds) AS v, list(ds ORDER BY ds) AS dss,
                COUNT(*) AS n
@@ -3632,11 +3626,7 @@ WITH RECURSIVE daily_cents AS (
 
 @register("enkf_filter", _enkf_oracle())  # md5 Box-Muller ensemble Kalman filter
 def q_enkf(spark, sf_dir):
-    from polars_ts_spark.operators.bayesian import EnsembleKalmanFilter
-    from polars_ts_spark.operators.kernel import for_each_series
-
     def kern(pdf):
-        import pandas as pd
         y = pdf["y"].to_numpy(dtype=float)
         enkf = EnsembleKalmanFilter(f=lambda x: x, q=1e6, r=1e8, n_ens=100, seed=42)
         level = enkf.filter(y, x0=float(y[0]) if len(y) else 0.0)
@@ -3661,17 +3651,7 @@ def _perm_importance_oracle(n_repeats: int = 3, seed: int = 42) -> str:
     feats = ["LAG(y, 1) OVER w", "LAG(y, 7) OVER w"]
     d = len(feats)
     k = d + 1
-    aggs = []
-    for i in range(d):
-        for j in range(i, d):
-            ridge = " + 1e-6" if i == j else ""
-            aggs.append(f"SUM(f{i} * f{j}){ridge} AS a_{i}_{j}")
-        aggs.append(f"SUM(f{i}) AS a_{i}_{d}")
-        aggs.append(f"SUM(f{i} * yt) AS b_{i}_0")
-    aggs.append(f"CAST(COUNT(*) AS DOUBLE) AS a_{d}_{d}")
-    aggs.append(f"SUM(yt) AS b_{d}_0")
-    mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}"
-                      for i in range(k) for j in range(i + 1, k)]
+    aggs, mirror = _ridge_normal_aggs(d)
     perms, maes = [], []
     for i in range(d):
         for r in range(n_repeats):
@@ -3724,8 +3704,6 @@ def _perm_importance_oracle(n_repeats: int = 3, seed: int = 42) -> str:
 
 @register("permutation_importance", _perm_importance_oracle())
 def q_perm_importance(spark, sf_dir):
-    from polars_ts_spark.functions.numutils import RidgeEstimator
-    from polars_ts_spark.operators import evaluation, features
     panel = features.lag_features(supplier_daily_panel(spark, sf_dir), [1, 7])
     pdf = evaluation.permutation_importance(
         panel, ["y_lag_1", "y_lag_7"], "y", RidgeEstimator(), n_repeats=3,
@@ -3824,7 +3802,6 @@ def _agglo_oracle(k: int = 3) -> str:
 
 @register("agglomerative_cluster", _agglo_oracle())
 def q_agglo(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     return clustering.agglomerative_cluster(_monthly_panel_exact(spark, sf_dir), k=3, method="dtw")
 
 
@@ -3964,17 +3941,7 @@ def _kshape_oracle(seed: int = 42, max_iter: int = 3) -> str:
                list_concat(s.v, list_transform(range(lm.L - s.len), z -> 0.0)) AS pad
         FROM ser s JOIN idx i ON i.sid = s.sid, lmax lm"""
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     ser AS (
         SELECT unique_id AS sid, list(CAST(y AS DOUBLE) ORDER BY ds) AS v,
                CAST(COUNT(*) AS INT) AS len
@@ -4035,7 +4002,6 @@ WITH RECURSIVE daily_cents AS (
 def q_kshape(spark, sf_dir):
     """Branch-free 3-round KShape on the exact-cents monthly panel
     (bit-identical inputs across engines; ref kshape.py:10-160)."""
-    from polars_ts_spark.operators import clustering
     return clustering.kshape(
         _monthly_panel_exact(spark, sf_dir), k=3, max_iter=3, exact=True)
 
@@ -4044,18 +4010,8 @@ def q_kshape(spark, sf_dir):
 # the exact-cents panel, id tie-breaks): the oracle nests the DP
 # distance recursion as a CTE body, ranks test-train neighbors and
 # majority-votes exactly like clustering.knn_classify.
-_KNN_PAIRS_CTE = """,
-    daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+_KNN_PAIRS_CTE = f""",
+    {_cents_ctes(4)},
     ser AS (
         SELECT unique_id AS sid, list(CAST(y AS DOUBLE) ORDER BY ds) AS v,
                CAST(COUNT(*) AS INT) AS len
@@ -4096,8 +4052,6 @@ SELECT id_1 AS unique_id, label AS label_pred FROM (
 
 @register("knn_classify_dtw", _KNN_ORACLE)
 def q_knn_classify(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
-    from polars_ts_spark.sources.datasets import load_table
     panel = _monthly_panel_exact(spark, sf_dir)
     sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("string").alias("unique_id"),
@@ -4146,7 +4100,6 @@ fc AS (
     """,
 )
 def q_conformal(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
     panel = materialize(supplier_daily_panel(spark, sf_dir))
     w = Window.partitionBy("unique_id").orderBy("ds")
     calib = panel.withColumn("y_hat", F.lag("y").over(w)).dropna()
@@ -4170,7 +4123,6 @@ def q_conformal(spark, sf_dir):
     """,
 )
 def q_weighted_ensemble(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
     panel = supplier_daily_panel(spark, sf_dir)
     f1 = baselines.naive_forecast(panel, h=7)
     f2 = baselines.moving_average_forecast(panel, h=7, window=28)
@@ -4201,8 +4153,6 @@ def q_weighted_ensemble(spark, sf_dir):
     """,
 )
 def q_reconcile_bottom_up(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-    from polars_ts_spark.sources.datasets import load_table
     panel = supplier_daily_panel(spark, sf_dir)
     fc = baselines.naive_forecast(panel, h=7)
     sup = load_table(spark, sf_dir, "supplier")
@@ -4243,7 +4193,7 @@ def _dim_hierarchy() -> dict[str, str] | None:
     """nation->region->total child->parent map from the (SF-invariant)
     dimension parquet; None when unavailable (oracle then skipped)."""
     try:
-        import duckdb
+        import duckdb  # local: the query map imports without DuckDB
         rows = duckdb.sql(
             "SELECT n_nationkey, n_regionkey FROM "
             "read_parquet('/root/testdata/sf0.001/nation.parquet')"
@@ -4262,7 +4212,6 @@ def _mint_oracle() -> str | None:
     h = _dim_hierarchy()
     if h is None:
         return None
-    from polars_ts_spark.operators.evaluation import mint_projection
     P, nodes = mint_projection(h, None)
     vals = ",\n          ".join(
         f"('{nodes[i]}', '{nodes[j]}', {float(P[i, j])!r})"
@@ -4280,7 +4229,6 @@ def _mint_oracle() -> str | None:
 
 
 def _node_panel(spark, sf_dir):
-    from polars_ts_spark.sources.datasets import load_table
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier")
     nat_dim = load_table(spark, sf_dir, "nation")
@@ -4497,55 +4445,62 @@ def _mint_cv_oracle(n_folds: int = 5, shrink: float = 0.5) -> str:
     )""")
 
 
-def _register_mint():
-    oracle = _mint_oracle()
-
-    @register("reconcile_mint", oracle)
-    def q_reconcile_mint(spark, sf_dir):
-        from polars_ts_spark.operators import evaluation
-        panel = _node_panel(spark, sf_dir)
-        fc = baselines.naive_forecast(panel, h=7)
-        h = _dim_hierarchy()
-        out = evaluation.reconcile_ols(fc, h)
-        return out.select("unique_id", "ds", F.round("y_hat", 6).alias("y_hat"))
-
-    @register("reconcile_permbu", _permbu_oracle())  # covariance-weighted MinTrace
-    def q_reconcile_permbu(spark, sf_dir):
-        from polars_ts_spark.operators import evaluation
-        # restrict the hierarchy to DATA-COVERED nations: dataless dim
-        # nodes would zero out whole covariance rows, making W singular
-        # (pinv then silently drops directions — ill-conditioned and
-        # engine-dependent); over observed nodes the shrunk W is PD and
-        # pinv == inv to machine precision, which the oracle's
-        # Gauss-Jordan reproduces. The panel feeds the forecast and the
-        # residuals; its checkpoint observes the covered nodes.
-        panel, row = materialize(_node_panel(spark, sf_dir),
-                                 F.collect_set("unique_id").alias("ids"))
-        present = set(row["ids"])
-        h = {c: p for c, p in _dim_hierarchy().items() if c in present}
-        fc = baselines.naive_forecast(panel, h=7)
-        w = Window.partitionBy("unique_id").orderBy("ds")
-        residuals = (
-            panel.withColumn("residual", F.col("y") - F.lag("y").over(w))
-            .where(F.col("residual").isNotNull())
-            .select("unique_id", "ds", "residual")
-        )
-        out = evaluation.reconcile_permbu(fc, h, residuals)
-        return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
-
-    @register("reconcile_mint_cv", _mint_cv_oracle())  # CV covariance MinTrace
-    def q_reconcile_mint_cv(spark, sf_dir):
-        from polars_ts_spark.operators import evaluation
-        panel = _node_panel(spark, sf_dir)
-        present = {r[0] for r in panel.select("unique_id").distinct().collect()}
-        h = {c: p for c, p in _dim_hierarchy().items() if c in present}
-        fc = baselines.naive_forecast(panel, h=7)
-        out = evaluation.reconcile_mint_cv(fc, h, panel, n_folds=5)
-        return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
+@register("reconcile_mint", _mint_oracle())
+def q_reconcile_mint(spark, sf_dir):
+    panel = _node_panel(spark, sf_dir)
+    fc = baselines.naive_forecast(panel, h=7)
+    h = _dim_hierarchy()
+    out = evaluation.reconcile_ols(fc, h)
+    return out.select("unique_id", "ds", F.round("y_hat", 6).alias("y_hat"))
 
 
-_register_mint()
+@register("reconcile_permbu", _permbu_oracle())  # covariance-weighted MinTrace
+def q_reconcile_permbu(spark, sf_dir):
+    # restrict the hierarchy to DATA-COVERED nations: dataless dim
+    # nodes would zero out whole covariance rows, making W singular
+    # (pinv then silently drops directions — ill-conditioned and
+    # engine-dependent); over observed nodes the shrunk W is PD and
+    # pinv == inv to machine precision, which the oracle's
+    # Gauss-Jordan reproduces. The panel feeds the forecast and the
+    # residuals; its checkpoint observes the covered nodes.
+    panel, row = materialize(_node_panel(spark, sf_dir),
+                             F.collect_set("unique_id").alias("ids"))
+    present = set(row["ids"])
+    h = {c: p for c, p in _dim_hierarchy().items() if c in present}
+    fc = baselines.naive_forecast(panel, h=7)
+    w = Window.partitionBy("unique_id").orderBy("ds")
+    residuals = (
+        panel.withColumn("residual", F.col("y") - F.lag("y").over(w))
+        .where(F.col("residual").isNotNull())
+        .select("unique_id", "ds", "residual")
+    )
+    out = evaluation.reconcile_permbu(fc, h, residuals)
+    return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
 
+
+@register("reconcile_mint_cv", _mint_cv_oracle())  # CV covariance MinTrace
+def q_reconcile_mint_cv(spark, sf_dir):
+    panel = _node_panel(spark, sf_dir)
+    present = {r[0] for r in panel.select("unique_id").distinct().collect()}
+    h = {c: p for c, p in _dim_hierarchy().items() if c in present}
+    fc = baselines.naive_forecast(panel, h=7)
+    out = evaluation.reconcile_mint_cv(fc, h, panel, n_folds=5)
+    return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
+
+
+def _quantile_scored(spark, sf_dir):
+    """The supplier daily panel with each series' own exact 10/50/90%
+    quantiles as columns q10, q50, q90 (``scored`` in _QPRED_CTE)."""
+    panel = supplier_daily_panel(spark, sf_dir)
+    q = panel.groupBy("unique_id").agg(
+        F.expr("percentile(y, 0.1)").alias("q10"),
+        F.expr("percentile(y, 0.5)").alias("q50"),
+        F.expr("percentile(y, 0.9)").alias("q90"),
+    )
+    return panel.join(q, "unique_id")
+
+
+_QCOLS = {0.1: "q10", 0.5: "q50", 0.9: "q90"}
 
 _QPRED_CTE = PANEL_CTE + """,
 q AS (
@@ -4591,15 +4546,10 @@ def q_crps(spark, sf_dir):
     """,
 )
 def q_calibration(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-    panel = supplier_daily_panel(spark, sf_dir)
-    q = panel.groupBy("unique_id").agg(
-        F.expr("percentile(y, 0.1)").alias("q10"),
-        F.expr("percentile(y, 0.5)").alias("q50"),
-        F.expr("percentile(y, 0.9)").alias("q90"),
-    )
-    scored = panel.join(q, "unique_id")
-    return evaluation.calibration_table(scored, {0.1: "q10", 0.5: "q50", 0.9: "q90"})
+    scored = _quantile_scored(spark, sf_dir).withColumnsRenamed(
+        {"q10": "q_0.1", "q50": "q_0.5", "q90": "q_0.9"})
+    return metrics.calibration_table(scored).select(
+        F.col("nominal").alias("quantile"), F.col("nominal").alias("expected"), "observed")
 
 
 @register(
@@ -4616,11 +4566,10 @@ def q_calibration(spark, sf_dir):
     """,
 )
 def q_bias_correct(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
     panel = supplier_daily_panel(spark, sf_dir)
     w = Window.partitionBy("unique_id").orderBy("ds")
     calib = panel.withColumn("y_hat", F.lag("y").over(w)).dropna()
-    return evaluation.bias_correct(calib)
+    return metrics.bias_correct(calib)
 
 
 def _recursive_calendar_oracle() -> str:
@@ -4638,17 +4587,7 @@ def _recursive_calendar_oracle() -> str:
              "CASE WHEN isodow(ds) IN (6, 7) THEN 1.0 ELSE 0.0 END"]
     d = len(feats)
     k = d + 1
-    aggs = []
-    for i in range(d):
-        for j in range(i, d):
-            ridge = " + 1e-6" if i == j else ""
-            aggs.append(f"SUM(f{i} * f{j}){ridge} AS a_{i}_{j}")
-        aggs.append(f"SUM(f{i}) AS a_{i}_{d}")
-        aggs.append(f"SUM(f{i} * yt) AS b_{i}_0")
-    aggs.append(f"CAST(COUNT(*) AS DOUBLE) AS a_{d}_{d}")
-    aggs.append(f"SUM(yt) AS b_{d}_0")
-    mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}"
-                      for i in range(k) for j in range(i + 1, k)]
+    aggs, mirror = _ridge_normal_aggs(d)
     # decode-step features from the step timestamp ts_n; lag1 is the
     # rolling tail's last slot, lag7 its first (7-element ring buffer)
     step_feats = ["d.tail[7]", "d.tail[1]",
@@ -4698,7 +4637,6 @@ def _recursive_calendar_oracle() -> str:
 
 @register("recursive_forecast", _recursive_calendar_oracle())
 def q_recursive_forecast(spark, sf_dir):
-    from polars_ts_spark.operators.pipeline import RecursiveForecaster
     panel = materialize(supplier_daily_panel(spark, sf_dir))
     out = RecursiveForecaster(lags=[1, 7], calendar=True).fit(panel).predict(panel, h=7)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
@@ -4768,7 +4706,6 @@ _RECURSIVE_LINEAR_ORACLE = (
 
 @register("recursive_forecast_linear", _RECURSIVE_LINEAR_ORACLE)
 def q_recursive_forecast_linear(spark, sf_dir):
-    from polars_ts_spark.operators.pipeline import RecursiveForecaster
     panel = supplier_daily_panel(spark, sf_dir)
     out = RecursiveForecaster(lags=[1, 7], calendar=False).fit(panel).predict(panel, h=7)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
@@ -4837,7 +4774,6 @@ _DIRECT_LINEAR_ORACLE = (
 
 @register("direct_forecast_linear", _DIRECT_LINEAR_ORACLE)
 def q_direct_forecast_linear(spark, sf_dir):
-    from polars_ts_spark.operators.pipeline import DirectForecaster
     panel = supplier_daily_panel(spark, sf_dir)
     out = DirectForecaster(lags=[1, 7], calendar=False).fit(panel, h=7).predict(panel)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
@@ -4855,16 +4791,7 @@ def _direct_calendar_oracle(h: int = 7) -> str:
               "CASE WHEN isodow(ds) IN (6, 7) THEN 1.0 ELSE 0.0 END"]
     d = 8
     k = d + 1
-    aggs = []
-    for i in range(d):
-        for j in range(i, d):
-            ridge = " + 1e-6" if i == j else ""
-            aggs.append(f"SUM(f{i} * f{j}){ridge} AS a_{i}_{j}")
-        aggs.append(f"SUM(f{i}) AS a_{i}_{d}")
-        aggs.append(f"SUM(f{i} * tgt) AS b_{i}_0")
-    aggs.append(f"CAST(COUNT(*) AS DOUBLE) AS a_{d}_{d}")
-    aggs.append(f"SUM(tgt) AS b_{d}_0")
-    mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}" for i in range(k) for j in range(i + 1, k)]
+    aggs, mirror = _ridge_normal_aggs(d, "tgt")
     chains, picks = [], []
     for s in range(1, h + 1):
         chains.append(
@@ -4917,7 +4844,6 @@ def _direct_calendar_oracle(h: int = 7) -> str:
 
 @register("direct_forecast", _direct_calendar_oracle())
 def q_direct_forecast(spark, sf_dir):
-    from polars_ts_spark.operators.pipeline import DirectForecaster
     panel = supplier_daily_panel(spark, sf_dir)
     out = DirectForecaster(lags=[1, 7], calendar=True).fit(panel, h=7).predict(panel)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
@@ -4934,16 +4860,7 @@ def _recursive_cov_oracle(h: int = 7) -> str:
     days), else 0. Rounded 2dp both sides."""
     c7 = repr(2 * 3.141592653589793 / 7)
     d = 5
-    aggs = []
-    for i in range(d):
-        for j in range(i, d):
-            ridge = " + 1e-6" if i == j else ""
-            aggs.append(f"SUM(f{i} * f{j}){ridge} AS a_{i}_{j}")
-        aggs.append(f"SUM(f{i}) AS a_{i}_{d}")
-        aggs.append(f"SUM(f{i} * yt) AS b_{i}_0")
-    aggs.append(f"CAST(COUNT(*) AS DOUBLE) AS a_{d}_{d}")
-    aggs.append(f"SUM(yt) AS b_{d}_0")
-    mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}" for i in range(d + 1) for j in range(i + 1, d + 1)]
+    aggs, mirror = _ridge_normal_aggs(d)
     nn = " AND ".join(f"f{i} IS NOT NULL" for i in range(d))
     return f"""
 WITH RECURSIVE panel AS (
@@ -5013,8 +4930,6 @@ def q_recursive_forecast_covariates(spark, sf_dir):
     """Past covariate (order count) + future covariate (day-of-week
     sine, known over the horizon via future_df) through the recursive
     pipeline (ref pipeline.py:399-404, multistep.py:61-252)."""
-    from polars_ts_spark.operators.pipeline import RecursiveForecaster
-    from polars_ts_spark.sources.datasets import load_table
     li = load_table(spark, sf_dir, "lineitem")
     panel = (
         li.groupBy(
@@ -5053,17 +4968,7 @@ def _global_forecast_oracle(h: int = 7) -> str:
     the same per-series recursive CTE with the series' constant code.
     Feature order [lag1, lag7, id_code, intercept] (pipeline.py:411-466:
     feat_cols reorders __id_code last before the intercept)."""
-    aggs = []
-    feats = ["f0", "f1", "f2"]
-    for i, f in enumerate(feats):
-        for j in range(i, 3):
-            ridge = " + 1e-6" if i == j else ""
-            aggs.append(f"SUM({f} * f{j}){ridge} AS a_{i}_{j}")
-        aggs.append(f"SUM({f}) AS a_{i}_3")
-        aggs.append(f"SUM({f} * yt) AS b_{i}_0")
-    aggs.append("CAST(COUNT(*) AS DOUBLE) AS a_3_3")
-    aggs.append("SUM(yt) AS b_3_0")
-    mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}" for i in range(4) for j in range(i + 1, 4)]
+    aggs, mirror = _ridge_normal_aggs(3)
     return (
         PANEL_CTE.replace("WITH", "WITH RECURSIVE", 1) + ", "
         + _FREQ_CTE.format(h=h) + f""",
@@ -5107,7 +5012,6 @@ def _global_forecast_oracle(h: int = 7) -> str:
 
 @register("global_forecast", _global_forecast_oracle())
 def q_global_forecast(spark, sf_dir):
-    from polars_ts_spark.operators.pipeline import GlobalForecaster
     panel = materialize(supplier_daily_panel(spark, sf_dir))
     out = GlobalForecaster(lags=[1, 7]).fit(panel).predict(panel, h=7)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
@@ -5119,16 +5023,7 @@ def _pipeline_log_oracle(h: int = 7) -> str:
     target], a 4x4 ridge solve, recursive decode whose rolling feature
     is the running mean of the 7-tail — and expm1 maps back at the end
     (pipeline.py:387-409)."""
-    aggs = []
-    for i in range(3):
-        for j in range(i, 3):
-            ridge = " + 1e-6" if i == j else ""
-            aggs.append(f"SUM(f{i} * f{j}){ridge} AS a_{i}_{j}")
-        aggs.append(f"SUM(f{i}) AS a_{i}_3")
-        aggs.append(f"SUM(f{i} * yt) AS b_{i}_0")
-    aggs.append("CAST(COUNT(*) AS DOUBLE) AS a_3_3")
-    aggs.append("SUM(yt) AS b_3_0")
-    mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}" for i in range(4) for j in range(i + 1, 4)]
+    aggs, mirror = _ridge_normal_aggs(3)
     return (
         PANEL_CTE.replace("WITH", "WITH RECURSIVE", 1) + ", "
         + _FREQ_CTE.format(h=h) + f""",
@@ -5166,7 +5061,6 @@ def _pipeline_log_oracle(h: int = 7) -> str:
 
 @register("forecast_pipeline_log", _pipeline_log_oracle())
 def q_forecast_pipeline(spark, sf_dir):
-    from polars_ts_spark.operators.pipeline import ForecastPipeline
     panel = supplier_daily_panel(spark, sf_dir)
     m = ForecastPipeline(lags=[1, 7], rolling_windows=[7], target_transform="log").fit(panel)
     out = m.predict(panel, h=7)
@@ -5263,19 +5157,10 @@ WITH RECURSIVE panel AS (
 
 @register("quantile_regression", _quantile_reg_oracle())
 def q_quantile_regression(spark, sf_dir):
-    from polars_ts_spark.operators.pipeline import QuantileRegressor
-    from polars_ts_spark.sources.datasets import load_table
     # exact-cents panel: the IRLS weight map is discontinuous at r = 0,
     # so the engines must see bit-identical inputs for the oracle's
-    # replayed trajectory to stay on track
-    li = load_table(spark, sf_dir, "lineitem")
-    panel = li.groupBy(
-        F.col("l_suppkey").cast("string").alias("unique_id"),
-        F.date_trunc("day", F.col("l_shipdate")).alias("ds"),
-    ).agg((F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).cast("double")
-           / F.lit(100.0)).alias("y"))
-    # fit and predict both read the narrow (id, ds, y) panel
-    panel = materialize(panel)
+    # replayed trajectory to stay on track; fit and predict both read it
+    panel = materialize(_daily_panel_exact(spark, sf_dir))
     out = QuantileRegressor(quantiles=(0.1, 0.5, 0.9), lags=(1, 7), n_irls=10).fit(panel).predict(panel, h=7)
     return out.select(
         "unique_id", "ds",
@@ -5292,16 +5177,7 @@ def _stacking_oracle(h: int = 7) -> str:
     StackingForecaster). Rounded 2dp both sides."""
 
     def ridge_chain(src: str, pre: str) -> str:
-        aggs = []
-        for i in range(2):
-            for j in range(i, 2):
-                ridge = " + 1e-6" if i == j else ""
-                aggs.append(f"SUM(f{i} * f{j}){ridge} AS a_{i}_{j}")
-            aggs.append(f"SUM(f{i}) AS a_{i}_2")
-            aggs.append(f"SUM(f{i} * yt) AS b_{i}_0")
-        aggs.append("CAST(COUNT(*) AS DOUBLE) AS a_2_2")
-        aggs.append("SUM(yt) AS b_2_0")
-        mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}" for i in range(3) for j in range(i + 1, 3)]
+        aggs, mirror = _ridge_normal_aggs(2)
         return f"""
     {pre}feats AS (
         SELECT y AS yt, LAG(y, 1) OVER w{pre} AS f0, LAG(y, 7) OVER w{pre} AS f1
@@ -5312,12 +5188,7 @@ def _stacking_oracle(h: int = 7) -> str:
                  WHERE f0 IS NOT NULL AND f1 IS NOT NULL),
     {pre}nm AS (SELECT {', '.join(mirror)} FROM {pre}nmu),
     {_gauss_solve_ctes(3, 1, f'{pre}nm', prefix=pre)},
-    {pre}freq AS (
-        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
-        FROM (SELECT unique_id,
-                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
-              FROM {src}) GROUP BY 1
-    ),
+    {_freq_cte(src, pre + 'freq')},
     {pre}g AS (SELECT unique_id, MAX(ds) AS last_ts, max_by(y, ds) AS last_y,
                       list(y ORDER BY ds)[-7:] AS tail
                FROM {src} GROUP BY 1),
@@ -5369,8 +5240,6 @@ def _stacking_oracle(h: int = 7) -> str:
 
 @register("stacking_forecast", _stacking_oracle())
 def q_stacking(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-    from polars_ts_spark.operators.pipeline import RecursiveForecaster
     panel = materialize(supplier_daily_panel(spark, sf_dir))
 
     def ridge_fn(train, h):
@@ -5449,8 +5318,6 @@ _BACKTEST_ORACLE = PANEL_CTE + """,
 
 @register("backtest_summary", _BACKTEST_ORACLE)
 def q_backtest(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-
     def naive_fn(train, h):
         return baselines.naive_forecast(train, h=h)
 
@@ -5490,7 +5357,6 @@ _CV_SPLITS_ORACLE = PANEL_CTE + """,
 
 @register("cv_expanding_splits", _CV_SPLITS_ORACLE)
 def q_cv_splits(spark, sf_dir):
-    from polars_ts_spark.operators.cv import expanding_window_cv
     panel = supplier_daily_panel(spark, sf_dir)
     rows = []
     for fold, (train, test) in enumerate(expanding_window_cv(panel, h=7, n_splits=3)):
@@ -5578,8 +5444,6 @@ _COMPARE_MODELS_ORACLE = PANEL_CTE + """,
 
 @register("compare_models", _COMPARE_MODELS_ORACLE)
 def q_compare_models(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-
     def naive_fn(train, h):
         return baselines.naive_forecast(train, h=h)
 
@@ -5632,7 +5496,6 @@ _STREAMING_ETS_ORACLE = (
 
 @register("streaming_ets_state", _STREAMING_ETS_ORACLE)
 def q_streaming_ets(spark, sf_dir):
-    from polars_ts_spark.streaming.structured import streaming_ets_update
     return streaming_ets_update(supplier_daily_panel(spark, sf_dir), method="holt")
 
 
@@ -5669,7 +5532,6 @@ _STREAMING_KALMAN_ORACLE = (
 
 @register("streaming_kalman_state", _STREAMING_KALMAN_ORACLE)
 def q_streaming_kalman(spark, sf_dir):
-    from polars_ts_spark.streaming.structured import streaming_kalman_update
     out = streaming_kalman_update(supplier_daily_panel(spark, sf_dir))
     return out.select("unique_id", F.round("x", 6).alias("x"),
                       F.round("p", 9).alias("p"), "n_obs")
@@ -5689,25 +5551,14 @@ def q_streaming_kalman(spark, sf_dir):
     """,
 )
 def q_event_window_agg(spark, sf_dir):
-    from polars_ts_spark.sources.datasets import user_event_panel
-    from polars_ts_spark.streaming.structured import tumbling_event_aggregate
     return tumbling_event_aggregate(user_event_panel(spark, sf_dir), "1 hour")
 
 
 _STREAMING_GLOBAL_ORACLE = """
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents
-        WHERE CAST(unique_id AS BIGINT) % 5 = 0
-        GROUP BY 1, 2
-    ),
+WITH RECURSIVE """ + _cents_ctes(4, """
+    WHERE CAST(unique_id AS BIGINT) % 5 = 0
+    GROUP BY 1, 2
+)""") + """,
     rows0 AS (
         SELECT unique_id, y,
                ROW_NUMBER() OVER (PARTITION BY unique_id ORDER BY ds) AS rn,
@@ -5769,7 +5620,6 @@ def q_streaming_global(spark, sf_dir):
     replays every weight update in one recursion (one step per
     sample), and an unbounded stream would take the DuckDB recursion
     quadratic scan time. The operator itself has no such bound."""
-    from polars_ts_spark.streaming.online import StreamingGlobalForecaster
     panel = _monthly_panel_exact(spark, sf_dir).filter(
         F.col("unique_id").cast("long") % 5 == 0)
     m = StreamingGlobalForecaster(lags=(1, 2), window_size=60)
@@ -5927,12 +5777,7 @@ WITH RECURSIVE panel AS (
            CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS y
     FROM lineitem GROUP BY 1, 2
 ),
-    freq AS (
-        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
-        FROM (SELECT unique_id,
-                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
-              FROM panel) GROUP BY 1
-    ),
+    {_freq_cte('panel')},
     g AS (SELECT unique_id, MAX(ds) AS last_ts, max_by(y, ds) AS last_y FROM panel GROUP BY 1),
     steps AS (SELECT UNNEST(generate_series(1, {h})) AS step),
     series AS (
@@ -6007,15 +5852,7 @@ WITH RECURSIVE panel AS (
 
 @register("arima_forecast", _arima_ar1_oracle())
 def q_arima(spark, sf_dir):
-    from polars_ts_spark.operators import arima
-    from polars_ts_spark.sources.datasets import load_table
-    li = load_table(spark, sf_dir, "lineitem")
-    panel = li.groupBy(
-        F.col("l_suppkey").cast("string").alias("unique_id"),
-        F.date_trunc("day", F.col("l_shipdate")).alias("ds"),
-    ).agg((F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).cast("double")
-           / F.lit(100.0)).alias("y"))
-    out = arima.arima_forecast(panel, h=7, order=(1, 1, 0))
+    out = arima.arima_forecast(_daily_panel_exact(spark, sf_dir), h=7, order=(1, 1, 0))
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
 
 
@@ -6255,17 +6092,7 @@ def _auto_arima_ar_ctes(h: int = 6, max_p: int = 3, seed_crit: float = 0.463) ->
 
 
 _AA_PRELUDE = """
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE """ + _cents_ctes(4) + """,
     pan AS MATERIALIZED (
         SELECT unique_id, CAST(y AS DOUBLE) AS y,
                ROW_NUMBER() OVER (PARTITION BY unique_id ORDER BY ds) AS rn,
@@ -6294,9 +6121,7 @@ def q_auto_arima(spark, sf_dir):
     on the exact-cents monthly panel — the configuration in which every
     candidate fit is closed form and the full stepwise trajectory is
     engine-replicable (ref models/arima.py:22-87)."""
-    from pyspark.sql import Window
 
-    from polars_ts_spark.operators import arima
     out = arima.auto_arima(
         _monthly_panel_exact(spark, sf_dir), h=6,
         max_p=3, max_q=0, season_length=0, method="css")
@@ -6400,17 +6225,7 @@ def _dec_oracle(seed: int = 42, dim: int = 4, enc_iter: int = 30,
         for c in range(3)
     )
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     ser AS (
         SELECT unique_id AS sid, list(CAST(y AS DOUBLE) ORDER BY ds) AS v,
                CAST(COUNT(*) AS INT) AS len
@@ -6546,7 +6361,6 @@ def q_dec_cluster(spark, sf_dir):
     """DEC with the engine-replicable power encoder, branch-free
     refinement, on the exact-cents monthly panel (ref
     deep_cluster.py:32-231)."""
-    from polars_ts_spark.operators.deep_cluster import DECClusterer
     return DECClusterer(n_clusters=3, embedding_dim=4, encoder="power",
                         exact=True).fit_predict(_monthly_panel_exact(spark, sf_dir))
 
@@ -6620,7 +6434,6 @@ def q_window_model_forecast(spark, sf_dir):
     hook) with the torch-free closed-form window model (ref dl/nbeats.py
     predict loop; torch nets plug into the same batch_forecast). Oracle:
     same ridge system solved by unrolled Gaussian elimination in SQL."""
-    from polars_ts_spark.operators.deep import RidgeWindowForecaster
     panel = supplier_daily_panel(spark, sf_dir)
     out = RidgeWindowForecaster(h=7, input_size=14).fit(panel).predict(panel)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
@@ -6662,17 +6475,7 @@ def _sarima_hr_oracle(h: int = 6, s: int = 12, m: int = 14,
         f"LAG(w, {i}) OVER (PARTITION BY unique_id ORDER BY t) AS l{i}"
         for i in range(1, m + 1))
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
     pan AS MATERIALIZED (
         SELECT unique_id, ds, CAST(y AS DOUBLE) AS y,
                ROW_NUMBER() OVER (PARTITION BY unique_id ORDER BY ds) AS rn,
@@ -6759,9 +6562,7 @@ def q_sarima(spark, sf_dir):
     """SARIMA(0,1,1)(1,0,0,12) with the closed-form Hannan-Rissanen
     estimator on the exact-cents monthly panel; output keyed by step
     (ref models/arima.py:95-182)."""
-    from pyspark.sql import Window
 
-    from polars_ts_spark.operators import arima
     out = arima.arima_forecast(
         _monthly_panel_exact(spark, sf_dir), h=6,
         order=(0, 1, 1), seasonal_order=(1, 0, 0, 12), method="hr")
@@ -6780,8 +6581,6 @@ def q_sarima(spark, sf_dir):
 # max pooled per kernel. Exact-cents panel input so the conv > 0
 # branch can't flip on an aggregation-order ulp.
 def _rocket_oracle(n_kernels: int, seed: int = 42) -> str:
-    from polars_ts_spark.operators.rocket import generate_rocket_kernels
-
     blocks = []
     for ki, (w, length, bias, dilation, padding) in enumerate(
         generate_rocket_kernels(n_kernels, seed)
@@ -6807,18 +6606,8 @@ def _rocket_oracle(n_kernels: int, seed: int = 42) -> str:
            CASE WHEN {out_len} < 1 THEN 0.0 ELSE ROUND(list_max(__conv), 2) END AS mx
     FROM (SELECT sid, v, xp, {conv} AS __conv
           FROM (SELECT sid, v, {xp} AS xp FROM ser))""")
-    prelude = """
-WITH daily_cents AS (
-    SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-           date_trunc('day', l_shipdate) AS ds,
-           SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-    FROM lineitem GROUP BY 1, 2
-),
-monthly AS (
-    SELECT unique_id, date_trunc('month', ds) AS ds,
-           CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-    FROM daily_cents GROUP BY 1, 2
-),
+    prelude = f"""
+WITH {_cents_ctes()},
 ser AS (
     SELECT unique_id AS sid, list(y ORDER BY ds) AS v FROM monthly GROUP BY 1
 )"""
@@ -6827,7 +6616,6 @@ ser AS (
 
 @register("rocket_features", _rocket_oracle(50))
 def q_rocket(spark, sf_dir):
-    from polars_ts_spark.operators import rocket
     wide = rocket.rocket_features(_monthly_panel_exact(spark, sf_dir), n_kernels=50)
     # unpivot to (id, kernel, ppv, max): a long shape both engines can
     # sort-and-hash; max rounded 2dp (conv sums are ~1e5-scale floats)
@@ -6844,8 +6632,6 @@ def q_rocket(spark, sf_dir):
 # ulp (no conv value lies strictly between the two middle order
 # statistics), so PPV is exact on both engines.
 def _minirocket_oracle(dilations: tuple[int, ...]) -> str:
-    from polars_ts_spark.operators.rocket import _minirocket_patterns
-
     blocks = []
     fi = 0
     for d in dilations:
@@ -6874,18 +6660,8 @@ def _minirocket_oracle(dilations: tuple[int, ...]) -> str:
               FROM ser)
     )""")
             fi += 1
-    prelude = """
-WITH daily_cents AS (
-    SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-           date_trunc('day', l_shipdate) AS ds,
-           SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-    FROM lineitem GROUP BY 1, 2
-),
-monthly AS (
-    SELECT unique_id, date_trunc('month', ds) AS ds,
-           CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-    FROM daily_cents GROUP BY 1, 2
-),
+    prelude = f"""
+WITH {_cents_ctes()},
 ser AS (
     SELECT unique_id AS sid, list(y ORDER BY ds) AS v FROM monthly GROUP BY 1
 )"""
@@ -6894,7 +6670,6 @@ ser AS (
 
 @register("minirocket_features", _minirocket_oracle((1, 2)))
 def q_minirocket(spark, sf_dir):
-    from polars_ts_spark.operators import rocket
     wide = rocket.minirocket_features(_monthly_panel_exact(spark, sf_dir), dilations=(1, 2))
     n = 168  # 84 patterns x 2 dilations
     stack = ", ".join(f"{i}, minirocket_{i}" for i in range(n))
@@ -6912,18 +6687,8 @@ def _synth_control_oracle(n_donors: int = 10, n_iter: int = 2000) -> str:
     compounding; 2dp rounding on both sides."""
     n1 = n_donors + 1
     idx = "[" + ", ".join(str(k) for k in range(1, n_donors + 1)) + "]"
-    return """
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    )""" + f""",
+    return f"""
+WITH RECURSIVE {_cents_ctes(4)},
     ids11 AS (
         SELECT unique_id, ROW_NUMBER() OVER (ORDER BY unique_id) AS ridx
         FROM (SELECT DISTINCT unique_id FROM monthly)
@@ -6987,8 +6752,6 @@ WITH RECURSIVE daily_cents AS (
 
 @register("synthetic_control", _synth_control_oracle(n_donors=5))
 def q_synth_control(spark, sf_dir):
-    import numpy as np
-    from polars_ts_spark.operators import causal
     panel = _monthly_panel_exact(spark, sf_dir)
     ids = sorted(r[0] for r in panel.select("unique_id").distinct().collect())[:6]
     panel = panel.filter(F.col("unique_id").isin(ids))
@@ -7007,19 +6770,9 @@ def q_synth_control(spark, sf_dir):
 # a long Kalman recursion, so the INPUT must be bit-identical not just
 # across engines but across Spark RUNS — AVG(double) varies run-to-run
 # with partition order, and a value near a 0.00005 boundary flips the
-# rounding (the r5->r6 flaky hash).
-_MONTHLY_EXACT_CTE = """
-WITH daily_cents AS (
-    SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-           date_trunc('day', l_shipdate) AS ds,
-           SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-    FROM lineitem GROUP BY 1, 2
-),
-monthly AS (
-    SELECT unique_id, date_trunc('month', ds) AS ds,
-           CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-    FROM daily_cents GROUP BY 1, 2
-)
+# rounding.
+_MONTHLY_EXACT_CTE = f"""
+WITH {_cents_ctes()}
 """
 
 _CAUSAL_IMPACT_ORACLE = _MONTHLY_EXACT_CTE.replace("WITH", "WITH RECURSIVE", 1) + """,
@@ -7093,7 +6846,6 @@ _CAUSAL_IMPACT_ORACLE = _MONTHLY_EXACT_CTE.replace("WITH", "WITH RECURSIVE", 1) 
 
 @register("causal_impact", _CAUSAL_IMPACT_ORACLE)
 def q_causal_impact(spark, sf_dir):
-    from polars_ts_spark.operators import causal
     panel = _monthly_panel_exact(spark, sf_dir)
     times = sorted(r[0] for r in panel.select("ds").distinct().collect())
     cut = times[int(len(times) * 0.8)]
@@ -7108,18 +6860,8 @@ def q_causal_impact(spark, sf_dir):
 # phi_j) (imaging.py:36-40) — so the full image verifies cell-by-cell
 # against SQL. Exact-cents panel input (order-independent floats); both
 # engines round 6dp because libm acos/cos may differ in the last ulp.
-_GASF_ORACLE = """
-WITH daily_cents AS (
-    SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-           date_trunc('day', l_shipdate) AS ds,
-           SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-    FROM lineitem GROUP BY 1, 2
-),
-monthly AS (
-    SELECT unique_id, date_trunc('month', ds) AS ds,
-           CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-    FROM daily_cents GROUP BY 1, 2
-),
+_GASF_ORACLE = f"""
+WITH {_cents_ctes()},
 ser AS (
     SELECT unique_id AS sid, list(y ORDER BY ds) AS v FROM monthly GROUP BY 1
 ),
@@ -7138,7 +6880,6 @@ FROM scaled, unnest(range(1, n + 1)) AS gi(i), unnest(range(1, n + 1)) AS gj(j)
 
 @register("gasf_image", _GASF_ORACLE)
 def q_gasf(spark, sf_dir):
-    from polars_ts_spark.operators import imaging
     img = imaging.series_to_image(_monthly_panel_exact(spark, sf_dir), "gasf")
     return (
         img.select("unique_id", F.posexplode("image").alias("i", "__row"))
@@ -7188,7 +6929,6 @@ _SCALOGRAM_ORACLE = _MONTHLY_CTE + """,
 
 @register("scalogram_image", _SCALOGRAM_ORACLE)
 def q_scalogram(spark, sf_dir):
-    from polars_ts_spark.operators import imaging
     img = imaging.series_to_image(_monthly_panel(spark, sf_dir), "scalogram", n_scales=16)
     return (
         img.select("unique_id", F.posexplode("image").alias("i", "__row"))
@@ -7204,21 +6944,13 @@ def _vision_embed_oracle(dim: int) -> str:
     rows, quantize to float32 like the kernel, round to 6 dp. The
     projection sum order is free because the float32 quantization
     absorbs sub-ulp double differences."""
-    from polars_ts_spark.operators.imaging import embed_weight
 
     d_in = 48  # stub decode: 4x4x3
     vals = ", ".join(
         f"({i}, {j}, {embed_weight(i, j, d_in)!r})"
         for i in range(d_in) for j in range(dim)
     )
-    return f"""
-    WITH d AS (SELECT doc_id, md5(text) AS hx FROM documents),
-    bytes AS (
-        SELECT doc_id, i.i,
-               16 * (strpos('0123456789abcdef', substring(hx, 2 * i.i + 1, 1)) - 1)
-                 + (strpos('0123456789abcdef', substring(hx, 2 * i.i + 2, 1)) - 1) AS b
-        FROM d, (SELECT UNNEST(generate_series(0, 15)) AS i) i
-    ),
+    return f"""{_MD5_BYTES_CTES},
     px AS (
         SELECT b.doc_id, j.j AS i,
                CAST(CAST(b.b AS FLOAT) / CAST(255.0 AS FLOAT) AS DOUBLE) AS p
@@ -7239,7 +6971,6 @@ def _vision_embed_oracle(dim: int) -> str:
 
 @register("vision_embeddings", _vision_embed_oracle(32))
 def q_vision_embeddings(spark, sf_dir):
-    from polars_ts_spark.operators import imaging, multimodal
     decoded = multimodal.decode_image(multimodal.attach_binary_payload(_docs(spark, sf_dir)))
     emb = imaging.vision_embeddings(decoded, imaging.deterministic_embed_hook(32), dim=32)
     return emb.select(
@@ -7297,7 +7028,6 @@ _RQA_ORACLE = _MONTHLY_CTE + """,
 
 @register("rqa_features", _RQA_ORACLE)
 def q_rqa(spark, sf_dir):
-    from polars_ts_spark.operators import imaging
     out = imaging.rqa_features(_monthly_panel(spark, sf_dir), epsilon=10000.0)
     return out.select(
         "unique_id",
@@ -7348,7 +7078,6 @@ _SIGNATURE_ORACLE = _MONTHLY_CTE + """,
 
 @register("signature_features", _SIGNATURE_ORACLE)
 def q_signature(spark, sf_dir):
-    from polars_ts_spark.operators import imaging
     out = imaging.signature_features(_monthly_panel(spark, sf_dir))
     return out.select(
         "unique_id", *[F.round(f"sig_{i}", 6).alias(f"sig_{i}") for i in range(6)]
@@ -7493,9 +7222,6 @@ def q_iforest(spark, sf_dir):
     """md5-draw isolation forest on 4dp-rounded panel features (the
     rounding pins split branches across engines; ref
     anomaly_forest.py:10-101)."""
-    from pyspark.sql import Window
-
-    from polars_ts_spark.operators import anomaly
 
     p = supplier_daily_panel(spark, sf_dir)
     w = Window.partitionBy("unique_id").orderBy("ds")
@@ -7566,7 +7292,6 @@ _BAYES_ANOMALY_ORACLE = PANEL_CTE + """,
 
 @register("bayesian_anomaly", _BAYES_ANOMALY_ORACLE)
 def q_bayes_anomaly(spark, sf_dir):
-    from polars_ts_spark.operators import anomaly
     out = anomaly.bayesian_anomaly_score(supplier_daily_panel(spark, sf_dir))
     return out.withColumn("anomaly_score", F.round("anomaly_score", 6))
 
@@ -7616,7 +7341,6 @@ def _theta_oracle(h: int, a_: float) -> str:
 
 @register("theta_forecast", _theta_oracle(7, 0.3))
 def q_theta(spark, sf_dir):
-    from polars_ts_spark.operators import theta
     out = theta.theta_forecast(supplier_daily_panel(spark, sf_dir), h=7)
     return out.select("unique_id", "ds", F.round("y_hat", 4).alias("y_hat"))
 
@@ -7801,7 +7525,6 @@ def q_anomaly_consensus(spark, sf_dir):
     """Distributed multi-detector anomaly consensus
     (agents/anomaly.py): z-score + median-deviation + MAD agents
     voting per row over trailing windows."""
-    from polars_ts_spark.agents.anomaly import consensus_anomalies
 
     out = consensus_anomalies(supplier_daily_panel(spark, sf_dir))
     return out.select(
@@ -7843,7 +7566,6 @@ def _portfolio_alloc_oracle(ws: int = 20, decay: float = 0.94) -> str:
     coefficients the numpy agent computes, shift-normalized weights
     (with the env's extra renormalization division) and the per-step
     portfolio return."""
-    import numpy as np
 
     coef = np.array([decay ** (ws - 1 - i) for i in range(ws)])
     coef = coef / coef.sum()
@@ -7900,7 +7622,6 @@ def q_portfolio_allocation(spark, sf_dir):
     rolling-vol risk, EWMA expected returns, shift-normalized
     allocation and realized portfolio return over supplier revenue
     treated as positive prices."""
-    from polars_ts_spark.agents.marl import portfolio_allocation_panel
 
     out = portfolio_allocation_panel(supplier_daily_panel(spark, sf_dir))
     return out.select(
@@ -7963,8 +7684,6 @@ def q_machine_health(spark, sf_dir):
     warmup-baseline degradation and closed-form trend extrapolation,
     every machine distributed; user event streams stand in for sensor
     channels."""
-    from polars_ts_spark.agents.iiot import machine_health_panel
-    from polars_ts_spark.sources.datasets import load_table
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     # events.ts is TIMESTAMP(NANOS) parquet, bigint nanos under
@@ -8038,8 +7757,6 @@ def q_clinical_escalation(spark, sf_dir):
     Catalyst CASE expressions over vitals deterministically derived
     from the events stream (the container has no clinical corpus; the
     derivation is identical modular arithmetic on both engines)."""
-    from polars_ts_spark.agents.healthcare import clinical_escalation
-    from polars_ts_spark.sources.datasets import load_table
 
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     vitals = ev.select(
@@ -8131,9 +7848,6 @@ def q_supply_chain(spark, sf_dir):
     baseline + promo lift (day-of-month <= 10 history flag, every-3rd-
     step schedule) + base-stock reorder + bullwhip, every supplier
     series in one distributed pass."""
-    import numpy as np
-
-    from polars_ts_spark.agents.supply_chain import SupplyChainOrchestrator
 
     panel = supplier_daily_panel(spark, sf_dir).withColumn(
         "promo", (F.dayofmonth("ds") <= 10).cast("boolean"))
@@ -8155,7 +7869,6 @@ def q_energy_grid(spark, sf_dir):
     suppliers as households bucketed into grids, seasonal-naive
     per-household forecasts reconciled bottom-up to grid/region. The
     oracle re-derives the last-cycle tiling and the rollup sums."""
-    from polars_ts_spark.agents.energy import EnergyGridOrchestrator, GridHierarchy
 
     panel = supplier_daily_panel(spark, sf_dir)
     ids = sorted(r[0] for r in panel.select("unique_id").distinct().collect())
@@ -8173,7 +7886,6 @@ def q_agent_scientist(spark, sf_dir):
     """Curate -> plan -> forecast -> report end-to-end on the supplier
     panel; the query returns the chain's blended/selected predictions
     (agents/scientist.py)."""
-    from polars_ts_spark.agents import TimeSeriesScientist
 
     panel = supplier_daily_panel(spark, sf_dir)
     res = TimeSeriesScientist(horizon=7).run(panel)
@@ -8400,9 +8112,7 @@ def q_scum(spark, sf_dir):
     """SCUM mean ensemble with grid-optimized members (engine-
     replicable; ref scum.py:10-68) on the exact-cents monthly panel,
     keyed by step."""
-    from pyspark.sql import Window
 
-    from polars_ts_spark.operators import theta
     out = theta.scum_forecast(_monthly_panel_exact(spark, sf_dir), h=6,
                               optimizer="grid", max_q=0)
     w = Window.partitionBy("unique_id").orderBy("ds")
@@ -8472,8 +8182,6 @@ _KABOUDAN_ORACLE = PANEL_CTE + """,
 
 @register("kaboudan_metric", _KABOUDAN_ORACLE)
 def q_kaboudan(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-
     def model(train, h):
         return baselines.naive_forecast(train, h=h)
 
@@ -8492,16 +8200,7 @@ def _enbpi_oracle(B: int = 3, holdout: int = 7, h: int = 7,
     statistic. Rounded 2dp both sides."""
     per_b = []
     for b in range(B):
-        sums = []
-        for i, f in enumerate(["f0", "f1"]):
-            for j, f2 in (("0", "f0"), ("1", "f1"))[i:]:
-                ridge = " + 1e-6" if str(i) == j else ""
-                sums.append(f"SUM({f} * {f2}){ridge} AS a_{i}_{j}")
-            sums.append(f"SUM({f}) AS a_{i}_2")
-            sums.append(f"SUM({f} * yt) AS b_{i}_0")
-        sums.append("CAST(COUNT(*) AS DOUBLE) AS a_2_2")
-        sums.append("SUM(yt) AS b_2_0")
-        mirror = ["*"] + [f"a_{i}_{j} AS a_{j}_{i}" for i in range(3) for j in range(i + 1, 3)]
+        sums, mirror = _ridge_normal_aggs(2)
         per_b.append(f"""
     keep{b} AS (
         SELECT DISTINCT (('0x' || substr(md5('{seed}:{b}:' || CAST(d AS VARCHAR)), 1, 8))::BIGINT % n) AS i
@@ -8576,12 +8275,7 @@ def _enbpi_oracle(B: int = 3, holdout: int = 7, h: int = 7,
         FROM (SELECT DISTINCT ds FROM train)
     ),
     ptails AS (SELECT unique_id, list(y ORDER BY ds)[-7:] AS tail FROM panel GROUP BY 1),
-    pfreq AS (
-        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
-        FROM (SELECT unique_id,
-                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
-              FROM panel) GROUP BY 1
-    ),
+    {_freq_cte('panel', 'pfreq')},
     pg AS (SELECT unique_id, MAX(ds) AS last_ts FROM panel GROUP BY 1),
     {','.join(per_b)},
     res AS (
@@ -8610,8 +8304,6 @@ def _enbpi_oracle(B: int = 3, holdout: int = 7, h: int = 7,
 
 @register("enbpi_interval", _enbpi_oracle())
 def q_enbpi(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-    from polars_ts_spark.operators.pipeline import RecursiveForecaster
     panel = supplier_daily_panel(spark, sf_dir)
     m = evaluation.EnbPI(lambda: RecursiveForecaster(lags=[1, 7]), n_bootstraps=3).fit(panel, holdout=7)
     out = m.predict_interval(panel, h=7)
@@ -8655,9 +8347,6 @@ def _de_holiday_pred() -> str:
     are deterministic computus output (data-independent), embedded as
     literals for 1990-2035 — same literal-constant technique as the
     ROCKET kernel oracle."""
-    import datetime as _dt
-
-    from polars_ts_spark.operators.features import _easter
 
     dates = []
     for y in range(1990, 2036):
@@ -8707,23 +8396,8 @@ def _gp_oracle(h: int = 6, noise: float = 1e-2) -> str:
           "+ 0.5 * EXP(-2.0 * (SIN(PI() * ABS(CAST(i - (n + j2 - 1) AS DOUBLE)) / 7.0)"
           " * SIN(PI() * ABS(CAST(i - (n + j2 - 1) AS DOUBLE)) / 7.0)) / 1.0)")
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
-    freq AS (
-        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
-        FROM (SELECT unique_id,
-                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
-              FROM monthly) GROUP BY 1
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
+    {_freq_cte('monthly')},
     g AS (SELECT unique_id, MAX(ds) AS last_ts FROM monthly GROUP BY 1),
     steps AS (SELECT UNNEST(generate_series(1, {h})) AS step),
     series AS (
@@ -8781,7 +8455,6 @@ WITH RECURSIVE daily_cents AS (
 
 @register("gp_forecast", _gp_oracle())
 def q_gp_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import bayesian
     out = bayesian.gp_forecast(_monthly_panel_exact(spark, sf_dir), h=6)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"),
                       F.round("y_std", 4).alias("y_std"))
@@ -8797,15 +8470,9 @@ def _mcmc_oracle(h: int = 6, n_samples: int = 800, burn: int = 500,
     to absolute index burn+k, which re-tags the observation noise), and
     numpy's branchy _lerp quantile replicated on the sorted draws."""
 
-    def z(tag: str, i: str) -> str:
-        u1 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':a'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        u2 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':b'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        return f"(SQRT(-2.0 * LN({u1})) * COS(2.0 * PI() * {u2}))"
+    z = partial(_md5_normal, seed)
 
-    uacc = (f"((('0x' || substr(md5('{seed}:u:' || CAST(i + 1 AS VARCHAR) || ':a'), 1, 8))::BIGINT"
-            f" + 0.5) / 4294967296.0)")
+    uacc = _md5_unit(f"'{seed}:u:' || CAST(i + 1 AS VARCHAR) || ':a'")
     ll = ("(-0.5 * (Syy + {a} * {a} * n + {b} * {b} * Stt + 2.0 * {a} * {b} * St"
           " - 2.0 * {a} * Sy - 2.0 * {b} * Sty) / (EXP({ls}) * EXP({ls})) - n * {ls})")
     m = n_samples - burn
@@ -8828,23 +8495,8 @@ def _mcmc_oracle(h: int = 6, n_samples: int = 800, burn: int = 500,
         f"SELECT unique_id, {j} AS step, mu{j} AS y_hat, lo{j} AS y_hat_lower, hi{j} AS y_hat_upper FROM fin"
         for j in range(1, h + 1))
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
-    freq AS (
-        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
-        FROM (SELECT unique_id,
-                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
-              FROM monthly) GROUP BY 1
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
+    {_freq_cte('monthly')},
     g AS (SELECT unique_id, MAX(ds) AS last_ts FROM monthly GROUP BY 1),
     stats AS (
         SELECT unique_id,
@@ -8910,7 +8562,6 @@ WITH RECURSIVE daily_cents AS (
 
 @register("mcmc_forecast", _mcmc_oracle())
 def q_mcmc_forecast(spark, sf_dir):
-    from polars_ts_spark.operators import bayesian
     out = bayesian.mcmc_forecast(_monthly_panel_exact(spark, sf_dir), h=6, n_samples=800)
     return out.select(
         "unique_id", "ds", F.round("y_hat", 2).alias("y_hat"),
@@ -8931,15 +8582,9 @@ def _bayes_ets_oracle(h: int = 6, n_samples: int = 500, seed: int = 42) -> str:
     step = max(1, kept // 100)
     nsel = len(range(0, kept, step))
 
-    def z(tag: str, i: str) -> str:
-        u1 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':a'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        u2 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':' || {i} || ':b'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        return f"(SQRT(-2.0 * LN({u1})) * COS(2.0 * PI() * {u2}))"
+    z = partial(_md5_normal, seed)
 
-    uacc = (f"((('0x' || substr(md5('{seed}:u:' || CAST(i + 1 AS VARCHAR) || ':a'), 1, 8))::BIGINT"
-            f" + 0.5) / 4294967296.0)")
+    uacc = _md5_unit(f"'{seed}:u:' || CAST(i + 1 AS VARCHAR) || ':a'")
 
     def holt(a: str, b: str) -> str:
         # list accumulator [lv, tr, s, vv] — DuckDB list_reduce STRUCT
@@ -8967,23 +8612,8 @@ def _bayes_ets_oracle(h: int = 6, n_samples: int = 500, seed: int = 42) -> str:
         else:
             qouts.append(f"ROUND(srt[{i0 + 1}] + (srt[{i1 + 1}] - srt[{i0 + 1}]) * {g}, 2) AS {nm}")
     return f"""
-WITH RECURSIVE daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
-    freq AS (
-        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
-        FROM (SELECT unique_id,
-                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
-              FROM monthly) GROUP BY 1
-    ),
+WITH RECURSIVE {_cents_ctes(4)},
+    {_freq_cte('monthly')},
     g AS (SELECT unique_id, MAX(ds) AS last_ts FROM monthly GROUP BY 1),
     series AS (
         SELECT unique_id, list(y ORDER BY ds) AS v, CAST(COUNT(*) AS DOUBLE) AS n
@@ -9041,7 +8671,6 @@ WITH RECURSIVE daily_cents AS (
 
 @register("bayesian_ets", _bayes_ets_oracle())
 def q_bayesian_ets(spark, sf_dir):
-    from polars_ts_spark.operators import bayesian
     out = bayesian.bayesian_ets(_monthly_panel_exact(spark, sf_dir), h=6, n_samples=500)
     return out.select(
         "unique_id", "ds", F.round("y_hat", 2).alias("y_hat"),
@@ -9050,19 +8679,14 @@ def q_bayesian_ets(spark, sf_dir):
     )
 
 
-_BSTS_ORACLE = """
+_BSTS_ORACLE = f"""
 WITH RECURSIVE panel AS (
         SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
                date_trunc('day', l_shipdate) AS ds,
                CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS y
         FROM lineitem GROUP BY 1, 2
     ),
-    freq AS (
-        SELECT unique_id, CAST(CASE WHEN COUNT(d) = 0 THEN 86400 ELSE MEDIAN(d) END AS BIGINT) AS freq_s
-        FROM (SELECT unique_id,
-                     epoch(ds) - epoch(LAG(ds) OVER (PARTITION BY unique_id ORDER BY ds)) AS d
-              FROM panel) GROUP BY 1
-    ),
+    {_freq_cte('panel')},
     g AS (SELECT unique_id, MAX(ds) AS last_ts, COUNT(*) AS n FROM panel GROUP BY 1),
     steps AS (SELECT UNNEST(generate_series(1, 7)) AS step),
     ordered AS (
@@ -9146,15 +8770,7 @@ WITH RECURSIVE panel AS (
 
 @register("bsts_forecast", _BSTS_ORACLE)
 def q_bsts(spark, sf_dir):
-    from polars_ts_spark.operators import bayesian
-    from polars_ts_spark.sources.datasets import load_table
-    li = load_table(spark, sf_dir, "lineitem")
-    panel = li.groupBy(
-        F.col("l_suppkey").cast("string").alias("unique_id"),
-        F.date_trunc("day", F.col("l_shipdate")).alias("ds"),
-    ).agg((F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).cast("double")
-           / F.lit(100.0)).alias("y"))
-    out = bayesian.bsts_forecast(panel, h=7, season_length=7)
+    out = bayesian.bsts_forecast(_daily_panel_exact(spark, sf_dir), h=7, season_length=7)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))
 
 
@@ -9199,17 +8815,7 @@ def _fastdtw_oracle(radius: int = 3, maxlv: int = 8) -> str:
     E, INF = 256, _INF
     R2 = radius + 2
     return f"""
-WITH RECURSIVE daily_cents AS (
-    SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-           date_trunc('day', l_shipdate) AS ds,
-           SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-    FROM lineitem GROUP BY 1, 2
-),
-monthly AS (
-    SELECT unique_id, date_trunc('month', ds) AS ds,
-           CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-    FROM daily_cents GROUP BY 1, 2
-),
+WITH RECURSIVE {_cents_ctes()},
 ser AS (
     SELECT unique_id AS sid, list(CAST(y AS DOUBLE) ORDER BY ds) AS v
     FROM monthly GROUP BY 1
@@ -9348,7 +8954,6 @@ SELECT id_1, id_2, dist AS dtw FROM fd WHERE phase = 3
 def q_dtw_fast(spark, sf_dir):
     """FastDTW (radius 3) on the exact-cents monthly panel — bit-exact
     SQL state-machine replay (ref dtw.rs:89-197)."""
-    from polars_ts_spark.operators.distance import compute_pairwise_distance
     return compute_pairwise_distance(_monthly_panel_exact(spark, sf_dir), method="dtw",
                                      variant="fast", param=3)
 
@@ -9361,7 +8966,6 @@ def q_dtw_fast(spark, sf_dir):
     """,
 )
 def q_adapter_hf(spark, sf_dir):
-    from polars_ts_spark.sources import adapters
     recs = adapters.to_huggingface(supplier_daily_panel(spark, sf_dir))
     rows = [(r["id"], len(r["target"]), round(float(sum(r["target"])), 2)) for r in recs]
     return spark.createDataFrame(rows, ["id", "n_points", "target_sum"])
@@ -9436,8 +9040,6 @@ FROM feat f JOIN coefs c ON f.unique_id = c.unique_id
 
 
 def _daily_cents_panel(spark, sf_dir):
-    from polars_ts_spark.sources.datasets import load_table
-
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.col("l_suppkey").cast("string").alias("unique_id"),
@@ -9478,17 +9080,7 @@ def _shapelet_oracle(L: int = 8, nc: int = 4) -> str:
     threshold membership) sits on data-scale margins, the same
     robustness contract as the PAM replays."""
     return f"""
-WITH daily_cents AS (
-        SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-               date_trunc('day', l_shipdate) AS ds,
-               SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-        FROM lineitem GROUP BY 1, 2
-    ),
-    monthly AS (
-        SELECT unique_id, date_trunc('month', ds) AS ds,
-               CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-        FROM daily_cents GROUP BY 1, 2
-    ),
+WITH {_cents_ctes(4)},
     orows AS (
         SELECT unique_id AS sid, y,
                ROW_NUMBER() OVER (PARTITION BY unique_id ORDER BY ds) AS rn
@@ -9607,7 +9199,6 @@ WITH daily_cents AS (
 
 @register("shapelet_cluster", _shapelet_oracle())
 def q_shapelet(spark, sf_dir):
-    from polars_ts_spark.operators import clustering
     return clustering.shapelet_cluster(
         _monthly_panel_exact(spark, sf_dir), k=2, shapelet_lengths=(8,))
 
@@ -9667,8 +9258,6 @@ def q_shapelet(spark, sf_dir):
     """,
 )
 def q_reconcile_middle_out(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-    from polars_ts_spark.sources.datasets import load_table
     panel = supplier_daily_panel(spark, sf_dir)
     sup = load_table(spark, sf_dir, "supplier")
     nat = load_table(spark, sf_dir, "nation")
@@ -9708,15 +9297,7 @@ def q_reconcile_middle_out(spark, sf_dir):
     """,
 )
 def q_pit_histogram(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-    panel = supplier_daily_panel(spark, sf_dir)
-    q = panel.groupBy("unique_id").agg(
-        F.expr("percentile(y, 0.1)").alias("q10"),
-        F.expr("percentile(y, 0.5)").alias("q50"),
-        F.expr("percentile(y, 0.9)").alias("q90"),
-    )
-    scored = panel.join(q, "unique_id")
-    return evaluation.pit_histogram(scored, {0.1: "q10", 0.5: "q50", 0.9: "q90"}, n_bins=10)
+    return evaluation.pit_histogram(_quantile_scored(spark, sf_dir), _QCOLS, n_bins=10)
 
 
 @register(
@@ -9734,15 +9315,7 @@ def q_pit_histogram(spark, sf_dir):
     """,
 )
 def q_reliability(spark, sf_dir):
-    from polars_ts_spark.operators import evaluation
-    panel = supplier_daily_panel(spark, sf_dir)
-    q = panel.groupBy("unique_id").agg(
-        F.expr("percentile(y, 0.1)").alias("q10"),
-        F.expr("percentile(y, 0.5)").alias("q50"),
-        F.expr("percentile(y, 0.9)").alias("q90"),
-    )
-    scored = panel.join(q, "unique_id")
-    return evaluation.reliability_diagram(scored, {0.1: "q10", 0.5: "q50", 0.9: "q90"})
+    return evaluation.reliability_diagram(_quantile_scored(spark, sf_dir), _QCOLS)
 
 
 def _hdbscan_oracle(seed: int = 42) -> str:
@@ -10036,7 +9609,6 @@ def q_hdbscan(spark, sf_dir):
     monthly panel; min_cluster_size=2 — the configuration where the
     density tree yields real clusters at sf0.01 (mcs=3 is degenerately
     all-noise on this panel; ref clustering/density.py:31-100)."""
-    from polars_ts_spark.operators import clustering
     return clustering.hdbscan_cluster(
         _monthly_panel_exact(spark, sf_dir), min_cluster_size=2, method="dtw"
     )
@@ -10057,10 +9629,8 @@ def _bayes_var_oracle(h: int = 7, n_draws: int = 100, lam: float = 0.2,
     alpha = (1.0 - coverage) / 2.0
 
     def z(tag: str, i: int) -> str:
-        u1 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':{i}:a'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
-        u2 = (f"((('0x' || substr(md5('{seed}:' || {tag} || ':{i}:b'), 1, 8))::BIGINT"
-              f" + 0.5) / 4294967296.0)")
+        u1 = _md5_unit(f"'{seed}:' || {tag} || ':{i}:a'")
+        u2 = _md5_unit(f"'{seed}:' || {tag} || ':{i}:b'")
         return f"(SQRT(-2.0 * LN({u1})) * COS(2.0 * PI() * {u2}))"
 
     # mean path + per-draw path: 7 unrolled VAR(1) steps
@@ -10223,7 +9793,6 @@ FROM meanrows m JOIN quant q ON m.unique_id = q.unique_id AND m.step = q.step
 
 @register("bayesian_var", _bayes_var_oracle())
 def q_bayesian_var(spark, sf_dir):
-    from polars_ts_spark.operators import var_model
     out = var_model.bayesian_var_forecast(
         _bivariate_panel(spark, sf_dir), ["y", "y2"], p=1, h=7, n_draws=100
     )
@@ -10267,8 +9836,6 @@ def q_treat_outliers_interp(spark, sf_dir):
         supplier_daily_panel(spark, sf_dir), method="zscore",
         replacement="interpolate", threshold=3.0,
     )
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -10531,17 +10098,7 @@ def _kasba_oracle(max_iter: int = 3) -> str:
         if s < max_iter:
             parts.append(_kasba_refit(s))
     return f"""
-WITH RECURSIVE daily_cents AS (
-    SELECT CAST(l_suppkey AS VARCHAR) AS unique_id,
-           date_trunc('day', l_shipdate) AS ds,
-           SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-    FROM lineitem GROUP BY 1, 2
-),
-monthly AS (
-    SELECT unique_id, date_trunc('month', ds) AS ds,
-           CAST(SUM(cents) AS DOUBLE) / (100e0 * COUNT(*)) AS y
-    FROM daily_cents GROUP BY 1, 2
-),
+WITH RECURSIVE {_cents_ctes()},
 ser AS (
     SELECT unique_id AS sid, list(CAST(y AS DOUBLE) ORDER BY ds) AS v
     FROM monthly GROUP BY 1
@@ -10591,11 +10148,11 @@ SELECT i.sid AS unique_id, CAST(l.cl AS INT) AS cluster
 FROM labs{max_iter} l JOIN idx i ON i.sid = l.sid
 """
 
+
 @register("kasba", _kasba_oracle())
 def q_kasba(spark, sf_dir):
     """Branch-free 3-round KASBA on the exact-cents monthly panel
     (ref clustering/kasba.py:16-262)."""
-    from polars_ts_spark.operators import clustering
     return clustering.kasba(_monthly_panel_exact(spark, sf_dir), k=3,
                             max_iter=3, ssg_epochs=1, exact=True)
 
@@ -10638,7 +10195,6 @@ _CV_SLIDING_ORACLE = PANEL_CTE + """,
 def q_cv_sliding_splits(spark, sf_dir):
     """Fixed-size (30 distinct-timestamp) sliding train window, h=7,
     3 folds (ref validation/splits.py:59-105)."""
-    from polars_ts_spark.operators.cv import sliding_window_cv
     panel = supplier_daily_panel(spark, sf_dir)
     rows = []
     for fold, (train, test) in enumerate(
@@ -10686,7 +10242,6 @@ def q_cv_rolling_origin_splits(spark, sf_dir):
     """Expanding rolling-origin with a 3-timestamp purge gap between
     train end and test start, step=5, h=7, 3 folds (ref
     validation/splits.py:108-232 gap semantics)."""
-    from polars_ts_spark.operators.cv import rolling_origin_cv
     panel = supplier_daily_panel(spark, sf_dir)
     rows = []
     for fold, (train, test) in enumerate(
@@ -10725,7 +10280,6 @@ _NAMESPACE_CHAIN_ORACLE = PANEL_CTE + """,
 
 @register("namespace_chain", _NAMESPACE_CHAIN_ORACLE)
 def q_namespace_chain(spark, sf_dir):
-    from polars_ts_spark.namespace import pts
     panel = supplier_daily_panel(spark, sf_dir)
     return (
         pts(panel)
@@ -10741,30 +10295,20 @@ def q_namespace_chain(spark, sf_dir):
 # scale path next to lsh_ann_topk — md5-rank seeds + 2 exact-integer Lloyd
 # iterations + n_probe cell scan, whole trajectory replayed in SQL.
 
-def _register_ivf():
-    from polars_ts_spark.operators import embedsim
 
-    @register("ivf_ann_topk", embedsim.ivf_ann_oracle(3))
-    def q_ivf_ann_topk(spark, sf_dir):
-        return embedsim.ivf_ann_topk(_embs(spark, sf_dir), k=3)
-
-
-_register_ivf()
+@register("ivf_ann_topk", embedsim.ivf_ann_oracle(3))
+def q_ivf_ann_topk(spark, sf_dir):
+    return embedsim.ivf_ann_topk(_embs(spark, sf_dir), k=3)
 
 
 # ---------------------------------------------------------------------------
 # Token counting (SURVEY §LLM-pipeline text analysis): whitespace tokens +
 # BPE-ish regex pre-tokens — the vocabulary-free LLM-token-cost proxy.
 
-def _register_token_counts():
-    from polars_ts_spark.operators import textops
 
-    @register("token_counts", textops.TOKEN_COUNTS_ORACLE)
-    def q_token_counts(spark, sf_dir):
-        return textops.token_counts(_docs(spark, sf_dir))
-
-
-_register_token_counts()
+@register("token_counts", textops.TOKEN_COUNTS_ORACLE)
+def q_token_counts(spark, sf_dir):
+    return textops.token_counts(_docs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -10773,18 +10317,13 @@ _register_token_counts()
 # budget, as ONE oracle-backed query — the pipeline shape a pretraining
 # data pass runs at 100 TB.
 
-def _register_corpus_curation():
-    from polars_ts_spark.operators import textops
 
-    @register("corpus_curation", textops.corpus_curation_oracle())
-    def q_corpus_curation(spark, sf_dir):
-        return textops.corpus_curation(
-            _docs(spark, sf_dir),
-            num_hashes=16, bands=4, threshold=0.5, shingle_n=3,
-        )
-
-
-_register_corpus_curation()
+@register("corpus_curation", textops.corpus_curation_oracle())
+def q_corpus_curation(spark, sf_dir):
+    return textops.corpus_curation(
+        _docs(spark, sf_dir),
+        num_hashes=16, bands=4, threshold=0.5, shingle_n=3,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -10792,22 +10331,15 @@ _register_corpus_curation()
 # streaming dropDuplicatesWithinWatermark dedup, with deterministic
 # keep-first-by-(event-time, id) semantics; ds is a synthetic event time.
 
-def _register_exact_dedup_keep_first():
-    from pyspark.sql import functions as F
 
-    from polars_ts_spark.operators import textops
-
-    @register("exact_dedup_keep_first", textops.EXACT_DEDUP_KEEP_FIRST_ORACLE)
-    def q_exact_dedup_keep_first(spark, sf_dir):
-        docs = _docs(spark, sf_dir).withColumn(
-            "ds",
-            F.expr("timestamp_seconds(unix_seconds(timestamp'2024-01-01 00:00:00')"
-                   " + doc_id)"),
-        )
-        return textops.exact_dedup_keep_first(docs)
-
-
-_register_exact_dedup_keep_first()
+@register("exact_dedup_keep_first", textops.EXACT_DEDUP_KEEP_FIRST_ORACLE)
+def q_exact_dedup_keep_first(spark, sf_dir):
+    docs = _docs(spark, sf_dir).withColumn(
+        "ds",
+        F.expr("timestamp_seconds(unix_seconds(timestamp'2024-01-01 00:00:00')"
+               " + doc_id)"),
+    )
+    return textops.exact_dedup_keep_first(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -10815,27 +10347,22 @@ _register_exact_dedup_keep_first()
 # min-label-propagation components, driven by exact cosine>=0.95 pairs over
 # the embeddings table — the keep/drop list of an embedding-dedup pass.
 
-def _register_embedding_dedup_clusters():
-    from polars_ts_spark.operators import embedsim, textops
 
-    @register(
-        "embedding_dedup_clusters",
-        textops.dedup_clusters_oracle(
-            embedsim.cosine_dedup_oracle(0.95),
-            id_col="vec_id", table="embeddings",
-            id1_col="vec_id_1", id2_col="vec_id_2",
-        ),
+@register(
+    "embedding_dedup_clusters",
+    textops.dedup_clusters_oracle(
+        embedsim.cosine_dedup_oracle(0.95),
+        id_col="vec_id", table="embeddings",
+        id1_col="vec_id_1", id2_col="vec_id_2",
+    ),
+)
+def q_embedding_dedup_clusters(spark, sf_dir):
+    emb = _embs(spark, sf_dir)
+    pairs = embedsim.cosine_dedup_pairs(emb, threshold=0.95)
+    return textops.dedup_clusters(
+        emb, pairs=pairs,
+        id_col="vec_id", id1_col="vec_id_1", id2_col="vec_id_2",
     )
-    def q_embedding_dedup_clusters(spark, sf_dir):
-        emb = _embs(spark, sf_dir)
-        pairs = embedsim.cosine_dedup_pairs(emb, threshold=0.95)
-        return textops.dedup_clusters(
-            emb, pairs=pairs,
-            id_col="vec_id", id1_col="vec_id_1", id2_col="vec_id_2",
-        )
-
-
-_register_embedding_dedup_clusters()
 
 
 # ---------------------------------------------------------------------------
@@ -10843,30 +10370,20 @@ _register_embedding_dedup_clusters()
 # cross-document span-duplication signal of the substring-dedup family —
 # per-doc fraction of token 8-grams shared with >=2 documents.
 
-def _register_dup_ngram_stats():
-    from polars_ts_spark.operators import textops
 
-    @register("dup_ngram_stats", textops.dup_ngram_stats_oracle(n=8, min_docs=2))
-    def q_dup_ngram_stats(spark, sf_dir):
-        return textops.dup_ngram_stats(_docs(spark, sf_dir), n=8, min_docs=2)
-
-
-_register_dup_ngram_stats()
+@register("dup_ngram_stats", textops.dup_ngram_stats_oracle(n=8, min_docs=2))
+def q_dup_ngram_stats(spark, sf_dir):
+    return textops.dup_ngram_stats(_docs(spark, sf_dir), n=8, min_docs=2)
 
 
 # ---------------------------------------------------------------------------
 # Deterministic stratified sampling (SURVEY §LLM-pipeline curation): per-
 # language md5-rank quota draw — the reproducible domain-mixing primitive.
 
-def _register_stratified_sample():
-    from polars_ts_spark.operators import textops
 
-    @register("stratified_sample", textops.stratified_sample_oracle(frac=0.25, by="lang"))
-    def q_stratified_sample(spark, sf_dir):
-        return textops.stratified_sample(_docs(spark, sf_dir), frac=0.25, by="lang")
-
-
-_register_stratified_sample()
+@register("stratified_sample", textops.stratified_sample_oracle(frac=0.25, by="lang"))
+def q_stratified_sample(spark, sf_dir):
+    return textops.stratified_sample(_docs(spark, sf_dir), frac=0.25, by="lang")
 
 
 # ---------------------------------------------------------------------------
@@ -10886,40 +10403,28 @@ GROUP BY o.o_orderpriority
 """
 
 
-def _register_bucketed_join():
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from polars_ts_spark.sources import bucketing
-    from polars_ts_spark.sources.datasets import load_table
-
-    @register("bucketed_join", BUCKETED_JOIN_ORACLE)
-    def q_bucketed_join(spark, sf_dir):
-        tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-        base = os.path.join(tempfile.gettempdir(), f"pts_bucketed_{os.getuid()}", tag)
-        bucketing.write_bucketed(
-            load_table(spark, sf_dir, "lineitem"), f"li_bkt_{tag}",
-            ["l_orderkey"], num_buckets=8, path=os.path.join(base, "lineitem"),
-        )
-        bucketing.write_bucketed(
-            load_table(spark, sf_dir, "orders"), f"ord_bkt_{tag}",
-            ["o_orderkey"], num_buckets=8, path=os.path.join(base, "orders"),
-        )
-        joined = (
-            spark.table(f"li_bkt_{tag}")
-            .withColumnRenamed("l_orderkey", "o_orderkey")
-            .join(spark.table(f"ord_bkt_{tag}"), "o_orderkey")
-        )
-        cents4 = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000)
-        return joined.groupBy("o_orderpriority").agg(
-            F.count("*").alias("n_items"),
-            F.sum(cents4.cast("bigint")).alias("revenue_e4"),
-        )
-
-
-_register_bucketed_join()
+@register("bucketed_join", BUCKETED_JOIN_ORACLE)
+def q_bucketed_join(spark, sf_dir):
+    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    base = os.path.join(tempfile.gettempdir(), f"pts_bucketed_{os.getuid()}", tag)
+    bucketing.write_bucketed(
+        load_table(spark, sf_dir, "lineitem"), f"li_bkt_{tag}",
+        ["l_orderkey"], num_buckets=8, path=os.path.join(base, "lineitem"),
+    )
+    bucketing.write_bucketed(
+        load_table(spark, sf_dir, "orders"), f"ord_bkt_{tag}",
+        ["o_orderkey"], num_buckets=8, path=os.path.join(base, "orders"),
+    )
+    joined = (
+        spark.table(f"li_bkt_{tag}")
+        .withColumnRenamed("l_orderkey", "o_orderkey")
+        .join(spark.table(f"ord_bkt_{tag}"), "o_orderkey")
+    )
+    cents4 = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000)
+    return joined.groupBy("o_orderpriority").agg(
+        F.count("*").alias("n_items"),
+        F.sum(cents4.cast("bigint")).alias("revenue_e4"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -10927,22 +10432,15 @@ _register_bucketed_join()
 # keep-first over MinHash band keys — the batch twin of the foreachBatch
 # streaming LSH dedup (streaming/structured.py), oracle-backed here.
 
-def _register_lsh_dedup_keep_first():
-    from pyspark.sql import functions as F
 
-    from polars_ts_spark.operators import textops
-
-    @register("lsh_dedup_keep_first", textops.lsh_dedup_keep_first_oracle())
-    def q_lsh_dedup_keep_first(spark, sf_dir):
-        docs = _docs(spark, sf_dir).withColumn(
-            "ds",
-            F.expr("timestamp_seconds(unix_seconds(timestamp'2024-01-01 00:00:00')"
-                   " + doc_id)"),
-        )
-        return textops.lsh_dedup_keep_first(docs)
-
-
-_register_lsh_dedup_keep_first()
+@register("lsh_dedup_keep_first", textops.lsh_dedup_keep_first_oracle())
+def q_lsh_dedup_keep_first(spark, sf_dir):
+    docs = _docs(spark, sf_dir).withColumn(
+        "ds",
+        F.expr("timestamp_seconds(unix_seconds(timestamp'2024-01-01 00:00:00')"
+               " + doc_id)"),
+    )
+    return textops.lsh_dedup_keep_first(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -10952,34 +10450,28 @@ _register_lsh_dedup_keep_first()
 # doc on BOTH sides — all three patterns fire on every row and the full
 # scrubbed text must match byte-for-byte.
 
-def _register_pii_scrub():
-    from pyspark.sql import functions as F
 
-    from polars_ts_spark.operators import textops
-
-    _SUFFIX_SPARK = (
-        "concat(text, ' reach u', CAST(doc_id AS STRING), '@example.com "
-        "via https://ex.org/d/', CAST(doc_id AS STRING), "
-        "' or call +1 (415) 555-0199 now')"
-    )
-    _SUFFIX_DUCK = (
-        "(text || ' reach u' || CAST(doc_id AS VARCHAR) || '@example.com "
-        "via https://ex.org/d/' || CAST(doc_id AS VARCHAR) || "
-        "' or call +1 (415) 555-0199 now')"
-    )
-
-    @register(
-        "pii_scrub",
-        textops.pii_scrub_oracle(
-            f"(SELECT doc_id, {_SUFFIX_DUCK} AS text FROM documents)"
-        ),
-    )
-    def q_pii_scrub(spark, sf_dir):
-        docs = _docs(spark, sf_dir).withColumn("text", F.expr(_SUFFIX_SPARK))
-        return textops.pii_scrub(docs)
+_SUFFIX_SPARK = (
+    "concat(text, ' reach u', CAST(doc_id AS STRING), '@example.com "
+    "via https://ex.org/d/', CAST(doc_id AS STRING), "
+    "' or call +1 (415) 555-0199 now')"
+)
+_SUFFIX_DUCK = (
+    "(text || ' reach u' || CAST(doc_id AS VARCHAR) || '@example.com "
+    "via https://ex.org/d/' || CAST(doc_id AS VARCHAR) || "
+    "' or call +1 (415) 555-0199 now')"
+)
 
 
-_register_pii_scrub()
+@register(
+    "pii_scrub",
+    textops.pii_scrub_oracle(
+        f"(SELECT doc_id, {_SUFFIX_DUCK} AS text FROM documents)"
+    ),
+)
+def q_pii_scrub(spark, sf_dir):
+    docs = _docs(spark, sf_dir).withColumn("text", F.expr(_SUFFIX_SPARK))
+    return textops.pii_scrub(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -10987,12 +10479,10 @@ _register_pii_scrub()
 # rolls up into TWO non-nested dimensions — its nation AND a suppkey%3
 # band — both under 'total'. Bottom-up over the grouped summing matrix.
 
-def _register_reconcile_grouped():
-    from polars_ts_spark.operators import evaluation
 
-    @register(
-        "reconcile_grouped",
-        PANEL_CTE + ", " + _FREQ_CTE.format(h=7) + _NAIVE_FC_CTE + """,
+@register(
+    "reconcile_grouped",
+    PANEL_CTE + ", " + _FREQ_CTE.format(h=7) + _NAIVE_FC_CTE + """,
     anc AS (
         SELECT CAST(s_suppkey AS VARCHAR) AS unique_id,
                'n_' || CAST(s_nationkey AS VARCHAR) AS anc FROM supplier
@@ -11011,25 +10501,21 @@ def _register_reconcile_grouped():
     UNION ALL
     SELECT unique_id, ds, y_hat FROM parents
     """,
-    )
-    def q_reconcile_grouped(spark, sf_dir):
-        from polars_ts_spark.sources.datasets import load_table
-        panel = supplier_daily_panel(spark, sf_dir)
-        fc = baselines.naive_forecast(panel, h=7)
-        sup = load_table(spark, sf_dir, "supplier").select(
-            F.col("s_suppkey").cast("string").alias("sid"),
-            F.concat(F.lit("n_"), F.col("s_nationkey").cast("string")).alias("nat"),
-            F.concat(F.lit("band_"), (F.col("s_suppkey") % 3).cast("string")).alias("band"),
-        ).collect()
-        hierarchy: dict = {}
-        for r in sup:
-            hierarchy[r["sid"]] = [r["nat"], r["band"]]
-            hierarchy[r["nat"]] = "total"
-            hierarchy[r["band"]] = "total"
-        return evaluation.reconcile_bottom_up(fc, hierarchy)
-
-
-_register_reconcile_grouped()
+)
+def q_reconcile_grouped(spark, sf_dir):
+    panel = supplier_daily_panel(spark, sf_dir)
+    fc = baselines.naive_forecast(panel, h=7)
+    sup = load_table(spark, sf_dir, "supplier").select(
+        F.col("s_suppkey").cast("string").alias("sid"),
+        F.concat(F.lit("n_"), F.col("s_nationkey").cast("string")).alias("nat"),
+        F.concat(F.lit("band_"), (F.col("s_suppkey") % 3).cast("string")).alias("band"),
+    ).collect()
+    hierarchy: dict = {}
+    for r in sup:
+        hierarchy[r["sid"]] = [r["nat"], r["band"]]
+        hierarchy[r["nat"]] = "total"
+        hierarchy[r["band"]] = "total"
+    return evaluation.reconcile_bottom_up(fc, hierarchy)
 
 
 # ---------------------------------------------------------------------------
@@ -11070,138 +10556,99 @@ _PLACEBO_ORACLE = (
 )
 
 
-def _register_causal_placebo():
-    from polars_ts_spark.operators import causal
-
-    @register("causal_placebo", _PLACEBO_ORACLE)
-    def q_causal_placebo(spark, sf_dir):
-        panel = _monthly_panel_exact(spark, sf_dir)
-        times = sorted(r[0] for r in panel.select("ds").distinct().collect())
-        t_real = times[int(len(times) * 0.8)]
-        times_t = [t for t in times if t < t_real]
-        t_placebo = times_t[int(len(times_t) * 0.75)]
-        out = causal.placebo_test(panel, t_real, t_placebo)
-        sdf = spark.createDataFrame(out)
-        for c in ("counterfactual", "effect", "cum_effect"):
-            sdf = sdf.withColumn(c, F.round(c, 4))
-        return sdf
-
-
-_register_causal_placebo()
+@register("causal_placebo", _PLACEBO_ORACLE)
+def q_causal_placebo(spark, sf_dir):
+    panel = _monthly_panel_exact(spark, sf_dir)
+    times = sorted(r[0] for r in panel.select("ds").distinct().collect())
+    t_real = times[int(len(times) * 0.8)]
+    times_t = [t for t in times if t < t_real]
+    t_placebo = times_t[int(len(times_t) * 0.75)]
+    out = causal.placebo_test(panel, t_real, t_placebo)
+    sdf = spark.createDataFrame(out)
+    for c in ("counterfactual", "effect", "cum_effect"):
+        sdf = sdf.withColumn(c, F.round(c, 4))
+    return sdf
 
 
 # ---------------------------------------------------------------------------
-# Round 7: intra-document repetition quality signals (the published
+# Intra-document repetition quality signals (the published
 # Gopher repetition filters — top-bigram mass + repeated-trigram mass;
 # the cross-document relative is dup_ngram_stats) and benchmark
 # decontamination (flag corpus docs sharing any word 8-gram with a
 # benchmark set — here a deterministic doc_id % 97 stand-in benchmark).
 
 
-def _register_gopher_repetition():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "gopher_repetition",
-        "WITH r AS (" + textops.gopher_repetition_oracle() + ") "
-        "SELECT doc_id, n_tokens, ROUND(top_bigram_frac, 6) AS top_bigram_frac, "
-        "ROUND(dup_trigram_frac, 6) AS dup_trigram_frac FROM r",
-    )
-    def q_gopher_repetition(spark, sf_dir):
-        out = textops.gopher_repetition(_docs(spark, sf_dir))
-        return out.select(
-            "doc_id", "n_tokens",
-            F.round("top_bigram_frac", 6).alias("top_bigram_frac"),
-            F.round("dup_trigram_frac", 6).alias("dup_trigram_frac"),
-        )
-
-
-_register_gopher_repetition()
-
-
-def _register_decontaminate():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "benchmark_decontaminate",
-        textops.decontaminate_oracle(
-            benchmark_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0)"
-        ),
-    )
-    def q_benchmark_decontaminate(spark, sf_dir):
-        docs = _docs(spark, sf_dir)
-        bench = docs.filter(F.col("doc_id") % 97 == 0)
-        return textops.decontaminate(docs, bench)
-
-
-_register_decontaminate()
-
-
-def _register_trim_duplicate_spans():
-    from polars_ts_spark.operators import textops
-
-    @register("trim_duplicate_spans", textops.trim_duplicate_spans_oracle())
-    def q_trim_duplicate_spans(spark, sf_dir):
-        return textops.trim_duplicate_spans(_docs(spark, sf_dir))
-
-
-_register_trim_duplicate_spans()
-
-
-def _register_domain_stats():
-    from polars_ts_spark.operators import textops
-
-    # the synthetic corpus has no URLs: plant a deterministic, SKEWED
-    # domain per doc on BOTH sides — even doc_ids share 5 hot domains
-    # (~10% corpus share each, over the 5% cap), odd ids spread over
-    # ~500 cold ones, and every 11th doc has no URL at all
-    _DOM_SPARK = (
-        "CASE WHEN doc_id % 11 = 0 THEN text ELSE concat(text, "
-        "' via https://d', CAST(CASE WHEN doc_id % 2 = 0 THEN doc_id % 5 "
-        "ELSE doc_id % 997 END AS STRING), '.example.org/page') END"
-    )
-    _DOM_DUCK = (
-        "(CASE WHEN doc_id % 11 = 0 THEN text ELSE text || "
-        "' via https://d' || CAST(CASE WHEN doc_id % 2 = 0 THEN doc_id % 5 "
-        "ELSE doc_id % 997 END AS VARCHAR) || '.example.org/page' END)"
+@register(
+    "gopher_repetition",
+    "WITH r AS (" + textops.gopher_repetition_oracle() + ") "
+    "SELECT doc_id, n_tokens, ROUND(top_bigram_frac, 6) AS top_bigram_frac, "
+    "ROUND(dup_trigram_frac, 6) AS dup_trigram_frac FROM r",
+)
+def q_gopher_repetition(spark, sf_dir):
+    out = textops.gopher_repetition(_docs(spark, sf_dir))
+    return out.select(
+        "doc_id", "n_tokens",
+        F.round("top_bigram_frac", 6).alias("top_bigram_frac"),
+        F.round("dup_trigram_frac", 6).alias("dup_trigram_frac"),
     )
 
-    @register(
-        "domain_stats",
-        "SELECT doc_id, n_domains, ROUND(max_domain_share, 6) AS "
-        "max_domain_share, over_cap FROM (" + textops.domain_stats_oracle(
-            table=f"(SELECT doc_id, {_DOM_DUCK} AS text FROM documents)"
-        ) + ") r",
-    )
-    def q_domain_stats(spark, sf_dir):
-        docs = _docs(spark, sf_dir).withColumn("text", F.expr(_DOM_SPARK))
-        out = textops.domain_stats(docs)
-        return out.select(
-            "doc_id", "n_domains",
-            F.round("max_domain_share", 6).alias("max_domain_share"),
-            "over_cap",
-        )
 
-
-_register_domain_stats()
-
-
-def _register_audio_features():
-    from polars_ts_spark.operators import multimodal
-
-    # the audio decode stub is md5-deterministic AND exact in float
-    # arithmetic (integer numerators over power-of-2 denominators), so
-    # the whole decode -> frame-RMS -> zero-crossing pipeline replays in
-    # SQL with no quantization games: byte b -> sample (b-128)/128,
-    # v² values are exact multiples of 2^-14, frame sums/averages exact.
-    _AUDIO_ORACLE = """
-    WITH d AS (SELECT doc_id, md5(text) AS hx FROM documents),
-    bytes AS (
-        SELECT doc_id, i.i,
-               16 * (strpos('0123456789abcdef', substring(hx, 2 * i.i + 1, 1)) - 1)
-                 + (strpos('0123456789abcdef', substring(hx, 2 * i.i + 2, 1)) - 1) AS b
-        FROM d, (SELECT UNNEST(generate_series(0, 15)) AS i) i
+@register(
+    "benchmark_decontaminate",
+    textops.decontaminate_oracle(
+        benchmark_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0)"
     ),
+)
+def q_benchmark_decontaminate(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    return textops.decontaminate(docs, bench)
+
+
+@register("trim_duplicate_spans", textops.trim_duplicate_spans_oracle())
+def q_trim_duplicate_spans(spark, sf_dir):
+    return textops.trim_duplicate_spans(_docs(spark, sf_dir))
+
+
+# the synthetic corpus has no URLs: plant a deterministic, SKEWED
+# domain per doc on BOTH sides — even doc_ids share 5 hot domains
+# (~10% corpus share each, over the 5% cap), odd ids spread over
+# ~500 cold ones, and every 11th doc has no URL at all
+_DOM_SPARK = (
+    "CASE WHEN doc_id % 11 = 0 THEN text ELSE concat(text, "
+    "' via https://d', CAST(CASE WHEN doc_id % 2 = 0 THEN doc_id % 5 "
+    "ELSE doc_id % 997 END AS STRING), '.example.org/page') END"
+)
+_DOM_DUCK = (
+    "(CASE WHEN doc_id % 11 = 0 THEN text ELSE text || "
+    "' via https://d' || CAST(CASE WHEN doc_id % 2 = 0 THEN doc_id % 5 "
+    "ELSE doc_id % 997 END AS VARCHAR) || '.example.org/page' END)"
+)
+
+
+@register(
+    "domain_stats",
+    "SELECT doc_id, n_domains, ROUND(max_domain_share, 6) AS "
+    "max_domain_share, over_cap FROM (" + textops.domain_stats_oracle(
+        table=f"(SELECT doc_id, {_DOM_DUCK} AS text FROM documents)"
+    ) + ") r",
+)
+def q_domain_stats(spark, sf_dir):
+    docs = _docs(spark, sf_dir).withColumn("text", F.expr(_DOM_SPARK))
+    out = textops.domain_stats(docs)
+    return out.select(
+        "doc_id", "n_domains",
+        F.round("max_domain_share", 6).alias("max_domain_share"),
+        "over_cap",
+    )
+
+
+# the audio decode stub is md5-deterministic AND exact in float
+# arithmetic (integer numerators over power-of-2 denominators), so
+# the whole decode -> frame-RMS -> zero-crossing pipeline replays in
+# SQL with no quantization games: byte b -> sample (b-128)/128,
+# v² values are exact multiples of 2^-14, frame sums/averages exact.
+_AUDIO_ORACLE = _MD5_BYTES_CTES + """,
     s AS (
         SELECT b.doc_id, k.k,
                CAST(CAST(b.b - 128 AS FLOAT) / CAST(128.0 AS FLOAT) AS DOUBLE) AS v
@@ -11222,207 +10669,163 @@ def _register_audio_features():
     SELECT doc_id, CAST(4 AS INT), ROUND(z, 6) FROM zc
     """
 
-    @register("audio_frame_features", _AUDIO_ORACLE)
-    def q_audio_frame_features(spark, sf_dir):
-        payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
-        feats = multimodal.audio_features(multimodal.decode_audio(payload))
-        return feats.select(
-            "doc_id", F.posexplode("features").alias("pos", "feature")
-        ).withColumn("feature", F.round("feature", 6))
+
+@register("audio_frame_features", _AUDIO_ORACLE)
+def q_audio_frame_features(spark, sf_dir):
+    payload = multimodal.attach_binary_payload(_docs(spark, sf_dir))
+    feats = multimodal.audio_features(multimodal.decode_audio(payload))
+    return feats.select(
+        "doc_id", F.posexplode("features").alias("pos", "feature")
+    ).withColumn("feature", F.round("feature", 6))
 
 
-_register_audio_features()
-
-
-# ---- round 8: the shard-and-OR decontamination recipe, oracle-backed —
+# The shard-and-OR decontamination recipe, oracle-backed —
 # row-identical to benchmark_decontaminate by construction (disjoint
 # hash shards of the gram set; n_grams invariant, hit_grams additive),
 # so it shares that query's oracle SQL verbatim.
 
 
-def _register_decontaminate_sharded():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "decontaminate_sharded",
-        textops.decontaminate_oracle(
-            benchmark_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0)"
-        ),
-    )
-    def q_decontaminate_sharded(spark, sf_dir):
-        docs = _docs(spark, sf_dir)
-        bench = docs.filter(F.col("doc_id") % 97 == 0)
-        return textops.decontaminate_sharded(docs, bench, n_shards=3)
+@register(
+    "decontaminate_sharded",
+    textops.decontaminate_oracle(
+        benchmark_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0)"
+    ),
+)
+def q_decontaminate_sharded(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    return textops.decontaminate_sharded(docs, bench, n_shards=3)
 
 
-_register_decontaminate_sharded()
-
-
-# ---- round 8: CCNet-style bigram-LM perplexity scoring (Wenzek et
+# CCNet-style bigram-LM perplexity scoring (Wenzek et
 # al. 2020 quality signal) — pure count aggregates + joins, so the
 # oracle is fully independent (re-derives the LM from relational
 # semantics, no state replay).
 
 
-def _register_ngram_lm_score():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "ngram_lm_score",
-        "SELECT doc_id, n_bigrams, ROUND(cross_entropy, 6) AS cross_entropy, "
-        "ROUND(perplexity, 6) AS perplexity FROM ("
-        + textops.ngram_lm_score_oracle() + ") r",
+@register(
+    "ngram_lm_score",
+    "SELECT doc_id, n_bigrams, ROUND(cross_entropy, 6) AS cross_entropy, "
+    "ROUND(perplexity, 6) AS perplexity FROM ("
+    + textops.ngram_lm_score_oracle() + ") r",
+)
+def q_ngram_lm_score(spark, sf_dir):
+    out = textops.ngram_lm_score(_docs(spark, sf_dir))
+    return out.select(
+        "doc_id", "n_bigrams",
+        F.round("cross_entropy", 6).alias("cross_entropy"),
+        F.round("perplexity", 6).alias("perplexity"),
     )
-    def q_ngram_lm_score(spark, sf_dir):
-        out = textops.ngram_lm_score(_docs(spark, sf_dir))
-        return out.select(
-            "doc_id", "n_bigrams",
-            F.round("cross_entropy", 6).alias("cross_entropy"),
-            F.round("perplexity", 6).alias("perplexity"),
-        )
 
 
-_register_ngram_lm_score()
-
-
-# ---- round 8: DSIR importance weighting (Xie et al. 2023) — the
+# DSIR importance weighting (Xie et al. 2023) — the
 # target here is a deterministic doc_id % 13 slice of the corpus, the
 # same stand-in pattern the decontaminator uses. md5 bucketing is the
 # operator's documented algorithm (replication-class device); the
 # multinomial ratio math on top is ordinary relational aggregation.
 
 
-def _register_dsir_importance():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "dsir_importance",
-        "SELECT doc_id, n_features, ROUND(log_weight, 6) AS log_weight FROM ("
-        + textops.dsir_importance_oracle(
-            target_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 13 = 0)"
-        ) + ") r",
+@register(
+    "dsir_importance",
+    "SELECT doc_id, n_features, ROUND(log_weight, 6) AS log_weight FROM ("
+    + textops.dsir_importance_oracle(
+        target_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 13 = 0)"
+    ) + ") r",
+)
+def q_dsir_importance(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    target = docs.filter(F.col("doc_id") % 13 == 0)
+    out = textops.dsir_importance(docs, target)
+    return out.select(
+        "doc_id", "n_features",
+        F.round("log_weight", 6).alias("log_weight"),
     )
-    def q_dsir_importance(spark, sf_dir):
-        docs = _docs(spark, sf_dir)
-        target = docs.filter(F.col("doc_id") % 13 == 0)
-        out = textops.dsir_importance(docs, target)
-        return out.select(
-            "doc_id", "n_features",
-            F.round("log_weight", 6).alias("log_weight"),
-        )
 
 
-_register_dsir_importance()
-
-
-# ---- round 8: the CCNet head/middle/tail selection step over the LM
+# The CCNet head/middle/tail selection step over the LM
 # scorer — per-language equal-frequency perplexity buckets.
 
 
-def _register_perplexity_buckets():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "perplexity_buckets",
-        "SELECT doc_id, lang_pred, ROUND(perplexity, 6) AS perplexity, "
-        "bucket FROM (" + textops.perplexity_buckets_oracle() + ") r",
-    )
-    def q_perplexity_buckets(spark, sf_dir):
-        out = textops.perplexity_buckets(_docs(spark, sf_dir))
-        return out.select(
-            "doc_id", "lang_pred",
-            F.round("perplexity", 6).alias("perplexity"), "bucket")
+@register(
+    "perplexity_buckets",
+    "SELECT doc_id, lang_pred, ROUND(perplexity, 6) AS perplexity, "
+    "bucket FROM (" + textops.perplexity_buckets_oracle() + ") r",
+)
+def q_perplexity_buckets(spark, sf_dir):
+    out = textops.perplexity_buckets(_docs(spark, sf_dir))
+    return out.select(
+        "doc_id", "lang_pred",
+        F.round("perplexity", 6).alias("perplexity"), "bucket")
 
 
-_register_perplexity_buckets()
-
-
-# ---- round 9: the DSIR SELECTION step (Xie et al. 2023 §3) —
+# The DSIR SELECTION step (Xie et al. 2023 §3) —
 # Gumbel-top-k resample over the importance weights. Composed with
 # dsir_importance (weights rounded to 6 dp on BOTH sides first, so the
 # only cross-engine noise left is ~1 ulp of ln()); the md5-seeded
 # Gumbel draw is the operator's documented algorithm.
 
 
-def _register_dsir_resample():
-    from polars_ts_spark.operators import textops
-
-    dsir_src = (
-        "SELECT doc_id, ROUND(log_weight, 6) AS log_weight FROM ("
-        + textops.dsir_importance_oracle(
-            target_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 13 = 0)"
-        ) + ") r"
-    )
-
-    @register(
-        "dsir_resample",
-        "SELECT doc_id, log_weight, ROUND(gumbel_key, 6) AS gumbel_key, "
-        "sample_rank FROM ("
-        + textops.dsir_resample_oracle(dsir_src, k=50, temperature=1.0, seed=7)
-        + ") r",
-    )
-    def q_dsir_resample(spark, sf_dir):
-        docs = _docs(spark, sf_dir)
-        target = docs.filter(F.col("doc_id") % 13 == 0)
-        w6 = textops.dsir_importance(docs, target).select(
-            "doc_id", F.round("log_weight", 6).alias("log_weight"))
-        out = textops.dsir_resample(w6, k=50, temperature=1.0, seed=7)
-        return out.select(
-            "doc_id", "log_weight",
-            F.round("gumbel_key", 6).alias("gumbel_key"), "sample_rank")
+_DSIR_WEIGHTS_SQL = (
+    "SELECT doc_id, ROUND(log_weight, 6) AS log_weight FROM ("
+    + textops.dsir_importance_oracle(
+        target_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 13 = 0)"
+    ) + ") r"
+)
 
 
-_register_dsir_resample()
+@register(
+    "dsir_resample",
+    "SELECT doc_id, log_weight, ROUND(gumbel_key, 6) AS gumbel_key, "
+    "sample_rank FROM ("
+    + textops.dsir_resample_oracle(_DSIR_WEIGHTS_SQL, k=50, temperature=1.0, seed=7)
+    + ") r",
+)
+def q_dsir_resample(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    target = docs.filter(F.col("doc_id") % 13 == 0)
+    w6 = textops.dsir_importance(docs, target).select(
+        "doc_id", F.round("log_weight", 6).alias("log_weight"))
+    out = textops.dsir_resample(w6, k=50, temperature=1.0, seed=7)
+    return out.select(
+        "doc_id", "log_weight",
+        F.round("gumbel_key", 6).alias("gumbel_key"), "sample_rank")
 
 
-# ---- round 9: the sampled-cutoff variant of perplexity_buckets —
+# The sampled-cutoff variant of perplexity_buckets —
 # the 100 TB assignment path (cutoffs trained on a deterministic md5
 # sample, assignment as a broadcast-join projection).
 
 
-def _register_perplexity_buckets_sampled():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "perplexity_buckets_sampled",
-        "SELECT doc_id, lang_pred, ROUND(perplexity, 6) AS perplexity, "
-        "bucket FROM ("
-        + textops.perplexity_buckets_from_cutoffs_oracle(sample_mod=4) + ") r",
-    )
-    def q_perplexity_buckets_sampled(spark, sf_dir):
-        out = textops.perplexity_buckets_from_cutoffs(
-            _docs(spark, sf_dir), sample_mod=4)
-        return out.select(
-            "doc_id", "lang_pred",
-            F.round("perplexity", 6).alias("perplexity"), "bucket")
+@register(
+    "perplexity_buckets_sampled",
+    "SELECT doc_id, lang_pred, ROUND(perplexity, 6) AS perplexity, "
+    "bucket FROM ("
+    + textops.perplexity_buckets_from_cutoffs_oracle(sample_mod=4) + ") r",
+)
+def q_perplexity_buckets_sampled(spark, sf_dir):
+    out = textops.perplexity_buckets_from_cutoffs(
+        _docs(spark, sf_dir), sample_mod=4)
+    return out.select(
+        "doc_id", "lang_pred",
+        F.round("perplexity", 6).alias("perplexity"), "bucket")
 
 
-_register_perplexity_buckets_sampled()
+# corpus_curation_v2 — the composed curation DAG gains the CCNet LM leg
+# (dedup -> LM score -> per-language perplexity bucket -> filter),
+# integer-only rollup. This entry runs the exact-NTILE leg, the
+# function default (use_sampled_cutoffs=False), passed explicitly on
+# both sides.
 
 
-# ---- round 9: corpus_curation_v2 — the composed curation DAG gains
-# the CCNet LM leg (dedup -> LM score -> per-language perplexity
-# bucket -> filter), integer-only rollup.
+@register("corpus_curation_v2",
+          textops.corpus_curation_v2_oracle(use_sampled_cutoffs=False))
+def q_corpus_curation_v2(spark, sf_dir):
+    return textops.corpus_curation_v2(
+        _docs(spark, sf_dir), quality_min=0.5, keep_buckets=2,
+        use_sampled_cutoffs=False)
 
 
-def _register_corpus_curation_v2():
-    from polars_ts_spark.operators import textops
-
-    # round 11: the function default flipped to sampled cutoffs
-    # (VERDICT r10 #2); this entry keeps the exact-NTILE leg under an
-    # EXPLICIT flag so its oracle-parity history stays byte-identical.
-    @register("corpus_curation_v2",
-              textops.corpus_curation_v2_oracle(use_sampled_cutoffs=False))
-    def q_corpus_curation_v2(spark, sf_dir):
-        return textops.corpus_curation_v2(
-            _docs(spark, sf_dir), quality_min=0.5, keep_buckets=2,
-            use_sampled_cutoffs=False)
-
-
-_register_corpus_curation_v2()
-
-
-# ---- round 9: training-batch assembly + C4 line-level cleaning.
+# Training-batch assembly + C4 line-level cleaning.
 # sequence_pack: GPT-style concat-and-chunk window placement — md5
 # shard + in-shard md5-rank order + cumulative-sum chunking; the
 # oracle re-derives it with ordinary window functions (independent
@@ -11435,56 +10838,38 @@ _register_corpus_curation_v2()
 # exercised by the unit/fuzz layer on synthetic multi-line docs).
 
 
-def _register_sequence_pack():
-    from polars_ts_spark.operators import textops
-
-    @register("sequence_pack",
-              textops.sequence_pack_oracle(window=512, n_shards=4))
-    def q_sequence_pack(spark, sf_dir):
-        return textops.sequence_pack(_docs(spark, sf_dir),
-                                     window=512, n_shards=4)
+@register("sequence_pack",
+          textops.sequence_pack_oracle(window=512, n_shards=4))
+def q_sequence_pack(spark, sf_dir):
+    return textops.sequence_pack(_docs(spark, sf_dir),
+                                 window=512, n_shards=4)
 
 
-_register_sequence_pack()
+@register("c4_line_filters",
+          textops.c4_line_filters_oracle(
+              line_sep=" line ", min_words_per_line=3, min_lines=2,
+              require_terminal_punct=False))
+def q_c4_line_filters(spark, sf_dir):
+    return textops.c4_line_filters(
+        _docs(spark, sf_dir), line_sep=" line ", min_words_per_line=3,
+        min_lines=2, require_terminal_punct=False)
 
 
-def _register_c4_line_filters():
-    from polars_ts_spark.operators import textops
-
-    @register("c4_line_filters",
-              textops.c4_line_filters_oracle(
-                  line_sep=" line ", min_words_per_line=3, min_lines=2,
-                  require_terminal_punct=False))
-    def q_c4_line_filters(spark, sf_dir):
-        return textops.c4_line_filters(
-            _docs(spark, sf_dir), line_sep=" line ", min_words_per_line=3,
-            min_lines=2, require_terminal_punct=False)
-
-
-_register_c4_line_filters()
-
-
-# ---- round 9 (cont.): no-split packing — greedy next-fit bins, the
+# No-split packing — greedy next-fit bins, the
 # fine-tuning variant of sequence_pack (docs never straddle windows;
 # window=64 at this corpus' 54-token average exercises both the
 # multi-doc-bin and the oversize-truncated-singleton paths). Oracle:
 # recursive-CTE replay of the per-shard segmentation.
 
 
-def _register_sequence_pack_bins():
-    from polars_ts_spark.operators import textops
-
-    @register("sequence_pack_bins",
-              textops.sequence_pack_bins_oracle(window=64, n_shards=4))
-    def q_sequence_pack_bins(spark, sf_dir):
-        return textops.sequence_pack_bins(_docs(spark, sf_dir),
-                                          window=64, n_shards=4)
+@register("sequence_pack_bins",
+          textops.sequence_pack_bins_oracle(window=64, n_shards=4))
+def q_sequence_pack_bins(spark, sf_dir):
+    return textops.sequence_pack_bins(_docs(spark, sf_dir),
+                                      window=64, n_shards=4)
 
 
-_register_sequence_pack_bins()
-
-
-# ---- round 10: corpus_curation_v2's scale leg (VERDICT r9 #2) — the
+# corpus_curation_v2's scale leg — the
 # held-out LM reference (the published CCNet behavior: the LM trains
 # on clean text, not on the corpus being filtered) + sampled-cutoff
 # bucketing (cutoffs from a 1/4 md5 sample, assignment a
@@ -11500,25 +10885,19 @@ def _v2_reference(spark, sf_dir):
             .filter(F.col("doc_id") % 7 < 3).select("doc_id", "text"))
 
 
-def _register_corpus_curation_v2_sampled():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "corpus_curation_v2_sampled",
-        textops.corpus_curation_v2_oracle(
-            reference_sql=_V2_REF_SQL, use_sampled_cutoffs=True,
-            sample_mod=4))
-    def q_corpus_curation_v2_sampled(spark, sf_dir):
-        return textops.corpus_curation_v2(
-            _docs(spark, sf_dir), quality_min=0.5, keep_buckets=2,
-            reference=_v2_reference(spark, sf_dir),
-            use_sampled_cutoffs=True, sample_mod=4)
+@register(
+    "corpus_curation_v2_sampled",
+    textops.corpus_curation_v2_oracle(
+        reference_sql=_V2_REF_SQL, use_sampled_cutoffs=True,
+        sample_mod=4))
+def q_corpus_curation_v2_sampled(spark, sf_dir):
+    return textops.corpus_curation_v2(
+        _docs(spark, sf_dir), quality_min=0.5, keep_buckets=2,
+        reference=_v2_reference(spark, sf_dir),
+        use_sampled_cutoffs=True, sample_mod=4)
 
 
-_register_corpus_curation_v2_sampled()
-
-
-# ---- round 10: the full composed recipe (VERDICT r9 #6) — the
+# The full composed recipe — the
 # published C4 order runs LINE filtering before dedup/quality
 # (Raffel et al. 2020), then the CCNet legs (held-out LM + sampled
 # cutoffs): line-filter -> near-dup dedup -> LM score -> sampled
@@ -11529,26 +10908,20 @@ _V3_LINE_FILTER = dict(line_sep=" line ", min_words_per_line=3,
                        min_lines=2, require_terminal_punct=False)
 
 
-def _register_corpus_curation_v3():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "corpus_curation_v3",
-        textops.corpus_curation_v2_oracle(
-            reference_sql=_V2_REF_SQL, use_sampled_cutoffs=True,
-            sample_mod=4, line_filter=_V3_LINE_FILTER))
-    def q_corpus_curation_v3(spark, sf_dir):
-        return textops.corpus_curation_v2(
-            _docs(spark, sf_dir), quality_min=0.5, keep_buckets=2,
-            reference=_v2_reference(spark, sf_dir),
-            use_sampled_cutoffs=True, sample_mod=4,
-            line_filter=_V3_LINE_FILTER)
+@register(
+    "corpus_curation_v3",
+    textops.corpus_curation_v2_oracle(
+        reference_sql=_V2_REF_SQL, use_sampled_cutoffs=True,
+        sample_mod=4, line_filter=_V3_LINE_FILTER))
+def q_corpus_curation_v3(spark, sf_dir):
+    return textops.corpus_curation_v2(
+        _docs(spark, sf_dir), quality_min=0.5, keep_buckets=2,
+        reference=_v2_reference(spark, sf_dir),
+        use_sampled_cutoffs=True, sample_mod=4,
+        line_filter=_V3_LINE_FILTER)
 
 
-_register_corpus_curation_v3()
-
-
-# ---- round 10: the sequence-packing WRITER legs (VERDICT r9 #4) —
+# The sequence-packing WRITER legs —
 # not just placement indices but the per-window doc-span manifest a
 # trainer actually reads. The manifest is serialized
 # 'doc_id:tok_start:tok_end' per span (the structured array<struct>
@@ -11561,106 +10934,75 @@ _register_corpus_curation_v3()
 # entries at any corpus scale in both.
 
 
-def _register_sequence_pack_manifest():
-    from polars_ts_spark.operators import textops
-
-    @register("sequence_pack_manifest",
-              textops.sequence_pack_manifest_oracle(window=512, n_shards=4))
-    def q_sequence_pack_manifest(spark, sf_dir):
-        return textops.sequence_pack_manifest(_docs(spark, sf_dir),
-                                              window=512, n_shards=4)
+@register("sequence_pack_manifest",
+          textops.sequence_pack_manifest_oracle(window=512, n_shards=4))
+def q_sequence_pack_manifest(spark, sf_dir):
+    return textops.sequence_pack_manifest(_docs(spark, sf_dir),
+                                          window=512, n_shards=4)
 
 
-_register_sequence_pack_manifest()
+@register("sequence_pack_bins_manifest",
+          textops.sequence_pack_bins_manifest_oracle(
+              window=64, n_shards=4))
+def q_sequence_pack_bins_manifest(spark, sf_dir):
+    return textops.sequence_pack_bins_manifest(_docs(spark, sf_dir),
+                                               window=64, n_shards=4)
 
 
-def _register_sequence_pack_bins_manifest():
-    from polars_ts_spark.operators import textops
-
-    @register("sequence_pack_bins_manifest",
-              textops.sequence_pack_bins_manifest_oracle(
-                  window=64, n_shards=4))
-    def q_sequence_pack_bins_manifest(spark, sf_dir):
-        return textops.sequence_pack_bins_manifest(_docs(spark, sf_dir),
-                                                   window=64, n_shards=4)
+# The two-step DSIR recipe pinned as a UNIT (Xie et al. 2023 §2-3:
+# estimate importance weights, then select k docs). This composition
+# exercises the temperature=None branch (deterministic top-k by weight —
+# the epsilon->0 limit of the Gumbel draw), which no other registered
+# query covers; the stochastic Gumbel branch is pinned by
+# `dsir_resample`.
 
 
-_register_sequence_pack_bins_manifest()
+@register(
+    "dsir_pipeline",
+    "SELECT doc_id, log_weight, ROUND(gumbel_key, 6) AS gumbel_key, "
+    "sample_rank FROM ("
+    + textops.dsir_resample_oracle(_DSIR_WEIGHTS_SQL, k=64, temperature=None, seed=7)
+    + ") r",
+)
+def q_dsir_pipeline(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    target = docs.filter(F.col("doc_id") % 13 == 0)
+    w6 = textops.dsir_importance(docs, target).select(
+        "doc_id", F.round("log_weight", 6).alias("log_weight"))
+    out = textops.dsir_resample(w6, k=64, temperature=None, seed=7)
+    return out.select(
+        "doc_id", "log_weight",
+        F.round("gumbel_key", 6).alias("gumbel_key"), "sample_rank")
 
 
-# ---- round 10: the two-step DSIR recipe pinned as a UNIT (VERDICT
-# r9 #7 — Xie et al. 2023 §2-3: estimate importance weights, then
-# select k docs). This composition exercises the temperature=None
-# branch (deterministic top-k by weight — the epsilon->0 limit of the
-# Gumbel draw), which no other registered query covers; the
-# stochastic Gumbel branch is pinned by `dsir_resample`.
-
-
-def _register_dsir_pipeline():
-    from polars_ts_spark.operators import textops
-
-    _src = (
-        "SELECT doc_id, ROUND(log_weight, 6) AS log_weight FROM ("
-        + textops.dsir_importance_oracle(
-            target_sql="(SELECT doc_id, text FROM documents WHERE doc_id % 13 = 0)"
-        ) + ") r"
-    )
-
-    @register(
-        "dsir_pipeline",
-        "SELECT doc_id, log_weight, ROUND(gumbel_key, 6) AS gumbel_key, "
-        "sample_rank FROM ("
-        + textops.dsir_resample_oracle(_src, k=64, temperature=None, seed=7)
-        + ") r",
-    )
-    def q_dsir_pipeline(spark, sf_dir):
-        docs = _docs(spark, sf_dir)
-        target = docs.filter(F.col("doc_id") % 13 == 0)
-        w6 = textops.dsir_importance(docs, target).select(
-            "doc_id", F.round("log_weight", 6).alias("log_weight"))
-        out = textops.dsir_resample(w6, k=64, temperature=None, seed=7)
-        return out.select(
-            "doc_id", "log_weight",
-            F.round("gumbel_key", 6).alias("gumbel_key"), "sample_rank")
-
-
-_register_dsir_pipeline()
-
-
-# ---- round 10: the INDEPENDENT-oracle conversion for the DSIR math
-# (VERDICT r9 #3) — over the first-character-collapsed corpus the md5
+# The INDEPENDENT oracle for the DSIR math — over the
+# first-character-collapsed corpus the md5
 # bucket map at n_buckets=1048576 is injective (test-asserted), so
 # the oracle re-derives the importance weights by grouping the RAW
 # GRAMS — no hash anywhere in the SQL. Agreement validates the
 # multinomial log-likelihood-ratio math itself.
 
 
-def _register_dsir_importance_smallvocab():
-    from polars_ts_spark.operators import textops
-
-    @register(
-        "dsir_importance_smallvocab",
-        "SELECT doc_id, n_features, ROUND(log_weight, 6) AS log_weight FROM ("
-        + textops.dsir_importance_smallvocab_oracle(
-            n_buckets=1_048_576, target_pred="doc_id % 13 = 0") + ") r",
-    )
-    def q_dsir_importance_smallvocab(spark, sf_dir):
-        docs = _docs(spark, sf_dir)
-        first_chars = F.array_join(
-            F.transform(F.split(F.col("text"), " "),
-                        lambda t: F.substring(t, 1, 1)), " ")
-        small = docs.select("doc_id", first_chars.alias("text"))
-        target = small.filter(F.col("doc_id") % 13 == 0)
-        out = textops.dsir_importance(small, target, n_buckets=1_048_576)
-        return out.select(
-            "doc_id", "n_features",
-            F.round("log_weight", 6).alias("log_weight"))
+@register(
+    "dsir_importance_smallvocab",
+    "SELECT doc_id, n_features, ROUND(log_weight, 6) AS log_weight FROM ("
+    + textops.dsir_importance_smallvocab_oracle(
+        n_buckets=1_048_576, target_pred="doc_id % 13 = 0") + ") r",
+)
+def q_dsir_importance_smallvocab(spark, sf_dir):
+    docs = _docs(spark, sf_dir)
+    first_chars = F.array_join(
+        F.transform(F.split(F.col("text"), " "),
+                    lambda t: F.substring(t, 1, 1)), " ")
+    small = docs.select("doc_id", first_chars.alias("text"))
+    target = small.filter(F.col("doc_id") % 13 == 0)
+    out = textops.dsir_importance(small, target, n_buckets=1_048_576)
+    return out.select(
+        "doc_id", "n_features",
+        F.round("log_weight", 6).alias("log_weight"))
 
 
-_register_dsir_importance_smallvocab()
-
-
-# ---- round 11: the STRUCTURED writer surface (VERDICT r10 #6) —
+# The STRUCTURED writer surface —
 # sequence_pack_windows returns one row per training window with the
 # ordered doc-span array<struct> a real writer partitions by shard
 # and serializes. The gate compares strings, so the registered query
@@ -11671,17 +11013,11 @@ _register_dsir_importance_smallvocab()
 # aggregate — the JSON cast is the gate adapter, applied after.
 
 
-def _register_sequence_pack_windows():
-    from polars_ts_spark.operators import textops
-
-    @register("sequence_pack_windows",
-              textops.sequence_pack_windows_oracle(window=512, n_shards=4))
-    def q_sequence_pack_windows(spark, sf_dir):
-        out = textops.sequence_pack_windows(_docs(spark, sf_dir),
-                                            window=512, n_shards=4)
-        return out.select(
-            "shard", "window_id",
-            F.to_json("docs").alias("docs_json"), "n_tokens_filled")
-
-
-_register_sequence_pack_windows()
+@register("sequence_pack_windows",
+          textops.sequence_pack_windows_oracle(window=512, n_shards=4))
+def q_sequence_pack_windows(spark, sf_dir):
+    out = textops.sequence_pack_windows(_docs(spark, sf_dir),
+                                        window=512, n_shards=4)
+    return out.select(
+        "shard", "window_id",
+        F.to_json("docs").alias("docs_json"), "n_tokens_filled")

@@ -8,7 +8,7 @@ import pytest
 
 from polars_ts_spark.operators import evaluation as E
 from polars_ts_spark.operators import pipeline as P
-from polars_ts_spark.operators.metrics import crps
+from polars_ts_spark.operators.metrics import bias_correct, calibration_table, crps
 
 
 @pytest.fixture(scope="module")
@@ -303,19 +303,19 @@ def test_crps_and_calibration(spark):
         "y": y, "q_0.1": -1.2816, "q_0.5": 0.0, "q_0.9": 1.2816,
     })
     df = spark.createDataFrame(pdf)
-    qc = {0.1: "q_0.1", 0.5: "q_0.5", 0.9: "q_0.9"}
     c = crps(df).collect()[0]["crps"]
     assert 0 < c < 1
-    cal = E.calibration_table(df, qc).toPandas()
+    cal = calibration_table(df).toPandas()
+    assert cal["nominal"].tolist() == [0.1, 0.5, 0.9]
     for _, r in cal.iterrows():
-        assert r["observed"] == pytest.approx(r["expected"], abs=0.06)
+        assert r["observed"] == pytest.approx(r["nominal"], abs=0.06)
 
 
 def test_bias_correct(spark):
     pdf = pd.DataFrame({
         "unique_id": ["a"] * 4, "y": [1.0, 2.0, 3.0, 4.0], "y_hat": [2.0, 3.0, 4.0, 5.0],
     })
-    out = E.bias_correct(spark.createDataFrame(pdf)).toPandas()
+    out = bias_correct(spark.createDataFrame(pdf)).toPandas()
     assert np.allclose(out["y_hat_corrected"], out["y"])  # constant +1 bias removed
 
 

@@ -368,12 +368,12 @@ def test_sequence_pack_windows_single_exchange(spark):
 
 
 def test_corpus_curation_v2_sampled_no_corpus_ntile(spark):
-    """VERDICT r9 #2 / r10 #2: the DEFAULT composed curation DAG must
-    NOT contain the per-language corpus-wide NTILE rank window (the
-    one scale-killer shape when a single web language dominates) —
-    since round 11 ``use_sampled_cutoffs=True`` is the default, so
-    scale safety is no longer opt-in. The only rank window runs over
-    the md5 sample and the assignment is a broadcast join."""
+    """The sampled-cutoff leg of the composed curation DAG
+    (``use_sampled_cutoffs=True``) has no per-language corpus-wide
+    NTILE rank window (the scale-killer shape when a single web
+    language dominates): its only rank window runs over the md5 sample
+    and the assignment is a broadcast join. The default
+    (``use_sampled_cutoffs=False``) keeps the exact NTILE."""
     from pyspark.sql import functions as F
 
     from polars_ts_spark.operators import textops
@@ -386,11 +386,10 @@ def test_corpus_curation_v2_sampled_no_corpus_ntile(spark):
         docs, reference=ref, sample_mod=4, use_sampled_cutoffs=True))
     assert "ntile" not in plan.lower(), plan
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan, plan
-    # r13 (VERDICT r12 #5): the default flipped BACK to the exact
-    # NTILE — skew-stress measured it faster at every tested size
-    # (500k/1M/5M single-language docs); the sampled leg is the
-    # explicit opt-in for per-language doc counts where a single-task
-    # rank window would spill
+    # the default is the exact NTILE — skew-stress measured it faster
+    # at every tested size (500k/1M/5M single-language docs); the
+    # sampled leg is the explicit opt-in for per-language doc counts
+    # where a single-task rank window would spill
     default_plan = _plan(textops.corpus_curation_v2(docs))
     assert "ntile" in default_plan.lower(), default_plan
     sampled = _plan(textops.corpus_curation_v2(docs, use_sampled_cutoffs=True))

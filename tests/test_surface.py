@@ -133,3 +133,77 @@ def test_frames_are_reused_only_through_materialize():
                 checkpoints.append(f"{rel}:{i}")
     assert not persists - allowed, persists
     assert not checkpoints, checkpoints
+
+
+def test_md5_draw_primitive_lives_in_numutils():
+    """The first-4-bytes md5 draw is ``numutils.hash_u32`` / ``hash_unit``;
+    no other module re-derives it from a digest prefix."""
+    import pathlib
+
+    import polars_ts_spark
+
+    root = pathlib.Path(polars_ts_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(root.parent)}:{i} {line.strip()}"
+        for path in sorted(root.rglob("*.py")) if path.name != "numutils.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "hexdigest()[:8]" in line or "digest()[:4]" in line
+    ]
+    assert not hits, hits
+
+
+def _registry_source():
+    import pathlib
+
+    from polars_ts_spark.plans import registry
+
+    return pathlib.Path(registry.__file__).read_text()
+
+
+def test_registry_imports_the_library_once_at_the_top():
+    """Every ``polars_ts_spark`` import in the query registry is in its
+    top-level import block; a function-local one needs a reason here."""
+    import ast
+
+    allowed: dict[str, str] = {}  # module -> why it must stay local
+    local = []
+    for fn in ast.walk(ast.parse(_registry_source())):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            elif isinstance(node, ast.Import):
+                mods = [alias.name for alias in node.names]
+            else:
+                continue
+            local += [f"{node.lineno} {m}" for m in mods
+                      if m.startswith("polars_ts_spark") and m not in allowed]
+    assert not local, local
+
+
+def test_registry_registers_at_module_level():
+    """Queries register with ``@register`` at module level: no
+    ``_register_*`` wrapper function scopes them."""
+    import ast
+
+    tree = ast.parse(_registry_source())
+    wrappers = [
+        f"{node.lineno} {node.name}" for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("_register_")
+    ]
+    assert not wrappers, wrappers
+
+
+def test_registry_states_the_cents_panel_once():
+    """The exact-cents monthly panel CTE is written once (``_CENTS_CTES``)
+    and embedded by every oracle that reads it."""
+    assert _registry_source().count("daily_cents AS (") == 1
+
+
+def test_every_query_has_an_oracle():
+    from __spark_entry__ import oracle_sql, queries
+
+    names, oracles = list(queries()), oracle_sql()
+    assert len(names) == 200 and len(set(names)) == 200
+    assert set(names) == set(oracles)

@@ -29,6 +29,7 @@ import pytest  # noqa: E402
 import bench  # noqa: E402
 from __spark_entry__ import queries  # noqa: E402
 from polars_ts_spark.session import collect_capped, free_blocks, materialize  # noqa: E402
+from tools.explain_all import normalize  # noqa: E402
 from tools.merge_correctness import infer_round, stamp_note  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
@@ -239,3 +240,21 @@ def test_collect_capped_boundary(spark, monkeypatch):
     with pytest.raises(ValueError, match="driver-collect cap"):
         collect_capped(df, 5, "op", "hint")
     assert seen == [100, 100, 6]
+
+
+def test_explain_normalize_strips_build_ids():
+    """Two builds of the same plan differ only in expression, RDD and
+    exchange plan ids; the normalized dumps are equal and keep the rest."""
+    a = ("+- Exchange hashpartitioning(unique_id#12, 200), ENSURE_REQUIREMENTS, [plan_id=41]\n"
+         "   +- Scan ExistingRDD[unique_id#12,y#13L] MapPartitionsRDD[88] at localCheckpoint\n"
+         "Output [2]: [unique_id#12, sum(y)#27]")
+    b = ("+- Exchange hashpartitioning(unique_id#301, 200), ENSURE_REQUIREMENTS, [plan_id=7]\n"
+         "   +- Scan ExistingRDD[unique_id#301,y#302L] MapPartitionsRDD[5] at localCheckpoint\n"
+         "Output [2]: [unique_id#301, sum(y)#316]")
+    assert normalize(a) == normalize(b)
+    assert normalize(a) == (
+        "+- Exchange hashpartitioning(unique_id#N, 200), ENSURE_REQUIREMENTS, [plan_id=N]\n"
+        "   +- Scan ExistingRDD[unique_id#N,y#NL] MapPartitionsRDD[N] at localCheckpoint\n"
+        "Output [2]: [unique_id#N, sum(y)#N]")
+    # a changed operator or column still shows
+    assert normalize(a) != normalize(a.replace("200)", "8)"))
