@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_ts_spark.functions import dist_kernels as K
+from polars_ts_spark.operators.kernel import _partition_labels
 from polars_ts_spark.panel import ID, TARGET, TIME, ordered_values, require_columns
 
 _PARAM_DEFAULTS = {
@@ -91,37 +92,6 @@ def _batch_kernel_fn(method: str, variant: str | None, kwargs: dict):
     if method in ("ddtw", "sbd", "frechet"):
         return K.BATCH_METRICS[method]
     raise ValueError(f"unknown distance method {method!r}; choose from {sorted(_PARAM_DEFAULTS)}")
-
-
-def _spark_hash_int(v: int) -> int:
-    """Spark's ``Murmur3_x86_32.hashInt(v, 42)``: the hash its shuffle
-    hash partitioning applies to an int key."""
-    mask = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & mask
-
-    k1 = rotl(v * 0xCC9E2D51 & mask, 15) * 0x1B873593 & mask
-    h1 = (rotl(42 ^ k1, 13) * 5 + 0xE6546B64) & mask
-    h1 ^= 4
-    h1 ^= h1 >> 16
-    h1 = h1 * 0x85EBCA6B & mask
-    h1 ^= h1 >> 13
-    h1 = h1 * 0xC2B2AE35 & mask
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >> 31 else h1
-
-
-def _partition_labels(n_parts: int) -> list[int]:
-    """Int keys k_0..k_{n-1} such that ``repartition(n_parts, key)``
-    sends k_p to partition p. Hash-partitioning the cell index itself
-    would stack several cells on some tasks and leave others idle."""
-    labels: dict[int, int] = {}
-    v = 0
-    while len(labels) < n_parts:
-        labels.setdefault(_spark_hash_int(v) % n_parts, v)
-        v += 1
-    return [labels[p] for p in range(n_parts)]
 
 
 def _cell_fn(method: str, fn, channels: int | None):

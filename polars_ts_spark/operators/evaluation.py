@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from polars_ts_spark.functions.numutils import hash_u32
 from polars_ts_spark.operators.metrics import calibration_table
 from polars_ts_spark.panel import ID, TARGET, TIME
-from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped, materialize
+from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped, materialize, release
 
 # ---------------------------------------------------------------------------
 # backtesting
@@ -838,6 +838,7 @@ def permutation_importance(
         for rrow in joined.mapInPandas(score_perm, "i int, r int, s double, c long")
         .groupBy("i", "r").agg((F.sum("s") / F.sum("c")).alias("mae")).collect()
     }
+    release(ridx)
     rows = []
     for i, c in enumerate(feats):
         degr = [maes[(i, r)] - base_mae for r in range(n_repeats)]

@@ -39,7 +39,7 @@ from polars_ts_spark.functions.numutils import RidgeEstimator
 from polars_ts_spark.operators import features as FT
 from polars_ts_spark.operators.kernel import for_each_series
 from polars_ts_spark.panel import ID, TARGET, TIME, require_columns
-from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped, materialize
+from polars_ts_spark.session import DRIVER_VALUES_CAP, collect_capped, materialize, release
 
 # ---------------------------------------------------------------------------
 # design-matrix assembly (training side — pure Spark feature plan)
@@ -576,6 +576,7 @@ class QuantileRegressor:
             exprs.append(F.sum(cols[i] * t).alias(f"xy_{i}"))
         sel_df, row = materialize(feat_df.select(*feat_cols, self.target_col), *exprs)
         if not row["__n"]:
+            release(sel_df)
             raise ValueError(
                 "QuantileRegressor: no training rows after lag "
                 "alignment — every series is shorter than max(lags)"
@@ -611,8 +612,11 @@ class QuantileRegressor:
             # the residual quantization grid is DESIGNED to absorb (see
             # the trajectory-stability note above); the sf0.001/sf0.01
             # oracles re-verify it.
-            return self._irls_one_task(sel_df, feat_cols, w0, s)
+            weights = self._irls_one_task(sel_df, feat_cols, w0, s)
+            release(sel_df)
+            return weights
         feat_df = materialize(sel_df.repartition(n_cache_parts))
+        release(sel_df)
         weights = {q: w0 for q in qs}
         for _ in range(self.n_irls):
             exprs = []
@@ -651,6 +655,7 @@ class QuantileRegressor:
                 b[d] = row[f"q{qi}_wy"]
                 new_w[q] = np.linalg.solve(A + 1e-8 * np.eye(d + 1), b)
             weights = new_w
+        release(feat_df)
         return weights
 
     def _irls_one_task(

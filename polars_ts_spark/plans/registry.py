@@ -4189,30 +4189,22 @@ panel AS (
 """
 
 
-def _dim_hierarchy() -> dict[str, str] | None:
-    """nation->region->total child->parent map from the (SF-invariant)
-    dimension parquet; None when unavailable (oracle then skipped)."""
-    try:
-        import duckdb  # local: the query map imports without DuckDB
-        rows = duckdb.sql(
-            "SELECT n_nationkey, n_regionkey FROM "
-            "read_parquet('/root/testdata/sf0.001/nation.parquet')"
-        ).fetchall()
-    except Exception:
-        return None
-    h = {f"n_{int(nk)}": f"r_{int(rk)}" for nk, rk in rows}
-    h.update({f"r_{int(rk)}": "total" for _, rk in rows})
-    return h
+# nation -> region -> total child -> parent map of the node panel. The
+# TPC-H dimension tables are the same at every scale factor; the bundled
+# generator puts nation k in region k mod 5, and
+# tests/test_plans.py::test_dim_hierarchy_matches_nation_tables checks
+# this constant against every nation.parquet.
+_DIM_HIERARCHY: dict[str, str] = {
+    **{f"n_{k}": f"r_{k % 5}" for k in range(25)},
+    **{f"r_{r}": "total" for r in range(5)},
+}
 
 
-def _mint_oracle() -> str | None:
+def _mint_oracle() -> str:
     """MinT-OLS reconciliation as SQL: the projection matrix P (a pure
     function of the static dimension hierarchy) is inlined as a VALUES
     table; rec_i(ds) = sum_j P[i,j]·yhat_j(ds)."""
-    h = _dim_hierarchy()
-    if h is None:
-        return None
-    P, nodes = mint_projection(h, None)
+    P, nodes = mint_projection(_DIM_HIERARCHY, None)
     vals = ",\n          ".join(
         f"('{nodes[i]}', '{nodes[j]}', {float(P[i, j])!r})"
         for i in range(len(nodes)) for j in range(len(nodes))
@@ -4449,8 +4441,7 @@ def _mint_cv_oracle(n_folds: int = 5, shrink: float = 0.5) -> str:
 def q_reconcile_mint(spark, sf_dir):
     panel = _node_panel(spark, sf_dir)
     fc = baselines.naive_forecast(panel, h=7)
-    h = _dim_hierarchy()
-    out = evaluation.reconcile_ols(fc, h)
+    out = evaluation.reconcile_ols(fc, _DIM_HIERARCHY)
     return out.select("unique_id", "ds", F.round("y_hat", 6).alias("y_hat"))
 
 
@@ -4466,7 +4457,7 @@ def q_reconcile_permbu(spark, sf_dir):
     panel, row = materialize(_node_panel(spark, sf_dir),
                              F.collect_set("unique_id").alias("ids"))
     present = set(row["ids"])
-    h = {c: p for c, p in _dim_hierarchy().items() if c in present}
+    h = {c: p for c, p in _DIM_HIERARCHY.items() if c in present}
     fc = baselines.naive_forecast(panel, h=7)
     w = Window.partitionBy("unique_id").orderBy("ds")
     residuals = (
@@ -4482,7 +4473,7 @@ def q_reconcile_permbu(spark, sf_dir):
 def q_reconcile_mint_cv(spark, sf_dir):
     panel = _node_panel(spark, sf_dir)
     present = {r[0] for r in panel.select("unique_id").distinct().collect()}
-    h = {c: p for c, p in _dim_hierarchy().items() if c in present}
+    h = {c: p for c, p in _DIM_HIERARCHY.items() if c in present}
     fc = baselines.naive_forecast(panel, h=7)
     out = evaluation.reconcile_mint_cv(fc, h, panel, n_folds=5)
     return out.select("unique_id", "ds", F.round("y_hat", 2).alias("y_hat"))

@@ -69,7 +69,7 @@ def materialize(df: DataFrame, *aggs: Column) -> DataFrame | tuple[DataFrame, Ro
     clusters; a deployment with executor churn would swap this body for
     ``persist(MEMORY_AND_DISK)`` plus a reliable ``checkpoint()``.
     Values are unchanged: only where the bytes are read from moves.
-    The blocks are held until ``free_blocks``."""
+    The blocks are held until ``release`` or ``free_blocks``."""
     obs = Observation()
     out = (df.observe(obs, *aggs) if aggs else df).localCheckpoint(eager=True)
     key = (df.sparkSession.sparkContext.applicationId,
@@ -77,6 +77,16 @@ def materialize(df: DataFrame, *aggs: Column) -> DataFrame | tuple[DataFrame, Ro
     with _owned_lock:
         _owned.add(key)
     return (out, Row(**obs.get)) if aggs else out
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks of one frame ``materialize`` returned, now. For a
+    function whose checkpoint nothing reads once it returns: the blocks
+    do not wait for the next ``free_blocks``, which then skips them."""
+    jrdd = df._jdf.queryExecution().logical().rdd()
+    with _owned_lock:
+        _owned.discard((df.sparkSession.sparkContext.applicationId, jrdd.id()))
+    jrdd.unpersist(False)
 
 
 # Driver-side stages (centroid refinement, the synthetic-control and

@@ -292,7 +292,7 @@ def test_grid_cells_land_one_per_partition(spark):
     cell runs as its own task."""
     from pyspark.sql import functions as F
 
-    from polars_ts_spark.operators.distance import _partition_labels
+    from polars_ts_spark.operators.kernel import _partition_labels
 
     for n_parts in (1, 4, 6, 32):
         labels = _partition_labels(n_parts)

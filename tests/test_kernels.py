@@ -288,3 +288,137 @@ def test_dtw_fast_tracks_exact_dtw():
     assert fast >= exact - 1e-12          # windowed DP can't beat exact
     assert fast <= 1.25 * exact + 1e-9    # and stays near it
     assert dtw_fast(a, a, radius=3) == 0.0
+
+
+# --- kernel-stage runner: bucket placement and the worker preamble gate
+
+
+def test_series_batches_one_bucket_per_partition(spark):
+    """Each of the n id-hash buckets of ``for_series_batches`` runs on
+    its own shuffle partition: no task runs two buckets while another
+    runs none."""
+    from polars_ts_spark.operators.kernel import for_series_batches
+
+    panel = make_panel(spark, {f"s{i}": [float(i), 1.0] for i in range(400)})
+
+    def ids(pdf):
+        return pdf[["unique_id"]].drop_duplicates()
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (2, 4, 8, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            rows = (
+                for_series_batches(panel, ids, "unique_id string", "unique_id", "ds")
+                .select(F.pmod(F.xxhash64("unique_id"), F.lit(n)).alias("b"),
+                        F.spark_partition_id().alias("p"))
+                .distinct().collect()
+            )
+            assert len({r["b"] for r in rows}) == n
+            assert len({r["p"] for r in rows}) == n
+            assert len(rows) == n, sorted((r["b"], r["p"]) for r in rows)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _write_zip(path, modules):
+    import os
+    import zipfile
+
+    tmp = path.with_suffix(".tmp")
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+    os.replace(tmp, path)
+
+
+def test_zip_gate_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    """The gated ``invalidate_caches`` reads an unchanged archive once
+    over repeated calls, and reads a rewritten one again, after which a
+    module added to it is importable."""
+    import importlib.util
+    import zipimport
+
+    from polars_ts_spark._worker import _gate
+
+    archive = tmp_path / "gate.zip"
+    _write_zip(archive, {"gate_a": "X = 1\n"})
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda p: reads.append(p) or read_directory(p))
+    importer = zipimport.zipimporter(str(archive))
+    reads.clear()
+    gated = _gate(zipimport.zipimporter.invalidate_caches)
+    for _ in range(5):
+        gated(importer)
+    assert reads == [str(archive)]
+
+    _write_zip(archive, {"gate_a": "X = 1\n", "gate_b": "Y = 2\n"})
+    assert importer.find_spec("gate_b") is None
+    for _ in range(3):
+        gated(importer)
+    assert reads == [str(archive)] * 2
+    spec = importer.find_spec("gate_b")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.Y == 2
+
+
+def test_zip_gate_installs_only_in_a_task_and_once(monkeypatch):
+    """Importing the package leaves the driver's zip importers as they
+    are; inside a task the gate is installed once, and a second install
+    changes nothing."""
+    import types
+    import zipimport
+
+    import polars_ts_spark  # noqa: F401 — its import runs the install
+    from polars_ts_spark import _worker
+
+    original = zipimport.zipimporter.invalidate_caches
+    assert not hasattr(original, "gated")
+    assert _worker.gate_zip_invalidation() is False
+    assert zipimport.zipimporter.invalidate_caches is original
+
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", original)
+    monkeypatch.setattr(_worker, "TaskContext", types.SimpleNamespace(get=lambda: object()))
+    assert _worker.gate_zip_invalidation() is True
+    gated = zipimport.zipimporter.invalidate_caches
+    assert gated.gated is original
+    assert _worker.gate_zip_invalidation() is True
+    assert zipimport.zipimporter.invalidate_caches is gated
+
+
+def test_kernel_stage_leaves_zip_gate_in_reused_workers(spark):
+    """A kernel defined here is pickled by value and carries no import
+    of the package, yet ``for_each_series`` runs it in a worker with the
+    gate installed, because the stage's entry is pickled by reference.
+    A second job that never touches the package finds the gate still
+    installed in those workers."""
+    import pandas as pd
+
+    from polars_ts_spark.operators.kernel import for_each_series
+
+    def worker_state():
+        import os
+        import zipimport
+
+        return os.getpid(), hasattr(zipimport.zipimporter.invalidate_caches, "gated")
+
+    def kernel(pdf):
+        pid, gated = worker_state()
+        return pd.DataFrame({"pid": [pid], "gated": [gated]})
+
+    def probe(batches):
+        for _ in batches:
+            pass
+        pid, gated = worker_state()
+        yield pd.DataFrame({"pid": [pid], "gated": [gated]})
+
+    panel = make_panel(spark, {f"s{i}": [1.0, 2.0] for i in range(16)})
+    ran = for_each_series(panel, kernel, "pid long, gated boolean", "unique_id", "ds").collect()
+    assert ran and all(r["gated"] for r in ran)
+    kernel_pids = {r["pid"] for r in ran}
+    probes = spark.range(0, 32, 1, 32).mapInPandas(probe, "pid long, gated boolean").collect()
+    reused = [r for r in probes if r["pid"] in kernel_pids]
+    assert reused and all(r["gated"] for r in reused), probes

@@ -394,3 +394,23 @@ def test_corpus_curation_v2_sampled_no_corpus_ntile(spark):
     assert "ntile" in default_plan.lower(), default_plan
     sampled = _plan(textops.corpus_curation_v2(docs, use_sampled_cutoffs=True))
     assert "ntile" not in sampled.lower()
+
+
+def test_dim_hierarchy_matches_nation_tables():
+    """The reconciliation queries' nation -> region -> total constant
+    equals the map in every bundled and test-data ``nation.parquet``."""
+    import glob
+
+    import pandas as pd
+
+    from polars_ts_spark.plans.registry import _DIM_HIERARCHY
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*", "nation.parquet"))
+                   + glob.glob(os.path.join(repo, "perfbench", "data", "*", "nation.parquet")))
+    assert paths
+    for path in paths:
+        nation = pd.read_parquet(path, columns=["n_nationkey", "n_regionkey"])
+        h = {f"n_{int(n)}": f"r_{int(r)}" for n, r in nation.itertuples(index=False)}
+        h.update({f"r_{int(r)}": "total" for r in nation["n_regionkey"]})
+        assert h == _DIM_HIERARCHY, path

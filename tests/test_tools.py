@@ -113,6 +113,47 @@ def test_free_blocks_frees_only_what_materialize_took(spark):
     assert user.id() in left
 
 
+def test_release_frees_one_checkpoint_now(spark):
+    """``release`` unpersists the one frame it is given and forgets its
+    id; the other checkpoints stay held until ``free_blocks``."""
+    from polars_ts_spark import session
+
+    a, b = materialize(spark.range(5)), materialize(spark.range(6))
+    ida, idb = (f._jdf.queryExecution().logical().rdd().id() for f in (a, b))
+    session.release(a)
+    left = _persistent_ids(spark)
+    assert ida not in left and idb in left
+    assert all(rdd_id != ida for _, rdd_id in session._owned)
+    free_blocks(spark)
+    assert idb not in _persistent_ids(spark)
+
+
+def test_fits_release_their_checkpoints(spark):
+    """``QuantileRegressor.fit`` and the distributed
+    ``permutation_importance`` free the checkpoints they take before
+    they return: nothing reads them afterwards."""
+    import numpy as np
+    import pandas as pd
+
+    from polars_ts_spark.functions.numutils import RidgeEstimator
+    from polars_ts_spark.operators import evaluation, features
+    from polars_ts_spark.operators.pipeline import QuantileRegressor
+
+    ts = pd.date_range("2024-01-01", periods=60, freq="D")
+    df = spark.createDataFrame(pd.concat([
+        pd.DataFrame({"unique_id": f"s{i}", "ds": ts, "y": np.sin(np.arange(60) / 5.0) + i})
+        for i in range(3)
+    ]))
+    free_blocks(spark)
+    before = _persistent_ids(spark)
+    QuantileRegressor(quantiles=(0.1, 0.9), lags=(1, 2), n_irls=3).fit(df)
+    assert _persistent_ids(spark) == before
+    evaluation.permutation_importance(
+        features.lag_features(df, [1, 7]), ["y_lag_1", "y_lag_7"], "y",
+        RidgeEstimator(), n_repeats=2, order_cols=["unique_id", "ds"])
+    assert _persistent_ids(spark) == before
+
+
 def _cache_manager(spark):
     return spark._jsparkSession.sharedState().cacheManager()
 

@@ -7,9 +7,10 @@ materialization-heavy queries back-to-back and logs, after each sample,
 query, and (b) both again after the bench's cleanup step
 (``polars_ts_spark.session.free_blocks``). With the cleanup on it exits
 1 if any persistent RDD survives a cleanup step; ``--no-cleanup`` only
-prints, showing the blocks accumulate.
+prints, showing the blocks accumulate. Query names after the options
+run only those queries.
 
-Usage: python tools/checkpoint_residency.py [--no-cleanup]
+Usage: python tools/checkpoint_residency.py [--no-cleanup] [name ...]
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ def _storage(spark):
 
 def main() -> int:
     cleanup = "--no-cleanup" not in sys.argv
+    names = [a for a in sys.argv[1:] if not a.startswith("--")] or QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("checkpoint-residency")
     qs = queries()
@@ -53,7 +55,7 @@ def main() -> int:
     print(f"{'query':34s} {'rdds':>5s} {'mem_MB':>8s} {'disk_MB':>8s}"
           f" {'rdds*':>5s} {'mem_MB*':>8s}   (* = after cleanup step)")
     leaks = []
-    for name in QUERIES:
+    for name in names:
         if name not in qs:
             continue
         for s in range(2):
